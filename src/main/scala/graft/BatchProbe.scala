@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: split a batch query's wall into build (query-fn call:
   * registerAll + analysis) vs first count (optimize+codegen+exec) vs
   * second count (warm exec) — tells whether a slow key is plan-time or
@@ -11,13 +9,7 @@ object BatchProbe {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, namesCsv, rest @ _*) = args: @unchecked
     val reps = rest.headOption.map(_.toInt).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DumpIO.session()
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     val all = SparkEntry.queries ++ SparkEntry.benchOnly
     (1 to reps).foreach { r =>

@@ -3,13 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DumpIO.session()
     // warmup: JIT + codegen + parquet footer caches, so the first timed
     // query isn't charged for session startup
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
@@ -28,30 +22,6 @@ object Bench {
       }
       name -> (System.nanoTime() - t0) / 1e9
     }
-    // MemoryStream replay gates CAN overlap (their conf windows are
-    // serialized under Q.streamConfLock), and 2-way overlap halves the
-    // family's WALL clock — but the round-13 A/B at sf0.1 local[8]
-    // measured the per-query SUM (this bench's recorded metric) at
-    // 181.6 s concurrent vs 144.7 s serial: light gates stay flat, the
-    // heavy ones (q_stream_over, q_stream_cogroup) contend 2-3×. Since
-    // the recorded metric is the sum of per-gate walls, the default
-    // stays SERIAL; set SPARK_GRAFT_STREAM_THREADS=2 when wall-clock
-    // turnaround matters more than the per-gate record.
-    val streamThreads =
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_THREADS", "1").toInt
-    // overlap pool = gates whose streaming start() runs under
-    // Q.streamConfLock (StreamQueries.runToEnd): StreamQueries' own
-    // gates, the stream-fuzz rows, the b_stream_ probes, and the six
-    // IntegrationQueries entries that delegate to StreamQueries replay
-    // helpers. q_stream_filesrc / q_state_* / q_sink_upsert /
-    // q_sql_mattable_cont start their own queries WITHOUT the lock and
-    // must stay in the serial section — a concurrent start there could
-    // capture another gate's temporarily-set state-store conf.
-    val streamNames = graft.queries.StreamQueries.queries.keySet ++
-      graft.queries.StreamFuzzQueries.queries.keySet ++
-      graft.queries.StreamQueries.benchOnly.keySet ++
-      Set("q_stream_countwin", "q_stream_countslide", "q_stream_sort",
-        "q_stream_semi", "q_stream_anti", "q_stream_broadcast")
     // the b_ scale PROBES run LAST: the 64× octaves are ~300 s of wall by
     // design (growth IS the measurement), and interleaving them with the
     // q_ queries let their contention pollute per-query timings in the
@@ -59,35 +29,9 @@ object Bench {
     // tail can't touch any q_ number
     val (probes, queries) =
       selected.partition { case (n, _) => n.startsWith("b_") }
-    def runSet(qs: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame])
-        : Map[String, Double] = {
-    val (streamQs, batchQs) =
-      qs.partition { case (n, _) => streamNames.contains(n) }
-    val batchResults = batchQs.map { case (n, f) => timed(n, f) }
-    val streamResults =
-      if (streamThreads <= 1 || streamQs.isEmpty)
-        streamQs.map { case (n, f) => timed(n, f) }
-      else {
-        val pool = java.util.concurrent.Executors
-          .newFixedThreadPool(streamThreads)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        val futs = streamQs.toSeq.map { case (n, f) =>
-          scala.concurrent.Future(timed(n, f))
-        }
-        // shutdown in finally: the pool's threads are non-daemon, so a
-        // skipped shutdown (interrupt / fatal rethrown through Await)
-        // would leave the JVM alive with no JSON line — the driver
-        // would see a hang instead of a failed run
-        try scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(futs),
-          scala.concurrent.duration.Duration.Inf).toMap
-        finally pool.shutdown()
-      }
-    batchResults ++ streamResults
-    }
-    val queryResults = runSet(queries)
-    val probeResults = runSet(probes) // after every q_ number is banked
+    val queryResults = queries.map { case (n, f) => timed(n, f) }
+    // after every q_ number is banked
+    val probeResults = probes.map { case (n, f) => timed(n, f) }
     val results = queryResults ++ probeResults
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -107,7 +51,7 @@ object Bench {
     // used (past rounds had to adjudicate whether a number came from
     // local[8]-under-contention or the host's 32 cpus)
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","total_queries":$total,"total_probes":$probeTotal,"queries":$qs,"sf":"$sfDir","master":"${spark.sparkContext.master}","parallelism":${spark.sparkContext.defaultParallelism},"stream_threads":$streamThreads}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","total_queries":$total,"total_probes":$probeTotal,"queries":$qs,"sf":"$sfDir","master":"${spark.sparkContext.master}","parallelism":${spark.sparkContext.defaultParallelism},"stream_threads":1}"""
     // Persist the full JSON to a file for ad-hoc inspection, but print
     // EXACTLY ONE JSON line: the driver parses stdout for a single
     // {"metric",...,"queries":{...}} object, and a second summary line made

@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Shared plumbing for the differential-fuzz dump mains ([[FuzzDump]],
-  * [[StreamFuzzDump]]): the dev-harness SparkSession and the
+/** Shared plumbing for every main ([[Verify]], [[Bench]], [[Scratch]],
+  * the fuzz dumps and the dev probes): the one SparkSession recipe
+  * (local[SPARK_GRAFT_CPUS], default 4, session time zone UTC) and the
   * `dev/check.py` output layout (per-query parquet + oracle_sql.json).
-  * One escaper serves both dumps so an escaping fix can't apply to one
-  * oracle_sql.json writer and not the other.
+  * One escaper serves every oracle_sql.json writer, so an escaping fix
+  * can't apply to one and not the others.
   */
 private[graft] object DumpIO {
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev-only: dump `.explain("formatted")` for named BATCH queries to files.
@@ -17,13 +16,7 @@ object PlanDump {
     val Array(sfDir, outDir, namesCsv, rest @ _*) = args: @unchecked
     val suffix = rest.headOption.getOrElse("plan")
     val names = namesCsv.split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DumpIO.session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val all = SparkEntry.queries ++ SparkEntry.benchOnly
     names.foreach { n =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: price the per-query fixed costs the bench pays around every
   * SQL-corpus key — `Tables.registerAll` (10 temp-view registrations over
   * memoized frames) and a trivial spark.sql round — so "memoize view
@@ -13,13 +11,7 @@ object RegisterProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(100)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DumpIO.session()
     // cold first call (footer reads happen here under the F1 memo)
     val t0 = System.nanoTime()
     Tables.registerAll(spark, sfDir)

@@ -12,7 +12,7 @@ import graft.queries._
   */
 object SparkEntry {
 
-  private val modules: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
+  private[graft] val modules: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
     Seq(
       (AggQueries.queries, AggQueries.oracles),
       (JoinQueries.queries, JoinQueries.oracles),
@@ -27,7 +27,7 @@ object SparkEntry {
       (TpcdsQueries.queries, TpcdsQueries.oracles),
       (StreamQueries.queries, StreamQueries.oracles),
       (FuzzQueries.queries, FuzzQueries.oracles),
-      (StreamFuzzQueries.queries, StreamFuzzQueries.oracles),
+      (FuzzFamilies.queries, FuzzFamilies.oracles),
       (IntegrationQueries.queries, IntegrationQueries.oracles)
     )
 

@@ -1,458 +1,80 @@
 package graft
 
+import graft.queries.{CdcFuzzGen, FuzzArm, FuzzFamilies}
 
 /** Streaming differential-fuzz dump — the cross-engine half of the
-  * StreamFuzzGen layer (the engine-vs-engine half is `StreamFuzzSpec`).
-  * Each seeded case replays the events table through a MemoryStream
-  * into its windowed aggregate and writes the `dev/check.py` layout
-  * (per-query parquet + oracle_sql.json with the case's DuckDB
-  * restatement), so the comparison is the driver's own machinery.
+  * streaming fuzz layer (the engine-vs-engine half is `StreamFuzzSpec`).
+  * Each seeded case replays through its family's operator and writes
+  * the `dev/check.py` layout (per-query parquet + oracle_sql.json with
+  * the case's DuckDB restatement), so the comparison is the same
+  * machinery Verify's output goes through.
   *
   * Usage: runMain graft.StreamFuzzDump <sfDir> <outDir> [n=30] [seed0=1] [family=window]
   * then:  python3 dev/check.py <sfDir> <outDir>
-  * family selects the generator arm: window (windowed aggregates),
-  * session (SessionWindows annotation), sessiondyn (built-in
-  * session_window with a PER-ROW dynamic gap expression vs a
-  * running-max-of-ends islands restatement), retract (StatefulOps retract
-  * group agg), minibatch (the retract case's SUM arm through the
-  * mini-batch emission protocol — one -U/+U step per key per batch),
-  * distinct (split COUNT(DISTINCT) — (group, value % buckets) shards
-  * folded by the final-stage signed sum),
-  * topn (RetractableTopN diffs), cep (batch NFA patterns),
-  * dedup (StatefulOps keep-first/last/TTL), join (OuterJoin/SemiAntiJoin
-  * retraction joins), temporal (TemporalJoin as-of resolution), cepq
-  * (NFA quantifier patterns), cepr (NFA relaxed-contiguity/negation
-  * patterns), interval (stream–stream time-range join), winjoin
-  * (windowed equi-join), over (unbounded-preceding over-agg ROWS/RANGE),
-  * boundedover (ROWS/RANGE BOUNDED-preceding over-agg — the retract
-  * path), ptjoin (proc-time temporal join, arrival-order restatement), cdc
-  * (CDC-dialect convergence — 4 parser runs per seed), recover
-  * (checkpoint stop/restart resume — 12 stateful arms per seed incl.
-  * CEP partial-match, allowed-lateness, Top-1 champion, broadcast
-  * rules-map, temporal-sort buffer+timer state, and the state-surgery
-  * resume leg), surgery (savepoint read→point-read→rewrite→bootstrap
-  * resume — StateReader/StateBootstrap seeded end-to-end),
-  * cumulate (CUMULATE TVF shapes), countwin (count windows tumbling +
-  * sliding), winrank (window top-n / window dedup), lookupttl (lookup
-  * cache expire-after-write/-access staleness vs a versioned store),
-  * lookupfull (FULL-cache periodic-reload snapshot semantics), cepany
-  * (followedByAny match multiplicity under NO SKIP — 2-step join
-  * restatement), cepto (CEP timeout side output — disjoint-type chains,
-  * LEAD restatement), wmidle (watermark idleness — stalled sources released
-  * from the combined-clock min), wmalign (watermark alignment pacing —
-  * pause/resume must not change results), broadcast (broadcast-state
-  * rules map — control PUT/REMOVEs interleaving with data rows in
-  * arrival order), tsort (temporal sort — scrambled chunks re-emitted
-  * in exact (quantized ts, arrival) order, sequence-stamped), t1 (Fast
-  * Top-1 champion / append First-N counter states), or all (n seeds of
-  * each single-arm family + the cdc quad).
+  * family is any name in [[graft.queries.FuzzFamilies.all]] (one arm per
+  * seed), `recover` (every restartable family's checkpoint stop/restart
+  * arm), `cdc` (one simulated history through all four CDC-dialect
+  * parsers, each against the case's one last-image oracle) or `all`
+  * (every registry family + the cdc quad).
   */
 object StreamFuzzDump {
+
+  private def cdc(seed: Long): Seq[FuzzArm] = {
+    val c = CdcFuzzGen.gen(seed)
+    Seq("debezium", "canal", "maxwell", "ogg").map(d =>
+      FuzzArm(s"q_fuzz_cdc_${d}_$seed",
+        (s, dir) => CdcFuzzGen.replay(s, dir, c, d), c.oracleSql))
+  }
+
+  /** The per-seed arms a family name selects; None for an unknown name. */
+  private[graft] def arms(family: String): Option[Long => Seq[FuzzArm]] =
+    family match {
+      case "all" => Some(seed => FuzzFamilies.all.map(_.arm(seed)) ++ cdc(seed))
+      case "recover" => Some(seed => FuzzFamilies.all.flatMap(_.recoverArm(seed)))
+      case "cdc" => Some(cdc)
+      case name => FuzzFamilies.all.find(_.name == name)
+        .map(f => (seed: Long) => Seq(f.arm(seed)))
+    }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val n = if (args.length > 2) args(2).toInt else 30
     val seed0 = if (args.length > 3) args(3).toLong else 1L
     val family = if (args.length > 4) args(4) else "window"
+    val armsOf = arms(family).getOrElse(sys.error(
+      s"unknown family '$family': expected " +
+        (FuzzFamilies.all.map(_.name) ++ Seq("cdc", "recover", "all"))
+          .mkString(", ")))
     val spark = DumpIO.session()
     new java.io.File(outDir).mkdirs()
     var failed = 0
     var skippedInvalid = 0
-    // (user_id, epoch-micros) pairs for the wmidle validity gate —
-    // loaded once, only if a wi arm is in play
-    lazy val idleRows: Seq[(Long, Long)] = {
-      import org.apache.spark.sql.functions.{col, unix_micros}
-      graft.queries.Q.t(spark, sfDir, "events")
-        .select(col("user_id"),
-          unix_micros(col("ts").cast("timestamp")).as("us"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    }
-    // (name, result DataFrame thunk, oracle SQL) per seed and family —
-    // only the selected families' cases are generated
-    def arms(seed: Long): Seq[(String, () => org.apache.spark.sql.DataFrame, String)] = {
-      def w = {
-        val c = graft.queries.StreamFuzzGen.gen(seed)
-        (s"q_fuzz_stream_$seed",
-          () => graft.queries.StreamFuzzQueries.replay(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def se = {
-        val c = graft.queries.StreamFuzzGen.genSession(seed)
-        (s"q_fuzz_stream_s$seed",
-          () => graft.queries.StreamFuzzQueries.replaySession(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def sd = {
-        val c = graft.queries.StreamFuzzGen.genSessionDyn(seed)
-        (s"q_fuzz_stream_sd$seed",
-          () => graft.queries.StreamFuzzQueries.replaySessionDyn(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def sg = {
-        val c = graft.queries.StreamFuzzGen.genSurgery(seed)
-        (s"q_fuzz_surgery_$seed",
-          () => graft.queries.StreamFuzzQueries.replaySurgery(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def re = {
-        val c = graft.queries.StreamFuzzGen.genRetract(seed)
-        (s"q_fuzz_stream_r$seed",
-          () => graft.queries.StreamFuzzQueries.replayRetract(spark, sfDir, c),
-          c.oracleSql)
-      }
-      // mini-batch emission protocol: the retract case forced to its SUM
-      // arm, replayed with one -U/+U step per key per micro-batch — the
-      // folded end state must still match the same batch restatement
-      def mb = {
-        val c = graft.queries.StreamFuzzGen.genRetract(seed).copy(op = "sum")
-        (s"q_fuzz_stream_mb$seed",
-          () => graft.queries.StreamFuzzQueries.replayRetract(spark, sfDir, c,
-            miniBatch = true),
-          c.oracleSql)
-      }
-      def cd = {
-        val c = graft.queries.StreamFuzzGen.genDistinct(seed)
-        (s"q_fuzz_stream_cd$seed",
-          () => graft.queries.StreamFuzzQueries.replayDistinct(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def tn = {
-        val c = graft.queries.StreamFuzzGen.genTopN(seed)
-        (s"q_fuzz_stream_t$seed",
-          () => graft.queries.StreamFuzzQueries.replayTopN(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def ce = {
-        val c = graft.queries.CepFuzzGen.gen(seed)
-        (s"q_fuzz_cep_$seed",
-          () => graft.queries.StreamFuzzQueries.replayCep(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def de = {
-        val c = graft.queries.StreamFuzzGen.genDedup(seed)
-        (s"q_fuzz_stream_d$seed",
-          () => graft.queries.StreamFuzzQueries.replayDedup(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def jo = {
-        val c = graft.queries.StreamFuzzGen.genJoin(seed)
-        (s"q_fuzz_stream_j$seed",
-          () => graft.queries.StreamFuzzQueries.replayJoin(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def tj = {
-        val c = graft.queries.StreamFuzzGen.genTemporal(seed)
-        (s"q_fuzz_stream_tj$seed",
-          () => graft.queries.StreamFuzzQueries.replayTemporal(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def cq = {
-        val c = graft.queries.CepFuzzGen.genQuant(seed)
-        (s"q_fuzz_cepq_$seed",
-          () => graft.queries.StreamFuzzQueries.replayQuant(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def cr = {
-        val c = graft.queries.CepFuzzGen.genRelaxed(seed)
-        (s"q_fuzz_cepr_$seed",
-          () => graft.queries.StreamFuzzQueries.replayRelaxed(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def iv = {
-        val c = graft.queries.StreamFuzzGen.genInterval(seed)
-        (s"q_fuzz_stream_iv$seed",
-          () => graft.queries.StreamFuzzQueries.replayInterval(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def wj = {
-        val c = graft.queries.StreamFuzzGen.genWinJoin(seed)
-        (s"q_fuzz_stream_wj$seed",
-          () => graft.queries.StreamFuzzQueries.replayWinJoin(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def ov = {
-        val c = graft.queries.StreamFuzzGen.genOver(seed)
-        (s"q_fuzz_stream_ov$seed",
-          () => graft.queries.StreamFuzzQueries.replayOver(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def ob = {
-        val c = graft.queries.StreamFuzzGen.genBoundedOver(seed)
-        (s"q_fuzz_stream_ovb$seed",
-          () => graft.queries.StreamFuzzQueries.replayBoundedOver(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def pt = {
-        val c = graft.queries.StreamFuzzGen.genPtJoin(seed)
-        (s"q_fuzz_stream_ptj$seed",
-          () => graft.queries.StreamFuzzQueries.replayPtJoin(spark, sfDir, c),
-          c.oracleSql)
-      }
-      // CDC-dialect convergence: the same simulated history through all
-      // four parsers, each against the case's one last-image oracle
-      def cdc = {
-        val c = graft.queries.CdcFuzzGen.gen(seed)
-        Seq("debezium", "canal", "maxwell", "ogg").map(d =>
-          (s"q_fuzz_cdc_${d}_$seed",
-            () => graft.queries.CdcFuzzGen.replay(spark, sfDir, c, d),
-            c.oracleSql))
-      }
-      // checkpoint stop/restart resume: the stateful families replayed
-      // with a seed-determined mid-replay stop() + restart, against the
-      // same oracles as their uninterrupted runs
-      def rec = {
-        val b = Some(graft.queries.StreamFuzzQueries.restartBoundary(seed))
-        val jc = graft.queries.StreamFuzzGen.genJoin(seed)
-        val rc = graft.queries.StreamFuzzGen.genRetract(seed)
-        val tc = graft.queries.StreamFuzzGen.genTemporal(seed)
-        val wc = graft.queries.StreamFuzzGen.gen(seed)
-        val sc = graft.queries.StreamFuzzGen.genSession(seed)
-        val nc = graft.queries.StreamFuzzGen.genTopN(seed)
-        Seq(
-          (s"q_fuzz_recover_j$seed",
-            () => graft.queries.StreamFuzzQueries.replayJoin(spark, sfDir, jc, b),
-            jc.oracleSql),
-          (s"q_fuzz_recover_r$seed",
-            () => graft.queries.StreamFuzzQueries.replayRetract(spark, sfDir, rc, b),
-            rc.oracleSql),
-          (s"q_fuzz_recover_tj$seed",
-            () => graft.queries.StreamFuzzQueries.replayTemporal(spark, sfDir, tc, b),
-            tc.oracleSql),
-          (s"q_fuzz_recover_w$seed",
-            () => graft.queries.StreamFuzzQueries.replay(spark, sfDir, wc, b),
-            wc.oracleSql),
-          // session under a DOUBLE stop/restart (recovery from an
-          // already-recovered checkpoint — timer + watermark restore
-          // stacking) and top-n under a single one
-          (s"q_fuzz_recover_s$seed",
-            () => graft.queries.StreamFuzzQueries.replaySession(spark, sfDir,
-              sc, restartBoundaries = Seq(1, 2)),
-            sc.oracleSql),
-          (s"q_fuzz_recover_t$seed",
-            () => graft.queries.StreamFuzzQueries.replayTopN(spark, sfDir, nc, b),
-            nc.oracleSql),
-          // CEP NFA partial-match buffer + allowed-lateness alive-window
-          // state, restored mid-replay
-          {
-            val cc = graft.queries.CepFuzzGen.gen(seed)
-            (s"q_fuzz_recover_c$seed",
-              () => graft.queries.StreamFuzzQueries.replayCepStream(
-                spark, sfDir, cc, b),
-              cc.oracleSql)
-          },
-          {
-            val lc = graft.queries.StreamFuzzGen.genLateness(seed)
-            (s"q_fuzz_recover_lw$seed",
-              () => graft.queries.StreamFuzzQueries.replayLateness(
-                spark, sfDir, lc, b),
-              lc.oracleSql)
-          },
-          // Fast Top-1 / First-N: single-record (or counter-only) state
-          // restored mid-replay — the smallest recovery shape
-          {
-            val c1 = graft.queries.StreamFuzzGen.genT1(seed)
-            (s"q_fuzz_recover_top$seed",
-              () => graft.queries.StreamFuzzQueries.replayT1(
-                spark, sfDir, c1, b),
-              c1.oracleSql)
-          },
-          // broadcast rules MAP restored mid-replay
-          {
-            val cb = graft.queries.StreamFuzzGen.genBroadcast(seed)
-            (s"q_fuzz_recover_bc$seed",
-              () => graft.queries.StreamFuzzQueries.replayBroadcast(
-                spark, sfDir, cb, b),
-              cb.oracleSql)
-          },
-          // temporal sort buffer + coalesced timer restored mid-replay
-          {
-            val cs = graft.queries.StreamFuzzGen.genTsort(seed)
-            (s"q_fuzz_recover_ts$seed",
-              () => graft.queries.StreamFuzzQueries.replayTsort(
-                spark, sfDir, cs, b),
-              cs.oracleSql)
-          },
-          // state surgery: phase 2 (the query RESUMED from a rewritten
-          // offline bootstrap) additionally stopped and restarted — the
-          // initial-state handoff must survive checkpoint recovery
-          // without re-applying the bootstrap
-          {
-            val cg = graft.queries.StreamFuzzGen.genSurgery(seed)
-            (s"q_fuzz_recover_sb$seed",
-              () => graft.queries.StreamFuzzQueries.replaySurgery(
-                spark, sfDir, cg, b),
-              cg.oracleSql)
-          })
-      }
-      def cu = {
-        val c = graft.queries.WindowFuzzGen.genCumulate(seed)
-        (s"q_fuzz_stream_cu$seed",
-          () => graft.queries.WindowFuzzGen.replayCumulate(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def cw = {
-        val c = graft.queries.WindowFuzzGen.genCountWin(seed)
-        (s"q_fuzz_stream_cw$seed",
-          () => graft.queries.StreamFuzzQueries.replayCountWin(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def wr = {
-        val c = graft.queries.WindowFuzzGen.genWinRank(seed)
-        (s"q_fuzz_stream_wr$seed",
-          () => graft.queries.WindowFuzzGen.replayWinRank(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def lw = {
-        val c = graft.queries.StreamFuzzGen.genLateness(seed)
-        (s"q_fuzz_stream_lw$seed",
-          () => graft.queries.StreamFuzzQueries.replayLateness(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def cg = {
-        val c = graft.queries.StreamFuzzGen.genCoGroup(seed)
-        (s"q_fuzz_stream_cg$seed",
-          () => graft.queries.StreamFuzzQueries.replayCoGroup(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def lt = {
-        val c = graft.queries.LookupFuzzGen.genTtl(seed)
-        (s"q_fuzz_lookup_ttl$seed",
-          () => graft.queries.LookupFuzzGen.replayTtl(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def lf = {
-        val c = graft.queries.LookupFuzzGen.genFull(seed)
-        (s"q_fuzz_lookup_full$seed",
-          () => graft.queries.LookupFuzzGen.replayFull(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def ct = {
-        val c = graft.queries.CepFuzzGen.genTimeout(seed)
-        (s"q_fuzz_cepto_$seed",
-          () => graft.queries.StreamFuzzQueries.replayTimeout(spark, sfDir, c),
-          c.oracleSql)
-      }
-      // wmidle's sent-rows restatement is only exact when the seed's
-      // occupancy/silent-rounds preconditions hold on the actual data
-      // (the same IdleCase.invalidReason gate the spec asserts) — an
-      // invalid seed would surface as a FALSE engine-vs-oracle
-      // divergence in a sweep, so it is skipped with a note instead
-      def wi: Seq[(String, () => org.apache.spark.sql.DataFrame, String)] = {
-        val c = graft.queries.StreamFuzzGen.genIdle(seed)
-        c.invalidReason(idleRows) match {
-          case Some(reason) =>
-            skippedInvalid += 1
-            System.err.println(
-              s"[streamfuzz] q_fuzz_stream_wi$seed skipped (invalid seed: " +
-                s"$reason)")
-            Nil
-          case None =>
-            Seq((s"q_fuzz_stream_wi$seed",
-              () => graft.queries.StreamFuzzQueries.replayIdle(spark, sfDir, c),
-              c.oracleSql))
-        }
-      }
-      def wa = {
-        val c = graft.queries.StreamFuzzGen.genWmAlign(seed)
-        (s"q_fuzz_stream_wa$seed",
-          () => graft.queries.StreamFuzzQueries.replayWmAlign(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def bc = {
-        val c = graft.queries.StreamFuzzGen.genBroadcast(seed)
-        (s"q_fuzz_stream_bc$seed",
-          () => graft.queries.StreamFuzzQueries.replayBroadcast(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def ts = {
-        val c = graft.queries.StreamFuzzGen.genTsort(seed)
-        (s"q_fuzz_stream_ts$seed",
-          () => graft.queries.StreamFuzzQueries.replayTsort(spark, sfDir, c),
-          c.oracleSql)
-      }
-      def t1 = {
-        val c = graft.queries.StreamFuzzGen.genT1(seed)
-        (s"q_fuzz_stream_top$seed",
-          () => graft.queries.StreamFuzzQueries.replayT1(spark, sfDir, c),
-          c.oracleSql)
-      }
-      // match-multiplicity (followedByAny under NO SKIP): only the
-      // 2-step arm is SQL-restatable, so non-any2 draws re-shape to
-      // any2 with the seed's own predicates (deterministic); the any3/
-      // comb arms are enumerator-gated in CepFuzzSpec by design
-      def ca = {
-        val c0 = graft.queries.CepFuzzGen.genAny(seed)
-        val c = if (c0.arm == "any2") c0 else c0.copy(arm = "any2")
-        (s"q_fuzz_cepany_$seed",
-          () => graft.queries.StreamFuzzQueries.replayAny(spark, sfDir, c),
-          c.oracleSql)
-      }
-      family match {
-        case "window"  => Seq(w)
-        case "session" => Seq(se)
-        case "sessiondyn" => Seq(sd)
-        case "surgery" => Seq(sg)
-        case "retract" => Seq(re)
-        case "minibatch" => Seq(mb)
-        case "distinct"  => Seq(cd)
-        case "topn"    => Seq(tn)
-        case "cep"     => Seq(ce)
-        case "dedup"   => Seq(de)
-        case "join"    => Seq(jo)
-        case "temporal" => Seq(tj)
-        case "cepq"    => Seq(cq)
-        case "cepr"    => Seq(cr)
-        case "interval" => Seq(iv)
-        case "winjoin" => Seq(wj)
-        case "over"    => Seq(ov)
-        case "boundedover" => Seq(ob)
-        case "ptjoin"  => Seq(pt)
-        case "cdc"     => cdc
-        case "recover" => rec
-        case "cumulate" => Seq(cu)
-        case "countwin" => Seq(cw)
-        case "winrank" => Seq(wr)
-        case "lateness" => Seq(lw)
-        case "cogroup" => Seq(cg)
-        case "lookupttl" => Seq(lt)
-        case "lookupfull" => Seq(lf)
-        case "cepany"  => Seq(ca)
-        case "cepto"   => Seq(ct)
-        case "wmidle"  => wi
-        case "wmalign" => Seq(wa)
-        case "broadcast" => Seq(bc)
-        case "tsort"   => Seq(ts)
-        case "t1"      => Seq(t1)
-        case "all"     =>
-          Seq(w, se, sd, sg, re, mb, cd, tn, ce, de, jo, tj, cq, cr, iv, wj,
-            ov, ob, pt, cu, cw, wr, lw, cg, lt, lf, ca, ct, wa, bc, ts,
-            t1) ++ wi ++ cdc
-        case other => sys.error(s"unknown family '$other': " +
-          "expected window, session, sessiondyn, surgery, retract, " +
-          "minibatch, distinct, topn, cep, dedup, join, temporal, cepq, " +
-          "cepr, interval, winjoin, over, boundedover, ptjoin, cdc, " +
-          "recover, cumulate, countwin, winrank, lateness, cogroup, " +
-          "lookupttl, lookupfull, cepany, cepto, wmidle, wmalign, " +
-          "broadcast, tsort, t1, all")
-      }
-    }
-    val oracle = (seed0 until seed0 + n).flatMap(arms).flatMap {
-      case (name, run, sql) =>
-        try {
-          run().coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-          Some(name -> sql)
-        } catch { case e: Throwable =>
-          failed += 1
-          System.err.println(s"[streamfuzz] $name failed on Spark: ${e.getMessage}")
+    val planned = (seed0 until seed0 + n).flatMap(armsOf)
+    val oracle = planned.flatMap { a =>
+      a.skip(spark, sfDir) match {
+        case Some(reason) =>
+          skippedInvalid += 1
+          System.err.println(
+            s"[streamfuzz] ${a.name} skipped (invalid seed: $reason)")
           None
-        }
+        case None =>
+          try {
+            a.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+              .parquet(s"$outDir/${a.name}")
+            Some(a.name -> a.oracleSql)
+          } catch { case e: Throwable =>
+            failed += 1
+            System.err.println(
+              s"[streamfuzz] ${a.name} failed on Spark: ${e.getMessage}")
+            None
+          }
+      }
     }
     DumpIO.writeOracle(outDir, oracle)
-    val total = n * (family match {
-      case "all" => 37; case "cdc" => 4; case "recover" => 12; case _ => 1
-    }) - skippedInvalid
-    println(s"[streamfuzz] dumped ${oracle.length} of $total $family cases " +
-      s"($failed failed on Spark, $skippedInvalid invalid wmidle seeds " +
-      s"skipped), seeds $seed0..${seed0 + n - 1}")
+    println(s"[streamfuzz] dumped ${oracle.length} of " +
+      s"${planned.length - skippedInvalid} $family cases ($failed failed " +
+      s"on Spark, $skippedInvalid invalid seeds skipped), " +
+      s"seeds $seed0..${seed0 + n - 1}")
     spark.stop()
     if (failed > 0) sys.exit(1)
   }

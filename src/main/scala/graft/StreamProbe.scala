@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Dev-only: run named streaming gates with a session-level
@@ -14,13 +13,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 object StreamProbe {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, namesCsv) = args: @unchecked
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DumpIO.session()
     val batches =
       new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
     spark.streams.addListener(new StreamingQueryListener {

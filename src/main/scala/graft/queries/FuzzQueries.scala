@@ -31,8 +31,8 @@ object FuzzQueries {
     * — the ConnectorDdl PK-merge route under randomized key collisions).
     */
   private[queries] val upsertSeeds: Seq[Long] = Seq(
-    StreamFuzzQueries.firstSeedOf("upsert", UpsertFuzzGen.gen)(!_.compositePk),
-    StreamFuzzQueries.firstSeedOf("upsert", UpsertFuzzGen.gen)(_.compositePk))
+    FuzzFamilies.firstSeedOf("upsert", UpsertFuzzGen.gen)(!_.compositePk),
+    FuzzFamilies.firstSeedOf("upsert", UpsertFuzzGen.gen)(_.compositePk))
     .distinct
 
   private val upsertCases = upsertSeeds.map(UpsertFuzzGen.gen)
@@ -49,7 +49,7 @@ object FuzzQueries {
     * the DuckDB last-image restatement.
     */
   private[queries] val cdcSeeds: Map[String, Long] = {
-    val canal = StreamFuzzQueries.firstSeedOf("cdc", CdcFuzzGen.gen)(
+    val canal = FuzzFamilies.firstSeedOf("cdc", CdcFuzzGen.gen)(
       _.canalBatchMax >= 2)
     val maxwell = (1L to 256L).find(s =>
       s != canal && CdcFuzzGen.gen(s).pkMod <= 7).get
@@ -70,36 +70,12 @@ object FuzzQueries {
     * the three agree.
     */
   private[queries] val lookupSeeds: Seq[Long] = Seq(
-    StreamFuzzQueries.firstSeedOf("lookup", LookupFuzzGen.gen)(
+    FuzzFamilies.firstSeedOf("lookup", LookupFuzzGen.gen)(
       _.cacheSize == 1),
-    StreamFuzzQueries.firstSeedOf("lookup", LookupFuzzGen.gen)(c =>
+    FuzzFamilies.firstSeedOf("lookup", LookupFuzzGen.gen)(c =>
       c.failMod > c.maxRetries + 1 && c.cacheSize > 1)).distinct
 
   private val lookupCases = lookupSeeds.map(LookupFuzzGen.gen)
-
-  /** one write-mode stale-heavy (ttl spans version periods — served-stale
-    * hits are frequent) and one access-mode cache-TTL shape
-    * ([[LookupFuzzGen.TtlCase]] — the DefaultLookupCache staleness-window
-    * semantics vs the chain/islands restatements).
-    */
-  private[queries] val lookupTtlSeeds: Seq[Long] = Seq(
-    StreamFuzzQueries.firstSeedOf("lookupttl", LookupFuzzGen.genTtl)(c =>
-      !c.accessMode && c.ttl > c.versionPeriod),
-    StreamFuzzQueries.firstSeedOf("lookupttl", LookupFuzzGen.genTtl)(
-      _.accessMode)).distinct
-
-  private val lookupTtlCases = lookupTtlSeeds.map(LookupFuzzGen.genTtl)
-
-  /** one FULL-cache (ALL mode) shape whose reload period spans store
-    * versions — the snapshot is served deeply stale between reloads
-    * ([[LookupFuzzGen.FullCase]], LookupFullCache periodic-reload
-    * semantics).
-    */
-  private[queries] val lookupFullSeeds: Seq[Long] = Seq(
-    StreamFuzzQueries.firstSeedOf("lookupfull", LookupFuzzGen.genFull)(c =>
-      c.reloadEvery > c.versionPeriod))
-
-  private val lookupFullCases = lookupFullSeeds.map(LookupFuzzGen.genFull)
 
   val queries: Map[String, QFn] = all.map { case (name, sql) =>
     name -> ((s, dir) => {
@@ -115,12 +91,6 @@ object FuzzQueries {
   }.toMap ++ lookupCases.map { c =>
     s"q_fuzz_lookup_${c.seed}" -> ((s, dir: String) =>
       LookupFuzzGen.replay(s, dir, c)): (String, QFn)
-  }.toMap ++ lookupTtlCases.map { c =>
-    s"q_fuzz_lookup_ttl${c.seed}" -> ((s, dir: String) =>
-      LookupFuzzGen.replayTtl(s, dir, c)): (String, QFn)
-  }.toMap ++ lookupFullCases.map { c =>
-    s"q_fuzz_lookup_full${c.seed}" -> ((s, dir: String) =>
-      LookupFuzzGen.replayFull(s, dir, c)): (String, QFn)
   }.toMap
 
   // identical SQL text runs as the oracle (dialect-shared by design);
@@ -128,9 +98,5 @@ object FuzzQueries {
   val oracles: Map[String, String] = all ++
     upsertCases.map(c => s"q_fuzz_upsert_${c.seed}" -> c.oracleSql).toMap ++
     cdcCases.map { case (d, c) => s"q_fmt_$d" -> c.oracleSql }.toMap ++
-    lookupCases.map(c => s"q_fuzz_lookup_${c.seed}" -> c.oracleSql).toMap ++
-    lookupTtlCases.map(c =>
-      s"q_fuzz_lookup_ttl${c.seed}" -> c.oracleSql).toMap ++
-    lookupFullCases.map(c =>
-      s"q_fuzz_lookup_full${c.seed}" -> c.oracleSql).toMap
+    lookupCases.map(c => s"q_fuzz_lookup_${c.seed}" -> c.oracleSql).toMap
 }

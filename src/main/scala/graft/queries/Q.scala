@@ -33,14 +33,6 @@ object Q {
   def dsumSql(col: String): String =
     s"CAST(SUM(CAST($col AS DECIMAL(12,2))) AS DOUBLE)"
 
-  /** Guards every session-conf set→writeStream.start()→restore window
-    * in the replay harness: Bench overlaps independent streaming gates,
-    * and the temporary per-query conf (shuffle partitions, state-store
-    * provider) must never be observed — or captured as "previous" — by
-    * a concurrently starting gate.
-    */
-  val streamConfLock = new Object
-
   /** Best-effort recursive delete (deepest first) — shared by every
     * scratch-dir consumer so the idiom can't drift.
     */

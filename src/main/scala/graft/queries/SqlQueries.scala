@@ -635,9 +635,9 @@ object SqlQueries {
             // metastore db lives exactly as long as the JVM — the same
             // lifetime the scratch-dir db had (Q.scratchDir is reaped at
             // exit), minus derby's on-disk db bootstrap + write-ahead log
-            // (r20 HiveProbe A/B: first metastore op 4.4-4.8 s on-disk →
-            // 3.6-3.8 s in-memory; schema DDL still runs inside the
-            // timed region). The
+            // (r20 A/B, plans/r20/hive_probe_ab.txt: first metastore op
+            // 4.4-4.8 s on-disk → 3.6-3.8 s in-memory; schema DDL still
+            // runs inside the timed region). The
             // warehouse stays on disk — table data is real file I/O.
             val h = SparkSession.builder()
               .config("spark.sql.warehouse.dir", wh)
@@ -652,7 +652,8 @@ object SqlQueries {
         // the hive session's frame memo is separate from the base
         // session's (DataFrames are session-bound), so registering all
         // ten tables here re-reads nine unused parquet footers (~1.3 s
-        // cold, r20 HiveProbe) — this statement only reads `orders`
+        // cold, plans/r20/hive_probe_ab.txt) — this statement only
+        // reads `orders`
         Tables.load(hive, dir, "orders").createOrReplaceTempView("orders")
         hive.sql("DROP TABLE IF EXISTS hive_orders_agg")
         hive.sql(

@@ -159,61 +159,52 @@ object StreamQueries {
     val trackConf =
       "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
     // The session conf binds at query START, so the overrides are
-    // pinned only across the start() call. The whole set→start→restore
-    // window holds Q.streamConfLock: Bench can overlap independent
-    // replay gates (SPARK_GRAFT_STREAM_THREADS — serial by default, see
-    // the measured tradeoff in Bench.scala), and an unlocked window
-    // would let one gate capture another's temporary values as its
-    // "previous" state (worst case: a transformWithState gate starting
-    // on the HDFS provider and failing). Starts serialize; the long
-    // part — the micro-batch replay below — can overlap safely.
-    Q.streamConfLock.synchronized {
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevProvider =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      val prevTrack = s.conf.getOption(trackConf)
-      def restore(key: String, prev: Option[String]): Unit = prev match {
-        case Some(p) => s.conf.set(key, p)
-        case None    => s.conf.unset(key)
+    // pinned only across the start() call and restored right after.
+    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
+    val prevProvider =
+      s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+    val prevTrack = s.conf.getOption(trackConf)
+    def restore(key: String, prev: Option[String]): Unit = prev match {
+      case Some(p) => s.conf.set(key, p)
+      case None    => s.conf.unset(key)
+    }
+    // default cap 2: replay state fits a handful of partitions and a
+    // wider store only multiplies open/close overhead. The sharded
+    // scale probes RAISE this — at 64x key breadth the 2-partition
+    // store is the bottleneck and sharding is the production lever.
+    val effectiveShards = math.min(prevShuffle.toInt, shufflePartitions)
+    // a clamped shard request must be self-describing: a sharded probe
+    // recorded on a narrow host would otherwise carry its 8-shard
+    // label over an under-sharded measurement
+    if (effectiveShards < shufflePartitions)
+      System.err.println(s"[runToEnd] requested $shufflePartitions " +
+        s"shuffle partitions clamped to $effectiveShards " +
+        "(session default is narrower)")
+    s.conf.set("spark.sql.shuffle.partitions", effectiveShards.toString)
+    s.conf.set("spark.sql.streaming.stateStore.providerClass",
+      if (rocks) RocksProvider else HdfsProvider)
+    // replay state is tiny; per-commit row recounts are pure overhead
+    s.conf.set(trackConf, "false")
+    // changelog checkpointing: commit uploads the batch's delta instead
+    // of a full SST snapshot — replay-sized state pays snapshot cost per
+    // store per batch otherwise
+    val changelogConf =
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    val prevChangelog = s.conf.getOption(changelogConf)
+    s.conf.set(changelogConf, "true")
+    try {
+      val base = out.writeStream.outputMode(mode)
+        .option("checkpointLocation", ckpt)
+      foreachBatch match {
+        case Some(fn) => base.foreachBatch(fn).start()
+        case None => base.format("memory").queryName(name).start()
       }
-      // default cap 2: replay state fits a handful of partitions and a
-      // wider store only multiplies open/close overhead. The sharded
-      // scale probes RAISE this — at 64x key breadth the 2-partition
-      // store is the bottleneck and sharding is the production lever.
-      val effectiveShards = math.min(prevShuffle.toInt, shufflePartitions)
-      // a clamped shard request must be self-describing: a sharded probe
-      // recorded on a narrow host would otherwise carry its 8-shard
-      // label over an under-sharded measurement
-      if (effectiveShards < shufflePartitions)
-        System.err.println(s"[runToEnd] requested $shufflePartitions " +
-          s"shuffle partitions clamped to $effectiveShards " +
-          "(session default is narrower)")
-      s.conf.set("spark.sql.shuffle.partitions", effectiveShards.toString)
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        if (rocks) RocksProvider else HdfsProvider)
-      // replay state is tiny; per-commit row recounts are pure overhead
-      s.conf.set(trackConf, "false")
-      // changelog checkpointing: commit uploads the batch's delta instead
-      // of a full SST snapshot — replay-sized state pays snapshot cost per
-      // store per batch otherwise
-      val changelogConf =
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-      val prevChangelog = s.conf.getOption(changelogConf)
-      s.conf.set(changelogConf, "true")
-      try {
-        val base = out.writeStream.outputMode(mode)
-          .option("checkpointLocation", ckpt)
-        foreachBatch match {
-          case Some(fn) => base.foreachBatch(fn).start()
-          case None => base.format("memory").queryName(name).start()
-        }
-      }
-      finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        restore("spark.sql.streaming.stateStore.providerClass", prevProvider)
-        restore(trackConf, prevTrack)
-        restore(changelogConf, prevChangelog)
-      }
+    }
+    finally {
+      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      restore("spark.sql.streaming.stateStore.providerClass", prevProvider)
+      restore(trackConf, prevTrack)
+      restore(changelogConf, prevChangelog)
     }
   }
 
@@ -271,6 +262,12 @@ object StreamQueries {
           $"event_type", $"value")
         .as[Ev].collect().toSeq.sortBy(e => (micros(e.ts), e.event_id))
     })
+
+  /** (user_id, epoch-micros) per event — the rows a drawn idleness case's
+    * `IdleCase.invalidReason` is checked against.
+    */
+  private[queries] def userMicros(s: SparkSession, dir: String): Seq[(Long, Long)] =
+    sortedEvents(s, dir).map(e => (e.user_id, micros(e.ts)))
 
   /** MemoryStream replay for a [[StreamFuzzGen.Case]]: (event-time,
     * id)-sorted events stream through the case's filter → watermark →
@@ -575,7 +572,7 @@ object StreamQueries {
     val in1 = MemoryStream[StateBootstrap.BIn]
     val out1 = StateBootstrap.agg(in1.toDS(),
       s.emptyDataset(Encoders.product[StateBootstrap.BInit]))
-    val q1 = Q.streamConfLock.synchronized {
+    val q1 = {
       val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
       val prevProvider =
         s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
@@ -2621,9 +2618,8 @@ object StreamQueries {
       val in1 = MemoryStream[StateBootstrap.BIn]
       val out1 = StateBootstrap.agg(in1.toDS(),
         s.emptyDataset(Encoders.product[StateBootstrap.BInit]))
-      // same locked set→start→restore window as runToEnd (Bench overlaps
-      // replay gates; see the comment there)
-      val q1 = Q.streamConfLock.synchronized {
+      // same set→start→restore window as runToEnd
+      val q1 = {
         val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
         val prevProvider =
           s.conf.getOption("spark.sql.streaming.stateStore.providerClass")

@@ -138,12 +138,12 @@ class LookupFuzzSpec extends SparkSuite {
   }
 
   test("promoted full-cache seed pins a reload-spans-versions shape") {
-    val shapes = FuzzQueries.lookupFullSeeds.map(LookupFuzzGen.genFull)
+    val shapes = FuzzFamilies.lookupFull.seeds.map(LookupFuzzGen.genFull)
     assert(shapes.exists(c => c.reloadEvery > c.versionPeriod))
   }
 
   test("promoted ttl seeds pin one write-mode stale-heavy and one access-mode shape") {
-    val shapes = FuzzQueries.lookupTtlSeeds.map(LookupFuzzGen.genTtl)
+    val shapes = FuzzFamilies.lookupTtl.seeds.map(LookupFuzzGen.genTtl)
     assert(shapes.exists(c => !c.accessMode && c.ttl > c.versionPeriod))
     assert(shapes.exists(_.accessMode))
   }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions.col
   * fuzzing cannot reach. The cross-engine half runs via
   * `graft.StreamFuzzDump` + `dev/check.py` (DuckDB restatements of the
   * same cases), and three shape-representative seeds are permanent
-  * driver-gated rows (StreamFuzzQueries).
+  * oracle-checked rows (FuzzFamilies).
   */
 class StreamFuzzSpec extends SparkSuite {
 
@@ -29,7 +29,7 @@ class StreamFuzzSpec extends SparkSuite {
   }
 
   test("promoted seeds cover tumble+1key, hop, and composite-key shapes") {
-    val shapes = StreamFuzzQueries.seeds.map(StreamFuzzGen.gen)
+    val shapes = FuzzFamilies.window.seeds.map(StreamFuzzGen.gen)
     assert(shapes.exists(c => !c.isHop && c.keys.length == 1))
     assert(shapes.exists(_.isHop))
     assert(shapes.exists(c => !c.isHop && c.keys.length == 2))
@@ -367,7 +367,7 @@ class StreamFuzzSpec extends SparkSuite {
   }
 
   test("promoted join seeds cover full-outer, semi, and anti shapes") {
-    val shapes = StreamFuzzQueries.joinSeeds.map(StreamFuzzGen.genJoin)
+    val shapes = FuzzFamilies.join.seeds.map(StreamFuzzGen.genJoin)
     assert(shapes.map(_.joinType).toSet == Set("full", "semi", "anti"))
   }
 
@@ -915,7 +915,7 @@ class StreamFuzzSpec extends SparkSuite {
     val span = mx - mn + 1
     // the promoted seed rides along so its validity preconditions are
     // asserted, not just its sf0.01 oracle outcome observed
-    for (seed <- (1L to 4L) ++ StreamFuzzQueries.idleSeeds) {
+    for (seed <- (1L to 4L) ++ FuzzFamilies.wmIdle.seeds) {
       val c = StreamFuzzGen.genIdle(seed)
       // validity: every source occupies every time slice up to its data
       // end (never spuriously idle mid-stream), and every stalled
@@ -959,7 +959,7 @@ class StreamFuzzSpec extends SparkSuite {
     // not just its oracle outcome observed (it is chosen for the
     // COARSEST round split — cheapest bench shape that still pauses)
     for (seed <- (1L to 3L) ++
-        StreamFuzzQueries.wmAlignSeeds.filterNot(1L to 3L contains _)) {
+        FuzzFamilies.wmAlign.seeds.filterNot(1L to 3L contains _)) {
       val c = StreamFuzzGen.genWmAlign(seed)
       val expected = spark.sql(c.restatement(sparkCev))
         .collect().map(_.toString).sorted.toSeq
@@ -1000,7 +1000,7 @@ class StreamFuzzSpec extends SparkSuite {
       paused += seedPaused
       // the promoted seed must ITSELF pause — its coarse round split is
       // chosen for bench cost, and this is the proof it kept the bite
-      if (StreamFuzzQueries.wmAlignSeeds.contains(seed))
+      if (FuzzFamilies.wmAlign.seeds.contains(seed))
         assert(seedPaused > 0,
           s"promoted align seed $seed never paused — degenerate promotion")
     }
@@ -1153,7 +1153,7 @@ class StreamFuzzSpec extends SparkSuite {
     var noneBite = 0
     var overwriteBite = 0
     for (seed <- (1L to 6L) ++
-        StreamFuzzQueries.broadcastSeeds.filterNot(1L to 6L contains _)) {
+        FuzzFamilies.broadcast.seeds.filterNot(1L to 6L contains _)) {
       val c = StreamFuzzGen.genBroadcast(seed)
       val keyed = ev.withColumn("k", expr(s"CAST(${c.keySql} AS STRING)"))
         .withColumn("tts", col("ts").cast("timestamp"))
@@ -1260,7 +1260,7 @@ class StreamFuzzSpec extends SparkSuite {
     var disorderBite = 0
     var spanBite = 0
     for (seed <- (1L to 4L) ++
-        StreamFuzzQueries.tsortSeeds.filterNot(1L to 4L contains _)) {
+        FuzzFamilies.tsort.seeds.filterNot(1L to 4L contains _)) {
       val c = StreamFuzzGen.genTsort(seed)
       // mirror the replay's batch construction to assert the bites
       val quantUs = c.quantUs
@@ -1321,7 +1321,7 @@ class StreamFuzzSpec extends SparkSuite {
     // the bites are pure data facts (no engine run) — scan a wider seed
     // range than the replay differential so each fires somewhere
     for (seed <- (1L to 16L) ++
-        StreamFuzzQueries.t1Seeds.filterNot(1L to 16L contains _)) {
+        FuzzFamilies.t1.seeds.filterNot(1L to 16L contains _)) {
       val c = StreamFuzzGen.genT1(seed)
       if (c.arm == "top1") {
         // dethroning: the eventual champion is not the first arrival
@@ -1353,7 +1353,7 @@ class StreamFuzzSpec extends SparkSuite {
       }
       // the engine differential runs on the head of the range + the
       // promoted seeds (each replay is a full streaming query)
-      if (seed <= 6L || StreamFuzzQueries.t1Seeds.contains(seed)) {
+      if (seed <= 6L || FuzzFamilies.t1.seeds.contains(seed)) {
         val expected = spark.sql(c.restatement(sparkCev))
           .collect().map(_.toString).sorted.toSeq
         val actual = StreamQueries.streamT1FuzzReplay(spark, dir, c)
@@ -1376,12 +1376,12 @@ class StreamFuzzSpec extends SparkSuite {
     // emissions must fold to EXACTLY the uninterrupted run's output —
     // state stores restored, watermark reloaded, no duplicates, no loss.
     // One seed per recovered-state shape; the boundary varies with the
-    // seed (StreamFuzzQueries.restartBoundary), so across the set the
+    // seed (FuzzFamilies.restartBoundary), so across the set the
     // stop lands both mid-insert and before the retract/sentinel batches.
     def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
     for (seed <- 1L to 2L) {
-      val b = Some(StreamFuzzQueries.restartBoundary(seed))
+      val b = Some(FuzzFamilies.restartBoundary(seed))
       val jc = StreamFuzzGen.genJoin(seed)
       assert(
         canon(StreamQueries.streamJoinFuzzReplay(spark, dir, jc, b)) ==
@@ -1406,7 +1406,7 @@ class StreamFuzzSpec extends SparkSuite {
     // watermark-carrying shapes: the persisted watermark must reload on
     // restart or the tail windows/sessions never flush (or flush twice)
     val wc = StreamFuzzGen.gen(1L)
-    val wb = Some(StreamFuzzQueries.restartBoundary(1L))
+    val wb = Some(FuzzFamilies.restartBoundary(1L))
     assert(
       canon(StreamQueries.streamFuzzReplay(spark, dir, wc, wb)) ==
       canon(StreamQueries.streamFuzzReplay(spark, dir, wc)),
