@@ -11,14 +11,16 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = (SparkEntry.queries ++ SparkEntry.benchOnly)
       .filter { case (name, _) => only.forall(_.contains(name)) }
+    val failed = Seq.newBuilder[String]
     def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (String, Double) = {
       val t0 = System.nanoTime()
       try fn(spark, sfDir).count() catch { case e: Throwable =>
         // stderr only — stdout must stay exactly one JSON line. The
-        // recorded duration is time-to-failure; the failure itself is
-        // visible in the driver's stderr, not in the JSON.
+        // recorded duration is time-to-failure, so the key is also named
+        // in the JSON's "failed" list: a crash must not read as a fast key
         System.err.println(s"[bench] $name failed: $e")
+        failed += name
       }
       name -> (System.nanoTime() - t0) / 1e9
     }
@@ -47,11 +49,12 @@ object Bench {
         queryResults.keys.filterNot(_.startsWith("q_")).mkString(","))
     val total = queryResults.values.sum
     val probeTotal = probeResults.values.sum
+    val failedJson = failed.result().map("\"" + _ + "\"").mkString("[", ",", "]")
     // self-describing provenance: the actual master/parallelism this run
     // used (past rounds had to adjudicate whether a number came from
     // local[8]-under-contention or the host's 32 cpus)
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","total_queries":$total,"total_probes":$probeTotal,"queries":$qs,"sf":"$sfDir","master":"${spark.sparkContext.master}","parallelism":${spark.sparkContext.defaultParallelism},"stream_threads":1}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","total_queries":$total,"total_probes":$probeTotal,"queries":$qs,"failed":$failedJson,"sf":"$sfDir","master":"${spark.sparkContext.master}","parallelism":${spark.sparkContext.defaultParallelism},"stream_threads":1}"""
     // Persist the full JSON to a file for ad-hoc inspection, but print
     // EXACTLY ONE JSON line: the driver parses stdout for a single
     // {"metric",...,"queries":{...}} object, and a second summary line made

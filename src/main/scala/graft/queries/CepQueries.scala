@@ -277,9 +277,8 @@ object CepQueries {
     */
   private[queries] def cepStreamFuzzReplay(s: org.apache.spark.sql.SparkSession,
       dir: String, c: CepFuzzGen.Case,
-      restartAfter: Option[Int] = None): org.apache.spark.sql.DataFrame = {
+      restarts: Seq[Int] = Nil): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     val evs = cepEvents(s, dir).collect().toSeq
       .sortBy(e => (e.ts, e.event_id))
     val pat0 = Pattern.begin[CepFuzzGen.CE]("s0")(c.steps.head.fn)
@@ -289,19 +288,15 @@ object CepQueries {
     val pat = c.withinMinutes
       .map(m => patN.within(m * 60000000L)).getOrElse(patN)
     val last = s"s${c.steps.length - 1}"
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[CepFuzzGen.CE]
-    val matches = CEP.streaming[CepFuzzGen.CE](input.toDS(),
+    StreamQueries.replay(s, evs.grouped(math.max(1, evs.length / 4 + 1)).toSeq,
+        restarts = restarts)(CEP.streaming[CepFuzzGen.CE](_,
         _.user_id.toString, _.ts, pat, maxBufferPerKey = Some(1 << 20),
         skip = AfterMatchSkip.SkipToNext)
       .map { m =>
         val st = m.stages.toMap
         (st("s0").head.user_id, st("s0").head.event_id,
           st(last).head.event_id)
-      }.toDF("user_id", "a_id", "z_id")
-    StreamQueries.runToEnd(s, input, matches,
-      evs.grouped(math.max(1, evs.length / 4 + 1)).toSeq,
-      rocks = true, restartAfter = restartAfter)
+      }.toDF("user_id", "a_id", "z_id"))
   }
 
   /** The Pattern-API pattern for a [[CepFuzzGen.QuantCase]] (shared by

@@ -107,18 +107,12 @@ object FuzzFamilies {
       .getOrElse(sys.error(s"no $label seed in 1..256 matches the shape"))
 
   /** Deterministic stop/restart boundary for a recovery-arm seed: a
-    * batch index in 1..3 ([[StreamQueries.runToEnd]] clamps into the
+    * batch index in 1..3 ([[StreamQueries.replay]] clamps into the
     * replay's actual batch range) — "random batch boundary", but a pure
     * function of the seed so every run stops at the same place.
     */
   def restartBoundary(seed: Long): Int =
     1 + math.floorMod(StreamFuzzGen.scramble(seed ^ 0x4ec04e4L), 3L).toInt
-
-  /** The single boundary of a replay that takes `restartAfter` only. */
-  private def after(restart: Seq[Int]): Option[Int] = {
-    require(restart.lengthIs <= 1, s"one restart boundary expected: $restart")
-    restart.headOption
-  }
 
   val window = FuzzFamily[StreamFuzzGen.Case]("window", "q_fuzz_stream_",
     StreamFuzzGen.gen,
@@ -126,7 +120,7 @@ object FuzzFamilies {
       c => !c.isHop && c.keys.length == 1, // tumbling, one key
       _.isHop, // hopping
       c => !c.isHop && c.keys.length == 2), // tumbling, composite key
-    (s, dir, c, r) => StreamQueries.streamFuzzReplay(s, dir, c, after(r)),
+    (s, dir, c, r) => StreamQueries.streamFuzzReplay(s, dir, c, r),
     _.oracleSql,
     // the built-in windowed aggregation's watermark + window state
     recover = Some(Recover("q_fuzz_recover_w")))
@@ -134,8 +128,7 @@ object FuzzFamilies {
   val session = FuzzFamily[StreamFuzzGen.SessionCase]("session",
     "q_fuzz_stream_s", StreamFuzzGen.genSession,
     Seq(_.keys.length == 1, _.keys.length == 2), // single and composite key
-    (s, dir, c, r) => StreamQueries.streamSessionFuzzReplay(s, dir, c,
-      restartBoundaries = r),
+    (s, dir, c, r) => StreamQueries.streamSessionFuzzReplay(s, dir, c, r),
     _.oracleSql,
     // DOUBLE stop/restart — recovery from an already-recovered
     // checkpoint, session timers + watermark restoring twice
@@ -147,7 +140,7 @@ object FuzzFamilies {
     // constant-gap draws are the fixed session family's territory)
     Seq(c => c.gapSql.contains("CASE") && c.keySql != "event_type"),
     (s, dir, c, r) =>
-      StreamQueries.streamSessionDynFuzzReplay(s, dir, c, after(r)),
+      StreamQueries.streamSessionDynFuzzReplay(s, dir, c, r),
     _.oracleSql)
 
   val surgery = FuzzFamily[StreamFuzzGen.SurgeryCase]("surgery",
@@ -157,7 +150,7 @@ object FuzzFamilies {
     // branches of the savepoint rewrite land
     Seq(c => c.keySql.contains("CONCAT") && c.rwMod == 2),
     (s, dir, c, r) =>
-      StreamQueries.streamSurgeryFuzzReplay(s, dir, c, after(r)),
+      StreamQueries.streamSurgeryFuzzReplay(s, dir, c, r),
     _.oracleSql,
     // the RESUME leg restarted mid-replay: the query bootstrapped from a
     // rewritten offline savepoint stops at a batch boundary and recovers
@@ -170,7 +163,7 @@ object FuzzFamilies {
     "q_fuzz_stream_r", StreamFuzzGen.genRetract,
     Seq(_.op == "sum", _.op != "sum"), // one SUM and one MIN/MAX shape
     (s, dir, c, r) =>
-      StreamQueries.streamRetractFuzzReplay(s, dir, c, after(r)),
+      StreamQueries.streamRetractFuzzReplay(s, dir, c, r),
     _.oracleSql,
     // the retract-agg accumulators
     recover = Some(Recover("q_fuzz_recover_r")))
@@ -186,7 +179,7 @@ object FuzzFamilies {
     "q_fuzz_stream_mb", StreamFuzzGen.genRetract,
     Seq(_.op == "sum"),
     (s, dir, c, r) => StreamQueries.streamRetractFuzzReplay(s, dir, c,
-      after(r), miniBatch = true),
+      r, miniBatch = true),
     _.oracleSql,
     reshape = _.copy(op = "sum"))
 
@@ -198,14 +191,14 @@ object FuzzFamilies {
       // full cardinality (maximum shard breadth across value % buckets)
       _.valueSql == "user_id"),
     (s, dir, c, r) =>
-      StreamQueries.streamDistinctFuzzReplay(s, dir, c, after(r)),
+      StreamQueries.streamDistinctFuzzReplay(s, dir, c, r),
     _.oracleSql)
 
   val topN = FuzzFamily[StreamFuzzGen.TopNCase]("topn", "q_fuzz_stream_t",
     StreamFuzzGen.genTopN,
     Seq(_.sortSql == "event_id", // unique sort
       _.sortSql.contains("DECIMAL")), // tie-bearing cents sort
-    (s, dir, c, r) => StreamQueries.streamTopNFuzzReplay(s, dir, c, after(r)),
+    (s, dir, c, r) => StreamQueries.streamTopNFuzzReplay(s, dir, c, r),
     _.oracleSql,
     recover = Some(Recover("q_fuzz_recover_t")))
 
@@ -217,7 +210,7 @@ object FuzzFamilies {
       _.steps.length == 3), // 3-step
     (s, dir, c, r) =>
       if (r.isEmpty) CepQueries.cepFuzzReplay(s, dir, c)
-      else CepQueries.cepStreamFuzzReplay(s, dir, c, after(r)),
+      else CepQueries.cepStreamFuzzReplay(s, dir, c, r),
     _.oracleSql,
     // NFA partial-match recovery on the windowed 2-step case: the
     // CepProcessor's buffer ListState + emitted-hash MapState restore
@@ -238,7 +231,7 @@ object FuzzFamilies {
     // full outer (the widest retraction protocol), semi, anti — a seed
     // determines its joinType, so the scans land on distinct seeds
     Seq(_.joinType == "full", _.joinType == "semi", _.joinType == "anti"),
-    (s, dir, c, r) => StreamQueries.streamJoinFuzzReplay(s, dir, c, after(r)),
+    (s, dir, c, r) => StreamQueries.streamJoinFuzzReplay(s, dir, c, r),
     _.oracleSql,
     // the full-outer join's retract-pad MapStates
     recover = Some(Recover("q_fuzz_recover_j", pick = _.joinType == "full")))
@@ -249,7 +242,7 @@ object FuzzFamilies {
     // interleave through one MapState
     Seq(_.keySql.contains("%")),
     (s, dir, c, r) =>
-      StreamQueries.streamTemporalFuzzReplay(s, dir, c, after(r)),
+      StreamQueries.streamTemporalFuzzReplay(s, dir, c, r),
     _.oracleSql,
     // the version MapState + watermark
     recover = Some(Recover("q_fuzz_recover_tj")))
@@ -300,7 +293,7 @@ object FuzzFamilies {
     // accumulator only grows)
     Seq(!_.rangeMode, _.rangeMode),
     (s, dir, c, r) =>
-      StreamQueries.streamBoundedOverFuzzReplay(s, dir, c, after(r)),
+      StreamQueries.streamBoundedOverFuzzReplay(s, dir, c, r),
     _.oracleSql)
 
   val ptJoin = FuzzFamily[StreamFuzzGen.PtJoinCase]("ptjoin",
@@ -337,7 +330,7 @@ object FuzzFamilies {
     // stay re-fireable at once
     Seq(_.latenessMult >= 2),
     (s, dir, c, r) =>
-      StreamQueries.streamLatenessFuzzReplay(s, dir, c, after(r)),
+      StreamQueries.streamLatenessFuzzReplay(s, dir, c, r),
     _.oracleSql,
     // alive windows, fired-pane images and the persisted watermark
     // restore — a lost pane image re-fires wrong -U rows, a lost
@@ -413,7 +406,7 @@ object FuzzFamilies {
     // boundaries, the order-sensitive surface the hand row under-covers
     Seq(c => c.keySql.contains("%") && c.nRules >= 3),
     (s, dir, c, r) =>
-      StreamQueries.streamBroadcastFuzzReplay(s, dir, c, after(r)),
+      StreamQueries.streamBroadcastFuzzReplay(s, dir, c, r),
     _.oracleSql,
     // the rules MAP restored mid-replay: a lost PUT/REMOVE makes every
     // later data row read a stale rules image
@@ -425,7 +418,7 @@ object FuzzFamilies {
     // widest per-timestamp buffer lists, where arrival-order emission is
     // most load-bearing
     Seq(c => c.quantMinutes >= 5 && c.keySql.contains("%")),
-    (s, dir, c, r) => StreamQueries.streamTsortFuzzReplay(s, dir, c, after(r)),
+    (s, dir, c, r) => StreamQueries.streamTsortFuzzReplay(s, dir, c, r),
     _.oracleSql,
     // buffered-rows MapState + COALESCED timer (ptimer ValueState +
     // registered event-time timer) restored mid-replay: a lost buffer
@@ -439,7 +432,7 @@ object FuzzFamilies {
       // tie-bearing (cents-sort) Fast Top-1
       c => c.arm == "top1" && c.sortSql.contains("DECIMAL"),
       _.arm == "firstn"), // append First-N (counter-only state)
-    (s, dir, c, r) => StreamQueries.streamT1FuzzReplay(s, dir, c, after(r)),
+    (s, dir, c, r) => StreamQueries.streamT1FuzzReplay(s, dir, c, r),
     _.oracleSql,
     // Fast Top-1's SINGLE-RECORD champion ValueState — a distinct
     // recovery shape from RetractableTopN's sorted-map state: a lost

@@ -21,11 +21,6 @@ import graft.sources.{AvroIO, SequenceFileIO}
   */
 object IntegrationQueries {
 
-  /** Per-run scratch dir for format round-trips, reaped at JVM exit so
-    * repeated Verify/Bench runs don't accumulate tmp data.
-    */
-  private def tmpDir(prefix: String): String = Q.scratchDir(prefix)
-
   val queries: Map[String, QFn] = Map(
 
     // Changelog JSON format (sources/ChangelogJson — debezium-json):
@@ -71,7 +66,7 @@ object IntegrationQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
           col("user_id"), col("event_type"), col("value"))
-      val path = tmpDir("q_fmt_avro") + "/events_avro"
+      val path = Q.scratchDir("q_fmt_avro") + "/events_avro"
       AvroIO.write(ev, path)
       AvroIO.read(s, path, ev.schema)
         .groupBy(col("event_type"))
@@ -87,7 +82,7 @@ object IntegrationQueries {
       val o = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"), col("o_orderdate"))
-      val path = tmpDir("q_fmt_seqfile") + "/orders_seq"
+      val path = Q.scratchDir("q_fmt_seqfile") + "/orders_seq"
       SequenceFileIO.write(o, path, "o_orderkey")
       SequenceFileIO.read(s, path, o.schema)
         .groupBy(col("o_orderstatus"))
@@ -252,7 +247,7 @@ object IntegrationQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"))
-      val out = tmpDir("q_fmt_filesink") + "/rolled"
+      val out = Q.scratchDir("q_fmt_filesink") + "/rolled"
       graft.sources.FileCompaction.writeRolled(ev, out,
         maxRecordsPerFile = 1000L)
       graft.sources.FileCompaction.compactParquet(s, out,
@@ -279,7 +274,7 @@ object IntegrationQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"))
-      val src = tmpDir("q_stream_filesrc") + "/incoming"
+      val src = Q.scratchDir("q_stream_filesrc") + "/incoming"
       (0 until 3).foreach { i =>
         ev.filter(pmod(col("event_id"), lit(3)) === i)
           .coalesce(1).write.mode("append").parquet(src)
@@ -292,7 +287,7 @@ object IntegrationQueries {
         java.util.UUID.randomUUID().toString.replace("-", "")
       val q = stream.writeStream.format("memory").queryName(name)
         .outputMode("complete")
-        .option("checkpointLocation", tmpDir("q_filesrc_ckpt")).start()
+        .option("checkpointLocation", Q.scratchDir("q_filesrc_ckpt")).start()
       try q.processAllAvailable() finally q.stop()
       s.table(name).orderBy(col("event_type"))
     }),
@@ -325,7 +320,7 @@ object IntegrationQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
-      val path = tmpDir("q_fmt_csv") + "/events_csv"
+      val path = Q.scratchDir("q_fmt_csv") + "/events_csv"
       val ntzFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
       ev.write.option("header", "true").option("timestampNTZFormat", ntzFmt)
         .csv(path)
@@ -343,7 +338,7 @@ object IntegrationQueries {
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_returnflag"),
           col("l_extendedprice"), col("l_shipdate"))
-      val path = tmpDir("q_fmt_json") + "/lineitem_json"
+      val path = Q.scratchDir("q_fmt_json") + "/lineitem_json"
       val ntzFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
       li.write.option("timestampNTZFormat", ntzFmt).json(path)
       s.read.option("timestampNTZFormat", ntzFmt).schema(li.schema).json(path)
@@ -356,7 +351,7 @@ object IntegrationQueries {
     // ORC round-trip: customer account balances per market segment.
     "q_fmt_orc" -> ((s, dir) => {
       val c = t(s, dir, "customer")
-      val path = tmpDir("q_fmt_orc") + "/customer_orc"
+      val path = Q.scratchDir("q_fmt_orc") + "/customer_orc"
       c.write.orc(path)
       s.read.orc(path)
         .groupBy(col("c_mktsegment"))
@@ -371,7 +366,7 @@ object IntegrationQueries {
     "q_fmt_partitioned" -> ((s, dir) => {
       val ev = t(s, dir, "events")
         .withColumn("bucket", (col("user_id") % 8).cast(IntegerType))
-      val path = tmpDir("q_fmt_partitioned") + "/events_part"
+      val path = Q.scratchDir("q_fmt_partitioned") + "/events_part"
       ev.write.partitionBy("bucket").parquet(path)
       s.read.parquet(path)
         .filter(col("bucket").isin(1, 3, 5))
@@ -389,8 +384,6 @@ object IntegrationQueries {
     // read cycle, not just the reader's schema.
     "q_state_reader" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       // deterministic quarter of the orders: the write→checkpoint→read
       // cycle is exercised identically per row, and the subset keeps the
       // replay-feed driver memory bounded as sf grows (same idiom as the
@@ -399,20 +392,12 @@ object IntegrationQueries {
         .filter(col("o_orderkey") % 4 === 0)
         .select(col("o_orderstatus"), col("o_totalprice"))
         .as[(String, Double)].collect().toSeq
-      val ckpt = tmpDir("q_state_reader") + "/ckpt"
-      val input = MemoryStream[(String, Double)]
-      val agg = input.toDS().toDF("st", "tp")
+      val ckpt = Q.scratchDir("q_state_reader") + "/ckpt"
+      val size = math.max(1, math.ceil(rows.length / 3.0).toInt)
+      StreamQueries.replay(s, rows.grouped(size).toSeq, mode = "complete",
+          keepCheckpoint = Some(ckpt))(_.toDF("st", "tp")
         .groupBy(col("st"))
-        .agg(count(lit(1)).as("n"), sum(dec2(col("tp"))).as("sp"))
-      val q = agg.writeStream.format("memory")
-        .queryName(s"qsr_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-        .outputMode("complete").option("checkpointLocation", ckpt).start()
-      try {
-        val size = math.max(1, math.ceil(rows.length / 3.0).toInt)
-        rows.grouped(size).foreach { b =>
-          input.addData(b); q.processAllAvailable()
-        }
-      } finally q.stop()
+        .agg(count(lit(1)).as("n"), sum(dec2(col("tp"))).as("sp")))
       graft.streaming.StateReader.store(s, ckpt)
         .select(col("key.st").as("o_orderstatus"),
           col("value.count").as("n"),
@@ -450,23 +435,16 @@ object IntegrationQueries {
     * shrinking frontier); a wide session shuffle width only multiplies
     * per-round task-scheduling overhead, and the number of ROUNDS — not
     * per-round data — is the cost driver. Same idiom as the streaming
-    * replays' runToEnd cap; the session default is restored for
+    * replays' shuffle cap; the session default is restored for
     * whatever runs next. At real scale the caller sizes this to the
     * graph, not the corpus.
     */
   private def withFewPartitions[A](s: org.apache.spark.sql.SparkSession)
-      (body: => A): A = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "1")
+      (body: => A): A =
     // AQE's per-stage replanning round-trips dominate a tiny-frame
     // iteration's latency and buy nothing at 4 partitions
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try body finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    }
-  }
+    Q.withConf(s, "spark.sql.shuffle.partitions" -> "1",
+      "spark.sql.adaptive.enabled" -> "false")(body)
 
   /** Deterministic weighted DAG off the documents ids (all edges point
     * id-upward, so the DuckDB recursion terminates): an EXPENSIVE unit

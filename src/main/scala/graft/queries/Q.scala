@@ -33,6 +33,20 @@ object Q {
   def dsumSql(col: String): String =
     s"CAST(SUM(CAST($col AS DECIMAL(12,2))) AS DOUBLE)"
 
+  /** Run `body` with the given session conf keys set, then restore each
+    * key's previous value — or unset it if it had none — even when
+    * `body` throws. The one save/set/restore window for session conf.
+    */
+  def withConf[A](s: SparkSession, kvs: (String, String)*)(body: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
   /** Best-effort recursive delete (deepest first) — shared by every
     * scratch-dir consumer so the idiom can't drift.
     */

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -44,167 +45,132 @@ object StreamQueries {
     xs.grouped(size).toSeq
   }
 
-  /** Run a streaming Dataset to completion over pre-chunked input,
-    * forcing one micro-batch per chunk, and return the sink table
-    * (update mode accumulates the changelog; complete mode holds the
-    * final state). The per-run checkpoint directory is deleted after the
-    * query stops — repeated verify/bench runs must not leak state-store
-    * files into the temp dir.
+  /** The one replay harness: creates the MemoryStream, builds the
+    * streaming frame under test from it, forces one micro-batch per
+    * chunk, and returns the sink table (update mode accumulates the
+    * changelog; complete mode holds the final state).
     *
-    * `restartAfter = Some(k)` exercises the CHECKPOINT RESUME path (the
-    * reference's core exactly-once guarantee — CheckpointCoordinator
-    * .java:102 barrier snapshots; Spark's WAL + state-store commit): the
-    * query stop()s cleanly after k batches and a NEW query start()s from
-    * the same checkpoint — state stores restore, the persisted watermark
-    * reloads, and the remaining batches replay through the resumed
-    * state. `restartBoundaries` generalizes to SEVERAL stop/restart
-    * cycles per replay (recovery from an already-recovered checkpoint —
-    * snapshot-plus-changelog restore stacking). The pre-restart sink
-    * emissions (all committed — each feed runs processAllAvailable
-    * before the stop) accumulate with every later leg's, so a caller's
-    * changelog fold sees the complete emission history exactly as an
-    * external sink would have.
+    * Per-query conf, pinned across each start() only (it binds at query
+    * start) and restored right after ([[Q.withConf]]):
+    *   - shuffle partitions capped at `shufflePartitions` (default 2):
+    *     replay state fits a handful of partitions and a wider store only
+    *     multiplies per-batch task and state-store open/close overhead.
+    *     The sharded scale probes RAISE the cap — at 64x key breadth the
+    *     2-partition store is the bottleneck and sharding is the
+    *     production lever;
+    *   - the state-store provider, DERIVED from the plan:
+    *     transformWithState requires RocksDB, every other operator runs
+    *     on the in-memory HDFSBacked store, which commits far cheaper at
+    *     replay state sizes;
+    *   - no per-commit RocksDB row recounts (pure overhead at replay
+    *     sizes) and changelog checkpointing ON (commit uploads the batch
+    *     delta instead of a full snapshot per store per batch).
+    *
+    * `restarts` exercises the CHECKPOINT RESUME path (the reference's
+    * core exactly-once guarantee — CheckpointCoordinator.java:102
+    * barrier snapshots; Spark's WAL + state-store commit): the query
+    * stop()s cleanly after each listed batch count and a NEW query
+    * start()s from the same checkpoint — state stores restore, the
+    * persisted watermark reloads, and the remaining batches replay
+    * through the resumed state. Several boundaries stack recovery on an
+    * already-recovered checkpoint. Boundaries clamp into [1, n-1]; a
+    * single-batch replay has no interior boundary and runs straight
+    * through. The legs write through [[idempotentSink]] (the memory
+    * sink refuses checkpoint recovery), so a caller's changelog fold
+    * sees the complete emission history exactly as an external sink
+    * would have.
+    *
+    * `foreachSink` replaces the memory sink (blackhole-count scale
+    * probes: nothing accumulates driver-side, the caller reads its own
+    * sink state). `keepCheckpoint` runs on the caller's checkpoint
+    * directory and leaves it in place for an offline [[graft.streaming
+    * .StateReader]] read, with changelog checkpointing OFF so the
+    * statestore source sees plain snapshots. Any other checkpoint is
+    * deleted after the last leg — repeated verify/bench runs must not
+    * leak state-store files into the temp dir.
     */
-  private[queries] def runToEnd[T](s: SparkSession, input: MemoryStream[T],
-      out: DataFrame, batches: Seq[Seq[T]],
-      mode: String = "update", rocks: Boolean = false,
-      restartAfter: Option[Int] = None,
-      restartBoundaries: Seq[Int] = Nil,
+  private[queries] def replay[T: Encoder](s: SparkSession,
+      batches: Seq[Seq[T]], mode: String = "update",
+      restarts: Seq[Int] = Nil,
       foreachSink: Option[(DataFrame, Long) => Unit] = None,
-      shufflePartitions: Int = 2): DataFrame = {
-    val ckpt = java.nio.file.Files.createTempDirectory("qstream_ckpt")
-    def freshName() =
-      s"qstream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    // clamp to [1, n-1] and dedup: at least one batch per leg. A
-    // single-batch replay has no interior boundary to stop at, so the
-    // restart request degenerates to the straight-through arm.
+      shufflePartitions: Int = 2,
+      keepCheckpoint: Option[String] = None)(
+      build: Dataset[T] => DataFrame): DataFrame = {
+    implicit val sqlCtx: SQLContext = s.sqlContext
+    val input = MemoryStream[T]
+    val out = build(input.toDS())
+    // clamp to [1, n-1] and dedup: at least one batch per leg
     val bounds =
       if (batches.length < 2) Nil
-      else (restartAfter.toSeq ++ restartBoundaries)
-        .map(k => math.min(math.max(1, k), batches.length - 1))
+      else restarts.map(k => math.min(math.max(1, k), batches.length - 1))
         .distinct.sorted
     // the restart arm substitutes its own buffering sink; a caller
     // combining the two features would silently lose its sink otherwise
     require(bounds.isEmpty || foreachSink.isEmpty,
       "restart boundaries and foreachSink cannot combine")
-    if (bounds.nonEmpty) {
-      // The memory sink refuses checkpoint recovery (it is not
-      // fault-tolerant), so the restart arm writes through foreachBatch
-      // with a batchId-IDEMPOTENT buffer — the exact contract a
-      // transactional production sink implements for exactly-once: if
-      // recovery ever re-delivers a committed batch, the dedup absorbs
-      // it; a LOST batch still surfaces as missing rows in the
-      // differential.
-      val buf = new java.util.concurrent.ConcurrentLinkedQueue[
-        org.apache.spark.sql.Row]()
-      val seen = java.util.concurrent.ConcurrentHashMap
-        .newKeySet[java.lang.Long]()
-      val sinkFn: (DataFrame, Long) => Unit = (df, batchId) =>
-        if (seen.add(batchId)) df.collect().foreach(buf.add)
-      // legs: batch index ranges split at the boundaries
-      val cuts = 0 +: bounds :+ batches.length
-      try cuts.sliding(2).foreach { case Seq(from, to) =>
-        if (to > from) {
-          val q = startReplayQuery(s, out, freshName(), ckpt.toString, mode,
-            rocks, foreachBatch = Some(sinkFn),
-            shufflePartitions = shufflePartitions)
-          try batches.slice(from, to).foreach { b =>
-            input.addData(b); q.processAllAvailable()
-          }
-          finally q.stop()
+    val buf = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
+    val sink = if (bounds.nonEmpty) Some(idempotentSink(buf)) else foreachSink
+    require(sink.isEmpty || mode != "complete",
+      "a foreachBatch sink sees per-batch emissions; complete mode would " +
+        "accumulate one full table per batch")
+    val shuffleConf = "spark.sql.shuffle.partitions"
+    val shards = math.min(s.conf.get(shuffleConf).toInt, shufflePartitions)
+    // a clamped shard request must be self-describing: a sharded probe
+    // recorded on a narrow host would otherwise carry its 8-shard label
+    // over an under-sharded measurement
+    if (shards < shufflePartitions)
+      System.err.println(s"[replay] requested $shufflePartitions " +
+        s"shuffle partitions clamped to $shards (session default is narrower)")
+    val needsRocksDb = out.queryExecution.analyzed.find(
+      _.isInstanceOf[TransformWithState]).isDefined
+    val conf = Seq(
+      shuffleConf -> shards.toString,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        (if (needsRocksDb) RocksProvider else HdfsProvider),
+      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+        keepCheckpoint.isEmpty.toString)
+    val name = s"qstream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val ckpt = keepCheckpoint.getOrElse(
+      java.nio.file.Files.createTempDirectory("qstream_ckpt").toString)
+    // legs: batch index ranges split at the boundaries
+    try (0 +: bounds :+ batches.length).sliding(2).foreach { case Seq(from, to) =>
+      val q = withConf(s, conf: _*) {
+        val w = out.writeStream.outputMode(mode)
+          .option("checkpointLocation", ckpt)
+        sink match {
+          case Some(fn) => w.foreachBatch(fn).start()
+          case None => w.format("memory").queryName(name).start()
         }
       }
-      finally Q.deleteRecursively(ckpt) // every leg: no ckpt leak on failure
-      s.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](buf), out.schema)
-    } else {
-      val name = freshName()
-      val q = startReplayQuery(s, out, name, ckpt.toString, mode, rocks,
-        foreachBatch = foreachSink, shufflePartitions = shufflePartitions)
-      try batches.foreach { b => input.addData(b); q.processAllAvailable() }
-      finally {
-        q.stop()
-        Q.deleteRecursively(ckpt) // best-effort cleanup
+      try batches.slice(from, to).foreach { b =>
+        input.addData(b); q.processAllAvailable()
       }
-      // with a caller-provided foreachBatch sink (blackhole-count scale
-      // probes) nothing accumulates driver-side; the caller reads its
-      // own sink state
-      if (foreachSink.isDefined) s.emptyDataFrame else s.table(name)
+      finally q.stop()
     }
+    finally if (keepCheckpoint.isEmpty) // every leg: no ckpt leak on failure
+      Q.deleteRecursively(java.nio.file.Paths.get(ckpt))
+    if (bounds.nonEmpty)
+      s.createDataFrame(new java.util.ArrayList[Row](buf), out.schema)
+    else if (foreachSink.isDefined) s.emptyDataFrame
+    else s.table(name)
   }
 
-  /** Start one replay query against `ckpt` with the harness's pinned
-    * per-query conf (see body comments). Shared by the straight-through
-    * (memory sink) and the stop/restart (foreachBatch — the memory sink
-    * can't recover a checkpoint) arms of [[runToEnd]].
+  /** The restart arm's foreachBatch sink: a batchId-IDEMPOTENT buffer —
+    * the exact contract a transactional production sink implements for
+    * exactly-once. If recovery re-delivers a committed batch, the dedup
+    * absorbs it; a LOST batch still surfaces as missing rows in the
+    * differential. The batch is collected BEFORE it is marked seen, so
+    * a delivery whose collect() fails leaves it unseen and its
+    * redelivery is buffered.
     */
-  private def startReplayQuery(s: SparkSession, out: DataFrame, name: String,
-      ckpt: String, mode: String, rocks: Boolean,
-      foreachBatch: Option[(DataFrame, Long) => Unit] = None,
-      shufflePartitions: Int = 2)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(foreachBatch.isEmpty || mode != "complete",
-      "restart arm buffers per-batch emissions; complete mode would " +
-        "accumulate one full table per batch")
-    // The replay's state fits a handful of partitions; a wide session
-    // default (32 on the bench box) only multiplies per-micro-batch task
-    // and state-store open/close overhead. The partition count binds at
-    // query start, so the override applies to this stream only and the
-    // session default is restored for the batch queries that follow.
-    // State-store provider is pinned PER QUERY for the same reason:
-    // transformWithState requires RocksDB, but every other operator runs
-    // on the in-memory HDFSBacked store, which commits far cheaper at
-    // replay state sizes — and a leaked session-level RocksDB setting
-    // must not tax the queries that don't need it.
-    val trackConf =
-      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
-    // The session conf binds at query START, so the overrides are
-    // pinned only across the start() call and restored right after.
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val prevProvider =
-      s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val prevTrack = s.conf.getOption(trackConf)
-    def restore(key: String, prev: Option[String]): Unit = prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None    => s.conf.unset(key)
-    }
-    // default cap 2: replay state fits a handful of partitions and a
-    // wider store only multiplies open/close overhead. The sharded
-    // scale probes RAISE this — at 64x key breadth the 2-partition
-    // store is the bottleneck and sharding is the production lever.
-    val effectiveShards = math.min(prevShuffle.toInt, shufflePartitions)
-    // a clamped shard request must be self-describing: a sharded probe
-    // recorded on a narrow host would otherwise carry its 8-shard
-    // label over an under-sharded measurement
-    if (effectiveShards < shufflePartitions)
-      System.err.println(s"[runToEnd] requested $shufflePartitions " +
-        s"shuffle partitions clamped to $effectiveShards " +
-        "(session default is narrower)")
-    s.conf.set("spark.sql.shuffle.partitions", effectiveShards.toString)
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      if (rocks) RocksProvider else HdfsProvider)
-    // replay state is tiny; per-commit row recounts are pure overhead
-    s.conf.set(trackConf, "false")
-    // changelog checkpointing: commit uploads the batch's delta instead
-    // of a full SST snapshot — replay-sized state pays snapshot cost per
-    // store per batch otherwise
-    val changelogConf =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevChangelog = s.conf.getOption(changelogConf)
-    s.conf.set(changelogConf, "true")
-    try {
-      val base = out.writeStream.outputMode(mode)
-        .option("checkpointLocation", ckpt)
-      foreachBatch match {
-        case Some(fn) => base.foreachBatch(fn).start()
-        case None => base.format("memory").queryName(name).start()
-      }
-    }
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      restore("spark.sql.streaming.stateStore.providerClass", prevProvider)
-      restore(trackConf, prevTrack)
-      restore(changelogConf, prevChangelog)
+  private[queries] def idempotentSink(buf: java.util.Collection[Row])
+      : (DataFrame, Long) => Unit = {
+    val seen = java.util.concurrent.ConcurrentHashMap
+      .newKeySet[java.lang.Long]()
+    (df, batchId) => {
+      val rows = df.collect()
+      if (seen.add(batchId)) rows.foreach(buf.add)
     }
   }
 
@@ -233,9 +199,6 @@ object StreamQueries {
   /** Change row fed to the upsert sink gate (kind renames to __rowkind). */
   case class UpsCh(user_id: Long, event_id: Long, value: Double,
       seq: Long, kind: Byte)
-
-  /** Per-run scratch dir reaped at JVM exit (shared hook — Q.scratchDir). */
-  private def tmpDir(prefix: String): String = Q.scratchDir(prefix)
 
   /** Epoch MICROS of a micros-precision timestamp (getTime carries the
     * millis; getNanos the sub-second — only its sub-milli part is new).
@@ -277,17 +240,15 @@ object StreamQueries {
     * sentinel's own window never fires, so it leaves no output trace.
     */
   private[queries] def streamFuzzReplay(s: SparkSession, dir: String,
-      c: StreamFuzzGen.Case, restartAfter: Option[Int] = None): DataFrame = {
+      c: StreamFuzzGen.Case, restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     val rows = sortedEvents(s, dir)
     val sentinel = Ev(-1L, -1L,
       new java.sql.Timestamp(rows.last.ts.getTime + 10L * 86400000L),
       "click", 0.0)
-    val input = MemoryStream[Ev]
-    val out = c(input.toDS().toDF().withWatermark("ts", "1 second"))
-    runToEnd(s, input, out, chunks(rows, 3) :+ Seq(sentinel),
-      mode = "append", rocks = false, restartAfter = restartAfter)
+    replay(s, chunks(rows, 3) :+ Seq(sentinel), mode = "append",
+        restarts = restarts)(in =>
+      c(in.toDF().withWatermark("ts", "1 second")))
       .select(col("window_start").cast("timestamp_ntz").as("window_start") +:
         (c.keys.map(k => col(k._2)) ++ c.aggs.map(a => col(a._2))): _*)
   }
@@ -303,7 +264,6 @@ object StreamQueries {
   private[queries] def streamDedupFuzzReplay(s: SparkSession, dir: String,
       c: StreamFuzzGen.DedupCase): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     implicit val ttlEnc = Encoders.product[StatefulOps.TtlIn]
     val rows = t(s, dir, "events")
       .filter(expr(c.filterSql))
@@ -312,41 +272,36 @@ object StreamQueries {
       .as[(String, java.sql.Timestamp, Long)].collect().toSeq
       .sortBy(t => (micros(t._2), t._3))
       .map { case (k, ts, id) => StatefulOps.TtlIn(k, ts, id) }
-    val input = MemoryStream[StatefulOps.TtlIn]
     c.mode match {
       case "first" =>
-        val out = input.toDS().groupByKey(_.key)
+        replay(s, chunks(rows, 2))(_.groupByKey(_.key)
           .transformWithState(
             new StatefulOps.KeepFirstProcessor[String, StatefulOps.TtlIn](
               ttlEnc),
             org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-        runToEnd(s, input, out.toDF(), chunks(rows, 2), rocks = true)
+            org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
           .select($"key".as("k"), $"id")
       case "last" =>
-        val changes = input.toDS().groupByKey(_.key)
+        val sink = replay(s, chunks(rows, 2))(_.groupByKey(_.key)
           .transformWithState(
             new StatefulOps.KeepLastProcessor[String, StatefulOps.TtlIn](
               ttlEnc),
             org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-        val sink = runToEnd(s, input, changes.toDF(), chunks(rows, 2),
-          rocks = true)
+            org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
         foldChangelog(sink.select($"kind", $"key".as("k"),
           $"value.id".as("id")), "kind")
       case "first_ttl" =>
         val sentinel = StatefulOps.TtlIn("\u0000flush",
           new java.sql.Timestamp(rows.last.ts.getTime + 10L * 86400000L),
           -1L)
-        val out = input.toDS().withWatermark("ts", "1 second")
-          .as[StatefulOps.TtlIn]
-          .groupByKey(_.key)
-          .transformWithState(
-            new StatefulOps.KeepFirstTtlProcessor(c.ttlMinutes * 60000L),
-            org.apache.spark.sql.streaming.TimeMode.EventTime(),
-            org.apache.spark.sql.streaming.OutputMode.Append())
-        runToEnd(s, input, out.toDF(), chunks(rows, 2) :+ Seq(sentinel),
-          mode = "append", rocks = true)
+        replay(s, chunks(rows, 2) :+ Seq(sentinel), mode = "append")(
+          _.withWatermark("ts", "1 second")
+            .as[StatefulOps.TtlIn]
+            .groupByKey(_.key)
+            .transformWithState(
+              new StatefulOps.KeepFirstTtlProcessor(c.ttlMinutes * 60000L),
+              org.apache.spark.sql.streaming.TimeMode.EventTime(),
+              org.apache.spark.sql.streaming.OutputMode.Append()).toDF())
           .filter($"id" >= 0)
           .select($"key".as("k"), $"id")
     }
@@ -360,9 +315,8 @@ object StreamQueries {
     */
   private[queries] def streamTopNFuzzReplay(s: SparkSession, dir: String,
       c: StreamFuzzGen.TopNCase,
-      restartAfter: Option[Int] = None): DataFrame = {
+      restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     implicit val chEnc = Encoders.product[RetractableTopN.TopNChange]
     val trips = t(s, dir, "events")
       .filter(expr(c.filterSql))
@@ -378,16 +332,13 @@ object StreamQueries {
     val deletes = trips.collect {
       case (k, id, v) if id % c.delMod == c.delRes =>
         RetractableTopN.TopNChange(Changelog.Delete, k, id, v) }
-    val input = MemoryStream[RetractableTopN.TopNChange]
-    val diffs = input.toDS().groupByKey(_.key)
+    val batches = chunks(inserts, 2) ++
+      Seq(updates, deletes).filter(_.nonEmpty)
+    val sink = replay(s, batches, restarts = restarts)(_.groupByKey(_.key)
       .transformWithState(
         new RetractableTopN.RetractableTopNProcessor(c.n),
         org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update())
-    val batches = chunks(inserts, 2) ++
-      Seq(updates, deletes).filter(_.nonEmpty)
-    val sink = runToEnd(s, input, diffs.toDF(), batches, rocks = true,
-      restartAfter = restartAfter)
+        org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
     foldChangelog(sink, "kind")
       .select($"key".as("k"), $"id", $"sort")
   }
@@ -411,7 +362,6 @@ object StreamQueries {
   private def sessionScaleProbe(s: SparkSession, dir: String,
       factor: Int, shards: Int = 2): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     val base = sortedEvents(s, dir)
     val rows =
       if (factor == 1) base
@@ -421,19 +371,16 @@ object StreamQueries {
     val maxTs = base.map(_.ts.getTime).max
     val sentinel = Seq(Ev(-1L, -1L,
       new java.sql.Timestamp(maxTs + 3L * 3600000L), "flush", 0.0))
-    val input = MemoryStream[Ev]
-    val annotated = SessionWindows.annotate(
-      input.toDS().toDF().withWatermark("ts", "1 hour"),
-      Seq("user_id"), "ts", "1 hour")
     // blackhole-count sink (executor-side count per batch, summed on the
     // driver): the probe measures the OPERATOR's scale law, and a memory
     // sink at 64× was holding 6.4M annotated rows on the driver — sink
     // cost, not operator cost, and super-linear in the recorded curve
     val counter = new java.util.concurrent.atomic.LongAdder
-    runToEnd(s, input, annotated, chunks(rows, 2) :+ sentinel, rocks = true,
-      foreachSink = Some((df, _) =>
-        counter.add(df.filter(col("user_id") >= 0).count())),
-      shufflePartitions = shards)
+    replay(s, chunks(rows, 2) :+ sentinel,
+        foreachSink = Some((df, _) =>
+          counter.add(df.filter(col("user_id") >= 0).count())),
+        shufflePartitions = shards)(in => SessionWindows.annotate(
+      in.toDF().withWatermark("ts", "1 hour"), Seq("user_id"), "ts", "1 hour"))
     Seq(counter.sum).toDF("rows")
   }
 
@@ -465,10 +412,8 @@ object StreamQueries {
     */
   private[queries] def streamSessionFuzzReplay(s: SparkSession, dir: String,
       c: StreamFuzzGen.SessionCase,
-      restartAfter: Option[Int] = None,
-      restartBoundaries: Seq[Int] = Nil): DataFrame = {
+      restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     val rows = sortedEvents(s, dir)
     val maxTs = rows.last.ts.getTime
     // wm delay 1h, session timers at max+gap: sentinel at
@@ -477,15 +422,12 @@ object StreamQueries {
     val sentinel = Ev(-1L, -1L,
       new java.sql.Timestamp(maxTs + (c.gapMinutes + 180L) * 60000L),
       "flush", 0.0)
-    val input = MemoryStream[Ev]
-    var df = input.toDS().toDF().withWatermark("ts", "1 hour")
-    c.keys.foreach { case (e, a) => df = df.withColumn(a, expr(e)) }
-    val annotated = SessionWindows.annotate(
-      df.filter(expr(c.filterSql)), c.keys.map(_._2), "ts",
-      s"${c.gapMinutes} minutes")
-    runToEnd(s, input, annotated, chunks(rows, 2) :+ Seq(sentinel),
-      rocks = true, restartAfter = restartAfter,
-      restartBoundaries = restartBoundaries)
+    replay(s, chunks(rows, 2) :+ Seq(sentinel), restarts = restarts) { in =>
+      val keyed = c.keys.foldLeft(in.toDF().withWatermark("ts", "1 hour")) {
+        case (df, (e, a)) => df.withColumn(a, expr(e)) }
+      SessionWindows.annotate(keyed.filter(expr(c.filterSql)),
+        c.keys.map(_._2), "ts", s"${c.gapMinutes} minutes")
+    }
       .filter(col("event_id") >= 0)
       .select(c.keys.map(k => col(k._2)) ++ Seq(col("event_id"),
         col("window_start").cast("timestamp_ntz").as("window_start"),
@@ -505,21 +447,19 @@ object StreamQueries {
     */
   private[queries] def streamSessionDynFuzzReplay(s: SparkSession, dir: String,
       c: StreamFuzzGen.SessionDynCase,
-      restartAfter: Option[Int] = None): DataFrame = {
+      restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     val rows = sortedEvents(s, dir)
     val maxTs = rows.last.ts.getTime
     // gap draws cap at 161 minutes; +360 puts the watermark (1h delay)
     // past max + gap for every arm with margin
     val sentinel = Ev(-1L, -1L,
       new java.sql.Timestamp(maxTs + 360L * 60000L), "flush", 0.0)
-    val input = MemoryStream[Ev]
-    val df = input.toDS().toDF().withWatermark("ts", "1 hour")
+    replay(s, chunks(rows, 2) :+ Seq(sentinel), mode = "append",
+        restarts = restarts)(_.toDF().withWatermark("ts", "1 hour")
       .filter(expr(c.filterSql))
       .withColumn("k", expr(s"CAST(${c.keySql} AS STRING)"))
       .withColumn("gap_m", expr(s"CAST((${c.gapSql}) AS INT)"))
-    val agg = df
       .groupBy(col("k"),
         // session_window's dynamic gap must be CalendarIntervalType
         session_window(col("ts"), expr("make_interval(0, 0, 0, 0, 0, gap_m, 0)")))
@@ -528,9 +468,7 @@ object StreamQueries {
       .select($"k",
         $"session_window.start".cast("timestamp_ntz").as("window_start"),
         $"session_window.end".cast("timestamp_ntz").as("window_end"),
-        $"n", $"sum_id")
-    runToEnd(s, input, agg, chunks(rows, 2) :+ Seq(sentinel),
-      mode = "append", rocks = true, restartAfter = restartAfter)
+        $"n", $"sum_id"))
       .filter($"sum_id" >= 0)
   }
 
@@ -548,9 +486,8 @@ object StreamQueries {
     */
   private[queries] def streamSurgeryFuzzReplay(s: SparkSession, dir: String,
       c: StreamFuzzGen.SurgeryCase,
-      restartAfter: Option[Int] = None): DataFrame = {
+      restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     import graft.streaming.{StateBootstrap, StateReader}
     val trips = t(s, dir, "events").filter(expr(c.filterSql))
       .select(expr(s"CAST(${c.keySql} AS STRING)").as("k"),
@@ -565,36 +502,11 @@ object StreamQueries {
       case (k, ce, us, _) if us < cut => StateBootstrap.BIn(k, ce) }
     val rest = trips.collect {
       case (k, ce, us, _) if us >= cut => StateBootstrap.BIn(k, ce) }
-    // phase 1 — same conf contract as q_state_bootstrap: RocksDB for
-    // transformWithState, changelog checkpointing off so the offline
-    // statestore read sees plain snapshots, checkpoint retained
-    val ckpt1 = tmpDir(s"q_fuzz_surgery_${c.seed}") + "/ckpt1"
-    val in1 = MemoryStream[StateBootstrap.BIn]
-    val out1 = StateBootstrap.agg(in1.toDS(),
-      s.emptyDataset(Encoders.product[StateBootstrap.BInit]))
-    val q1 = {
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevProvider =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.shuffle.partitions", "2")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try out1.writeStream.format("memory")
-        .queryName(s"qsf_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt1).start()
-      finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        prevProvider match {
-          case Some(p) =>
-            s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None =>
-            s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-      }
-    }
-    try chunks(hist, 2).foreach { b => in1.addData(b); q1.processAllAvailable() }
-    finally q1.stop()
+    // phase 1 — same retained-checkpoint leg as q_state_bootstrap
+    val ckpt1 = Q.scratchDir(s"q_fuzz_surgery_${c.seed}") + "/ckpt1"
+    replay(s, chunks(hist, 2), keepCheckpoint = Some(ckpt1))(
+      StateBootstrap.agg(_,
+        s.emptyDataset(Encoders.product[StateBootstrap.BInit])))
     val boot = StateBootstrap.readAccState(s, ckpt1)
     // welded point-read: the queryable-state path must agree with the
     // bulk savepoint read for a probe key (smallest, deterministic)
@@ -613,10 +525,8 @@ object StreamQueries {
         when(expr(c.rewritePred("key")), col("cents") + c.rwDelta)
           .otherwise(col("cents")))
       .as[StateBootstrap.BInit]
-    val in2 = MemoryStream[StateBootstrap.BIn]
-    val out2 = StateBootstrap.agg(in2.toDS(), rewritten)
-    val sink = runToEnd(s, in2, out2, chunks(rest, 2), rocks = true,
-      restartAfter = restartAfter)
+    val sink = replay(s, chunks(rest, 2), restarts = restarts)(
+      StateBootstrap.agg(_, rewritten))
     // n is strictly monotone per key: the final state is the argmax row
     sink.groupBy($"key".as("k"))
       .agg(max(struct($"n", $"cents")).as("m"))
@@ -631,10 +541,9 @@ object StreamQueries {
     */
   private[queries] def streamRetractFuzzReplay(s: SparkSession, dir: String,
       c: StreamFuzzGen.RetractCase,
-      restartAfter: Option[Int] = None,
+      restarts: Seq[Int] = Nil,
       miniBatch: Boolean = false): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     implicit val chEnc = Encoders.product[StatefulOps.Change[String, Long]]
     val trips = t(s, dir, "events")
       .filter(expr(c.filterSql))
@@ -646,31 +555,26 @@ object StreamQueries {
     val deletes = trips.collect {
       case (k, v, id) if id % c.deleteMod == c.deleteRes =>
         StatefulOps.Change(Changelog.Delete, k, v) }
-    val input = MemoryStream[StatefulOps.Change[String, Long]]
     val batches = chunks(inserts, 2) ++
       (if (deletes.nonEmpty) Seq(deletes) else Nil)
     require(!miniBatch || c.op == "sum",
       "mini-batch emission is a RetractSumProcessor mode; force op=sum")
     c.op match {
       case "sum" =>
-        val changes = input.toDS().groupByKey(_.key)
+        val sink = replay(s, batches, restarts = restarts)(_.groupByKey(_.key)
           .transformWithState(
             new StatefulOps.RetractSumProcessor[String, Long](miniBatch),
             org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-        val sink = runToEnd(s, input, changes.toDF(), batches, rocks = true,
-          restartAfter = restartAfter)
+            org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
         foldChangelog(sink.select($"kind", $"value.key".as("k"),
           $"value.sum".as("agg"), $"value.count".as("n")), "kind")
       case mm =>
-        val changes = input.toDS().groupByKey(_.key)
+        val sink = replay(s, batches, restarts = restarts)(_.groupByKey(_.key)
           .transformWithState(
             new StatefulOps.RetractMinMaxProcessor[String, Long](
               isMax = mm == "max"),
             org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-        val sink = runToEnd(s, input, changes.toDF(), batches, rocks = true,
-          restartAfter = restartAfter)
+            org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
         foldChangelog(sink.select($"kind", $"value.key".as("k"),
           $"value.extreme".as("agg"), $"value.count".as("n")), "kind")
     }
@@ -688,9 +592,8 @@ object StreamQueries {
     */
   private[queries] def streamDistinctFuzzReplay(s: SparkSession, dir: String,
       c: StreamFuzzGen.DistinctCase,
-      restartAfter: Option[Int] = None): DataFrame = {
+      restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     val trips = t(s, dir, "events")
       .filter(expr(c.filterSql))
       .select(expr(s"CAST(${c.groupSql} AS STRING)").as("g"),
@@ -702,14 +605,13 @@ object StreamQueries {
     val deletes = trips.collect {
       case (g, v, id) if id % c.deleteMod == c.deleteRes =>
         StatefulOps.SplitIn(g, shard(v), v, Changelog.Delete) }
-    val input = MemoryStream[StatefulOps.SplitIn]
-    val out = input.toDS().groupByKey(r => s"${r.group}|${r.bucket}")
-      .transformWithState(new StatefulOps.SplitDistinctProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update())
-    val sink = runToEnd(s, input, out.toDF(),
-      chunks(inserts, 2) ++ (if (deletes.nonEmpty) Seq(deletes) else Nil),
-      rocks = true, restartAfter = restartAfter)
+    val sink = replay(s,
+        chunks(inserts, 2) ++ (if (deletes.nonEmpty) Seq(deletes) else Nil),
+        restarts = restarts)(
+      _.groupByKey(r => s"${r.group}|${r.bucket}")
+        .transformWithState(new StatefulOps.SplitDistinctProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
     sink.groupBy($"key".as("g"))
       .agg(sum(when(col("kind") === Changelog.Insert ||
           col("kind") === Changelog.UpdateAfter, $"value")
@@ -734,10 +636,8 @@ object StreamQueries {
     */
   private[queries] def streamJoinFuzzReplay(s: SparkSession, dir: String,
       c: StreamFuzzGen.JoinCase,
-      restartAfter: Option[Int] = None,
-      restartBoundaries: Seq[Int] = Nil): DataFrame = {
+      restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     val rows = t(s, dir, "events")
       .select(expr(s"CAST(${c.keySql} AS STRING)").as("k"), col("event_id"),
         expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)")
@@ -763,14 +663,12 @@ object StreamQueries {
       val deletes = rights.collect {
         case (k, id) if id % c.rDelMod == c.rDelRes =>
           JoinInput(k, isLeft = false, id, -1) }
-      val input = MemoryStream[JoinInput]
-      val out = input.toDS().groupByKey(_.key)
+      val sink = replay(s,
+          chunks(inserts, 2) ++ Seq(deletes).filter(_.nonEmpty),
+          restarts = restarts)(_.groupByKey(_.key)
         .transformWithState(new SemiAntiProcessor(c.joinType == "semi"),
           org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-      val sink = runToEnd(s, input, out.toDF(),
-        chunks(inserts, 2) ++ Seq(deletes).filter(_.nonEmpty), rocks = true,
-        restartAfter = restartAfter, restartBoundaries = restartBoundaries)
+          org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
       foldChangelog(sink, "kind")
         .select($"key".as("k"), $"id".as("l_id"))
     } else {
@@ -791,16 +689,13 @@ object StreamQueries {
         case "right" => OuterJoin.RightOuter
         case "full" => OuterJoin.FullOuter
       }
-      val input = MemoryStream[JEnv]
-      val ds = input.toDS()
-      val left = ds.filter(_.isLeft).map(e => (e.k, e.kind, (e.id, e.cents)))
-      val right = ds.filter(!_.isLeft).map(e => (e.k, e.kind, e.id))
-      val out = OuterJoin.outerJoin[String, (Long, Long), Long](
-        left, right, jt)
-      val sink = runToEnd(s, input, out.toDF(),
-        chunks(inserts, 2) ++ Seq(rDel, lDel).filter(_.nonEmpty),
-        rocks = true, restartAfter = restartAfter,
-        restartBoundaries = restartBoundaries)
+      val sink = replay(s,
+          chunks(inserts, 2) ++ Seq(rDel, lDel).filter(_.nonEmpty),
+          restarts = restarts) { ds =>
+        val left = ds.filter(_.isLeft).map(e => (e.k, e.kind, (e.id, e.cents)))
+        val right = ds.filter(!_.isLeft).map(e => (e.k, e.kind, e.id))
+        OuterJoin.outerJoin[String, (Long, Long), Long](left, right, jt).toDF()
+      }
       foldChangelog(sink.select($"kind", $"key".as("k"),
         $"left._1".as("l_id"), $"left._2".as("l_cents"),
         $"right".as("r_id")), "kind")
@@ -846,21 +741,20 @@ object StreamQueries {
   private[queries] def streamIntervalFuzzReplay(s: SparkSession,
       dir: String, c: StreamFuzzGen.IntervalCase): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     val rows = sideSplitInput(s, dir, c.keySql,
       c.leftFilterSql, c.rightFilterSql)
-    val input = MemoryStream[IvEnv]
-    val ev = input.toDS().withWatermark("ts", "1 hour")
-    val lhs = ev.filter($"isLeft")
-      .select($"k".as("l_k"), $"id".as("l_id"), $"ts".as("l_ts"))
-    val rhs = ev.filter(!$"isLeft")
-      .select($"k".as("r_k"), $"id".as("r_id"), $"ts".as("r_ts"))
-    val joined = lhs.join(rhs,
-        $"l_k" === $"r_k" &&
-        expr(s"r_ts >= l_ts + INTERVAL '${c.loMinutes}' MINUTE") &&
-        expr(s"r_ts <= l_ts + INTERVAL '${c.hiMinutes}' MINUTE"))
-      .select($"l_k".as("k"), $"l_id", $"r_id")
-    runToEnd(s, input, joined, chunks(rows, 2), mode = "append")
+    replay(s, chunks(rows, 2), mode = "append") { in =>
+      val ev = in.withWatermark("ts", "1 hour")
+      val lhs = ev.filter($"isLeft")
+        .select($"k".as("l_k"), $"id".as("l_id"), $"ts".as("l_ts"))
+      val rhs = ev.filter(!$"isLeft")
+        .select($"k".as("r_k"), $"id".as("r_id"), $"ts".as("r_ts"))
+      lhs.join(rhs,
+          $"l_k" === $"r_k" &&
+          expr(s"r_ts >= l_ts + INTERVAL '${c.loMinutes}' MINUTE") &&
+          expr(s"r_ts <= l_ts + INTERVAL '${c.hiMinutes}' MINUTE"))
+        .select($"l_k".as("k"), $"l_id", $"r_id")
+    }
   }
 
   /** MemoryStream replay for a [[StreamFuzzGen.WinJoinCase]]: one
@@ -872,22 +766,20 @@ object StreamQueries {
   private[queries] def streamWinJoinFuzzReplay(s: SparkSession,
       dir: String, c: StreamFuzzGen.WinJoinCase): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     val rows = sideSplitInput(s, dir, c.keySql,
       c.leftFilterSql, c.rightFilterSql)
-    val input = MemoryStream[IvEnv]
-    val ev = input.toDS().withWatermark("ts", "1 hour")
     val win = window(col("ts"), s"${c.winMinutes} minutes")
       .getField("start")
-    val lhs = ev.filter($"isLeft")
-      .select(win.as("l_ws"), $"k".as("l_k"), $"id".as("l_id"))
-    val rhs = ev.filter(!$"isLeft")
-      .select(win.as("r_ws"), $"k".as("r_k"), $"id".as("r_id"))
-    val joined = lhs.join(rhs,
-        $"l_ws" === $"r_ws" && $"l_k" === $"r_k")
-      .select($"l_ws".cast("timestamp_ntz").as("window_start"),
-        $"l_k".as("k"), $"l_id", $"r_id")
-    runToEnd(s, input, joined, chunks(rows, 2), mode = "append")
+    replay(s, chunks(rows, 2), mode = "append") { in =>
+      val ev = in.withWatermark("ts", "1 hour")
+      val lhs = ev.filter($"isLeft")
+        .select(win.as("l_ws"), $"k".as("l_k"), $"id".as("l_id"))
+      val rhs = ev.filter(!$"isLeft")
+        .select(win.as("r_ws"), $"k".as("r_k"), $"id".as("r_id"))
+      lhs.join(rhs, $"l_ws" === $"r_ws" && $"l_k" === $"r_k")
+        .select($"l_ws".cast("timestamp_ntz").as("window_start"),
+          $"l_k".as("k"), $"l_id", $"r_id")
+    }
   }
 
   /** MemoryStream replay for a [[StreamFuzzGen.OverCase]]: filtered rows
@@ -908,18 +800,18 @@ object StreamQueries {
   /** MemoryStream replay for a [[StreamFuzzGen.BoundedOverCase]]: the
     * same envelope/sentinel shape as the unbounded replay, through the
     * ROWS- or RANGE-bounded processor (accumulator + retract-row state)
-    * under the case's frame. `restartAfter` threads the checkpoint
+    * under the case's frame. `restarts` threads the checkpoint
     * stop/resume arm — the retained-frame ValueStates and the input
     * buffer MapState must restore mid-replay.
     */
   private[queries] def streamBoundedOverFuzzReplay(s: SparkSession,
       dir: String, c: StreamFuzzGen.BoundedOverCase,
-      restartAfter: Option[Int] = None): DataFrame = {
+      restarts: Seq[Int] = Nil): DataFrame = {
     val proc: ProcessOps.BufferedOverProcessor =
       if (c.rangeMode) new ProcessOps.RangeBoundedOverProcessor(c.rangeMs)
       else new ProcessOps.RowsBoundedOverProcessor(c.nRows)
     overFuzzReplay(s, dir, c.keySql, c.filterSql, c.valueSql, proc,
-      restartAfter)
+      restarts)
   }
 
   /** Shared over-aggregate replay body (see the callers' docs): filtered
@@ -931,9 +823,8 @@ object StreamQueries {
   private def overFuzzReplay(s: SparkSession, dir: String, keySql: String,
       filterSql: String, valueSql: String,
       proc: ProcessOps.BufferedOverProcessor,
-      restartAfter: Option[Int] = None): DataFrame = {
+      restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     implicit val outEnc = Encoders.product[ProcessOps.OverOut]
     val rows = t(s, dir, "events")
       .filter(expr(filterSql))
@@ -953,14 +844,12 @@ object StreamQueries {
     val sentinel = ProcessOps.TimedIn(flushKey,
       new java.sql.Timestamp(rows.last.eventTime.getTime + 10L * 86400000L),
       0L)
-    val input = MemoryStream[ProcessOps.TimedIn]
-    val out = input.toDS().withWatermark("eventTime", "1 hour")
+    replay(s, chunks(rows, 2) :+ Seq(sentinel), mode = "append",
+        restarts = restarts)(_.withWatermark("eventTime", "1 hour")
       .groupByKey(_.key)
       .transformWithState(proc,
         org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
-    runToEnd(s, input, out.toDF(), chunks(rows, 2) :+ Seq(sentinel),
-      mode = "append", rocks = true, restartAfter = restartAfter)
+        org.apache.spark.sql.streaming.OutputMode.Append()).toDF())
       .filter($"key" =!= flushKey)
       .select($"key".as("k"), $"ts".as("ts_ms"), $"v",
         $"movingSum".as("moving_sum"), $"n")
@@ -1005,9 +894,8 @@ object StreamQueries {
     */
   private[queries] def streamTemporalFuzzReplay(s: SparkSession, dir: String,
       c: StreamFuzzGen.TemporalCase,
-      restartAfter: Option[Int] = None): DataFrame = {
+      restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     import graft.streaming.TemporalJoin
     implicit val outEnc = Encoders.product[TemporalJoin.AsOfMatch]
     val (rows, sentinel) = temporalCaseInput(s, dir, c)
@@ -1020,15 +908,12 @@ object StreamQueries {
       (if (pf) Seq(TemporalJoin.TemporalEvent(k, ts, isProbe = true, id, 0L))
        else Nil)
     }
-    val input = MemoryStream[TemporalJoin.TemporalEvent]
-    val out = input.toDS()
-      .withWatermark("eventTime", "1 hour")
+    replay(s, chunks(envs, 3) :+ Seq(sentinel), mode = "append",
+        restarts = restarts)(_.withWatermark("eventTime", "1 hour")
       .groupByKey(_.key)
       .transformWithState(new TemporalJoin.TemporalJoinProcessor(),
         org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
-    runToEnd(s, input, out.toDF(), chunks(envs, 3) :+ Seq(sentinel),
-      mode = "append", rocks = true, restartAfter = restartAfter)
+        org.apache.spark.sql.streaming.OutputMode.Append()).toDF())
       .filter($"probeId" >= 0)
       .select($"key".as("k"), $"probeId".as("probe_id"),
         $"versionTs".as("v_ts"), $"value".as("v_cents"))
@@ -1045,7 +930,6 @@ object StreamQueries {
   private[queries] def streamTemporalFuzzReplayRow(s: SparkSession,
       dir: String, c: StreamFuzzGen.TemporalCase): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     import graft.streaming.TemporalJoin
     val (rows, sentinel) = temporalCaseInput(s, dir, c)
     val envs = rows.flatMap { case (k, ts, id, cents, pf, vf) =>
@@ -1054,18 +938,16 @@ object StreamQueries {
       (if (pf) Seq(TemporalJoin.TemporalEvent(k, ts, isProbe = true, id, 0L))
        else Nil)
     }
-    val input = MemoryStream[TemporalJoin.TemporalEvent]
-    val ds = input.toDS()
-    val probeSide = ds.filter(_.isProbe)
-      .select($"key".as("k"), $"eventTime".as("ts"),
-        $"probeId".as("probe_id"))
-    val versionSide = ds.filter(!_.isProbe)
-      .select($"key".as("k"), $"eventTime".as("ts"),
-        unix_millis($"eventTime").as("vms"), $"value".as("cents"))
-    val joined = TemporalJoin.asOfStream(probeSide, versionSide,
-      Seq("k"), "ts", Seq("vms", "cents"), watermarkDelay = "1 hour")
-    runToEnd(s, input, joined, chunks(envs, 3) :+ Seq(sentinel),
-      mode = "append", rocks = true)
+    replay(s, chunks(envs, 3) :+ Seq(sentinel), mode = "append") { ds =>
+      val probeSide = ds.filter(_.isProbe)
+        .select($"key".as("k"), $"eventTime".as("ts"),
+          $"probeId".as("probe_id"))
+      val versionSide = ds.filter(!_.isProbe)
+        .select($"key".as("k"), $"eventTime".as("ts"),
+          unix_millis($"eventTime").as("vms"), $"value".as("cents"))
+      TemporalJoin.asOfStream(probeSide, versionSide,
+        Seq("k"), "ts", Seq("vms", "cents"), watermarkDelay = "1 hour")
+    }
       .filter($"probe_id" >= 0)
       .select($"k", $"probe_id",
         coalesce($"r_vms", lit(-1L)).as("v_ts"),
@@ -1084,7 +966,6 @@ object StreamQueries {
   private[queries] def streamTemporalFuzzReplayStatic(s: SparkSession,
       dir: String, c: StreamFuzzGen.TemporalCase): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     import graft.streaming.TemporalJoin
     val (rows, sentinel) = temporalCaseInput(s, dir, c)
     val probes = rows.collect { case (k, ts, id, _, true, _) =>
@@ -1098,14 +979,12 @@ object StreamQueries {
     val versionsDf = versions
       .map { case (k, ts, _, cents) => (k, ts, ts.getTime, cents) }
       .toDF("k", "ts", "vms", "cents")
-    val input = MemoryStream[TemporalJoin.TemporalEvent]
-    val probeSide = input.toDS()
-      .select($"key".as("k"), $"eventTime".as("ts"),
-        $"probeId".as("probe_id"))
-    val joined = TemporalJoin.asOfStreamStatic(probeSide, versionsDf,
-      Seq("k"), "ts", Seq("vms", "cents"), watermarkDelay = "1 hour")
-    runToEnd(s, input, joined, chunks(probes, 3) :+ Seq(sentinel),
-      mode = "append", rocks = true)
+    replay(s, chunks(probes, 3) :+ Seq(sentinel), mode = "append")(in =>
+      TemporalJoin.asOfStreamStatic(
+        in.select($"key".as("k"), $"eventTime".as("ts"),
+          $"probeId".as("probe_id")),
+        versionsDf, Seq("k"), "ts", Seq("vms", "cents"),
+        watermarkDelay = "1 hour"))
       .filter($"probe_id" >= 0)
       .select($"k", $"probe_id",
         coalesce($"r_vms", lit(-1L)).as("v_ts"),
@@ -1123,9 +1002,8 @@ object StreamQueries {
     */
   private[queries] def streamLatenessFuzzReplay(s: SparkSession,
       dir: String, c: StreamFuzzGen.LatenessCase,
-      restartAfter: Option[Int] = None): DataFrame = {
+      restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     val rows = t(s, dir, "events")
       .filter(expr(c.filterSql))
       .select(col("event_type"), col("ts").cast("timestamp").as("ts"),
@@ -1147,13 +1025,11 @@ object StreamQueries {
     }
     val sentinel = Seq(AllowedLateness.LWIn("\u0000flush",
       new java.sql.Timestamp(mMs + 10L * 86400000L), 0L))
-    val input = MemoryStream[AllowedLateness.LWIn]
-    val out = AllowedLateness.tumbleCounts(
-      input.toDS().withWatermark("eventTime", s"${c.delayMs} milliseconds"),
-      windowMs = c.windowMs, latenessMs = c.latenessMs, delayMs = c.delayMs)
-    val sink = runToEnd(s, input, out,
-      chunks(ins, 3) ++ Seq(resend).filter(_.nonEmpty) :+ sentinel,
-      rocks = true, restartAfter = restartAfter)
+    val sink = replay(s,
+        chunks(ins, 3) ++ Seq(resend).filter(_.nonEmpty) :+ sentinel,
+        restarts = restarts)(in => AllowedLateness.tumbleCounts(
+      in.withWatermark("eventTime", s"${c.delayMs} milliseconds"),
+      windowMs = c.windowMs, latenessMs = c.latenessMs, delayMs = c.delayMs))
     foldChangelog(sink, "kind")
       .filter($"etype" =!= "\u0000flush")
       .select($"late", $"etype".as("event_type"), $"ws".as("ws_ms"),
@@ -1173,7 +1049,6 @@ object StreamQueries {
   private[queries] def streamIdleFuzzReplay(s: SparkSession, dir: String,
       c: StreamFuzzGen.IdleCase): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     val rows = sortedEvents(s, dir)
     val mn = micros(rows.head.ts)
     val mx = micros(rows.last.ts)
@@ -1194,14 +1069,12 @@ object StreamQueries {
       case (None, j) => (j, ("sentinel", sentinelTs)) }
     val allRounds = rounds ++ Seq(sentinelRound,
       Seq.empty[(Int, (String, Long))])
-    val input = MemoryStream[graft.streaming.WatermarkMux.MuxIn]
-    val out = graft.streaming.WatermarkMux.idleTumbleCounts(
-      input.toDS(), windowMs = c.winMinutes * 60000L)
-    runToEnd(s, input, out,
-      graft.streaming.WatermarkMux.stamp(allRounds,
-        delayMs = c.delayMinutes * 60000L,
-        idleTimeoutRounds = c.idleTimeoutRounds),
-      mode = "append", rocks = true)
+    replay(s,
+        graft.streaming.WatermarkMux.stamp(allRounds,
+          delayMs = c.delayMinutes * 60000L,
+          idleTimeoutRounds = c.idleTimeoutRounds),
+        mode = "append")(graft.streaming.WatermarkMux.idleTumbleCounts(_,
+      windowMs = c.winMinutes * 60000L))
       .filter($"etype" =!= "sentinel")
       .select(($"ws" * 1000L).as("ws_us"), $"etype".as("event_type"), $"n")
       .orderBy($"ws_us", $"event_type")
@@ -1218,7 +1091,6 @@ object StreamQueries {
   private[queries] def streamWmAlignFuzzReplay(s: SparkSession, dir: String,
       c: StreamFuzzGen.WmAlignCase): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     val rows = sortedEvents(s, dir)
     val fast = rows.filter(e => Math.floorMod(e.user_id, c.mod.toLong) == 0L)
       .map(e => (e.event_type, e.ts.getTime)).toVector
@@ -1234,13 +1106,11 @@ object StreamQueries {
     val allRounds = rounds ++ Seq(
       Seq((0, ("sentinel", sentinelTs)), (1, ("sentinel", sentinelTs))),
       Seq.empty[(Int, (String, Long))])
-    val input = MemoryStream[graft.streaming.WatermarkMux.MuxIn]
-    val out = graft.streaming.WatermarkMux.idleTumbleCounts(
-      input.toDS(), windowMs = c.winMinutes * 60000L)
-    runToEnd(s, input, out,
-      graft.streaming.WatermarkMux.stamp(allRounds, delayMs = 0L,
-        idleTimeoutRounds = 1000000),
-      mode = "append", rocks = true)
+    replay(s,
+        graft.streaming.WatermarkMux.stamp(allRounds, delayMs = 0L,
+          idleTimeoutRounds = 1000000),
+        mode = "append")(graft.streaming.WatermarkMux.idleTumbleCounts(_,
+      windowMs = c.winMinutes * 60000L))
       .filter($"etype" =!= "sentinel")
       .select(($"ws" * 1000L).as("ws_us"), $"etype".as("event_type"), $"n")
       .orderBy($"ws_us", $"event_type")
@@ -1262,7 +1132,6 @@ object StreamQueries {
       dir: String, c: StreamFuzzGen.CoGroupCase): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.types._
-    implicit val sqlCtx = s.sqlContext
     val rows = t(s, dir, "events")
       .select(expr(s"CAST(${c.keySql} AS STRING)").as("k"), col("event_id"),
         col("ts").cast("timestamp").as("ts"),
@@ -1286,12 +1155,6 @@ object StreamQueries {
     val sentinel = CgEnv("\u0000flush", isLeft = true,
       new java.sql.Timestamp(rows.last.ts.getTime + 10L * 86400000L),
       -1L, 0L)
-    val input = MemoryStream[CgEnv]
-    val ev = input.toDS()
-    val lhs = ev.filter(_.isLeft).toDF()
-      .select($"k", $"ts", $"id", $"cents")
-    val rhs = ev.filter(!_.isLeft).toDF()
-      .select($"k", $"ts", $"id", $"cents")
     val outSchema = StructType(Seq(
       StructField("window_start", TimestampType),
       StructField("k", StringType),
@@ -1306,7 +1169,11 @@ object StreamQueries {
           ls.length.toLong, rs.length.toLong,
           ls.map(_.getAs[Long]("cents")).sum,
           if (rs.isEmpty) -1L else rs.map(_.getAs[Long]("id")).max)))
-    val out =
+    replay(s, chunks(rows, 2) :+ Seq(sentinel), mode = "append") { ev =>
+      val lhs = ev.filter(_.isLeft).toDF()
+        .select($"k", $"ts", $"id", $"cents")
+      val rhs = ev.filter(!_.isLeft).toDF()
+        .select($"k", $"ts", $"id", $"cents")
       if (!c.isSliding)
         CoGroup.tumbling(lhs, rhs, Seq("k"), "ts",
           c.winMinutes * 60000L, "1 second", fn, outSchema)
@@ -1314,8 +1181,7 @@ object StreamQueries {
         CoGroup.sliding(lhs, rhs, Seq("k"), "ts",
           c.winMinutes * 60000L, c.slideMinutes * 60000L, "1 second",
           fn, outSchema)
-    runToEnd(s, input, out, chunks(rows, 2) :+ Seq(sentinel),
-      mode = "append", rocks = true)
+    }
       .filter($"k" =!= "\u0000flush")
       .select($"window_start".cast("timestamp_ntz").as("window_start"),
         $"k", $"l_n", $"r_n", $"l_cents", $"r_max_id")
@@ -1342,7 +1208,6 @@ object StreamQueries {
       c: StreamFuzzGen.PtJoinCase): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    implicit val sqlCtx = s.sqlContext
     val rows = t(s, dir, "events")
       .select(expr(s"CAST(${c.keySql} AS STRING)").as("k"),
         col("ts").cast("timestamp").as("ts"), col("event_id"),
@@ -1363,15 +1228,12 @@ object StreamQueries {
       StructField("k", StringType), StructField("pid", LongType)))
     val rightStruct = StructType(Seq(
       StructField("vid", LongType), StructField("vcents", LongType)))
-    val input = MemoryStream[PtEnv]
-    val unioned = input.toDS().toDF()
-      .select($"k".as("__pj_key"), $"isProbe".as("__pj_probe"),
-        $"kind".as("__pj_kind"), struct($"k", $"pid").as("__pj_l"),
-        struct($"vid", $"vcents").as("__pj_r"))
-    val out = ProcTimeJoin.joinTagged(unioned, leftSchema, rightStruct,
-      leftOuter = true)
-    runToEnd(s, input, out.toDF(), chunks(envs, 3), mode = "append",
-      rocks = true)
+    replay(s, chunks(envs, 3), mode = "append")(in =>
+      ProcTimeJoin.joinTagged(
+        in.toDF().select($"k".as("__pj_key"), $"isProbe".as("__pj_probe"),
+          $"kind".as("__pj_kind"), struct($"k", $"pid").as("__pj_l"),
+          struct($"vid", $"vcents").as("__pj_r")),
+        leftSchema, rightStruct, leftOuter = true).toDF())
       .select($"k", $"pid".as("probe_id"),
         coalesce($"r_vid", lit(-1L)).as("v_id"),
         coalesce($"r_vcents", lit(-1L)).as("v_cents"))
@@ -1389,9 +1251,8 @@ object StreamQueries {
     */
   private[queries] def streamBroadcastFuzzReplay(s: SparkSession,
       dir: String, c: StreamFuzzGen.BcCase,
-      restartAfter: Option[Int] = None): DataFrame = {
+      restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     import graft.streaming.ConnectedStreams
     implicit val envEnc = Encoders.product[ConnectedStreams.RuleEnv]
     implicit val outEnc = Encoders.product[ConnectedStreams.RuleMatch]
@@ -1413,13 +1274,11 @@ object StreamQueries {
         isDel = false, version = 0L, thrCents = 0L,
         dataId = id, cents = cents)) else Nil)
     }
-    val input = MemoryStream[ConnectedStreams.RuleEnv]
-    val out = input.toDS().groupByKey(_.key)
-      .transformWithState(new ConnectedStreams.BroadcastRulesProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
-    runToEnd(s, input, out.toDF(), chunks(envs, 3), mode = "append",
-      rocks = true, restartAfter = restartAfter)
+    replay(s, chunks(envs, 3), mode = "append", restarts = restarts)(
+      _.groupByKey(_.key)
+        .transformWithState(new ConnectedStreams.BroadcastRulesProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Append()).toDF())
       .select($"k", $"data_id", $"rule_name", $"version", $"thr_cents")
   }
 
@@ -1441,9 +1300,8 @@ object StreamQueries {
     */
   private[queries] def streamTsortFuzzReplay(s: SparkSession, dir: String,
       c: StreamFuzzGen.TsortCase,
-      restartAfter: Option[Int] = None): DataFrame = {
+      restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     implicit val stampEnc =
       Encoders.product[graft.streaming.TemporalSort.SeqStamped]
     val quantMs = c.quantMinutes * 60000L
@@ -1461,18 +1319,17 @@ object StreamQueries {
     val maxQ = rows.map(_.qts.getTime).max
     val sentinel = Seq(TsRow("\u0000flush", new java.sql.Timestamp(
       maxQ + c.delayMinutes * 60000L + 2 * quantMs), -1L))
-    val input = MemoryStream[TsRow]
-    val watermarked = input.toDS()
-      .withWatermark("qts", s"${c.delayMinutes} minutes").as[TsRow]
-    val sortedOut = graft.streaming.TemporalSort.sorted[String, TsRow](
-      watermarked, _.k, _.qts.getTime)
-    val stamped = sortedOut.groupByKey(_.k)
-      .transformWithState(
-        new graft.streaming.TemporalSort.SeqStampProcessor[TsRow](_.id),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update())
-    runToEnd(s, input, stamped.toDF(), batches :+ sentinel, rocks = true,
-      restartAfter = restartAfter)
+    replay(s, batches :+ sentinel, restarts = restarts) { in =>
+      val watermarked = in
+        .withWatermark("qts", s"${c.delayMinutes} minutes").as[TsRow]
+      graft.streaming.TemporalSort.sorted[String, TsRow](
+          watermarked, _.k, _.qts.getTime)
+        .groupByKey(_.k)
+        .transformWithState(
+          new graft.streaming.TemporalSort.SeqStampProcessor[TsRow](_.id),
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Update()).toDF()
+    }
       .filter($"k" =!= "\u0000flush")
       .select($"k", $"id", $"seq")
   }
@@ -1483,14 +1340,13 @@ object StreamQueries {
     * ValueState per key, -U/+U dethronings) or
     * [[StatefulOps.AppendOnlyFirstNProcessor]] (firstn arm — counter
     * state only); the folded changelog must equal the batch
-    * ROW_NUMBER restatement. `restartAfter` threads the top1 arm's
+    * ROW_NUMBER restatement. `restarts` threads the top1 arm's
     * single-record state through the checkpoint stop/restart battery.
     */
   private[queries] def streamT1FuzzReplay(s: SparkSession, dir: String,
       c: StreamFuzzGen.T1Case,
-      restartAfter: Option[Int] = None): DataFrame = {
+      restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     implicit val chEnc =
       Encoders.product[StatefulOps.Change[String, StatefulOps.Ranked]]
     val rows = t(s, dir, "events").filter(expr(c.filterSql))
@@ -1503,15 +1359,13 @@ object StreamQueries {
         StatefulOps.Ranked(k, id,
           if (c.arm == "top1") srt else micros(ts))
       }
-    val input = MemoryStream[StatefulOps.Ranked]
-    val out = input.toDS().groupByKey(_.key)
-      .transformWithState(
-        if (c.arm == "top1") new StatefulOps.FastTop1Processor
-        else new StatefulOps.AppendOnlyFirstNProcessor(c.n),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update())
-    val sink = runToEnd(s, input, out.toDF(), chunks(rows, 3),
-      rocks = true, restartAfter = restartAfter)
+    val sink = replay(s, chunks(rows, 3), restarts = restarts)(
+      _.groupByKey(_.key)
+        .transformWithState(
+          if (c.arm == "top1") new StatefulOps.FastTop1Processor
+          else new StatefulOps.AppendOnlyFirstNProcessor(c.n),
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
     foldChangelog(sink, "kind")
       .select($"value.key".as("k"), $"value.id".as("id"),
         $"value.sort".as("srt"))
@@ -1529,7 +1383,6 @@ object StreamQueries {
   private[queries] def streamCountWinFuzzReplay(s: SparkSession,
       dir: String, c: WindowFuzzGen.CountWinCase): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     implicit val chEnc = Encoders.product[StatefulOps.Change[String, Long]]
     val rows = t(s, dir, "events")
       .filter(expr(c.filterSql))
@@ -1539,24 +1392,23 @@ object StreamQueries {
       .as[(String, java.sql.Timestamp, Long, Long)]
       .collect().toSeq.sortBy(t => (micros(t._2), t._3))
       .map { case (k, _, _, v) => StatefulOps.Change(Changelog.Insert, k, v) }
-    val input = MemoryStream[StatefulOps.Change[String, Long]]
-    val out =
+    replay(s, chunks(rows, 2)) { in =>
       if (!c.sliding)
-        input.toDS().groupByKey(_.key)
+        in.groupByKey(_.key)
           .transformWithState(new StatefulOps.CountWindowProcessor(c.size),
             org.apache.spark.sql.streaming.TimeMode.None(),
             org.apache.spark.sql.streaming.OutputMode.Update())
           .toDF().select($"key".as("k"), $"windowId".as("window_id"),
             $"sum".as("sum_v"), $"n")
       else
-        input.toDS().groupByKey(_.key)
+        in.groupByKey(_.key)
           .transformWithState(
             new StatefulOps.CountSlideProcessor(c.size, c.slide),
             org.apache.spark.sql.streaming.TimeMode.None(),
             org.apache.spark.sql.streaming.OutputMode.Update())
           .toDF().select($"key".as("k"), $"fireId".as("fire_id"),
             $"sum".as("sum_v"), $"n")
-    runToEnd(s, input, out, chunks(rows, 2), rocks = true)
+    }
   }
 
   /** Streaming count-window replay (IntegrationQueries.q_stream_countwin
@@ -1568,17 +1420,14 @@ object StreamQueries {
   private[queries] def countWindowReplay(s: SparkSession, dir: String,
       size: Int): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     implicit val chEnc =
       Encoders.product[StatefulOps.Change[String, Long]]
     val rows = sortedEvents(s, dir).filter(_.user_id % 3 == 0).map(e =>
       StatefulOps.Change(Changelog.Insert, e.user_id.toString, e.event_id))
-    val input = MemoryStream[StatefulOps.Change[String, Long]]
-    val out = input.toDS().groupByKey(_.key)
+    val sink = replay(s, chunks(rows, 2))(_.groupByKey(_.key)
       .transformWithState(new StatefulOps.CountWindowProcessor(size),
         org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update())
-    val sink = runToEnd(s, input, out.toDF(), chunks(rows, 2), rocks = true)
+        org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
     sink.select($"key", $"windowId".as("window_id"),
         $"sum".as("sum_ids"), $"n")
       .orderBy($"key", $"window_id")
@@ -1592,17 +1441,14 @@ object StreamQueries {
   private[queries] def countSlideReplay(s: SparkSession, dir: String,
       size: Int, slide: Int): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     implicit val chEnc =
       Encoders.product[StatefulOps.Change[String, Long]]
     val rows = sortedEvents(s, dir).filter(_.user_id % 3 == 0).map(e =>
       StatefulOps.Change(Changelog.Insert, e.user_id.toString, e.event_id))
-    val input = MemoryStream[StatefulOps.Change[String, Long]]
-    val out = input.toDS().groupByKey(_.key)
+    val sink = replay(s, chunks(rows, 2))(_.groupByKey(_.key)
       .transformWithState(new StatefulOps.CountSlideProcessor(size, slide),
         org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update())
-    val sink = runToEnd(s, input, out.toDF(), chunks(rows, 2), rocks = true)
+        org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
     sink.select($"key", $"fireId".as("fire_id"),
         $"sum".as("sum_ids"), $"n")
       .orderBy($"key", $"fire_id")
@@ -1620,7 +1466,6 @@ object StreamQueries {
   private[queries] def temporalSortReplay(s: SparkSession,
       dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     implicit val auditEnc =
       Encoders.product[graft.streaming.TemporalSort.OrderAudit]
     // a deterministic third of the users — the per-key sort/audit
@@ -1629,19 +1474,17 @@ object StreamQueries {
     val maxTs = rows.map(_.ts.getTime).max
     def sentinel(off: Long) = Seq(Ev(-1L, -1L,
       new java.sql.Timestamp(maxTs + off), "flush", 0.0))
-    val input = MemoryStream[Ev]
-    val watermarked = input.toDS().withWatermark("ts", "1 hour").as[Ev]
-    val sortedOut = graft.streaming.TemporalSort.sorted[String, Ev](
-      watermarked, e => e.user_id.toString, e => e.ts.getTime)
-    val audited = sortedOut
-      .groupByKey(e => e.user_id.toString)
-      .transformWithState(
-        new graft.streaming.TemporalSort.OrderAuditProcessor[Ev](
-          e => micros(e.ts)),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update())
-    val sink = runToEnd(s, input, audited.toDF(),
-      chunks(rows, 2) :+ sentinel(2 * 3600000L), rocks = true)
+    val sink = replay(s, chunks(rows, 2) :+ sentinel(2 * 3600000L)) { in =>
+      graft.streaming.TemporalSort.sorted[String, Ev](
+          in.withWatermark("ts", "1 hour").as[Ev],
+          e => e.user_id.toString, e => e.ts.getTime)
+        .groupByKey(e => e.user_id.toString)
+        .transformWithState(
+          new graft.streaming.TemporalSort.OrderAuditProcessor[Ev](
+            e => micros(e.ts)),
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Update()).toDF()
+    }
     // n/violations are monotone per key → max = final state
     sink.filter($"key" =!= "-1")
       .groupBy($"key")
@@ -1660,7 +1503,6 @@ object StreamQueries {
   private[queries] def broadcastReplay(s: SparkSession,
       dir: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     implicit val flaggedEnc =
       Encoders.product[graft.streaming.ConnectedStreams.Flagged]
     import graft.streaming.ConnectedStreams.{Tagged, ThresholdProcessor}
@@ -1672,13 +1514,10 @@ object StreamQueries {
       Tagged(e.user_id.toString, isControl = false, threshold = 0L,
         value = cents)
     }
-    val input = MemoryStream[Tagged]
-    val out = input.toDS().groupByKey(_.key)
+    val sink = replay(s, controls +: chunks(data, 2))(_.groupByKey(_.key)
       .transformWithState(new ThresholdProcessor(defaultThreshold = 0L),
         org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update())
-    val sink = runToEnd(s, input, out.toDF(),
-      controls +: chunks(data, 2), rocks = true)
+        org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
     sink.select($"key", $"value", $"threshold")
       .orderBy($"key", $"value")
   }
@@ -1695,7 +1534,6 @@ object StreamQueries {
   private[queries] def semiAntiReplay(s: SparkSession, dir: String,
       semi: Boolean): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     import graft.streaming.SemiAntiJoin.{JoinInput, JoinOutput, SemiAntiProcessor}
     implicit val outEnc = Encoders.product[JoinOutput]
     val evs = sortedEvents(s, dir)
@@ -1710,13 +1548,10 @@ object StreamQueries {
           (e.user_id % 7 == 0 || e.event_id % 3 == 0) =>
         JoinInput(e.user_id.toString, isLeft = false, e.event_id, -1)
     }
-    val input = MemoryStream[JoinInput]
-    val out = input.toDS().groupByKey(_.key)
+    val sink = replay(s, chunks(inserts, 2) :+ deletes)(_.groupByKey(_.key)
       .transformWithState(new SemiAntiProcessor(semi),
         org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update())
-    val sink = runToEnd(s, input, out.toDF(),
-      chunks(inserts, 2) :+ deletes, rocks = true)
+        org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
     foldChangelog(sink, "kind")
       .select($"key", $"id")
       .orderBy($"key", $"id")
@@ -1730,16 +1565,13 @@ object StreamQueries {
     // complete-mode sink's final table must equal the batch result.
     "q_stream_tumble" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = sortedEvents(s, dir)
-      val input = MemoryStream[Ev]
-      val agg = input.toDS()
+      replay(s, chunks(rows, 2), mode = "complete")(_
         .groupBy(window($"ts", "1 hour"), $"event_type")
         .agg(count(lit(1)).as("n"), dsum($"value").as("sum_value"))
         .select($"window.start".cast("timestamp_ntz").as("window_start"),
           $"window.end".cast("timestamp_ntz").as("window_end"),
-          $"event_type", $"n", $"sum_value")
-      runToEnd(s, input, agg, chunks(rows, 2), mode = "complete")
+          $"event_type", $"n", $"sum_value"))
         .orderBy($"window_start", $"event_type")
     }),
 
@@ -1754,7 +1586,6 @@ object StreamQueries {
     // never closes so append mode never emits it.
     "q_stream_late" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = sortedEvents(s, dir)
       val lateAgain = rows.take(50).map(e =>
         e.copy(event_id = e.event_id + 9000000L))
@@ -1762,16 +1593,14 @@ object StreamQueries {
       val sentinel = Ev(9999999L, 0L,
         new java.sql.Timestamp(maxTs / 1000L + 10L * 86400 * 1000),
         "sentinel", 0.0)
-      val input = MemoryStream[Ev]
-      val agg = input.toDS()
+      replay(s, chunks(rows, 3) ++ Seq(lateAgain, Seq(sentinel)),
+          mode = "append")(_
         .withWatermark("ts", "1 second")
         .groupBy(window($"ts", "1 hour"), $"event_type")
         .agg(count(lit(1)).as("n"), dsum($"value").as("sum_value"))
         .select($"window.start".cast("timestamp_ntz").as("window_start"),
           $"window.end".cast("timestamp_ntz").as("window_end"),
-          $"event_type", $"n", $"sum_value")
-      runToEnd(s, input, agg,
-        chunks(rows, 3) ++ Seq(lateAgain, Seq(sentinel)), mode = "append")
+          $"event_type", $"n", $"sum_value"))
         .orderBy($"window_start", $"event_type")
     }),
 
@@ -1780,16 +1609,13 @@ object StreamQueries {
     // emitted +I/-U/+U retract stream folds to one final row per user.
     "q_stream_dedup_last" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = sortedEvents(s, dir)
-      val input = MemoryStream[Ev]
-      val ranked = input.toDS().toDF()
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy($"user_id").orderBy($"ts".desc)))
-        .filter($"rn" === 1).drop("rn")
-      val changes = StreamingRank.rewrite(ranked)
-      val sink = runToEnd(s, input, changes, chunks(rows, 2), rocks = true)
+      val sink = replay(s, chunks(rows, 2))(in => StreamingRank.rewrite(
+        in.toDF()
+          .withColumn("rn", row_number().over(
+            org.apache.spark.sql.expressions.Window
+              .partitionBy($"user_id").orderBy($"ts".desc)))
+          .filter($"rn" === 1).drop("rn")))
       foldChangelog(sink, Changelog.RowKindCol)
         .select($"user_id", $"event_id".as("last_event_id"),
           $"value".as("last_value"))
@@ -1802,7 +1628,6 @@ object StreamQueries {
     // folds to the top-3 event_ids per type among surviving rows.
     "q_stream_topn" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       implicit val chEnc = Encoders.product[RetractableTopN.TopNChange]
       val evs = t(s, dir, "events")
         .filter($"event_id" % 3 === 0) // deterministic third per type
@@ -1812,13 +1637,10 @@ object StreamQueries {
         RetractableTopN.TopNChange(Changelog.Insert, tpe, id, id) }
       val deletes = evs.collect { case (id, tpe) if id % 7 == 0 =>
         RetractableTopN.TopNChange(Changelog.Delete, tpe, id, id) }
-      val input = MemoryStream[RetractableTopN.TopNChange]
-      val diffs = input.toDS().groupByKey(_.key)
+      val sink = replay(s, chunks(inserts, 2) :+ deletes)(_.groupByKey(_.key)
         .transformWithState(new RetractableTopN.RetractableTopNProcessor(3),
           org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-      val sink = runToEnd(s, input, diffs.toDF(), chunks(inserts, 2) :+ deletes,
-        rocks = true)
+          org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
       foldChangelog(sink, "kind")
         .select($"key".as("event_type"), $"id")
         .orderBy($"event_type", $"id")
@@ -1832,17 +1654,13 @@ object StreamQueries {
     // per type by (value DESC, event_id).
     "q_stream_rank" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = sortedEvents(s, dir)
-      val input = MemoryStream[Ev]
-      val named = input.toDS().toDF()
-        .select($"event_type", $"event_id", $"value")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy($"event_type").orderBy($"value".desc, $"event_id")
-      val changes = StreamingRank.rewrite(
-        named.withColumn("rn", row_number().over(w))
-          .filter($"rn" <= 3).drop("rn"))
-      val sink = runToEnd(s, input, changes, chunks(rows, 2), rocks = true)
+      val sink = replay(s, chunks(rows, 2))(in => StreamingRank.rewrite(
+        in.toDF().select($"event_type", $"event_id", $"value")
+          .withColumn("rn", row_number().over(w))
+          .filter($"rn" <= 3).drop("rn")))
       foldChangelog(sink, Changelog.RowKindCol)
         .orderBy($"event_type", $"event_id")
     }),
@@ -1856,7 +1674,6 @@ object StreamQueries {
     // the batch ASOF oracle (same SQL as q_join_asof).
     "q_stream_asof" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val ev = t(s, dir, "events").filter($"user_id" % 2 === 0)
       val probes = ev.filter($"event_type" === "purchase")
         .select($"event_id".as("p_id"), $"user_id",
@@ -1869,18 +1686,15 @@ object StreamQueries {
       val maxTs = probes.map(_._3.getTime).max
       def sentinel(off: Long) =
         Seq((-1L, -1L, new java.sql.Timestamp(maxTs + off)))
-      val input = MemoryStream[(Long, Long, java.sql.Timestamp)]
       // 1h watermark delay: probes replay in ascending (ts, id) order, so
       // the lagging watermark never drops one as late even when a chunk
       // boundary splits equal timestamps; ONE sentinel at max+2h pushes
       // the watermark to max+1h > every real probe at the end (each
       // sentinel batch costs two micro-batches — data + timer-fire)
-      val joined = TemporalJoin.asOfStreamStatic(
-        input.toDS().toDF("p_id", "user_id", "ts"),
-        dim, Seq("user_id"), "ts", Seq("v_id", "v_value"),
-        watermarkDelay = "1 hour")
-      val sink = runToEnd(s, input, joined,
-        chunks(probes, 2) :+ sentinel(7200000L), rocks = true)
+      val sink = replay(s, chunks(probes, 2) :+ sentinel(7200000L))(in =>
+        TemporalJoin.asOfStreamStatic(in.toDF("p_id", "user_id", "ts"),
+          dim, Seq("user_id"), "ts", Seq("v_id", "v_value"),
+          watermarkDelay = "1 hour"))
       sink.filter($"p_id" >= 0)
         .select($"p_id", $"r_v_id", $"r_v_value")
         .orderBy($"p_id")
@@ -1893,7 +1707,6 @@ object StreamQueries {
     // the open tails. Must equal the batch gaps-and-islands oracle.
     "q_stream_session" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       // a deterministic third of the users: the session protocol is
       // exercised identically per key, and replay wall-time (micro-batch
       // machinery, not plan cost) is what the subset buys down
@@ -1901,17 +1714,14 @@ object StreamQueries {
       val maxTs = rows.map(_.ts.getTime).max
       def sentinel(off: Long) = Seq(Ev(-1L, -1L,
         new java.sql.Timestamp(maxTs + off), "flush", 0.0))
-      val input = MemoryStream[Ev]
       // 1h watermark delay: the ascending replay never falls behind the
       // lagging watermark even when a chunk boundary splits equal
       // millisecond timestamps; ONE +3h sentinel closes every real
       // session at the end (wm reaches max+2h ≥ last+gap = max+1h, and
       // the timers fire in the sentinel batch's trailing no-data batch)
-      val annotated = SessionWindows.annotate(
-        input.toDS().toDF().withWatermark("ts", "1 hour"),
-        Seq("user_id"), "ts", "1 hour")
-      val sink = runToEnd(s, input, annotated,
-        chunks(rows, 2) :+ sentinel(3 * 3600000L), rocks = true)
+      val sink = replay(s, chunks(rows, 2) :+ sentinel(3 * 3600000L))(in =>
+        SessionWindows.annotate(in.toDF().withWatermark("ts", "1 hour"),
+          Seq("user_id"), "ts", "1 hour"))
       sink.filter($"user_id" >= 0)
         .select($"user_id", $"event_id",
           $"window_start".cast("timestamp_ntz").as("window_start"),
@@ -1926,16 +1736,13 @@ object StreamQueries {
     // result.
     "q_stream_hop" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = sortedEvents(s, dir)
-      val input = MemoryStream[Ev]
-      val agg = input.toDS()
+      replay(s, chunks(rows, 2), mode = "complete")(_
         .groupBy(window($"ts", "1 hour", "30 minutes"), $"event_type")
         .agg(count(lit(1)).as("n"), dsum($"value").as("sum_value"))
         .select($"window.start".cast("timestamp_ntz").as("window_start"),
           $"window.end".cast("timestamp_ntz").as("window_end"),
-          $"event_type", $"n", $"sum_value")
-      runToEnd(s, input, agg, chunks(rows, 2), mode = "complete")
+          $"event_type", $"n", $"sum_value"))
         .orderBy($"window_start", $"event_type")
     }),
 
@@ -1947,25 +1754,24 @@ object StreamQueries {
     // q_join_interval. Watermarks bound the join state on both sides.
     "q_stream_interval" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       // replay only the two types the join consumes — the other 60% of
       // the table would be dropped by the stream's first filter anyway,
       // and replaying them just benchmarks MemoryStream ingestion
       val rows = sortedEvents(s, dir)
         .filter(e => (e.event_type == "purchase" || e.event_type == "error")
           && e.user_id % 2 == 0)
-      val input = MemoryStream[Ev]
-      val ev = input.toDS().withWatermark("ts", "1 hour")
-      val purchases = ev.filter($"event_type" === "purchase")
-        .select($"event_id".as("p_id"), $"user_id".as("p_user"), $"ts".as("p_ts"))
-      val errors = ev.filter($"event_type" === "error")
-        .select($"event_id".as("e_id"), $"user_id".as("e_user"), $"ts".as("e_ts"))
-      val joined = purchases.join(errors,
-          $"p_user" === $"e_user" &&
-          $"e_ts" >= $"p_ts" - expr("INTERVAL 1 HOUR") &&
-          $"e_ts" <= $"p_ts")
-        .select($"p_id", $"e_id")
-      runToEnd(s, input, joined, chunks(rows, 2), mode = "append")
+      replay(s, chunks(rows, 2), mode = "append") { in =>
+        val ev = in.withWatermark("ts", "1 hour")
+        val purchases = ev.filter($"event_type" === "purchase")
+          .select($"event_id".as("p_id"), $"user_id".as("p_user"), $"ts".as("p_ts"))
+        val errors = ev.filter($"event_type" === "error")
+          .select($"event_id".as("e_id"), $"user_id".as("e_user"), $"ts".as("e_ts"))
+        purchases.join(errors,
+            $"p_user" === $"e_user" &&
+            $"e_ts" >= $"p_ts" - expr("INTERVAL 1 HOUR") &&
+            $"e_ts" <= $"p_ts")
+          .select($"p_id", $"e_id")
+      }
         .orderBy($"p_id", $"e_id")
     }),
 
@@ -1976,7 +1782,6 @@ object StreamQueries {
     // retraction arithmetic is what's under the oracle gate.
     "q_stream_groupagg" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       implicit val chEnc = Encoders.product[StatefulOps.Change[String, Long]]
       val evs = t(s, dir, "events")
         .filter($"event_id" % 3 === 0) // deterministic third per type
@@ -1986,13 +1791,10 @@ object StreamQueries {
         StatefulOps.Change(Changelog.Insert, tpe, id) }
       val deletes = evs.collect { case (id, tpe) if id % 5 == 0 =>
         StatefulOps.Change(Changelog.Delete, tpe, id) }
-      val input = MemoryStream[StatefulOps.Change[String, Long]]
-      val changes = input.toDS().groupByKey(_.key)
+      val sink = replay(s, chunks(inserts, 2) :+ deletes)(_.groupByKey(_.key)
         .transformWithState(new StatefulOps.RetractSumProcessor[String, Long](),
           org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-      val sink = runToEnd(s, input, changes.toDF(), chunks(inserts, 2) :+ deletes,
-        rocks = true)
+          org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
       foldChangelog(
         sink.select($"kind", $"value.key".as("event_type"),
           $"value.sum".as("sum_id"), $"value.count".as("n")), "kind")
@@ -2006,7 +1808,6 @@ object StreamQueries {
     // must equal batch MAX/COUNT over the surviving rows.
     "q_stream_minmax" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       implicit val chEnc = Encoders.product[StatefulOps.Change[String, Long]]
       val evs = t(s, dir, "events")
         .filter($"event_id" % 3 === 0) // deterministic third per type
@@ -2020,14 +1821,11 @@ object StreamQueries {
         _.sortBy(-_._1).take(10).map { case (id, tpe) =>
           StatefulOps.Change(Changelog.Delete, tpe, id) })
         .sortBy(c => (c.key, -c.value))
-      val input = MemoryStream[StatefulOps.Change[String, Long]]
-      val changes = input.toDS().groupByKey(_.key)
+      val sink = replay(s, chunks(inserts, 2) :+ deletes)(_.groupByKey(_.key)
         .transformWithState(
           new StatefulOps.RetractMinMaxProcessor[String, Long](isMax = true),
           org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-      val sink = runToEnd(s, input, changes.toDF(), chunks(inserts, 2) :+ deletes,
-        rocks = true)
+          org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
       foldChangelog(
         sink.select($"kind", $"value.key".as("event_type"),
           $"value.extreme".as("max_id"), $"value.count".as("n")), "kind")
@@ -2041,7 +1839,6 @@ object StreamQueries {
     // the emission count collapses from O(records) to O(keys·batches).
     "q_stream_minibatch" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       implicit val chEnc = Encoders.product[StatefulOps.Change[String, Long]]
       val evs = t(s, dir, "events")
         .filter($"event_id" % 3 === 0) // deterministic third per type
@@ -2051,14 +1848,11 @@ object StreamQueries {
         StatefulOps.Change(Changelog.Insert, tpe, id) }
       val deletes = evs.collect { case (id, tpe) if id % 5 == 0 =>
         StatefulOps.Change(Changelog.Delete, tpe, id) }
-      val input = MemoryStream[StatefulOps.Change[String, Long]]
-      val changes = input.toDS().groupByKey(_.key)
+      val sink = replay(s, chunks(inserts, 2) :+ deletes)(_.groupByKey(_.key)
         .transformWithState(
           new StatefulOps.RetractSumProcessor[String, Long](miniBatch = true),
           org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-      val sink = runToEnd(s, input, changes.toDF(), chunks(inserts, 2) :+ deletes,
-        rocks = true)
+          org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
       foldChangelog(
         sink.select($"kind", $"value.key".as("event_type"),
           $"value.sum".as("sum_id"), $"value.count".as("n")), "kind")
@@ -2073,7 +1867,6 @@ object StreamQueries {
     // FULL OUTER JOIN over surviving rows.
     "q_stream_outer" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val ev = t(s, dir, "events")
         .filter($"user_id" % 2 === 0) // deterministic half of the users
         .select($"event_id", $"user_id", $"event_type", $"value")
@@ -2084,14 +1877,12 @@ object StreamQueries {
       val inserts = (tagged("purchase", isLeft = true, Changelog.Insert, _ => true) ++
         tagged("view", isLeft = false, Changelog.Insert, _ => true)).sortBy(_._4)
       val deletes = tagged("view", isLeft = false, Changelog.Delete, _ % 3 == 0)
-      val input = MemoryStream[(Long, Byte, Boolean, Long, Double)]
-      val ds = input.toDS()
-      val left = ds.filter(_._3).map(r => (r._1, r._2, (r._4, r._5)))
-      val right = ds.filter(!_._3).map(r => (r._1, r._2, (r._4, r._5)))
-      val out = OuterJoin.outerJoin[Long, (Long, Double), (Long, Double)](
-        left, right, OuterJoin.FullOuter)
-      val sink = runToEnd(s, input, out.toDF(), chunks(inserts, 2) :+ deletes,
-        rocks = true)
+      val sink = replay(s, chunks(inserts, 2) :+ deletes) { ds =>
+        val left = ds.filter(_._3).map(r => (r._1, r._2, (r._4, r._5)))
+        val right = ds.filter(!_._3).map(r => (r._1, r._2, (r._4, r._5)))
+        OuterJoin.outerJoin[Long, (Long, Double), (Long, Double)](
+          left, right, OuterJoin.FullOuter).toDF()
+      }
       foldChangelog(
         sink.select($"kind", $"key".as("user_id"),
           $"left._1".as("p_id"), $"left._2".as("p_value"),
@@ -2108,24 +1899,21 @@ object StreamQueries {
     // batch ROWS UNBOUNDED PRECEDING window oracle.
     "q_stream_over" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = sortedEvents(s, dir)
         .filter(e => (e.event_type == "purchase" || e.event_type == "error")
           && e.user_id % 2 == 0)
       val maxTs = rows.map(_.ts.getTime).max
-      val input = MemoryStream[ProcessOps.TimedIn]
       val timed = rows.map(e =>
         ProcessOps.TimedIn(e.event_type, e.ts, e.event_id))
       val sentinel = Seq(ProcessOps.TimedIn("__flush",
         new java.sql.Timestamp(maxTs + 3 * 3600000L), 0L))
-      val out = input.toDS().withWatermark("eventTime", "1 hour")
-        .groupByKey(_.key)
-        .transformWithState(
-          new ProcessOps.UnboundedPrecedingOverProcessor(rangeMode = false),
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          org.apache.spark.sql.streaming.OutputMode.Append())
-      val sink = runToEnd(s, input, out.toDF(), chunks(timed, 2) :+ sentinel,
-        rocks = true)
+      val sink = replay(s, chunks(timed, 2) :+ sentinel)(
+        _.withWatermark("eventTime", "1 hour")
+          .groupByKey(_.key)
+          .transformWithState(
+            new ProcessOps.UnboundedPrecedingOverProcessor(rangeMode = false),
+            org.apache.spark.sql.streaming.TimeMode.EventTime(),
+            org.apache.spark.sql.streaming.OutputMode.Append()).toDF())
       sink.filter($"key" =!= "__flush")
         .select($"key".as("event_type"), $"v".as("event_id"),
           $"movingSum".as("moving_sum"), $"n")
@@ -2139,21 +1927,18 @@ object StreamQueries {
     // equal the batch MATCH_RECOGNIZE oracle.
     "q_stream_cep" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = sortedEvents(s, dir)
       val evs = rows.map(e =>
         CepQueries.E(e.user_id, micros(e.ts), e.event_type, e.event_id))
       val pat = Pattern.begin[CepQueries.E]("A")(_.event_type == "purchase")
         .next("B")(_.event_type == "error")
-      val input = MemoryStream[CepQueries.E]
-      val matches = CEP.streaming[CepQueries.E](input.toDS(),
+      replay(s, chunks(evs, 2))(CEP.streaming[CepQueries.E](_,
           e => e.user_id.toString, _.ts, pat,
           maxBufferPerKey = Some(1 << 20))
         .map { m =>
           val st = m.stages.toMap
           (st("A").head.user_id, st("A").head.event_id, st("B").head.event_id)
-        }.toDF("user_id", "purchase_id", "error_id")
-      runToEnd(s, input, matches, chunks(evs, 2), rocks = true)
+        }.toDF("user_id", "purchase_id", "error_id"))
         .orderBy($"user_id", $"purchase_id")
     }),
 
@@ -2169,25 +1954,22 @@ object StreamQueries {
     // even one. The oracle mirrors that COALESCE(latest-odd, latest-even).
     "q_stream_ptjoin" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = sortedEvents(s, dir)
       val views = rows.filter(_.event_type == "view")
       val purchases = rows.filter(_.event_type == "purchase")
-      val input = MemoryStream[Ev]
-      val all = input.toDS()
-      val probes = all.filter($"event_type" === "purchase")
-        .select($"event_id".as("p_id"), $"user_id")
-      val builds = all.filter($"event_type" === "view")
-        .select($"user_id", $"event_id".as("v_id"), $"value".as("v_value"))
-      val joined = ProcTimeJoin.procTimeJoin(probes, builds,
-        Seq("user_id"), Seq("v_id", "v_value"))
       val batches = Seq(
         views.filter(_.event_id % 2 == 0),
         purchases.filter(_.event_id % 2 == 0),
         views.filter(_.event_id % 2 != 0),
         purchases.filter(_.event_id % 2 != 0))
-      val sink = runToEnd(s, input, joined, batches, mode = "append",
-        rocks = true)
+      val sink = replay(s, batches, mode = "append") { all =>
+        val probes = all.filter($"event_type" === "purchase")
+          .select($"event_id".as("p_id"), $"user_id")
+        val builds = all.filter($"event_type" === "view")
+          .select($"user_id", $"event_id".as("v_id"), $"value".as("v_value"))
+        ProcTimeJoin.procTimeJoin(probes, builds,
+          Seq("user_id"), Seq("v_id", "v_value"))
+      }
       sink.select($"p_id", $"r_v_id", $"r_v_value").orderBy($"p_id")
     }),
 
@@ -2196,17 +1978,13 @@ object StreamQueries {
     // dethronings; the folded changelog is the per-type argmin.
     "q_stream_top1" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = sortedEvents(s, dir)
       val ranked = rows.map(e => StatefulOps.Ranked(e.event_type, e.event_id,
         math.round(e.value * 100)))
-      val input = MemoryStream[StatefulOps.Ranked]
-      val out = input.toDS().groupByKey(_.key)
+      val sink = replay(s, chunks(ranked, 2))(_.groupByKey(_.key)
         .transformWithState(new StatefulOps.FastTop1Processor,
           org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-      val sink = runToEnd(s, input, out.toDF(), chunks(ranked, 2),
-        rocks = true)
+          org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
       foldChangelog(sink, "kind")
         .select($"value.key".as("event_type"), $"value.id".as("event_id"),
           $"value.sort".as("cents"))
@@ -2218,17 +1996,13 @@ object StreamQueries {
     // per user in (ts, id) replay order and nothing after them.
     "q_stream_firstn" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = sortedEvents(s, dir)
       val ranked = rows.map(e => StatefulOps.Ranked(e.user_id.toString,
         e.event_id, micros(e.ts)))
-      val input = MemoryStream[StatefulOps.Ranked]
-      val out = input.toDS().groupByKey(_.key)
+      val sink = replay(s, chunks(ranked, 2))(_.groupByKey(_.key)
         .transformWithState(new StatefulOps.AppendOnlyFirstNProcessor(3),
           org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-      val sink = runToEnd(s, input, out.toDF(), chunks(ranked, 2),
-        rocks = true)
+          org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
       foldChangelog(sink, "kind")
         .select($"value.key".cast("long").as("user_id"),
           $"value.id".as("event_id"), $"value.sort".as("ts_us"))
@@ -2246,7 +2020,6 @@ object StreamQueries {
     // per side-output element.
     "q_stream_lateness" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = sortedEvents(s, dir)
       val mUs = micros(rows.last.ts)
       val hourUs = 3600L * 1000000L
@@ -2266,12 +2039,10 @@ object StreamQueries {
       }.map(in(_, 9000000L))
       val sentinel = Seq(AllowedLateness.LWIn("sentinel",
         new java.sql.Timestamp(mUs / 1000L + 10L * 86400 * 1000), 0L))
-      val input = MemoryStream[AllowedLateness.LWIn]
-      val out = AllowedLateness.tumbleCounts(
-        input.toDS().withWatermark("eventTime", "9 hours"), // lat+win+6h slack
-        windowMs = 3600000L, latenessMs = 7200000L, delayMs = 9 * 3600000L)
-      val sink = runToEnd(s, input, out,
-        chunks(ins, 3) ++ Seq(reA ++ reB, sentinel), rocks = true)
+      val sink = replay(s, chunks(ins, 3) ++ Seq(reA ++ reB, sentinel))(in =>
+        AllowedLateness.tumbleCounts(
+          in.withWatermark("eventTime", "9 hours"), // lat+win+6h slack
+          windowMs = 3600000L, latenessMs = 7200000L, delayMs = 9 * 3600000L))
       foldChangelog(sink, "kind")
         .filter($"etype" =!= "sentinel")
         .select($"late", $"etype".as("event_type"), $"ws".as("ws_ms"),
@@ -2289,20 +2060,17 @@ object StreamQueries {
     // (value multiplicity), which the oracle states declaratively.
     "q_stream_distinct" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = sortedEvents(s, dir).filter(_.user_id % 2 == 0)
       val ins = rows.map(e => StatefulOps.SplitIn(e.event_type,
         (e.user_id % 16).toInt, e.user_id, Changelog.Insert))
       val dels = rows.filter(_.event_id % 4 == 0).map(e =>
         StatefulOps.SplitIn(e.event_type, (e.user_id % 16).toInt,
           e.user_id, Changelog.Delete))
-      val input = MemoryStream[StatefulOps.SplitIn]
-      val out = input.toDS().groupByKey(r => s"${r.group}|${r.bucket}")
-        .transformWithState(new StatefulOps.SplitDistinctProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-      val sink = runToEnd(s, input, out.toDF(), chunks(ins, 2) :+ dels,
-        rocks = true)
+      val sink = replay(s, chunks(ins, 2) :+ dels)(
+        _.groupByKey(r => s"${r.group}|${r.bucket}")
+          .transformWithState(new StatefulOps.SplitDistinctProcessor,
+            org.apache.spark.sql.streaming.TimeMode.None(),
+            org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
       // the final-stage fold: signed sum of shard-count changes per group
       sink.groupBy($"key".as("event_type"))
         .agg(sum(when(col("kind") === Changelog.Insert ||
@@ -2326,12 +2094,12 @@ object StreamQueries {
         UpsCh(e.user_id, e.event_id, e.value, i.toLong, Changelog.Insert) }
       val dels = rows.map(_.user_id).distinct.filter(_ % 5 == 0).sorted.map(u =>
         UpsCh(u, -1L, 0.0, Long.MaxValue, Changelog.Delete))
-      val table = tmpDir("q_sink_upsert") + "/t"
+      val table = Q.scratchDir("q_sink_upsert") + "/t"
       val input = MemoryStream[UpsCh]
       val q = graft.sources.UpsertSink.start(
         input.toDS().toDF().withColumnRenamed("kind", Changelog.RowKindCol),
         Seq("user_id"), "seq", table, buckets = 8,
-        checkpoint = tmpDir("q_sink_upsert_ckpt"))
+        checkpoint = Q.scratchDir("q_sink_upsert_ckpt"))
       try (chunks(ups, 2) :+ dels).foreach { b =>
         input.addData(b); q.processAllAvailable()
       } finally q.stop()
@@ -2350,22 +2118,20 @@ object StreamQueries {
     // batch window join (same oracle as q_window_join modulo replay).
     "q_stream_winjoin" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = sortedEvents(s, dir)
         .filter(e => e.event_type == "click" || e.event_type == "purchase")
-      val input = MemoryStream[Ev]
-      val ev = input.toDS().withWatermark("ts", "1 hour")
-      val clicks = ev.filter($"event_type" === "click")
-        .select(window($"ts", "1 hour").getField("start").as("cw"),
-          $"user_id".as("c_user"), $"event_id".as("click_id"))
-      val purchases = ev.filter($"event_type" === "purchase")
-        .select(window($"ts", "1 hour").getField("start").as("pw"),
-          $"user_id".as("p_user"), $"event_id".as("purchase_id"))
-      val joined = clicks.join(purchases,
-          $"cw" === $"pw" && $"c_user" === $"p_user")
-        .select($"cw".cast("timestamp_ntz").as("window_start"),
-          $"c_user".as("user_id"), $"click_id", $"purchase_id")
-      runToEnd(s, input, joined, chunks(rows, 2), mode = "append")
+      replay(s, chunks(rows, 2), mode = "append") { in =>
+        val ev = in.withWatermark("ts", "1 hour")
+        val clicks = ev.filter($"event_type" === "click")
+          .select(window($"ts", "1 hour").getField("start").as("cw"),
+            $"user_id".as("c_user"), $"event_id".as("click_id"))
+        val purchases = ev.filter($"event_type" === "purchase")
+          .select(window($"ts", "1 hour").getField("start").as("pw"),
+            $"user_id".as("p_user"), $"event_id".as("purchase_id"))
+        clicks.join(purchases, $"cw" === $"pw" && $"c_user" === $"p_user")
+          .select($"cw".cast("timestamp_ntz").as("window_start"),
+            $"c_user".as("user_id"), $"click_id", $"purchase_id")
+      }
         .orderBy($"window_start", $"user_id", $"click_id", $"purchase_id")
     }),
 
@@ -2379,18 +2145,11 @@ object StreamQueries {
     // batch aggregates. One shuffle, state evicted per fired window.
     "q_stream_cogroup" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = sortedEvents(s, dir)
         .filter(e => e.event_type == "click" || e.event_type == "purchase")
       val sentinel = Ev(-1L, -1L,
         new java.sql.Timestamp(rows.last.ts.getTime + 10L * 86400000L),
         "click", 0.0)
-      val input = MemoryStream[Ev]
-      val ev = input.toDS()
-      val clicks = ev.filter($"event_type" === "click")
-        .select($"user_id", $"ts", $"value")
-      val purchases = ev.filter($"event_type" === "purchase")
-        .select($"user_id", $"ts", $"value")
       val outSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("window_start",
           org.apache.spark.sql.types.TimestampType),
@@ -2402,27 +2161,31 @@ object StreamQueries {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("sum_cents",
           org.apache.spark.sql.types.LongType)))
-      val out = graft.streaming.CoGroup.tumbling(
-        clicks.toDF(), purchases.toDF(), Seq("user_id"), "ts",
-        3600000L, "1 second",
-        (key, winStart, ls, rs) => {
-          // exact cents via the double's shortest decimal rendering —
-          // no double addition. The testdata invariant is exact-2dp
-          // values (the whole dec2() oracle convention rests on it);
-          // the HALF_UP is a never-crash guard for >2dp data. The
-          // typed payload hands `value` over as a real Double now —
-          // no string cast contract
-          def cents(r: org.apache.spark.sql.Row): Long =
-            (BigDecimal(java.lang.Double.toString(r.getAs[Double]("value")))
-              .setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100).toLongExact
-          Iterator.single(new org.apache.spark.sql.catalyst.expressions.GenericRow(
-            Array[Any](new java.sql.Timestamp(winStart), key.toLong,
-              ls.length.toLong, rs.length.toLong,
-              ls.map(cents).sum + rs.map(cents).sum)))
-        },
-        outSchema)
-      runToEnd(s, input, out.toDF(), chunks(rows, 2) :+ Seq(sentinel),
-        mode = "append", rocks = true)
+      replay(s, chunks(rows, 2) :+ Seq(sentinel), mode = "append") { ev =>
+        val clicks = ev.filter($"event_type" === "click")
+          .select($"user_id", $"ts", $"value")
+        val purchases = ev.filter($"event_type" === "purchase")
+          .select($"user_id", $"ts", $"value")
+        graft.streaming.CoGroup.tumbling(
+          clicks.toDF(), purchases.toDF(), Seq("user_id"), "ts",
+          3600000L, "1 second",
+          (key, winStart, ls, rs) => {
+            // exact cents via the double's shortest decimal rendering —
+            // no double addition. The testdata invariant is exact-2dp
+            // values (the whole dec2() oracle convention rests on it);
+            // the HALF_UP is a never-crash guard for >2dp data. The
+            // typed payload hands `value` over as a real Double now —
+            // no string cast contract
+            def cents(r: org.apache.spark.sql.Row): Long =
+              (BigDecimal(java.lang.Double.toString(r.getAs[Double]("value")))
+                .setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100).toLongExact
+            Iterator.single(new org.apache.spark.sql.catalyst.expressions.GenericRow(
+              Array[Any](new java.sql.Timestamp(winStart), key.toLong,
+                ls.length.toLong, rs.length.toLong,
+                ls.map(cents).sum + rs.map(cents).sum)))
+          },
+          outSchema)
+      }
         .filter($"user_id" =!= -1L)
         .select($"window_start".cast("timestamp_ntz").as("window_start"),
           $"user_id", $"n_clicks", $"n_purchases", $"sum_cents")
@@ -2436,19 +2199,12 @@ object StreamQueries {
     // buckets. Users subsampled to keep the row count bounded.
     "q_stream_coslide" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = sortedEvents(s, dir)
         .filter(e => (e.event_type == "click" || e.event_type == "purchase")
           && e.user_id % 5 == 0)
       val sentinel = Ev(-1L, -1L,
         new java.sql.Timestamp(rows.last.ts.getTime + 10L * 86400000L),
         "click", 0.0)
-      val input = MemoryStream[Ev]
-      val ev = input.toDS()
-      val clicks = ev.filter($"event_type" === "click")
-        .select($"user_id", $"ts", $"value")
-      val purchases = ev.filter($"event_type" === "purchase")
-        .select($"user_id", $"ts", $"value")
       val outSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("window_start",
           org.apache.spark.sql.types.TimestampType),
@@ -2460,21 +2216,25 @@ object StreamQueries {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("sum_cents",
           org.apache.spark.sql.types.LongType)))
-      val out = graft.streaming.CoGroup.sliding(
-        clicks.toDF(), purchases.toDF(), Seq("user_id"), "ts",
-        7200000L, 3600000L, "1 second",
-        (key, winStart, ls, rs) => {
-          def cents(r: org.apache.spark.sql.Row): Long =
-            (BigDecimal(java.lang.Double.toString(r.getAs[Double]("value")))
-              .setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100).toLongExact
-          Iterator.single(new org.apache.spark.sql.catalyst.expressions.GenericRow(
-            Array[Any](new java.sql.Timestamp(winStart), key.toLong,
-              ls.length.toLong, rs.length.toLong,
-              ls.map(cents).sum + rs.map(cents).sum)))
-        },
-        outSchema)
-      runToEnd(s, input, out.toDF(), chunks(rows, 2) :+ Seq(sentinel),
-        mode = "append", rocks = true)
+      replay(s, chunks(rows, 2) :+ Seq(sentinel), mode = "append") { ev =>
+        val clicks = ev.filter($"event_type" === "click")
+          .select($"user_id", $"ts", $"value")
+        val purchases = ev.filter($"event_type" === "purchase")
+          .select($"user_id", $"ts", $"value")
+        graft.streaming.CoGroup.sliding(
+          clicks.toDF(), purchases.toDF(), Seq("user_id"), "ts",
+          7200000L, 3600000L, "1 second",
+          (key, winStart, ls, rs) => {
+            def cents(r: org.apache.spark.sql.Row): Long =
+              (BigDecimal(java.lang.Double.toString(r.getAs[Double]("value")))
+                .setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100).toLongExact
+            Iterator.single(new org.apache.spark.sql.catalyst.expressions.GenericRow(
+              Array[Any](new java.sql.Timestamp(winStart), key.toLong,
+                ls.length.toLong, rs.length.toLong,
+                ls.map(cents).sum + rs.map(cents).sum)))
+          },
+          outSchema)
+      }
         .filter($"user_id" =!= -1L)
         .select($"window_start".cast("timestamp_ntz").as("window_start"),
           $"user_id", $"n_clicks", $"n_purchases", $"sum_cents")
@@ -2495,30 +2255,19 @@ object StreamQueries {
     // per-side counts + exact cents, in one grouped pass.
     "q_stream_cosession" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = sortedEvents(s, dir)
         .filter(e => (e.event_type == "click" || e.event_type == "purchase")
           && e.user_id % 3 == 0)
       val maxTs = rows.map(_.ts.getTime).max
-      val input = MemoryStream[Ev]
-      val annotated = SessionWindows.annotate(
-        input.toDS().toDF().withWatermark("ts", "1 hour"),
-        Seq("user_id"), "ts", "1 hour")
-      val sess = runToEnd(s, input, annotated,
-        chunks(rows, 2) :+ Seq(Ev(-1L, -1L,
-          new java.sql.Timestamp(maxTs + 3 * 3600000L), "flush", 0.0)),
-        rocks = true)
+      val sess = replay(s, chunks(rows, 2) :+ Seq(Ev(-1L, -1L,
+          new java.sql.Timestamp(maxTs + 3 * 3600000L), "flush", 0.0)))(in =>
+        SessionWindows.annotate(in.toDF().withWatermark("ts", "1 hour"),
+          Seq("user_id"), "ts", "1 hour"))
       val annRows = sess.filter($"user_id" >= 0)
         .select($"user_id", $"event_type", $"value", $"window_start",
           $"window_time")
         .as[SessEv].collect().toSeq
         .sortBy(e => (e.window_time.getTime, e.user_id))
-      val input2 = MemoryStream[SessEv]
-      val ev2 = input2.toDS()
-      val clicks = ev2.filter($"event_type" === "click")
-        .select($"user_id", $"window_start", $"window_time", $"value")
-      val purchases = ev2.filter($"event_type" === "purchase")
-        .select($"user_id", $"window_start", $"window_time", $"value")
       val outSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("window_start",
           org.apache.spark.sql.types.TimestampType),
@@ -2530,29 +2279,34 @@ object StreamQueries {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("sum_cents",
           org.apache.spark.sql.types.LongType)))
-      val out = graft.streaming.CoGroup.tumbling(
-        clicks.toDF(), purchases.toDF(), Seq("user_id", "window_start"),
-        "window_time", 3600000L, "1 second",
-        (_, _, ls, rs) => {
-          val any = (ls ++ rs).head
-          def cents(r: org.apache.spark.sql.Row): Long =
-            (BigDecimal(java.lang.Double.toString(r.getAs[Double]("value")))
-              .setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100).toLongExact
-          Iterator.single(new org.apache.spark.sql.catalyst.expressions.GenericRow(
-            Array[Any](any.getAs[java.sql.Timestamp]("window_start"),
-              any.getAs[Long]("user_id"),
-              ls.length.toLong, rs.length.toLong,
-              ls.map(cents).sum + rs.map(cents).sum)))
-        },
-        outSchema)
       // the flush sentinel must SURVIVE the side filters (a type neither
       // side keeps would never reach the union or advance the watermark,
       // and the tail sessions' windows would never fire) — it rides the
       // click side and is dropped by the user_id >= 0 filter at the end
       val far = new java.sql.Timestamp(maxTs + 10L * 86400000L)
-      runToEnd(s, input2, out.toDF(),
-        chunks(annRows, 2) :+ Seq(SessEv(-1L, "click", 0.0, far, far)),
-        mode = "append", rocks = true)
+      replay(s,
+          chunks(annRows, 2) :+ Seq(SessEv(-1L, "click", 0.0, far, far)),
+          mode = "append") { ev2 =>
+        val clicks = ev2.filter($"event_type" === "click")
+          .select($"user_id", $"window_start", $"window_time", $"value")
+        val purchases = ev2.filter($"event_type" === "purchase")
+          .select($"user_id", $"window_start", $"window_time", $"value")
+        graft.streaming.CoGroup.tumbling(
+          clicks.toDF(), purchases.toDF(), Seq("user_id", "window_start"),
+          "window_time", 3600000L, "1 second",
+          (_, _, ls, rs) => {
+            val any = (ls ++ rs).head
+            def cents(r: org.apache.spark.sql.Row): Long =
+              (BigDecimal(java.lang.Double.toString(r.getAs[Double]("value")))
+                .setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100).toLongExact
+            Iterator.single(new org.apache.spark.sql.catalyst.expressions.GenericRow(
+              Array[Any](any.getAs[java.sql.Timestamp]("window_start"),
+                any.getAs[Long]("user_id"),
+                ls.length.toLong, rs.length.toLong,
+                ls.map(cents).sum + rs.map(cents).sum)))
+          },
+          outSchema)
+      }
         .filter($"user_id" >= 0)
         .select($"window_start".cast("timestamp_ntz").as("window_start"),
           $"user_id", $"n_clicks", $"n_purchases", $"sum_cents")
@@ -2568,22 +2322,19 @@ object StreamQueries {
     // exactly what makes wall-clock TTL semantics oracle-expressible.
     "q_stream_dedup_ttl" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       implicit val ttlEnc = Encoders.product[StatefulOps.TtlIn]
       val rows = sortedEvents(s, dir).filter(_.user_id % 2 == 0).map(e =>
         StatefulOps.TtlIn(e.user_id.toString, e.ts, e.event_id))
       val sentinel = StatefulOps.TtlIn("-1",
         new java.sql.Timestamp(rows.last.ts.getTime + 10L * 86400000L), -1L)
-      val input = MemoryStream[StatefulOps.TtlIn]
-      val out = input.toDS().withWatermark("ts", "1 second")
-        .as[StatefulOps.TtlIn]
-        .groupByKey(_.key)
-        .transformWithState(
-          new StatefulOps.KeepFirstTtlProcessor(6L * 3600000L),
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          org.apache.spark.sql.streaming.OutputMode.Append())
-      runToEnd(s, input, out.toDF(), chunks(rows, 2) :+ Seq(sentinel),
-        mode = "append", rocks = true)
+      replay(s, chunks(rows, 2) :+ Seq(sentinel), mode = "append")(
+        _.withWatermark("ts", "1 second")
+          .as[StatefulOps.TtlIn]
+          .groupByKey(_.key)
+          .transformWithState(
+            new StatefulOps.KeepFirstTtlProcessor(6L * 3600000L),
+            org.apache.spark.sql.streaming.TimeMode.EventTime(),
+            org.apache.spark.sql.streaming.OutputMode.Append()).toDF())
         .filter($"key" =!= "-1")
         .select($"key".cast("long").as("user_id"), $"id".as("event_id"))
         .orderBy($"user_id", $"event_id")
@@ -2602,7 +2353,6 @@ object StreamQueries {
     // bootstrap state each diverge the hash.
     "q_state_bootstrap" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       import graft.streaming.StateBootstrap
       val rows = sortedEvents(s, dir)
       val us = rows.map(e => micros(e.ts))
@@ -2611,43 +2361,16 @@ object StreamQueries {
         StateBootstrap.BIn(e.user_id.toString, math.round(e.value * 100))
       val hist = rows.filter(e => micros(e.ts) < cutoff).map(toIn)
       val rest = rows.filter(e => micros(e.ts) >= cutoff).map(toIn)
-      // phase 1: transformWithState needs RocksDB; changelog
-      // checkpointing stays OFF so the offline statestore read sees
-      // plain snapshots; checkpoint retained until JVM exit
-      val ckpt1 = tmpDir("q_state_boot") + "/ckpt1"
-      val in1 = MemoryStream[StateBootstrap.BIn]
-      val out1 = StateBootstrap.agg(in1.toDS(),
-        s.emptyDataset(Encoders.product[StateBootstrap.BInit]))
-      // same set→start→restore window as runToEnd
-      val q1 = {
-        val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-        val prevProvider =
-          s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.shuffle.partitions", "2")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try out1.writeStream.format("memory")
-          .queryName(s"qsb_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-          .outputMode("update")
-          .option("checkpointLocation", ckpt1).start()
-        finally {
-          s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-          prevProvider match {
-            case Some(p) =>
-              s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-            case None =>
-              s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-          }
-        }
-      }
-      try chunks(hist, 2).foreach { b => in1.addData(b); q1.processAllAvailable() }
-      finally q1.stop()
+      // phase 1 on a retained checkpoint (kept until JVM exit) for the
+      // offline statestore read
+      val ckpt1 = Q.scratchDir("q_state_boot") + "/ckpt1"
+      replay(s, chunks(hist, 2), keepCheckpoint = Some(ckpt1))(
+        StateBootstrap.agg(_,
+          s.emptyDataset(Encoders.product[StateBootstrap.BInit])))
       // the read→(identity-)rewrite→bootstrap leg; the spec drives a
       // non-identity rewrite through the same path
       val boot = StateBootstrap.readAccState(s, ckpt1)
-      val in2 = MemoryStream[StateBootstrap.BIn]
-      val out2 = StateBootstrap.agg(in2.toDS(), boot)
-      val sink = runToEnd(s, in2, out2, chunks(rest, 2), rocks = true)
+      val sink = replay(s, chunks(rest, 2))(StateBootstrap.agg(_, boot))
       // n is strictly monotone per key: the final state is the argmax row
       sink.groupBy($"key".cast("long").as("user_id"))
         .agg(max(struct($"n", $"cents")).as("m"))
@@ -2671,7 +2394,6 @@ object StreamQueries {
     // the hash to match.
     "q_stream_idle" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = sortedEvents(s, dir)
       val us = rows.map(e => micros(e.ts))
       val cutoff = us.min + (us.max - us.min) / 3
@@ -2681,13 +2403,11 @@ object StreamQueries {
       val rounds = chunks(tagged, 6) ++ Seq(
         Seq((0, ("sentinel", rows.last.ts.getTime + 10L * 86400000L))),
         Seq.empty)
-      val input = MemoryStream[graft.streaming.WatermarkMux.MuxIn]
-      val out = graft.streaming.WatermarkMux.idleTumbleCounts(
-        input.toDS(), windowMs = 3600000L)
-      runToEnd(s, input, out,
-        graft.streaming.WatermarkMux.stamp(rounds, delayMs = 0L,
-          idleTimeoutRounds = 2),
-        mode = "append", rocks = true)
+      replay(s,
+          graft.streaming.WatermarkMux.stamp(rounds, delayMs = 0L,
+            idleTimeoutRounds = 2),
+          mode = "append")(graft.streaming.WatermarkMux.idleTumbleCounts(_,
+        windowMs = 3600000L))
         .filter($"etype" =!= "sentinel")
         .select(timestamp_millis($"ws").cast("timestamp_ntz")
           .as("window_start"), $"etype".as("event_type"), $"n")
@@ -2705,7 +2425,6 @@ object StreamQueries {
     // from the plain batch tumble oracle over all events.
     "q_stream_aligned" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = sortedEvents(s, dir)
       val fast = rows.filter(_.user_id % 4 == 0)
         .map(e => (e.event_type, e.ts.getTime)).toVector
@@ -2719,13 +2438,11 @@ object StreamQueries {
       val allRounds = rounds ++ Seq(
         Seq((0, ("sentinel", sentinelTs)), (1, ("sentinel", sentinelTs))),
         Seq.empty[(Int, (String, Long))])
-      val input = MemoryStream[graft.streaming.WatermarkMux.MuxIn]
-      val out = graft.streaming.WatermarkMux.idleTumbleCounts(
-        input.toDS(), windowMs = 3600000L)
-      runToEnd(s, input, out,
-        graft.streaming.WatermarkMux.stamp(allRounds, delayMs = 0L,
-          idleTimeoutRounds = 1000000),
-        mode = "append", rocks = true)
+      replay(s,
+          graft.streaming.WatermarkMux.stamp(allRounds, delayMs = 0L,
+            idleTimeoutRounds = 1000000),
+          mode = "append")(graft.streaming.WatermarkMux.idleTumbleCounts(_,
+        windowMs = 3600000L))
         .filter($"etype" =!= "sentinel")
         .select(timestamp_millis($"ws").cast("timestamp_ntz")
           .as("window_start"), $"etype".as("event_type"), $"n")

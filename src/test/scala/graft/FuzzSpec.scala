@@ -90,21 +90,16 @@ class FuzzSpec extends SparkSuite {
   test("seeded queries execute identically with AQE on and off") {
     Tables.registerAll(spark, dir)
     val aqe = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(aqe)
-    try {
-      for (seed <- seeds) {
-        val sql = FuzzGen.sql(seed)
-        def run(): Seq[String] =
-          try spark.sql(sql).collect().map(_.toString).sorted.toSeq
-          catch { case e: Throwable =>
-            fail(s"seed $seed failed to execute: ${e.getMessage}\n$sql")
-          }
-        spark.conf.set(aqe, "true")
-        val a = run()
-        spark.conf.set(aqe, "false")
-        val b = run()
-        assert(a == b, s"seed $seed diverged between AQE configs:\n$sql")
-      }
-    } finally spark.conf.set(aqe, prev)
+    for (seed <- seeds) {
+      val sql = FuzzGen.sql(seed)
+      def run(): Seq[String] =
+        try spark.sql(sql).collect().map(_.toString).sorted.toSeq
+        catch { case e: Throwable =>
+          fail(s"seed $seed failed to execute: ${e.getMessage}\n$sql")
+        }
+      val a = graft.queries.Q.withConf(spark, aqe -> "true")(run())
+      val b = graft.queries.Q.withConf(spark, aqe -> "false")(run())
+      assert(a == b, s"seed $seed diverged between AQE configs:\n$sql")
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 
-import graft.queries.{JoinQueries, AggQueries}
+import graft.queries.{AggQueries, JoinQueries, Q}
 
 /** Plan-quality assertions — the 100 TB readiness checks from the build
   * brief: filters and projections must reach the parquet scan, small dims
@@ -69,7 +69,7 @@ class PlanQualitySpec extends SparkSuite {
       .saveAsTable("lineitem_b")
     try {
       // disable broadcast so the co-located SMJ path is what's planned
-      withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      Q.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val joined = spark.table("orders_b")
           .join(spark.table("lineitem_b"), $"o_orderkey" === $"l_orderkey")
           .groupBy($"o_orderstatus").agg(count(lit(1)).as("n"))
@@ -104,7 +104,7 @@ class PlanQualitySpec extends SparkSuite {
       val dimDir = java.nio.file.Files.createTempDirectory("dpp_dim").toString
       Seq(("F", 1L), ("O", 2L), ("P", 3L)).toDF("status", "flag")
         .write.mode("overwrite").parquet(dimDir)
-      withSQLConf(
+      Q.withConf(spark,
         "spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "true",
         "spark.sql.optimizer.dynamicPartitionPruning.useStats" -> "false",
         "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio" -> "10.0") {
@@ -133,7 +133,7 @@ class PlanQualitySpec extends SparkSuite {
     val rest = (2L until 1000L).map(k => (k, k))
     val fact = (hot ++ rest).toDF("k", "payload")
     val dim = (1L until 1000L).map(k => (k, k * 10)).toDF("k", "v")
-    withSQLConf(
+    Q.withConf(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
@@ -155,7 +155,7 @@ class PlanQualitySpec extends SparkSuite {
     // bloom_filter probe (InjectRuntimeFilter). Thresholds are lowered so
     // spec-sized parquet qualifies; production keeps defaults where the
     // fact side is the one that crosses the 10 GB application threshold.
-    withSQLConf(
+    Q.withConf(spark,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.optimizer.runtimeFilter.number.threshold" -> "10",
@@ -190,7 +190,7 @@ class PlanQualitySpec extends SparkSuite {
     Seq("cbo_fact", "cbo_dim_big", "cbo_dim_tiny").foreach(t =>
       spark.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR ALL COLUMNS"))
     try {
-      def joinOrder(cbo: Boolean): (Int, Int) = withSQLConf(
+      def joinOrder(cbo: Boolean): (Int, Int) = Q.withConf(spark,
         "spark.sql.cbo.enabled" -> cbo.toString,
         "spark.sql.cbo.joinReorder.enabled" -> cbo.toString) {
         val p = spark.sql(
@@ -212,15 +212,6 @@ class PlanQualitySpec extends SparkSuite {
       assert(big0 < tiny0, "baseline already had the tiny dim innermost")
     } finally Seq("cbo_fact", "cbo_dim_big", "cbo_dim_tiny").foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS $t"))
-  }
-
-  private def withSQLConf[T](kv: (String, String)*)(f: => T): T = {
-    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 
   test("IVF ANN plan: corpus assignment is a projection over a broadcast model") {

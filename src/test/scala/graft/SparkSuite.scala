@@ -13,29 +13,6 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  /** Run a streaming frame to completion over pre-chunked MemoryStream
-    * input and return the memory sink's rows — the spec-side twin of
-    * StreamQueries.runToEnd (unique sink name, temp checkpoint, one
-    * micro-batch per chunk, stop + checkpoint cleanup in finally).
-    * Shared so each differential test doesn't hand-roll the harness.
-    */
-  def runStreamToTable[T](
-      input: org.apache.spark.sql.execution.streaming.runtime.MemoryStream[T],
-      out: org.apache.spark.sql.DataFrame, batches: Seq[Seq[T]],
-      mode: String = "update"): Seq[org.apache.spark.sql.Row] = {
-    val name = s"suite_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = java.nio.file.Files.createTempDirectory("suite_ckpt")
-    val q = out.writeStream.format("memory").queryName(name)
-      .outputMode(mode).option("checkpointLocation", ckpt.toString).start()
-    try {
-      batches.foreach { b => input.addData(b); q.processAllAvailable() }
-      spark.table(name).collect().toSeq
-    } finally {
-      q.stop()
-      graft.queries.Q.deleteRecursively(ckpt)
-    }
-  }
-
   override def afterAll(): Unit = {
     // session is shared across suites; do not stop it here
     super.afterAll()

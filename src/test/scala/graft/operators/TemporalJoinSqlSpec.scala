@@ -204,8 +204,8 @@ class TemporalJoinSqlSpec extends SparkSuite {
       .createOrReplaceTempView("wm_probes")
     Seq(("u1", ts(90), 1.0))
       .toDF("uid", "vts", "rate").createOrReplaceTempView("wm_rates")
-    spark.conf.set("spark.graft.temporalJoin.watermarkDelay", "1 hour")
-    try {
+    graft.queries.Q.withConf(spark,
+        "spark.graft.temporalJoin.watermarkDelay" -> "1 hour") {
       val out = TemporalJoinSql.sql(spark,
         """SELECT p.p_id, r.rate FROM wm_probes AS p
           |JOIN wm_rates FOR SYSTEM_TIME AS OF p.ts AS r
@@ -230,7 +230,7 @@ class TemporalJoinSqlSpec extends SparkSuite {
         assert(rows.contains(2L), s"out-of-order probe dropped: $rows")
         assert(rows(1L) == 1.0 && rows(2L) == 1.0, s"got $rows")
       } finally q.stop()
-    } finally spark.conf.unset("spark.graft.temporalJoin.watermarkDelay")
+    }
   }
 
   test("span inside a derived-table subquery is rejected loudly") {

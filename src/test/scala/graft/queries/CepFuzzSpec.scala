@@ -206,8 +206,6 @@ class CepFuzzSpec extends SparkSuite {
 
   test("incremental streaming CEP equals the batch NFA per windowed-quantifier seed") {
     import graft.cep.{AfterMatchSkip, CEP}
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val evs = CepQueries.cepEvents(spark, dir).collect().toSeq
       .sortBy(e => (e.ts, e.event_id))
@@ -216,18 +214,17 @@ class CepFuzzSpec extends SparkSuite {
     // complete) — the strict-seed streaming dual-run can't reach that
     for (seed <- 1L to 4L) {
       val c = CepFuzzGen.genWinQuant(seed)
-      val input = MemoryStream[CepFuzzGen.CE]
-      val matches = CEP.streaming[CepFuzzGen.CE](input.toDS(),
-          _.user_id.toString, _.ts, CepQueries.winQuantPattern(c),
-          maxBufferPerKey = Some(1 << 20),
-          skip = AfterMatchSkip.SkipToNext)
-        .map { m =>
-          val es = m.stages.flatMap(_._2)
-          (es.head.user_id, es.head.event_id, es.last.event_id)
-        }.toDF("user_id", "a_id", "z_id")
-      val streamed = runStreamToTable(input, matches,
-          evs.grouped(math.max(1, evs.length / 3 + 1)).toSeq)
-        .map(_.toString).sorted
+      val streamed = StreamQueries.replay(spark,
+          evs.grouped(math.max(1, evs.length / 3 + 1)).toSeq)(
+        CEP.streaming[CepFuzzGen.CE](_,
+            _.user_id.toString, _.ts, CepQueries.winQuantPattern(c),
+            maxBufferPerKey = Some(1 << 20),
+            skip = AfterMatchSkip.SkipToNext)
+          .map { m =>
+            val es = m.stages.flatMap(_._2)
+            (es.head.user_id, es.head.event_id, es.last.event_id)
+          }.toDF("user_id", "a_id", "z_id"))
+        .collect().toSeq.map(_.toString).sorted
       val batch = CepQueries.cepWinQuantFuzzReplay(spark, dir, c)
         .collect().map(_.toString).sorted.toSeq
       assert(streamed == batch,
@@ -400,8 +397,6 @@ class CepFuzzSpec extends SparkSuite {
 
   test("incremental streaming CEP equals the batch NFA per multiplicity seed") {
     import graft.cep.{AfterMatchSkip, CEP}
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val evs = CepQueries.cepEvents(spark, dir).collect().toSeq
       .sortBy(e => (e.ts, e.event_id))
@@ -411,20 +406,19 @@ class CepFuzzSpec extends SparkSuite {
     // suppresses a genuinely new branch
     for (seed <- 1L to 4L) {
       val c = CepFuzzGen.genAny(seed)
-      val input = MemoryStream[CepFuzzGen.CE]
-      val matches = CEP.streaming[CepFuzzGen.CE](input.toDS(),
-          _.user_id.toString, _.ts, CepQueries.anyPattern(c),
-          maxBufferPerKey = Some(1 << 20),
-          skip = AfterMatchSkip.NoSkip)
-        .map { m =>
-          val es = m.stages.flatMap(_._2)
-          (es.head.user_id,
-            m.stages.map { case (n, ss) =>
-              s"$n:${ss.map(_.event_id).mkString(",")}" }.mkString(";"))
-        }.toDF("user_id", "sig")
-      val streamed = runStreamToTable(input, matches,
-          evs.grouped(math.max(1, evs.length / 3 + 1)).toSeq)
-        .map(_.toString).sorted
+      val streamed = StreamQueries.replay(spark,
+          evs.grouped(math.max(1, evs.length / 3 + 1)).toSeq)(
+        CEP.streaming[CepFuzzGen.CE](_,
+            _.user_id.toString, _.ts, CepQueries.anyPattern(c),
+            maxBufferPerKey = Some(1 << 20),
+            skip = AfterMatchSkip.NoSkip)
+          .map { m =>
+            val es = m.stages.flatMap(_._2)
+            (es.head.user_id,
+              m.stages.map { case (n, ss) =>
+                s"$n:${ss.map(_.event_id).mkString(",")}" }.mkString(";"))
+          }.toDF("user_id", "sig"))
+        .collect().toSeq.map(_.toString).sorted
       val batch = CEP.batch[CepFuzzGen.CE](
           CepQueries.cepEvents(spark, dir), _.user_id.toString, _.ts,
           CepQueries.anyPattern(c), AfterMatchSkip.NoSkip,
@@ -863,8 +857,6 @@ class CepFuzzSpec extends SparkSuite {
 
   test("incremental streaming CEP equals the batch NFA per fuzz seed") {
     import graft.cep.{AfterMatchSkip, CEP, Pattern}
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     // (ts, id)-sorted replay: CEP.stepSkip's stable merge then sees ties
     // in id order, matching the batch tieFn = event_id convention
@@ -879,18 +871,17 @@ class CepFuzzSpec extends SparkSuite {
       val pat = c.withinMinutes
         .map(m => patN.within(m * 60000000L)).getOrElse(patN)
       val last = s"s${c.steps.length - 1}"
-      val input = MemoryStream[CepFuzzGen.CE]
-      val matches = CEP.streaming[CepFuzzGen.CE](input.toDS(),
-          _.user_id.toString, _.ts, pat, maxBufferPerKey = Some(1 << 20),
-          skip = AfterMatchSkip.SkipToNext)
-        .map { m =>
-          val st = m.stages.toMap
-          (st("s0").head.user_id, st("s0").head.event_id,
-            st(last).head.event_id)
-        }.toDF("user_id", "a_id", "z_id")
-      val streamed = runStreamToTable(input, matches,
-          evs.grouped(math.max(1, evs.length / 3 + 1)).toSeq)
-        .map(_.toString).sorted
+      val streamed = StreamQueries.replay(spark,
+          evs.grouped(math.max(1, evs.length / 3 + 1)).toSeq)(
+        CEP.streaming[CepFuzzGen.CE](_,
+            _.user_id.toString, _.ts, pat, maxBufferPerKey = Some(1 << 20),
+            skip = AfterMatchSkip.SkipToNext)
+          .map { m =>
+            val st = m.stages.toMap
+            (st("s0").head.user_id, st("s0").head.event_id,
+              st(last).head.event_id)
+          }.toDF("user_id", "a_id", "z_id"))
+        .collect().toSeq.map(_.toString).sorted
       val batch = CepQueries.cepFuzzReplay(spark, dir, c)
         .collect().map(_.toString).sorted.toSeq
       assert(streamed == batch,
@@ -902,23 +893,20 @@ class CepFuzzSpec extends SparkSuite {
 
   test("streaming MATCH_RECOGNIZE equals batch MATCH_RECOGNIZE per fuzz seed") {
     import graft.cep.MatchRecognize
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val ev = CepQueries.cepEvents(spark, dir)
     val evs = ev.collect().toSeq.sortBy(e => (e.ts, e.event_id))
     def dual(clause: String, label: String): Unit = {
       val batch = MatchRecognize(ev.toDF(), clause)
         .collect().map(_.toString).sorted.toSeq
-      val input = MemoryStream[CepFuzzGen.CE]
-      val out = MatchRecognize.streaming(input.toDS().toDF(), clause,
-        maxBufferPerKey = Some(1 << 20))
       // (ts, id)-sorted replay: streaming MR resolves same-ts ties by
       // ARRIVAL order (the reference CepOperator's contract), batch MR
       // by the secondary ORDER BY — the sorted feed makes them coincide
-      val streamed = runStreamToTable(input, out,
-          evs.grouped(math.max(1, evs.length / 3 + 1)).toSeq)
-        .map(_.toString).sorted
+      val streamed = StreamQueries.replay(spark,
+          evs.grouped(math.max(1, evs.length / 3 + 1)).toSeq)(in =>
+        MatchRecognize.streaming(in.toDF(), clause,
+          maxBufferPerKey = Some(1 << 20)))
+        .collect().toSeq.map(_.toString).sorted
       assert(streamed == batch,
         s"streaming MR diverged at $label: " +
           s"(batch=${batch.length}, streamed=${streamed.length})\n$clause")

@@ -210,7 +210,7 @@ class StreamFuzzSpec extends SparkSuite {
     // and resumed — the bootstrap must not re-apply on restart
     val c1 = StreamFuzzGen.genSurgery(1L)
     val rec = StreamQueries.streamSurgeryFuzzReplay(spark, dir, c1,
-        restartAfter = Some(1))
+        restarts = Seq(1))
       .collect().map(_.toString).sorted.toSeq
     assert(rec == restate(c1), "surgery recovery arm diverged")
   }
@@ -412,10 +412,8 @@ class StreamFuzzSpec extends SparkSuite {
     // MapState cnt >= 2, emitN fan-out, willBeEmpty on (p, 1) — get
     // their own differential here: duplicated inserts, single-copy
     // deletes, and a driver-side multiset ground truth
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions._
     import graft.streaming.{Changelog, OuterJoin}
-    implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     for (seed <- 1L to 6L) {
       val c = StreamFuzzGen.genJoin(seed).copy(joinType = "full")
@@ -475,15 +473,15 @@ class StreamFuzzSpec extends SparkSuite {
         if id % c.rDelMod == c.rDelRes => (k, Changelog.Delete, false, id, 0L) }
       val lDel = lefts.collect { case (k, id, cents)
         if id % c.lDelMod == c.lDelRes => (k, Changelog.Delete, true, id, cents) }
-      val input = MemoryStream[(String, Byte, Boolean, Long, Long)]
-      val ds = input.toDS()
-      val left = ds.filter(_._3).map(r => (r._1, r._2, (r._4, r._5)))
-      val right = ds.filter(!_._3).map(r => (r._1, r._2, r._4))
-      val out = OuterJoin.outerJoin[String, (Long, Long), Long](
-        left, right, OuterJoin.FullOuter)
       val half = inserts.length / 2 + 1
-      val actual = runStreamToTable(input, out.toDF(),
-          inserts.grouped(half).toSeq ++ Seq(rDel, lDel).filter(_.nonEmpty))
+      val actual = StreamQueries.replay(spark,
+          inserts.grouped(half).toSeq ++ Seq(rDel, lDel).filter(_.nonEmpty)) {
+          ds =>
+        val left = ds.filter(_._3).map(r => (r._1, r._2, (r._4, r._5)))
+        val right = ds.filter(!_._3).map(r => (r._1, r._2, r._4))
+        OuterJoin.outerJoin[String, (Long, Long), Long](
+          left, right, OuterJoin.FullOuter).toDF()
+      }.collect().toSeq
         .groupBy { r =>
           val l = Option(r.getStruct(r.fieldIndex("left")))
             .map(s0 => (s0.getLong(0), s0.getLong(1)))
@@ -1381,7 +1379,7 @@ class StreamFuzzSpec extends SparkSuite {
     def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
     for (seed <- 1L to 2L) {
-      val b = Some(FuzzFamilies.restartBoundary(seed))
+      val b = Seq(FuzzFamilies.restartBoundary(seed))
       val jc = StreamFuzzGen.genJoin(seed)
       assert(
         canon(StreamQueries.streamJoinFuzzReplay(spark, dir, jc, b)) ==
@@ -1406,7 +1404,7 @@ class StreamFuzzSpec extends SparkSuite {
     // watermark-carrying shapes: the persisted watermark must reload on
     // restart or the tail windows/sessions never flush (or flush twice)
     val wc = StreamFuzzGen.gen(1L)
-    val wb = Some(FuzzFamilies.restartBoundary(1L))
+    val wb = Seq(FuzzFamilies.restartBoundary(1L))
     assert(
       canon(StreamQueries.streamFuzzReplay(spark, dir, wc, wb)) ==
       canon(StreamQueries.streamFuzzReplay(spark, dir, wc)),
@@ -1439,20 +1437,45 @@ class StreamFuzzSpec extends SparkSuite {
     val jc2 = StreamFuzzGen.genJoin(3L)
     assert(
       canon(StreamQueries.streamJoinFuzzReplay(spark, dir, jc2,
-        restartBoundaries = Seq(1, 2))) ==
+        restarts = Seq(1, 2))) ==
       canon(StreamQueries.streamJoinFuzzReplay(spark, dir, jc2)),
       s"join double-restart diverged (type=${jc2.joinType})")
     assert(
       canon(StreamQueries.streamSessionFuzzReplay(spark, dir, sc,
-        restartBoundaries = Seq(1, 2))) ==
+        restarts = Seq(1, 2))) ==
       canon(StreamQueries.streamSessionFuzzReplay(spark, dir, sc)),
       s"session double-restart diverged (gap=${sc.gapMinutes}m)")
+    // the retract accumulators through the same two stops (a single
+    // boundary was all the family's replay could take before)
+    val rc2 = StreamFuzzGen.genRetract(3L)
+    assert(
+      canon(StreamQueries.streamRetractFuzzReplay(spark, dir, rc2,
+        restarts = Seq(1, 2))) ==
+      canon(StreamQueries.streamRetractFuzzReplay(spark, dir, rc2)),
+      s"retract double-restart diverged (op=${rc2.op})")
+  }
+
+  test("restart sink buffers a redelivered batch whose first collect failed") {
+    // the batchId-idempotent sink must mark a batch seen only AFTER its
+    // rows are collected: a delivery that fails inside collect() comes
+    // back with the same batchId, and its rows must then land — once
+    import org.apache.spark.sql.functions.{lit, raise_error}
+    val buf =
+      new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
+    val sink = StreamQueries.idempotentSink(buf)
+    val rows = spark.range(3).toDF("id")
+    intercept[Exception](
+      sink(rows.select(raise_error(lit("collect failed"))), 0L))
+    sink(rows, 0L)
+    assert(buf.size == 3, s"batch 0 lost on redelivery: ${buf.size} rows")
+    sink(rows, 0L)
+    assert(buf.size == 3, s"batch 0 buffered twice: ${buf.size} rows")
   }
 
   test("checkpoint resume survives a different session shuffle-partition default") {
     // Stateful queries cannot change the state-store partition count
     // across a checkpoint restore; the replay harness pins 2 at every
-    // leg (startReplayQuery's per-query override), which this assert
+    // leg (StreamQueries.replay's per-query override), which this assert
     // insures: a resumed leg started under a DIFFERENT session default
     // must still restore and produce the uninterrupted run's output.
     // If a future harness edit lets the session default leak into a
@@ -1463,19 +1486,18 @@ class StreamFuzzSpec extends SparkSuite {
     val rc = StreamFuzzGen.genRetract(1L)
     val expected =
       canon(StreamQueries.streamRetractFuzzReplay(spark, dir, rc))
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "1")
+    Q.withConf(spark, "spark.sql.shuffle.partitions" -> "1") {
       assert(
         canon(StreamQueries.streamRetractFuzzReplay(spark, dir, rc,
-          Some(1))) == expected,
+          Seq(1))) == expected,
         "resume under session default 1 diverged")
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
+    }
+    Q.withConf(spark, "spark.sql.shuffle.partitions" -> "7") {
       assert(
         canon(StreamQueries.streamRetractFuzzReplay(spark, dir, rc,
-          Some(2))) == expected,
+          Seq(2))) == expected,
         "resume under session default 7 diverged")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
   }
 
   test("incremental streaming replay matches the one-shot batch plan per seed") {
