@@ -48,7 +48,8 @@ object SparkEntry {
       StreamQueries.benchOnly
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys get a rows-only check.
+    * the same parquet tables. Every query key has one (RegistrySpec pins
+    * it): Verify writes each key's parquet next to its oracle.
     */
   def oracleSql: Map[String, String] =
     modules.iterator.map(_._2).reduce(_ ++ _)

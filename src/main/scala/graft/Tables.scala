@@ -64,8 +64,8 @@ object Tables {
   }
 
   /** Last sfDir whose views were registered, per session. Registering the
-    * ten views costs ~29 ms warm (r20 RegisterProbe: catalog writes, not
-    * I/O) and the SQL corpora call [[registerAll]] once per query — ~5-6 s
+    * ten views costs ~29 ms warm (plans/r20/register_probe.txt: catalog
+    * writes, not I/O) and the SQL corpora call [[registerAll]] once per query — ~5-6 s
     * of pure re-registration per Bench run (~180 calling keys). The views are only ever the
     * memoized [[load]] frames, so a repeat call with the same (session,
     * sfDir) is an exact no-op; a different sfDir (Bench's sf0.001 warmup →

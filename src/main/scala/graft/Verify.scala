@@ -1,6 +1,12 @@
 package graft
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+import graft.queries.FuzzArm
+
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare. stderr ends
+  * with one summary line (queries dumped, oracles written, failed names);
+  * stdout and the exit code (0) do not depend on failures.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -8,18 +14,15 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val spark = DumpIO.session()
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val oracles = SparkEntry.oracleSql
+    val arms = SparkEntry.queries.toSeq.collect {
+      case (name, fn) if only.forall(_.contains(name)) =>
+        FuzzArm(name, fn, oracles(name))
     }
-    DumpIO.writeOracle(outDir, SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }.toSeq)
+    val d = DumpIO.dump(spark, sfDir, outDir, arms)
+    System.err.println(s"[verify] ${d.ok.length} queries dumped, " +
+      s"${d.ok.length + d.failed.length} oracles written, failed: " +
+      d.failed.mkString("[", ",", "]"))
     spark.stop()
   }
 }

@@ -228,17 +228,19 @@ object DedupOps {
     // partition level, done here at key level so it also works where
     // AQE is off or the join is a broadcast-immune self-join).
     val banded = bandedChunks(sig, bits, bands, idCol, sigCol)
+    val a = banded.select(col(idCol).as("id_a"), col(sigCol).as("sig_a"),
+      col("band"), col("chunk"))
+    val b = banded.select(col(idCol).as("id_b"), col(sigCol).as("sig_b"),
+      col("band"), col("chunk"))
     val joined =
       if (saltTarget > 0) {
-        val (a, b) = saltedSides(banded, idCol, sigCol, saltTarget)
-        a.join(b, Seq("band", "chunk", "__salt"))
-      } else {
-        val a = banded.select(col(idCol).as("id_a"), col(sigCol).as("sig_a"),
-          col("band"), col("chunk"))
-        val b = banded.select(col(idCol).as("id_b"), col(sigCol).as("sig_b"),
-          col("band"), col("chunk"))
-        a.join(b, Seq("band", "chunk"))
-      }
+        // banded feeds the size agg AND both join sides — cache it so the
+        // md5-heavy simhash upstream runs once; released on consumption
+        CacheOnce.untilConsumed(banded)
+        val (bSalted, aSalted) = SkewOps.saltedSides(b, a,
+          Seq("band", "chunk"), "id_a", saltTarget)
+        aSalted.join(bSalted, Seq("band", "chunk", "__salt"))
+      } else a.join(b, Seq("band", "chunk"))
     // hamming is computed and filtered BEFORE the pair dedup: bit_count
     // is a map-side O(1) op, so qualifying pairs — a tiny fraction of
     // the bucket-join output — are all the distinct() has to shuffle.
@@ -333,32 +335,6 @@ object DedupOps {
           .as("bc"))
       .select(col(idCol), col(sigCol),
         col("bc.band").as("band"), col("bc.chunk").as("chunk"))
-  }
-
-  /** Size-aware salted join sides over the banded chunks: build side
-    * (`id_a`) hashed into one of ceil(|bucket|/saltTarget) salt groups,
-    * probe side (`id_b`) replicated per group — every (a, b) bucket pair
-    * meets in exactly one (band, chunk, __salt) key. Exposed for the
-    * skew spec, which pins the build-side key bound.
-    */
-  private[graft] def saltedSides(banded: DataFrame, idCol: String,
-      sigCol: String, saltTarget: Int): (DataFrame, DataFrame) = {
-    // banded feeds the size agg AND both join sides — cache it so the
-    // md5-heavy simhash upstream runs once; released on consumption
-    CacheOnce.untilConsumed(banded)
-    val sizes = banded.groupBy(col("band"), col("chunk"))
-      .agg(count(lit(1)).as("__bn"))
-    val withN = banded.join(broadcast(sizes), Seq("band", "chunk"))
-      .withColumn("__nsalt",
-        ceil(col("__bn").cast(DoubleType) / saltTarget).cast(IntegerType))
-    val a = withN.select(col(idCol).as("id_a"), col(sigCol).as("sig_a"),
-      col("band"), col("chunk"),
-      pmod(xxhash64(col(idCol)), col("__nsalt").cast(LongType))
-        .cast(IntegerType).as("__salt"))
-    val b = withN.select(col(idCol).as("id_b"), col(sigCol).as("sig_b"),
-      col("band"), col("chunk"),
-      explode(sequence(lit(0), col("__nsalt") - 1)).as("__salt"))
-    (a, b)
   }
 
   /** SimHash signature (16-bit): per bit b, sum over words of

@@ -264,7 +264,8 @@ object SimilarityOps {
     * size-aware salting splits each bucket's BUILD side into
     * ceil(|bucket|/saltTarget) groups and replicates probe rows per
     * group — per-join-key build rows stay ~saltTarget regardless of the
-    * skew ratio, the same key-level guard [[DedupOps.simhashPairs]] uses.
+    * skew ratio ([[SkewOps.saltedSides]], shared with
+    * [[DedupOps.simhashPairs]]).
     */
   def embedNearDupPairs(corpus: DataFrame, threshold: Double,
       dim: Int = 64, bits: Int = 6, probeRadius: Int = 1,
@@ -285,7 +286,8 @@ object SimilarityOps {
       explode(probeList).as("bucket"))
     val joined =
       if (saltTarget > 0) {
-        val (ps, cs) = saltedBucketSides(probes, c, saltTarget)
+        val (ps, cs) = SkewOps.saltedSides(probes, c, Seq("bucket"), "id_b",
+          saltTarget)
         ps.join(cs, Seq("bucket", "__salt"))
       } else probes.join(c, "bucket")
     joined
@@ -293,26 +295,6 @@ object SimilarityOps {
       .select(col("id_a"), col("id_b"),
         (dot(col("emb_a"), col("emb_b")) / (col("n_a") * col("n_b"))).as("cos"))
       .filter(col("cos") >= threshold)
-  }
-
-  /** Size-aware salted sides over the RP-LSH bucket join: build rows
-    * (`id_b`) hash into one of ceil(|bucket|/saltTarget) salt groups,
-    * probe rows replicate across them — every (probe, build) pair still
-    * meets exactly once, now under (bucket, __salt). The bucket-size agg
-    * is 2^bits rows at most: broadcast. Exposed for the skew spec.
-    */
-  private[graft] def saltedBucketSides(probes: DataFrame, c: DataFrame,
-      saltTarget: Int): (DataFrame, DataFrame) = {
-    val sizes = c.groupBy(col("bucket")).agg(count(lit(1)).as("__bn"))
-    def nsalt = ceil(col("__bn").cast("double") / saltTarget).cast("int")
-    val cs = c.join(broadcast(sizes), Seq("bucket"))
-      .withColumn("__salt",
-        pmod(xxhash64(col("id_b")), nsalt.cast("long")).cast("int"))
-      .drop("__bn")
-    val ps = probes.join(broadcast(sizes), Seq("bucket"))
-      .withColumn("__salt", explode(sequence(lit(0), nsalt - 1)))
-      .drop("__bn")
-    (ps, cs)
   }
 
   /** SemDeDup (Abbas et al., arXiv:2303.09540): partition the embedding
@@ -350,7 +332,8 @@ object SimilarityOps {
       col("id").as("id_b"), col("e").as("e_b"), col("n").as("n_b"))
     val joined =
       if (saltTarget > 0) {
-        val (ps, cs) = saltedBucketSides(probes, builds, saltTarget)
+        val (ps, cs) = SkewOps.saltedSides(probes, builds, Seq("bucket"),
+          "id_b", saltTarget)
         ps.join(cs, Seq("bucket", "__salt"))
       } else probes.join(builds, "bucket")
     val dups = joined

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 /** Skew mitigation for large joins — the manual salting technique for the
   * cases AQE's skew-join splitting cannot reach (e.g. a single hot key on
@@ -31,5 +32,28 @@ object SkewOps {
     val replicated = build
       .withColumn("__salt", explode(sequence(lit(0L), lit(factor - 1L))))
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")
+  }
+
+  /** Size-aware salted sides for a bucket join (the key-level skew guard
+    * of [[DedupOps.simhashPairs]], [[SimilarityOps.embedNearDupPairs]] and
+    * [[SimilarityOps.semanticDedup]]): the build side's bucket sizes are
+    * aggregated and broadcast, build rows hash by `buildId` into one of
+    * ceil(|bucket|/target) salt groups, and probe rows replicate once per
+    * group — every (probe, build) pair still meets exactly once, now
+    * under `keys :+ "__salt"`, and per-join-key build rows stay ~target
+    * whatever the skew ratio. Returns (probe, build).
+    */
+  private[graft] def saltedSides(probe: DataFrame, build: DataFrame,
+      keys: Seq[String], buildId: String, target: Int): (DataFrame, DataFrame) = {
+    val sizes = build.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__bn"))
+    val nsalt = ceil(col("__bn").cast(DoubleType) / target).cast(IntegerType)
+    val b = build.join(broadcast(sizes), keys)
+      .withColumn("__salt",
+        pmod(xxhash64(col(buildId)), nsalt.cast(LongType)).cast(IntegerType))
+      .drop("__bn")
+    val p = probe.join(broadcast(sizes), keys)
+      .withColumn("__salt", explode(sequence(lit(0), nsalt - 1)))
+      .drop("__bn")
+    (p, b)
   }
 }

@@ -23,7 +23,7 @@ final case class Recover[C](prefix: String,
     restart: Long => Seq[Int] =
       (seed: Long) => Seq(FuzzFamilies.restartBoundary(seed)))
 
-/** One seeded fuzz family: its `graft.StreamFuzzDump` name, its key
+/** One seeded fuzz family: its `graft.FuzzDump` name, its key
   * prefix, its generator, the promotion predicates (each picks the
   * FIRST seed in 1..256 whose case matches — [[FuzzFamilies.firstSeedOf]]),
   * its replay (the last argument is the stop/restart batch boundaries,
@@ -76,14 +76,14 @@ final case class FuzzFamily[C](
   * ([[StreamFuzzGen]], [[CepFuzzGen]], [[WindowFuzzGen]],
   * [[LookupFuzzGen]]): each family's promoted SparkEntry rows, their
   * oracles, the checkpoint stop/restart recover rows and every
-  * `graft.StreamFuzzDump` arm derive from the one [[all]] list.
+  * `graft.FuzzDump` arm derive from the one [[all]] list.
   *
   * Promotion is deterministic — the FIRST seed exhibiting each shape —
   * so the choice is reproducible from the generator alone. Each row
   * replays the events table through a MemoryStream (or the batch NFA /
   * lookup harness) into the case's operator and is checked against the
   * case's own DuckDB restatement — the oracle-checked tie-in for the
-  * engine-vs-engine sweeps in `StreamFuzzSpec` / `graft.StreamFuzzDump`.
+  * engine-vs-engine sweeps in `StreamFuzzSpec` / `graft.FuzzDump`.
   *
   * Recover rows (the reference's exactly-once guarantee across failures
   * — CheckpointCoordinator barrier snapshots; Spark restated as WAL
@@ -455,7 +455,7 @@ object FuzzFamilies {
     _.oracleSql,
     skip = (s, dir, c) => c.invalidReason(StreamQueries.userMicros(s, dir)))
 
-  /** Every family, in `graft.StreamFuzzDump all` order. */
+  /** Every family, in `graft.FuzzDump all` order. */
   val all: Seq[FuzzFamily[_]] = Seq(window, session, sessionDyn, surgery,
     retract, miniBatch, distinct, topN, cep, dedup, join, temporal, cepQuant,
     cepRelaxed, interval, winJoin, over, boundedOver, ptJoin, cumulate,

@@ -8,7 +8,7 @@ import Q._
   * grammar shape (set-op, IN-subquery, row-level select, aggregating
   * join, window, EXISTS, scalar subquery), so the generator surface is
   * exercised by the driver's DuckDB compare every round, not only by
-  * the dev-side 500-seed sweep (`graft.FuzzDump` + `dev/check.py`,
+  * the dev-side 500-seed sweep (`graft.FuzzDump ... sql` + `dev/check.py`,
   * recorded in SURVEY §5). The SQL text is the seed's generated text,
   * dialect-shared by the generator's construction.
   */

@@ -989,7 +989,7 @@ object StreamFuzzGen {
       * exact. The generator's bounds make validity LIKELY, not certain
       * (a sparse source can still leave a mid-stream slice empty), so
       * every consumer that trusts the oracle — the spec's seeds, the
-      * promoted row, and StreamFuzzDump's arbitrary sweep ranges — must
+      * promoted row, and FuzzDump's arbitrary sweep ranges — must
       * run this first: an invalid seed diverges from its oracle by
       * construction, not because the engine is wrong.
       */

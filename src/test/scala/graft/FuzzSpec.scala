@@ -3,7 +3,7 @@ package graft
 import graft.queries.FuzzGen
 
 /** The differential-fuzz generator (queries/FuzzGen) in CI form. The
-  * full ≥500-seed DuckDB differential runs via `graft.FuzzDump` +
+  * full ≥500-seed DuckDB differential runs via `graft.FuzzDump ... sql` +
   * `dev/check.py` (python-side oracle — kept out of the sbt suite so
   * the library test run stays JVM-only); this spec pins the properties
   * that make that sweep trustworthy:

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.FuzzFamilies
+import graft.queries.{FuzzFamilies, FuzzGen}
 
 /** Consistency of the query registry ([[SparkEntry]]) and the fuzz-family
   * registry ([[FuzzFamilies]]) it folds in: no module silently shadows
@@ -20,6 +20,8 @@ class RegistrySpec extends AnyFunSuite {
     assert(queryDups.isEmpty, s"keys shadowed across modules: $queryDups")
     val oracleDups = duplicates(SparkEntry.modules.flatMap(_._2.keys))
     assert(oracleDups.isEmpty, s"oracles shadowed across modules: $oracleDups")
+    // Verify dumps each key's parquet next to its oracle text
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
   }
 
   test("every q_fuzz_ SparkEntry key has an oracle") {
@@ -48,20 +50,22 @@ class RegistrySpec extends AnyFunSuite {
     assert(duplicates(families.map(_.name)).isEmpty)
     assert(duplicates(families.map(_.prefix)).isEmpty)
     for (seed <- Seq(1L, 7L)) {
-      val all = StreamFuzzDump.arms("all").get(seed).map(_.name)
+      val all = FuzzDump.arms("all").get(seed).map(_.name)
       assert(all.length == families.length + 4) // + the cdc quad
       assert(duplicates(all).isEmpty)
       assert(all.take(families.length) == families.map(_.arm(seed).name))
       assert(all.drop(families.length) ==
-        StreamFuzzDump.arms("cdc").get(seed).map(_.name))
-      val recover = StreamFuzzDump.arms("recover").get(seed).map(_.name)
+        FuzzDump.arms("cdc").get(seed).map(_.name))
+      val recover = FuzzDump.arms("recover").get(seed).map(_.name)
       assert(recover.length == families.count(_.recover.isDefined))
       assert(duplicates(recover).isEmpty)
       assert(recover.forall(_.startsWith("q_fuzz_recover_")))
       for (f <- families)
-        assert(StreamFuzzDump.arms(f.name).get(seed).map(_.name) ==
+        assert(FuzzDump.arms(f.name).get(seed).map(_.name) ==
           Seq(s"${f.prefix}$seed"))
+      assert(FuzzDump.arms("sql").get(seed).map(a => a.name -> a.oracleSql) ==
+        Seq(s"q_fuzz_$seed" -> FuzzGen.sql(seed)))
     }
-    assert(StreamFuzzDump.arms("nosuchfamily").isEmpty)
+    assert(FuzzDump.arms("nosuchfamily").isEmpty)
   }
 }

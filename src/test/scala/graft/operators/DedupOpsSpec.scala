@@ -179,7 +179,8 @@ class DedupOpsSpec extends SparkSuite {
     assert(maxOverMedian(partitionLoads(banded, Seq("band", "chunk"))) > 4.0)
     // salted build side: every (band, chunk, salt) key holds ≤ ~target
     // rows and the shuffle spreads within 4× of the median partition
-    val (a, _) = DedupOps.saltedSides(banded, "doc_id", "simhash", 64)
+    val (_, a) = SkewOps.saltedSides(banded, banded, Seq("band", "chunk"),
+      "doc_id", 64)
     val keySizes = a.groupBy("band", "chunk", "__salt").count()
       .as[(Int, Long, Int, Long)].collect().map(_._4)
     assert(keySizes.max <= 2 * 64, s"salted key too large: ${keySizes.max}")

@@ -207,7 +207,8 @@ class SimilarityOpsSpec extends SparkSuite {
       SimilarityOps.rpLshBucket($"embedding", Dim, 6).as("bucket"))
     val probes = c.select($"id_b".as("id_a"), $"emb_b".as("emb_a"),
       $"n_b".as("n_a"), $"bucket")
-    val (_, cs) = SimilarityOps.saltedBucketSides(probes, c, saltTarget = 32)
+    val (_, cs) = SkewOps.saltedSides(probes, c, Seq("bucket"), "id_b",
+      target = 32)
     val keySizes = cs.groupBy("bucket", "__salt").count()
       .select("count").as[Long].collect()
     assert(keySizes.max <= 2 * 32, s"salted key too large: ${keySizes.max}")

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * must be equal. A divergence would expose NFA bugs (branch pruning,
   * within-window arithmetic, skip-strategy anchoring) the five
   * hand-written q_cep_* rows can't reach. The cross-engine half runs
-  * via `graft.StreamFuzzDump ... cep` + `dev/check.py`, and two
+  * via `graft.FuzzDump ... cep` + `dev/check.py`, and two
   * shape-representative seeds are permanent driver-gated rows
   * (`q_fuzz_cep_*`).
   */

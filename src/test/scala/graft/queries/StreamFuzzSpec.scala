@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions.col
   * divergence would expose incremental-execution bugs (watermark
   * arithmetic, state eviction, window assignment) that batch-only
   * fuzzing cannot reach. The cross-engine half runs via
-  * `graft.StreamFuzzDump` + `dev/check.py` (DuckDB restatements of the
+  * `graft.FuzzDump` + `dev/check.py` (DuckDB restatements of the
   * same cases), and three shape-representative seeds are permanent
   * oracle-checked rows (FuzzFamilies).
   */
@@ -918,7 +918,7 @@ class StreamFuzzSpec extends SparkSuite {
       // validity: every source occupies every time slice up to its data
       // end (never spuriously idle mid-stream), and every stalled
       // source is silent ≥ idleTimeoutRounds rounds before the sentinel
-      // — the shared IdleCase.invalidReason check StreamFuzzDump's wi
+      // — the shared IdleCase.invalidReason check FuzzDump's wi
       // arm also gates on
       val invalid = c.invalidReason(evs)
       assert(invalid.isEmpty, s"idle seed $seed: ${invalid.getOrElse("")}")
