@@ -2,7 +2,9 @@
 # Dev-only: run a graft main class directly on the compiled classes,
 # bypassing sbt (no build-lock contention, no sbt JVM overhead).
 # Usage: dev/run.sh <MainClass> [args...]   (env: SPARK_GRAFT_* as usual)
-# NOTE: `sbt compile` first — this does not compile.
+# NOTE: `sbt compile` first — this does not compile. src/main/resources is
+# on the classpath directly (as in perfbench/build.py), so no copyResources.
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 MAIN="$1"; shift
 exec java \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
@@ -25,5 +27,5 @@ exec java \
   --enable-native-access=ALL-UNNAMED \
   -Djdk.reflect.useDirectMethodHandle=false \
   -Dderby.system.home=/tmp/derby_dev \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:$ROOT/src/main/resources:${SPARK_HOME:?SPARK_HOME must name the Spark install}/jars/*" \
   "$MAIN" "$@"

@@ -140,8 +140,9 @@ object Bench {
 
   private def timeAll(spark: SparkSession, sfDir: String,
       selected: Map[String, QFn], tally: StreamTally): (String, Sidecar) = {
-    // warmup: JIT + codegen + parquet footer caches, so the first timed
-    // query isn't charged for session startup
+    // warmup: JIT + codegen, so the first timed query isn't charged for
+    // session startup. It reads sf0.001, so it loads none of the timed
+    // run's tables unless sfDir is sf0.001 too.
     val entryRows: Either[String, Long] =
       try Right(SparkEntry.entry(spark).count()) catch { case e: Throwable =>
         System.err.println(s"[bench] warm-up SparkEntry.entry failed: $e")

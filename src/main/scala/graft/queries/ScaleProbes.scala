@@ -85,9 +85,6 @@ object ScaleProbes {
       // so replacing the view here cannot recurse
       shifted.createOrReplaceTempView(table)
     }
-    // the ten view names no longer hold the base tables: the next
-    // registerAll must restore them, not memo-hit (Tables.registeredFor)
-    Tables.invalidateRegistered(s)
   }
 
   /** Analyze every shape at `factor`×, assert plan stability, and return
