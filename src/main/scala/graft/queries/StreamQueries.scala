@@ -1,13 +1,18 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 
 import graft.queries.Q._
 import graft.cep.{CEP, Pattern}
-import graft.streaming.{AllowedLateness, Changelog, CoGroup, OuterJoin, ProcTimeJoin, ProcessOps, RetractableTopN, SessionWindows, StatefulOps, StreamingRank, TemporalJoin}
+import graft.sources.UpsertSink
+import graft.streaming.{AllowedLateness, Changelog, CoGroup, OuterJoin, ProcTimeJoin, ProcessOps, RetractableTopN, SessionWindows, StatefulOps, StreamingRank, TemporalJoin, WatermarkMux}
+import graft.streaming.TemporalJoin.TemporalEvent
 
 /** Streaming oracle parity — driver-visible proof that the stateful
   * streaming operators produce the SAME table a batch query does, through
@@ -28,6 +33,16 @@ import graft.streaming.{AllowedLateness, Changelog, CoGroup, OuterJoin, ProcTime
   * the operator under test runs distributed, keyed state and all. A
   * production job would swap the MemoryStream for a Kafka/file source and
   * drop the fold — the sink IS the changelog consumer there.
+  *
+  * Every replay reads events through ONE input stage, [[eventsInput]]:
+  * the events table under one filter SQL string (`"true"` keeps every
+  * row), the caller's columns, one collect, and a driver-side sort by
+  * (micro-ts, event_id). [[sortedEvents]] is that stage with no filter,
+  * memoized per sf dir. A replay then maps the rows to its operator's
+  * input type, cuts them into micro-batches ([[chunks]]), appends its
+  * far-future flush sentinel ([[farFuture]]) when the operator needs the
+  * watermark past the last real row, and hands the batches to the one
+  * harness, [[replay]].
   */
 object StreamQueries {
 
@@ -206,24 +221,55 @@ object StreamQueries {
   private def micros(t: java.sql.Timestamp): Long =
     t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
 
-  /** events rows sorted by (micro-ts, event_id) — replay in full-precision
+  /** Offset of the far-future flush sentinels: ten days past the last
+    * real event puts every watermark delay, window, session gap and
+    * cleanup timer the replays use behind it.
+    */
+  private val FarFutureMs = 10L * 86400000L
+  private def farFuture(ms: Long) = new java.sql.Timestamp(ms + FarFutureMs)
+
+  /** The one replay input stage: the events rows `filterSql` keeps
+    * (`"true"` keeps all), projected to `cols` and decoded as `T` (a
+    * tuple binds by position, a case class by name), collected once and
+    * sorted on the driver by (micro-ts, event_id) — full-precision
     * event-time order, the shape a rowtime source delivers within the
-    * watermark (and the exact ORDER BY every oracle uses; a millisecond
+    * watermark and the exact ORDER BY every oracle uses (a millisecond
     * sort could diverge on same-ms rows whose ids cross micros order).
-    *
-    * Memoized per sf dir: fifteen replay queries share one collect+sort
-    * instead of re-reading the table each (the testdata is immutable for
-    * a Verify/Bench JVM's lifetime; a few MB resident).
+    * On the testdata this order is also ascending event_id
+    * (StreamFuzzSpec pins it), so the replays that once sorted by id
+    * alone read the same batches.
+    */
+  private[queries] def eventsInput[T: Encoder](s: SparkSession, dir: String,
+      filterSql: String, cols: Column*): Seq[T] = {
+    implicit val keyed: Encoder[(java.sql.Timestamp, Long, T)] =
+      Encoders.tuple(Encoders.TIMESTAMP, Encoders.scalaLong, implicitly[Encoder[T]])
+    t(s, dir, "events").filter(expr(filterSql))
+      .select(tsCol, col("event_id"), struct(cols: _*))
+      .as[(java.sql.Timestamp, Long, T)].collect().toSeq
+      .sortBy(r => (micros(r._1), r._2)).map(_._3)
+  }
+
+  /** Column shorthands for [[eventsInput]] projections. */
+  private val tsCol = col("ts").cast("timestamp").as("ts")
+  private val centsCol =
+    expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)").as("cents")
+  private def strCol(sql: String, name: String) =
+    expr(s"CAST($sql AS STRING)").as(name)
+  private def longCol(sql: String, name: String) =
+    expr(s"CAST($sql AS BIGINT)").as(name)
+
+  /** [[eventsInput]] with no filter, memoized per sf dir: the replays
+    * that read whole events rows share one collect+sort instead of
+    * re-reading the table each (the testdata is immutable for a
+    * Verify/Bench JVM's lifetime; a few MB resident).
     */
   private val sortedEventsCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[Ev]]()
-  private def sortedEvents(s: SparkSession, dir: String): Seq[Ev] =
+  private[queries] def sortedEvents(s: SparkSession, dir: String): Seq[Ev] =
     sortedEventsCache.computeIfAbsent(dir, { d =>
       import s.implicits._
-      t(s, d, "events")
-        .select($"event_id", $"user_id", $"ts".cast("timestamp").as("ts"),
-          $"event_type", $"value")
-        .as[Ev].collect().toSeq.sortBy(e => (micros(e.ts), e.event_id))
+      eventsInput[Ev](s, d, "true", col("event_id"), col("user_id"), tsCol,
+        col("event_type"), col("value"))
     })
 
   /** (user_id, epoch-micros) per event — the rows a drawn idleness case's
@@ -243,9 +289,7 @@ object StreamQueries {
       c: StreamFuzzGen.Case, restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
     val rows = sortedEvents(s, dir)
-    val sentinel = Ev(-1L, -1L,
-      new java.sql.Timestamp(rows.last.ts.getTime + 10L * 86400000L),
-      "click", 0.0)
+    val sentinel = Ev(-1L, -1L, farFuture(rows.last.ts.getTime), "click", 0.0)
     replay(s, chunks(rows, 3) :+ Seq(sentinel), mode = "append",
         restarts = restarts)(in =>
       c(in.toDF().withWatermark("ts", "1 second")))
@@ -265,43 +309,34 @@ object StreamQueries {
       c: StreamFuzzGen.DedupCase): DataFrame = {
     import s.implicits._
     implicit val ttlEnc = Encoders.product[StatefulOps.TtlIn]
-    val rows = t(s, dir, "events")
-      .filter(expr(c.filterSql))
-      .select(expr(s"CAST(${c.keySql} AS STRING)").as("k"),
-        col("ts").cast("timestamp").as("ts"), col("event_id"))
-      .as[(String, java.sql.Timestamp, Long)].collect().toSeq
-      .sortBy(t => (micros(t._2), t._3))
-      .map { case (k, ts, id) => StatefulOps.TtlIn(k, ts, id) }
+    val rows = eventsInput[StatefulOps.TtlIn](s, dir, c.filterSql,
+      strCol(c.keySql, "key"), tsCol, col("event_id").as("id"))
     c.mode match {
       case "first" =>
         replay(s, chunks(rows, 2))(_.groupByKey(_.key)
           .transformWithState(
             new StatefulOps.KeepFirstProcessor[String, StatefulOps.TtlIn](
               ttlEnc),
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
+            TimeMode.None(), OutputMode.Update()).toDF())
           .select($"key".as("k"), $"id")
       case "last" =>
         val sink = replay(s, chunks(rows, 2))(_.groupByKey(_.key)
           .transformWithState(
             new StatefulOps.KeepLastProcessor[String, StatefulOps.TtlIn](
               ttlEnc),
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
+            TimeMode.None(), OutputMode.Update()).toDF())
         foldChangelog(sink.select($"kind", $"key".as("k"),
           $"value.id".as("id")), "kind")
       case "first_ttl" =>
         val sentinel = StatefulOps.TtlIn("\u0000flush",
-          new java.sql.Timestamp(rows.last.ts.getTime + 10L * 86400000L),
-          -1L)
+          farFuture(rows.last.ts.getTime), -1L)
         replay(s, chunks(rows, 2) :+ Seq(sentinel), mode = "append")(
           _.withWatermark("ts", "1 second")
             .as[StatefulOps.TtlIn]
             .groupByKey(_.key)
             .transformWithState(
               new StatefulOps.KeepFirstTtlProcessor(c.ttlMinutes * 60000L),
-              org.apache.spark.sql.streaming.TimeMode.EventTime(),
-              org.apache.spark.sql.streaming.OutputMode.Append()).toDF())
+              TimeMode.EventTime(), OutputMode.Append()).toDF())
           .filter($"id" >= 0)
           .select($"key".as("k"), $"id")
     }
@@ -318,11 +353,8 @@ object StreamQueries {
       restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
     implicit val chEnc = Encoders.product[RetractableTopN.TopNChange]
-    val trips = t(s, dir, "events")
-      .filter(expr(c.filterSql))
-      .select(expr(s"CAST(${c.keySql} AS STRING)").as("k"),
-        col("event_id"), expr(s"CAST(${c.sortSql} AS BIGINT)").as("v"))
-      .as[(String, Long, Long)].collect().toSeq.sortBy(_._2)
+    val trips = eventsInput[(String, Long, Long)](s, dir, c.filterSql,
+      strCol(c.keySql, "k"), col("event_id"), longCol(c.sortSql, "v"))
     val inserts = trips.map { case (k, id, v) =>
       RetractableTopN.TopNChange(Changelog.Insert, k, id, v) }
     val updates = trips.collect {
@@ -337,8 +369,7 @@ object StreamQueries {
     val sink = replay(s, batches, restarts = restarts)(_.groupByKey(_.key)
       .transformWithState(
         new RetractableTopN.RetractableTopNProcessor(c.n),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
+        TimeMode.None(), OutputMode.Update()).toDF())
     foldChangelog(sink, "kind")
       .select($"key".as("k"), $"id", $"sort")
   }
@@ -489,19 +520,17 @@ object StreamQueries {
       restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
     import graft.streaming.{StateBootstrap, StateReader}
-    val trips = t(s, dir, "events").filter(expr(c.filterSql))
-      .select(expr(s"CAST(${c.keySql} AS STRING)").as("k"),
-        expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)").as("cents"),
-        // ts arrives TIMESTAMP_NTZ; the session is pinned UTC, so the
-        // cast is epoch-identical to the oracle's epoch_us
-        expr("unix_micros(CAST(ts AS TIMESTAMP))").as("us"), col("event_id"))
-      .as[(String, Long, Long, Long)].collect().toSeq.sortBy(_._4)
+    val trips = eventsInput[(String, Long, Long)](s, dir, c.filterSql,
+      strCol(c.keySql, "k"), centsCol,
+      // ts arrives TIMESTAMP_NTZ; the session is pinned UTC, so the
+      // cast is epoch-identical to the oracle's epoch_us
+      expr("unix_micros(CAST(ts AS TIMESTAMP))").as("us"))
     val usAll = trips.map(_._3)
     val cut = usAll.min + (usAll.max - usAll.min) * c.cutNum / c.cutDen
     val hist = trips.collect {
-      case (k, ce, us, _) if us < cut => StateBootstrap.BIn(k, ce) }
+      case (k, ce, us) if us < cut => StateBootstrap.BIn(k, ce) }
     val rest = trips.collect {
-      case (k, ce, us, _) if us >= cut => StateBootstrap.BIn(k, ce) }
+      case (k, ce, us) if us >= cut => StateBootstrap.BIn(k, ce) }
     // phase 1 — same retained-checkpoint leg as q_state_bootstrap
     val ckpt1 = Q.scratchDir(s"q_fuzz_surgery_${c.seed}") + "/ckpt1"
     replay(s, chunks(hist, 2), keepCheckpoint = Some(ckpt1))(
@@ -545,11 +574,8 @@ object StreamQueries {
       miniBatch: Boolean = false): DataFrame = {
     import s.implicits._
     implicit val chEnc = Encoders.product[StatefulOps.Change[String, Long]]
-    val trips = t(s, dir, "events")
-      .filter(expr(c.filterSql))
-      .select(expr(s"CAST(${c.keySql} AS STRING)").as("k"),
-        expr(s"CAST(${c.valueSql} AS BIGINT)").as("v"), col("event_id"))
-      .as[(String, Long, Long)].collect().toSeq.sortBy(_._3)
+    val trips = eventsInput[(String, Long, Long)](s, dir, c.filterSql,
+      strCol(c.keySql, "k"), longCol(c.valueSql, "v"), col("event_id"))
     val inserts = trips.map { case (k, v, _) =>
       StatefulOps.Change(Changelog.Insert, k, v) }
     val deletes = trips.collect {
@@ -564,8 +590,7 @@ object StreamQueries {
         val sink = replay(s, batches, restarts = restarts)(_.groupByKey(_.key)
           .transformWithState(
             new StatefulOps.RetractSumProcessor[String, Long](miniBatch),
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
+            TimeMode.None(), OutputMode.Update()).toDF())
         foldChangelog(sink.select($"kind", $"value.key".as("k"),
           $"value.sum".as("agg"), $"value.count".as("n")), "kind")
       case mm =>
@@ -573,8 +598,7 @@ object StreamQueries {
           .transformWithState(
             new StatefulOps.RetractMinMaxProcessor[String, Long](
               isMax = mm == "max"),
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
+            TimeMode.None(), OutputMode.Update()).toDF())
         foldChangelog(sink.select($"kind", $"value.key".as("k"),
           $"value.extreme".as("agg"), $"value.count".as("n")), "kind")
     }
@@ -594,11 +618,8 @@ object StreamQueries {
       c: StreamFuzzGen.DistinctCase,
       restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
-    val trips = t(s, dir, "events")
-      .filter(expr(c.filterSql))
-      .select(expr(s"CAST(${c.groupSql} AS STRING)").as("g"),
-        expr(s"CAST(${c.valueSql} AS BIGINT)").as("v"), col("event_id"))
-      .as[(String, Long, Long)].collect().toSeq.sortBy(_._3)
+    val trips = eventsInput[(String, Long, Long)](s, dir, c.filterSql,
+      strCol(c.groupSql, "g"), longCol(c.valueSql, "v"), col("event_id"))
     def shard(v: Long): Int = math.floorMod(v, c.buckets.toLong).toInt
     val inserts = trips.map { case (g, v, _) =>
       StatefulOps.SplitIn(g, shard(v), v, Changelog.Insert) }
@@ -610,8 +631,7 @@ object StreamQueries {
         restarts = restarts)(
       _.groupByKey(r => s"${r.group}|${r.bucket}")
         .transformWithState(new StatefulOps.SplitDistinctProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
+          TimeMode.None(), OutputMode.Update()).toDF())
     sink.groupBy($"key".as("g"))
       .agg(sum(when(col("kind") === Changelog.Insert ||
           col("kind") === Changelog.UpdateAfter, $"value")
@@ -638,16 +658,12 @@ object StreamQueries {
       c: StreamFuzzGen.JoinCase,
       restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
-    val rows = t(s, dir, "events")
-      .select(expr(s"CAST(${c.keySql} AS STRING)").as("k"), col("event_id"),
-        expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)")
-          .as("cents"),
-        expr(c.leftFilterSql).as("lf"), expr(c.rightFilterSql).as("rf"))
-      // rows failing both side filters never replay — push the subset
-      // predicate into the scan instead of shipping them to the driver
-      .filter(col("lf") || col("rf"))
-      .as[(String, Long, Long, Boolean, Boolean)].collect().toSeq
-      .sortBy(_._2)
+    // rows failing both side filters never replay — the stage's filter
+    // pushes the subset predicate into the scan
+    val rows = eventsInput[(String, Long, Long, Boolean, Boolean)](s, dir,
+      s"(${c.leftFilterSql}) OR (${c.rightFilterSql})", strCol(c.keySql, "k"),
+      col("event_id"), centsCol,
+      expr(c.leftFilterSql).as("lf"), expr(c.rightFilterSql).as("rf"))
     val lefts = rows.collect {
       case (k, id, cents, lf, _) if id % 2 == 0 && lf => (k, id, cents) }
     val rights = rows.collect {
@@ -667,8 +683,7 @@ object StreamQueries {
           chunks(inserts, 2) ++ Seq(deletes).filter(_.nonEmpty),
           restarts = restarts)(_.groupByKey(_.key)
         .transformWithState(new SemiAntiProcessor(c.joinType == "semi"),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
+          TimeMode.None(), OutputMode.Update()).toDF())
       foldChangelog(sink, "kind")
         .select($"key".as("k"), $"id".as("l_id"))
     } else {
@@ -713,15 +728,12 @@ object StreamQueries {
   private def sideSplitInput(s: SparkSession, dir: String, keySql: String,
       leftFilterSql: String, rightFilterSql: String): Seq[IvEnv] = {
     import s.implicits._
-    t(s, dir, "events")
-      .select(expr(s"CAST($keySql AS STRING)").as("k"),
-        col("event_id"), col("ts").cast("timestamp").as("ts"),
+    // rows failing both side filters never replay — the stage's filter
+    // pushes the subset predicate into the scan
+    eventsInput[(String, Long, java.sql.Timestamp, Boolean, Boolean)](s, dir,
+        s"($leftFilterSql) OR ($rightFilterSql)", strCol(keySql, "k"),
+        col("event_id"), tsCol,
         expr(leftFilterSql).as("lf"), expr(rightFilterSql).as("rf"))
-      // rows failing both side filters never replay — push the subset
-      // predicate into the scan instead of shipping them to the driver
-      .filter(col("lf") || col("rf"))
-      .as[(String, Long, java.sql.Timestamp, Boolean, Boolean)]
-      .collect().toSeq.sortBy(t => (micros(t._3), t._2))
       .collect {
         case (k, id, ts, lf, _) if id % 2 == 0 && lf =>
           IvEnv(k, isLeft = true, id, ts)
@@ -826,14 +838,9 @@ object StreamQueries {
       restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
     implicit val outEnc = Encoders.product[ProcessOps.OverOut]
-    val rows = t(s, dir, "events")
-      .filter(expr(filterSql))
-      .select(expr(s"CAST($keySql AS STRING)").as("k"),
-        col("ts").cast("timestamp").as("ts"), col("event_id"),
-        expr(s"CAST($valueSql AS BIGINT)").as("v"))
-      .as[(String, java.sql.Timestamp, Long, Long)]
-      .collect().toSeq.sortBy(t => (micros(t._2), t._3))
-      .map { case (k, ts, _, v) => ProcessOps.TimedIn(k, ts, v) }
+    val rows = eventsInput[ProcessOps.TimedIn](s, dir, filterSql,
+      strCol(keySql, "key"), col("ts").cast("timestamp").as("eventTime"),
+      longCol(valueSql, "v"))
     // a degenerate seed whose filter keeps no rows is vacuously correct
     // (the oracle is empty too) — don't let rows.last throw
     if (rows.isEmpty)
@@ -841,45 +848,43 @@ object StreamQueries {
         .select(lit("").as("k"), lit(0L).as("ts_ms"), lit(0L).as("v"),
           lit(0L).as("moving_sum"), lit(0L).as("n"))
     val flushKey = "\u0000flush"
-    val sentinel = ProcessOps.TimedIn(flushKey,
-      new java.sql.Timestamp(rows.last.eventTime.getTime + 10L * 86400000L),
-      0L)
+    val sentinel =
+      ProcessOps.TimedIn(flushKey, farFuture(rows.last.eventTime.getTime), 0L)
     replay(s, chunks(rows, 2) :+ Seq(sentinel), mode = "append",
         restarts = restarts)(_.withWatermark("eventTime", "1 hour")
       .groupByKey(_.key)
       .transformWithState(proc,
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        org.apache.spark.sql.streaming.OutputMode.Append()).toDF())
+        TimeMode.EventTime(), OutputMode.Append()).toDF())
       .filter($"key" =!= flushKey)
       .select($"key".as("k"), $"ts".as("ts_ms"), $"v",
         $"movingSum".as("moving_sum"), $"n")
   }
 
-  /** Shared input extraction for the THREE temporal replays (typed,
-    * Row, static-dim): the case's (key, ts, event_id, cents, probe-arm,
-    * version-arm) rows sorted by (micro-ts, id), plus the far-future
-    * flush-probe sentinel (probeId = -1; NUL-prefixed key, disjoint from
-    * every CAST/CONCAT key the generator can produce). One extraction
-    * keeps the triple-path assertion honest: all routes replay literally
-    * the same input.
+  /** Shared input for the THREE temporal replays (typed, Row,
+    * static-dim): the case's probe and version envelopes in (micro-ts,
+    * id) order, plus the far-future flush-probe sentinel (probeId = -1;
+    * NUL-prefixed key, disjoint from every CAST/CONCAT key the generator
+    * can produce). One input keeps the triple-path assertion honest: all
+    * routes replay literally the same envelopes.
     */
   private def temporalCaseInput(s: SparkSession, dir: String,
-      c: StreamFuzzGen.TemporalCase)
-      : (Seq[(String, java.sql.Timestamp, Long, Long, Boolean, Boolean)],
-         graft.streaming.TemporalJoin.TemporalEvent) = {
+      c: StreamFuzzGen.TemporalCase): (Seq[TemporalEvent], TemporalEvent) = {
     import s.implicits._
-    val rows = t(s, dir, "events")
-      .select(expr(s"CAST(${c.keySql} AS STRING)").as("k"),
-        col("ts").cast("timestamp").as("ts"), col("event_id"),
-        expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)")
-          .as("cents"),
-        expr(c.probeFilterSql).as("pf"), expr(c.versionFilterSql).as("vf"))
-      .as[(String, java.sql.Timestamp, Long, Long, Boolean, Boolean)]
-      .collect().toSeq.sortBy(t => (micros(t._2), t._3))
-    val sentinel = graft.streaming.TemporalJoin.TemporalEvent("\u0000flush",
-      new java.sql.Timestamp(rows.last._2.getTime + 10L * 86400000L),
-      isProbe = true, -1L, 0L)
-    (rows, sentinel)
+    val rows =
+      eventsInput[(String, java.sql.Timestamp, Long, Long, Boolean, Boolean)](
+        s, dir, "true", strCol(c.keySql, "k"), tsCol, col("event_id"),
+        centsCol, expr(c.probeFilterSql).as("pf"),
+        expr(c.versionFilterSql).as("vf"))
+    val envs = rows.flatMap { case (k, ts, id, cents, pf, vf) =>
+      // a row matching both arms is BOTH a probe and a version (two
+      // envelopes, version first so same-position iteration order is
+      // deterministic; resolution is watermark-driven either way)
+      (if (vf) Seq(TemporalEvent(k, ts, isProbe = false, id, cents)) else Nil) ++
+      (if (pf) Seq(TemporalEvent(k, ts, isProbe = true, id, 0L)) else Nil)
+    }
+    val sentinel = TemporalEvent("\u0000flush",
+      farFuture(rows.last._2.getTime), isProbe = true, -1L, 0L)
+    (envs, sentinel)
   }
 
   /** MemoryStream replay for a [[StreamFuzzGen.TemporalCase]]: probe and
@@ -896,24 +901,13 @@ object StreamQueries {
       c: StreamFuzzGen.TemporalCase,
       restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
-    import graft.streaming.TemporalJoin
     implicit val outEnc = Encoders.product[TemporalJoin.AsOfMatch]
-    val (rows, sentinel) = temporalCaseInput(s, dir, c)
-    val envs = rows.flatMap { case (k, ts, id, cents, pf, vf) =>
-      // a row matching both arms is BOTH a probe and a version (two
-      // envelopes, version first so same-position iteration order is
-      // deterministic; resolution is watermark-driven either way)
-      (if (vf) Seq(TemporalJoin.TemporalEvent(k, ts, isProbe = false, id, cents))
-       else Nil) ++
-      (if (pf) Seq(TemporalJoin.TemporalEvent(k, ts, isProbe = true, id, 0L))
-       else Nil)
-    }
+    val (envs, sentinel) = temporalCaseInput(s, dir, c)
     replay(s, chunks(envs, 3) :+ Seq(sentinel), mode = "append",
         restarts = restarts)(_.withWatermark("eventTime", "1 hour")
       .groupByKey(_.key)
       .transformWithState(new TemporalJoin.TemporalJoinProcessor(),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        org.apache.spark.sql.streaming.OutputMode.Append()).toDF())
+        TimeMode.EventTime(), OutputMode.Append()).toDF())
       .filter($"probeId" >= 0)
       .select($"key".as("k"), $"probeId".as("probe_id"),
         $"versionTs".as("v_ts"), $"value".as("v_cents"))
@@ -930,14 +924,7 @@ object StreamQueries {
   private[queries] def streamTemporalFuzzReplayRow(s: SparkSession,
       dir: String, c: StreamFuzzGen.TemporalCase): DataFrame = {
     import s.implicits._
-    import graft.streaming.TemporalJoin
-    val (rows, sentinel) = temporalCaseInput(s, dir, c)
-    val envs = rows.flatMap { case (k, ts, id, cents, pf, vf) =>
-      (if (vf) Seq(TemporalJoin.TemporalEvent(k, ts, isProbe = false, id, cents))
-       else Nil) ++
-      (if (pf) Seq(TemporalJoin.TemporalEvent(k, ts, isProbe = true, id, 0L))
-       else Nil)
-    }
+    val (envs, sentinel) = temporalCaseInput(s, dir, c)
     replay(s, chunks(envs, 3) :+ Seq(sentinel), mode = "append") { ds =>
       val probeSide = ds.filter(_.isProbe)
         .select($"key".as("k"), $"eventTime".as("ts"),
@@ -966,18 +953,12 @@ object StreamQueries {
   private[queries] def streamTemporalFuzzReplayStatic(s: SparkSession,
       dir: String, c: StreamFuzzGen.TemporalCase): DataFrame = {
     import s.implicits._
-    import graft.streaming.TemporalJoin
-    val (rows, sentinel) = temporalCaseInput(s, dir, c)
-    val probes = rows.collect { case (k, ts, id, _, true, _) =>
-      TemporalJoin.TemporalEvent(k, ts, isProbe = true, id, 0L) }
+    val (envs, sentinel) = temporalCaseInput(s, dir, c)
+    val (probes, versions) = envs.partition(_.isProbe)
     // dim contract: one version per (key, ms) — latest (micro-ts, id)
-    val versions = rows.collect { case (k, ts, id, cents, _, true) =>
-      (k, ts, id, cents) }
-      .groupBy { case (k, ts, _, _) => (k, ts.getTime) }
-      .values.map(_.maxBy { case (_, ts, id, _) => (micros(ts), id) })
-      .toSeq
-    val versionsDf = versions
-      .map { case (k, ts, _, cents) => (k, ts, ts.getTime, cents) }
+    val versionsDf = versions.groupBy(v => (v.key, v.eventTime.getTime))
+      .values.map(_.maxBy(v => (micros(v.eventTime), v.probeId))).toSeq
+      .map(v => (v.key, v.eventTime, v.eventTime.getTime, v.value))
       .toDF("k", "ts", "vms", "cents")
     replay(s, chunks(probes, 3) :+ Seq(sentinel), mode = "append")(in =>
       TemporalJoin.asOfStreamStatic(
@@ -1004,27 +985,20 @@ object StreamQueries {
       dir: String, c: StreamFuzzGen.LatenessCase,
       restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
-    val rows = t(s, dir, "events")
-      .filter(expr(c.filterSql))
-      .select(col("event_type"), col("ts").cast("timestamp").as("ts"),
-        col("event_id"))
-      .as[(String, java.sql.Timestamp, Long)]
-      .collect().toSeq.sortBy(t => (micros(t._2), t._3))
-    if (rows.isEmpty)
+    val ins = eventsInput[AllowedLateness.LWIn](s, dir, c.filterSql,
+      col("event_type").as("etype"),
+      col("ts").cast("timestamp").as("eventTime"), col("event_id").as("id"))
+    if (ins.isEmpty)
       return s.emptyDataFrame.select(lit(false).as("late"),
         lit("").as("event_type"), lit(0L).as("ws_ms"), lit(0L).as("n"),
         lit(0L).as("id"))
-    val ins = rows.map { case (ty, ts, id) =>
-      AllowedLateness.LWIn(ty, ts, id) }
-    val mMs = rows.last._2.getTime
-    val resend = rows.collect {
-      case (ty, ts, id)
-          if id % c.reMod == c.reRes &&
-            ts.getTime >= mMs - c.delayMs + 1000L =>
-        AllowedLateness.LWIn(ty, ts, id + c.idOff)
+    val mMs = ins.last.eventTime.getTime
+    val resend = ins.collect {
+      case r if r.id % c.reMod == c.reRes &&
+          r.eventTime.getTime >= mMs - c.delayMs + 1000L =>
+        r.copy(id = r.id + c.idOff)
     }
-    val sentinel = Seq(AllowedLateness.LWIn("\u0000flush",
-      new java.sql.Timestamp(mMs + 10L * 86400000L), 0L))
+    val sentinel = Seq(AllowedLateness.LWIn("\u0000flush", farFuture(mMs), 0L))
     val sink = replay(s,
         chunks(ins, 3) ++ Seq(resend).filter(_.nonEmpty) :+ sentinel,
         restarts = restarts)(in => AllowedLateness.tumbleCounts(
@@ -1036,9 +1010,27 @@ object StreamQueries {
         $"n", $"id")
   }
 
+  /** The stamped-clock tumble replay of the idleness/alignment rows:
+    * the fetch `rounds`, one round carrying a far-future "sentinel" row to
+    * each `flushed` source and one empty round are stamped with the
+    * combined watermark ([[WatermarkMux.stamp]]) and counted per tumbling
+    * window; the sentinel's own counts drop.
+    */
+  private def stampedTumbleReplay(s: SparkSession,
+      rounds: Seq[Seq[(Int, (String, Long))]], flushed: Seq[Int],
+      lastMs: Long, delayMs: Long, idleTimeoutRounds: Int,
+      windowMs: Long): DataFrame = {
+    import s.implicits._
+    val sentinel = flushed.map(j => (j, ("sentinel", lastMs + FarFutureMs)))
+    replay(s, WatermarkMux.stamp(rounds ++ Seq(sentinel, Nil), delayMs,
+        idleTimeoutRounds), mode = "append")(
+      WatermarkMux.idleTumbleCounts(_, windowMs))
+      .filter(col("etype") =!= "sentinel")
+  }
+
   /** MemoryStream replay for a [[StreamFuzzGen.IdleCase]]: the sent
     * rows (stalled sources truncated at their cutoffs) replay in equal
-    * TIME-SLICE rounds through [[graft.streaming.WatermarkMux.stamp]] —
+    * TIME-SLICE rounds through [[WatermarkMux.stamp]] —
     * the combined idleness-aware clock — into the stamped-clock tumble
     * operator; the closing sentinel goes only to UNSTALLED sources, so
     * the tail windows close only if idle marking actually released the
@@ -1064,25 +1056,17 @@ object StreamQueries {
       rows.filter(e => sent(e) && sliceOf(e) == r)
         .map(e => (srcOf(e), (e.event_type, e.ts.getTime)))
     }
-    val sentinelTs = rows.last.ts.getTime + 10L * 86400000L
-    val sentinelRound = c.cutoffs.zipWithIndex.collect {
-      case (None, j) => (j, ("sentinel", sentinelTs)) }
-    val allRounds = rounds ++ Seq(sentinelRound,
-      Seq.empty[(Int, (String, Long))])
-    replay(s,
-        graft.streaming.WatermarkMux.stamp(allRounds,
-          delayMs = c.delayMinutes * 60000L,
-          idleTimeoutRounds = c.idleTimeoutRounds),
-        mode = "append")(graft.streaming.WatermarkMux.idleTumbleCounts(_,
-      windowMs = c.winMinutes * 60000L))
-      .filter($"etype" =!= "sentinel")
+    stampedTumbleReplay(s, rounds,
+        c.cutoffs.zipWithIndex.collect { case (None, j) => j },
+        rows.last.ts.getTime, delayMs = c.delayMinutes * 60000L,
+        idleTimeoutRounds = c.idleTimeoutRounds, c.winMinutes * 60000L)
       .select(($"ws" * 1000L).as("ws_us"), $"etype".as("event_type"), $"n")
       .orderBy($"ws_us", $"event_type")
   }
 
   /** MemoryStream replay for a [[StreamFuzzGen.WmAlignCase]]: the
     * unbalanced split drains through
-    * [[graft.streaming.WatermarkMux.alignRounds]] under the case's
+    * [[WatermarkMux.alignRounds]] under the case's
     * drift cap and round size, then replays through the stamped-clock
     * tumble operator (no idleness — alignment only paces). The folded
     * counts must equal the full tumble restatement: pausing may reorder
@@ -1097,21 +1081,13 @@ object StreamQueries {
     val slow = rows.filter(e => Math.floorMod(e.user_id, c.mod.toLong) != 0L)
       .map(e => (e.event_type, e.ts.getTime)).toVector
     val spanMs = (rows.last.ts.getTime - rows.head.ts.getTime).max(1L)
-    val rounds = graft.streaming.WatermarkMux.alignRounds(
+    val rounds = WatermarkMux.alignRounds(
       Map(0 -> fast, 1 -> slow), (r: (String, Long)) => r._2,
       maxDriftMs = spanMs / c.driftDiv,
       rowsPerRound =
         (math.min(fast.size, slow.size) / c.roundsDiv).max(1))
-    val sentinelTs = rows.last.ts.getTime + 10L * 86400000L
-    val allRounds = rounds ++ Seq(
-      Seq((0, ("sentinel", sentinelTs)), (1, ("sentinel", sentinelTs))),
-      Seq.empty[(Int, (String, Long))])
-    replay(s,
-        graft.streaming.WatermarkMux.stamp(allRounds, delayMs = 0L,
-          idleTimeoutRounds = 1000000),
-        mode = "append")(graft.streaming.WatermarkMux.idleTumbleCounts(_,
-      windowMs = c.winMinutes * 60000L))
-      .filter($"etype" =!= "sentinel")
+    stampedTumbleReplay(s, rounds, Seq(0, 1), rows.last.ts.getTime,
+        delayMs = 0L, idleTimeoutRounds = 1000000, c.winMinutes * 60000L)
       .select(($"ws" * 1000L).as("ws_us"), $"etype".as("event_type"), $"n")
       .orderBy($"ws_us", $"event_type")
   }
@@ -1131,16 +1107,11 @@ object StreamQueries {
   private[queries] def streamCoGroupFuzzReplay(s: SparkSession,
       dir: String, c: StreamFuzzGen.CoGroupCase): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
-    val rows = t(s, dir, "events")
-      .select(expr(s"CAST(${c.keySql} AS STRING)").as("k"), col("event_id"),
-        col("ts").cast("timestamp").as("ts"),
-        expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)")
-          .as("cents"),
-        expr(c.leftFilterSql).as("lf"), expr(c.rightFilterSql).as("rf"))
-      .filter(col("lf") || col("rf"))
-      .as[(String, Long, java.sql.Timestamp, Long, Boolean, Boolean)]
-      .collect().toSeq.sortBy(t => (micros(t._3), t._2))
+    val rows =
+      eventsInput[(String, Long, java.sql.Timestamp, Long, Boolean, Boolean)](
+          s, dir, s"(${c.leftFilterSql}) OR (${c.rightFilterSql})",
+          strCol(c.keySql, "k"), col("event_id"), tsCol, centsCol,
+          expr(c.leftFilterSql).as("lf"), expr(c.rightFilterSql).as("rf"))
       .collect {
         case (k, id, ts, cents, lf, _) if id % 2 == 0 && lf =>
           CgEnv(k, isLeft = true, ts, id, cents)
@@ -1153,22 +1124,18 @@ object StreamQueries {
         lit("").as("k"), lit(0L).as("l_n"), lit(0L).as("r_n"),
         lit(0L).as("l_cents"), lit(0L).as("r_max_id"))
     val sentinel = CgEnv("\u0000flush", isLeft = true,
-      new java.sql.Timestamp(rows.last.ts.getTime + 10L * 86400000L),
-      -1L, 0L)
+      farFuture(rows.last.ts.getTime), -1L, 0L)
     val outSchema = StructType(Seq(
       StructField("window_start", TimestampType),
       StructField("k", StringType),
       StructField("l_n", LongType), StructField("r_n", LongType),
       StructField("l_cents", LongType), StructField("r_max_id", LongType)))
-    val fn = (key: String, winStart: Long,
-        ls: Seq[org.apache.spark.sql.Row],
-        rs: Seq[org.apache.spark.sql.Row]) =>
-      Iterator.single(
-        new org.apache.spark.sql.catalyst.expressions.GenericRow(Array[Any](
-          new java.sql.Timestamp(winStart), key,
-          ls.length.toLong, rs.length.toLong,
-          ls.map(_.getAs[Long]("cents")).sum,
-          if (rs.isEmpty) -1L else rs.map(_.getAs[Long]("id")).max)))
+    val fn = (key: String, winStart: Long, ls: Seq[Row], rs: Seq[Row]) =>
+      Iterator.single(new GenericRow(Array[Any](
+        new java.sql.Timestamp(winStart), key,
+        ls.length.toLong, rs.length.toLong,
+        ls.map(_.getAs[Long]("cents")).sum,
+        if (rs.isEmpty) -1L else rs.map(_.getAs[Long]("id")).max)))
     replay(s, chunks(rows, 2) :+ Seq(sentinel), mode = "append") { ev =>
       val lhs = ev.filter(_.isLeft).toDF()
         .select($"k", $"ts", $"id", $"cents")
@@ -1207,17 +1174,11 @@ object StreamQueries {
   private[queries] def streamPtJoinFuzzReplay(s: SparkSession, dir: String,
       c: StreamFuzzGen.PtJoinCase): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val rows = t(s, dir, "events")
-      .select(expr(s"CAST(${c.keySql} AS STRING)").as("k"),
-        col("ts").cast("timestamp").as("ts"), col("event_id"),
-        expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)")
-          .as("cents"),
-        expr(c.probeFilterSql).as("pf"), expr(c.versionFilterSql).as("vf"))
-      .filter(col("pf") || col("vf"))
-      .as[(String, java.sql.Timestamp, Long, Long, Boolean, Boolean)]
-      .collect().toSeq.sortBy(t => (micros(t._2), t._3))
-    val envs = rows.flatMap { case (k, _, id, cents, pf, vf) =>
+    val rows = eventsInput[(String, Long, Long, Boolean, Boolean)](s, dir,
+      s"(${c.probeFilterSql}) OR (${c.versionFilterSql})",
+      strCol(c.keySql, "k"), col("event_id"), centsCol,
+      expr(c.probeFilterSql).as("pf"), expr(c.versionFilterSql).as("vf"))
+    val envs = rows.flatMap { case (k, id, cents, pf, vf) =>
       (if (vf) Seq(PtEnv(k, isProbe = false,
         if (id % c.delMod == c.delRes) Changelog.Delete else Changelog.Insert,
         -1L, id, cents)) else Nil) ++
@@ -1256,16 +1217,11 @@ object StreamQueries {
     import graft.streaming.ConnectedStreams
     implicit val envEnc = Encoders.product[ConnectedStreams.RuleEnv]
     implicit val outEnc = Encoders.product[ConnectedStreams.RuleMatch]
-    val rows = t(s, dir, "events")
-      .select(expr(s"CAST(${c.keySql} AS STRING)").as("k"),
-        col("ts").cast("timestamp").as("ts"), col("event_id"),
-        expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)")
-          .as("cents"),
-        expr(c.ctrlFilterSql).as("cf"), expr(c.dataFilterSql).as("df"))
-      .filter(col("cf") || col("df"))
-      .as[(String, java.sql.Timestamp, Long, Long, Boolean, Boolean)]
-      .collect().toSeq.sortBy(t => (micros(t._2), t._3))
-    val envs = rows.flatMap { case (k, _, id, cents, cf, df) =>
+    val rows = eventsInput[(String, Long, Long, Boolean, Boolean)](s, dir,
+      s"(${c.ctrlFilterSql}) OR (${c.dataFilterSql})",
+      strCol(c.keySql, "k"), col("event_id"), centsCol,
+      expr(c.ctrlFilterSql).as("cf"), expr(c.dataFilterSql).as("df"))
+    val envs = rows.flatMap { case (k, id, cents, cf, df) =>
       (if (cf) Seq(ConnectedStreams.RuleEnv(k, isCtrl = true,
         s"r${id % c.nRules}", isDel = id % c.delMod == c.delRes,
         version = id, thrCents = (1 + id % 9) * 2500L,
@@ -1277,8 +1233,7 @@ object StreamQueries {
     replay(s, chunks(envs, 3), mode = "append", restarts = restarts)(
       _.groupByKey(_.key)
         .transformWithState(new ConnectedStreams.BroadcastRulesProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Append()).toDF())
+          TimeMode.None(), OutputMode.Append()).toDF())
       .select($"k", $"data_id", $"rule_name", $"version", $"thr_cents")
   }
 
@@ -1305,11 +1260,8 @@ object StreamQueries {
     implicit val stampEnc =
       Encoders.product[graft.streaming.TemporalSort.SeqStamped]
     val quantMs = c.quantMinutes * 60000L
-    val rows = t(s, dir, "events").filter(expr(c.filterSql))
-      .select(expr(s"CAST(${c.keySql} AS STRING)").as("k"),
-        col("ts").cast("timestamp").as("ts"), col("event_id"))
-      .as[(String, java.sql.Timestamp, Long)]
-      .collect().toSeq.sortBy(t => (micros(t._2), t._3))
+    val rows = eventsInput[(String, java.sql.Timestamp, Long)](s, dir,
+        c.filterSql, strCol(c.keySql, "k"), tsCol, col("event_id"))
       .map { case (k, ts, id) =>
         TsRow(k, new java.sql.Timestamp(
           ts.getTime - Math.floorMod(ts.getTime, quantMs)), id)
@@ -1327,8 +1279,7 @@ object StreamQueries {
         .groupByKey(_.k)
         .transformWithState(
           new graft.streaming.TemporalSort.SeqStampProcessor[TsRow](_.id),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update()).toDF()
+          TimeMode.None(), OutputMode.Update()).toDF()
     }
       .filter($"k" =!= "\u0000flush")
       .select($"k", $"id", $"seq")
@@ -1349,12 +1300,9 @@ object StreamQueries {
     import s.implicits._
     implicit val chEnc =
       Encoders.product[StatefulOps.Change[String, StatefulOps.Ranked]]
-    val rows = t(s, dir, "events").filter(expr(c.filterSql))
-      .select(expr(s"CAST(${c.keySql} AS STRING)").as("k"),
-        col("ts").cast("timestamp").as("ts"), col("event_id"),
-        expr(s"CAST(${c.sortSql} AS BIGINT)").as("srt"))
-      .as[(String, java.sql.Timestamp, Long, Long)]
-      .collect().toSeq.sortBy(t => (micros(t._2), t._3))
+    val rows = eventsInput[(String, java.sql.Timestamp, Long, Long)](s, dir,
+        c.filterSql, strCol(c.keySql, "k"), tsCol, col("event_id"),
+        longCol(c.sortSql, "srt"))
       .map { case (k, ts, id, srt) =>
         StatefulOps.Ranked(k, id,
           if (c.arm == "top1") srt else micros(ts))
@@ -1364,8 +1312,7 @@ object StreamQueries {
         .transformWithState(
           if (c.arm == "top1") new StatefulOps.FastTop1Processor
           else new StatefulOps.AppendOnlyFirstNProcessor(c.n),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
+          TimeMode.None(), OutputMode.Update()).toDF())
     foldChangelog(sink, "kind")
       .select($"value.key".as("k"), $"value.id".as("id"),
         $"value.sort".as("srt"))
@@ -1383,75 +1330,65 @@ object StreamQueries {
   private[queries] def streamCountWinFuzzReplay(s: SparkSession,
       dir: String, c: WindowFuzzGen.CountWinCase): DataFrame = {
     import s.implicits._
-    implicit val chEnc = Encoders.product[StatefulOps.Change[String, Long]]
-    val rows = t(s, dir, "events")
-      .filter(expr(c.filterSql))
-      .select(expr(s"CAST(${c.keySql} AS STRING)").as("k"),
-        col("ts").cast("timestamp").as("ts"), col("event_id"),
-        expr(s"CAST(${c.valueSql} AS BIGINT)").as("v"))
-      .as[(String, java.sql.Timestamp, Long, Long)]
-      .collect().toSeq.sortBy(t => (micros(t._2), t._3))
-      .map { case (k, _, _, v) => StatefulOps.Change(Changelog.Insert, k, v) }
+    val rows = eventsInput[StatefulOps.Change[String, Long]](s, dir,
+      c.filterSql, lit(Changelog.Insert).as("kind"), strCol(c.keySql, "key"),
+      longCol(c.valueSql, "value"))
+    countReplay(s, rows, c.size, if (c.sliding) Some(c.slide) else None)
+      .select($"key".as("k"), col(if (c.sliding) "fire_id" else "window_id"),
+        $"sum".as("sum_v"), $"n")
+  }
+
+  /** The one count-window replay: prepared Insert rows stream per key
+    * through the tumbling [[StatefulOps.CountWindowProcessor]] (`slide`
+    * None: every FULL window of `size` rows emits its value sum, partial
+    * tails stay pending) or the sliding [[StatefulOps.CountSlideProcessor]]
+    * (fires at every `slide`-th row over the trailing `size`). Output
+    * columns: key, window_id (tumbling) or fire_id (sliding), sum, n.
+    */
+  private def countReplay(s: SparkSession,
+      rows: Seq[StatefulOps.Change[String, Long]], size: Int,
+      slide: Option[Int]): DataFrame = {
+    import s.implicits._
     replay(s, chunks(rows, 2)) { in =>
-      if (!c.sliding)
-        in.groupByKey(_.key)
-          .transformWithState(new StatefulOps.CountWindowProcessor(c.size),
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-          .toDF().select($"key".as("k"), $"windowId".as("window_id"),
-            $"sum".as("sum_v"), $"n")
-      else
-        in.groupByKey(_.key)
-          .transformWithState(
-            new StatefulOps.CountSlideProcessor(c.size, c.slide),
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-          .toDF().select($"key".as("k"), $"fireId".as("fire_id"),
-            $"sum".as("sum_v"), $"n")
+      val keyed = in.groupByKey(_.key)
+      slide match {
+        case None => keyed
+          .transformWithState(new StatefulOps.CountWindowProcessor(size),
+            TimeMode.None(), OutputMode.Update())
+          .toDF().withColumnRenamed("windowId", "window_id")
+        case Some(sl) => keyed
+          .transformWithState(new StatefulOps.CountSlideProcessor(size, sl),
+            TimeMode.None(), OutputMode.Update())
+          .toDF().withColumnRenamed("fireId", "fire_id")
+      }
     }
   }
 
-  /** Streaming count-window replay (IntegrationQueries.q_stream_countwin
-    * lives in that module's inventory; the harness internals live here):
-    * events stream per user in (event-time, id) order, every full window
-    * of `size` rows emits its event-id sum — partial tails stay pending
-    * in state, exactly the reference's countWindow(size) contract.
-    */
-  private[queries] def countWindowReplay(s: SparkSession, dir: String,
-      size: Int): DataFrame = {
-    import s.implicits._
-    implicit val chEnc =
-      Encoders.product[StatefulOps.Change[String, Long]]
-    val rows = sortedEvents(s, dir).filter(_.user_id % 3 == 0).map(e =>
-      StatefulOps.Change(Changelog.Insert, e.user_id.toString, e.event_id))
-    val sink = replay(s, chunks(rows, 2))(_.groupByKey(_.key)
-      .transformWithState(new StatefulOps.CountWindowProcessor(size),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
-    sink.select($"key", $"windowId".as("window_id"),
-        $"sum".as("sum_ids"), $"n")
-      .orderBy($"key", $"window_id")
-  }
-
-  /** Sliding-count-window replay (IntegrationQueries.q_stream_countslide):
-    * every `slide`-th row per user emits the event-id sum over the last
-    * `size` rows — KeyedStream.countWindow(size, slide) semantics, the
+  /** Streaming count-window replays (IntegrationQueries.q_stream_countwin
+    * and q_stream_countslide live in that module's inventory; the
+    * harness internals live here): a deterministic third of the users,
+    * each event an Insert of its id under its user key, in (event-time,
+    * id) order. countWindow(size) emits every full window's event-id sum
+    * per user, partial tails pending in state; countWindow(size, slide)
+    * emits every `slide`-th row's sum over the last `size` rows — the
     * CountEvictor's trailing retention made oracle-visible.
     */
+  private[queries] def countWindowReplay(s: SparkSession, dir: String,
+      size: Int): DataFrame = userCountReplay(s, dir, size, None)
+
   private[queries] def countSlideReplay(s: SparkSession, dir: String,
-      size: Int, slide: Int): DataFrame = {
+      size: Int, slide: Int): DataFrame =
+    userCountReplay(s, dir, size, Some(slide))
+
+  private def userCountReplay(s: SparkSession, dir: String, size: Int,
+      slide: Option[Int]): DataFrame = {
     import s.implicits._
-    implicit val chEnc =
-      Encoders.product[StatefulOps.Change[String, Long]]
-    val rows = sortedEvents(s, dir).filter(_.user_id % 3 == 0).map(e =>
-      StatefulOps.Change(Changelog.Insert, e.user_id.toString, e.event_id))
-    val sink = replay(s, chunks(rows, 2))(_.groupByKey(_.key)
-      .transformWithState(new StatefulOps.CountSlideProcessor(size, slide),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
-    sink.select($"key", $"fireId".as("fire_id"),
-        $"sum".as("sum_ids"), $"n")
-      .orderBy($"key", $"fire_id")
+    val id = if (slide.isEmpty) "window_id" else "fire_id"
+    countReplay(s, sortedEvents(s, dir).filter(_.user_id % 3 == 0).map(e =>
+        StatefulOps.Change(Changelog.Insert, e.user_id.toString, e.event_id)),
+        size, slide)
+      .select($"key", col(id), $"sum".as("sum_ids"), $"n")
+      .orderBy($"key", col(id))
   }
 
   /** Temporal-sort replay with a chained order auditor
@@ -1482,8 +1419,7 @@ object StreamQueries {
         .transformWithState(
           new graft.streaming.TemporalSort.OrderAuditProcessor[Ev](
             e => micros(e.ts)),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update()).toDF()
+          TimeMode.None(), OutputMode.Update()).toDF()
     }
     // n/violations are monotone per key → max = final state
     sink.filter($"key" =!= "-1")
@@ -1516,8 +1452,7 @@ object StreamQueries {
     }
     val sink = replay(s, controls +: chunks(data, 2))(_.groupByKey(_.key)
       .transformWithState(new ThresholdProcessor(defaultThreshold = 0L),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
+        TimeMode.None(), OutputMode.Update()).toDF())
     sink.select($"key", $"value", $"threshold")
       .orderBy($"key", $"value")
   }
@@ -1550,11 +1485,97 @@ object StreamQueries {
     }
     val sink = replay(s, chunks(inserts, 2) :+ deletes)(_.groupByKey(_.key)
       .transformWithState(new SemiAntiProcessor(semi),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
+        TimeMode.None(), OutputMode.Update()).toDF())
     foldChangelog(sink, "kind")
       .select($"key", $"id")
       .orderBy($"key", $"id")
+  }
+
+  /** q_stream_topn/groupagg/minibatch/minmax's input: a deterministic
+    * third of the events per type, (event_id, event_type).
+    */
+  private def idThirdByType(s: SparkSession, dir: String): Seq[(Long, String)] = {
+    import s.implicits._
+    eventsInput[(Long, String)](s, dir, "event_id % 3 = 0",
+      col("event_id"), col("event_type"))
+  }
+
+  /** The q_stream_groupagg (per-record) and q_stream_minibatch (one step
+    * per key per micro-batch) replay: per-type SUM/COUNT over the
+    * inserts, then a batch of DELETES (every event_id divisible by 5).
+    */
+  private def retractSumReplay(s: SparkSession, dir: String,
+      miniBatch: Boolean): DataFrame = {
+    import s.implicits._
+    implicit val chEnc = Encoders.product[StatefulOps.Change[String, Long]]
+    val evs = idThirdByType(s, dir)
+    val inserts = evs.map { case (id, tpe) =>
+      StatefulOps.Change(Changelog.Insert, tpe, id) }
+    val deletes = evs.collect { case (id, tpe) if id % 5 == 0 =>
+      StatefulOps.Change(Changelog.Delete, tpe, id) }
+    val sink = replay(s, chunks(inserts, 2) :+ deletes)(_.groupByKey(_.key)
+      .transformWithState(
+        new StatefulOps.RetractSumProcessor[String, Long](miniBatch),
+        TimeMode.None(), OutputMode.Update()).toDF())
+    foldChangelog(
+      sink.select($"kind", $"value.key".as("event_type"),
+        $"value.sum".as("sum_id"), $"value.count".as("n")), "kind")
+      .orderBy($"event_type")
+  }
+
+  /** Output of the hand coGroup rows (q_stream_cogroup/coslide/cosession):
+    * per fired (user, window), the click and purchase counts and the
+    * exact cents over both sides.
+    */
+  private val coGroupSchema = StructType(Seq(
+    StructField("window_start", TimestampType),
+    StructField("user_id", LongType),
+    StructField("n_clicks", LongType), StructField("n_purchases", LongType),
+    StructField("sum_cents", LongType)))
+
+  private def coGroupRow(windowStart: java.sql.Timestamp, user: Long,
+      clicks: Seq[Row], purchases: Seq[Row]): Iterator[Row] = {
+    // exact cents via the double's shortest decimal rendering — no double
+    // addition. The testdata invariant is exact-2dp values (the whole
+    // dec2() oracle convention rests on it); the HALF_UP is a never-crash
+    // guard for >2dp data
+    def cents(r: Row): Long =
+      (BigDecimal(java.lang.Double.toString(r.getAs[Double]("value")))
+        .setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100).toLongExact
+    Iterator.single(new GenericRow(Array[Any](windowStart, user,
+      clicks.length.toLong, purchases.length.toLong,
+      clicks.map(cents).sum + purchases.map(cents).sum)))
+  }
+
+  /** The hand coGroup rows' result: sentinel rows (user_id -1) dropped. */
+  private def coGroupResult(sink: DataFrame): DataFrame =
+    sink.filter(col("user_id") >= 0)
+      .select(col("window_start").cast("timestamp_ntz").as("window_start"),
+        col("user_id"), col("n_clicks"), col("n_purchases"), col("sum_cents"))
+      .orderBy(col("window_start"), col("user_id"))
+
+  /** q_stream_cogroup/coslide: the clicks and purchases of the users
+    * `keep` selects buffer per (user, window) under a `sizeMs`/`slideMs`
+    * assigner (slide = size is the tumbling one) and ONE callback sees
+    * both buffers when the watermark fires the window; a far-future
+    * click sentinel flushes the tail windows.
+    */
+  private def clickPurchaseCoGroup(s: SparkSession, dir: String,
+      keep: Long => Boolean, sizeMs: Long, slideMs: Long): DataFrame = {
+    import s.implicits._
+    val rows = sortedEvents(s, dir).filter(e =>
+      (e.event_type == "click" || e.event_type == "purchase") && keep(e.user_id))
+    val sentinel = Ev(-1L, -1L, farFuture(rows.last.ts.getTime), "click", 0.0)
+    coGroupResult(replay(s, chunks(rows, 2) :+ Seq(sentinel),
+        mode = "append") { ev =>
+      def side(tpe: String) =
+        ev.filter($"event_type" === tpe).select($"user_id", $"ts", $"value")
+      CoGroup.sliding(side("click"), side("purchase"), Seq("user_id"), "ts",
+        sizeMs, slideMs, "1 second",
+        (key, winStart, ls, rs) =>
+          coGroupRow(new java.sql.Timestamp(winStart), key.toLong, ls, rs),
+        coGroupSchema)
+    })
   }
 
   val queries: Map[String, QFn] = Map(
@@ -1590,9 +1611,8 @@ object StreamQueries {
       val lateAgain = rows.take(50).map(e =>
         e.copy(event_id = e.event_id + 9000000L))
       val maxTs = micros(rows.last.ts)
-      val sentinel = Ev(9999999L, 0L,
-        new java.sql.Timestamp(maxTs / 1000L + 10L * 86400 * 1000),
-        "sentinel", 0.0)
+      val sentinel =
+        Ev(9999999L, 0L, farFuture(maxTs / 1000L), "sentinel", 0.0)
       replay(s, chunks(rows, 3) ++ Seq(lateAgain, Seq(sentinel)),
           mode = "append")(_
         .withWatermark("ts", "1 second")
@@ -1629,18 +1649,14 @@ object StreamQueries {
     "q_stream_topn" -> ((s, dir) => {
       import s.implicits._
       implicit val chEnc = Encoders.product[RetractableTopN.TopNChange]
-      val evs = t(s, dir, "events")
-        .filter($"event_id" % 3 === 0) // deterministic third per type
-        .select($"event_id", $"event_type").as[(Long, String)]
-        .collect().toSeq.sortBy(_._1)
+      val evs = idThirdByType(s, dir)
       val inserts = evs.map { case (id, tpe) =>
         RetractableTopN.TopNChange(Changelog.Insert, tpe, id, id) }
       val deletes = evs.collect { case (id, tpe) if id % 7 == 0 =>
         RetractableTopN.TopNChange(Changelog.Delete, tpe, id, id) }
       val sink = replay(s, chunks(inserts, 2) :+ deletes)(_.groupByKey(_.key)
         .transformWithState(new RetractableTopN.RetractableTopNProcessor(3),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
+          TimeMode.None(), OutputMode.Update()).toDF())
       foldChangelog(sink, "kind")
         .select($"key".as("event_type"), $"id")
         .orderBy($"event_type", $"id")
@@ -1674,13 +1690,11 @@ object StreamQueries {
     // the batch ASOF oracle (same SQL as q_join_asof).
     "q_stream_asof" -> ((s, dir) => {
       import s.implicits._
-      val ev = t(s, dir, "events").filter($"user_id" % 2 === 0)
-      val probes = ev.filter($"event_type" === "purchase")
-        .select($"event_id".as("p_id"), $"user_id",
-          $"ts".cast("timestamp").as("ts"))
-        .as[(Long, Long, java.sql.Timestamp)]
-        .collect().toSeq.sortBy(p => (p._3.getTime, p._1))
-      val dim = ev.filter($"event_type" === "view")
+      val probes = eventsInput[(Long, Long, java.sql.Timestamp)](s, dir,
+        "user_id % 2 = 0 AND event_type = 'purchase'",
+        $"event_id".as("p_id"), $"user_id", tsCol)
+      val dim = t(s, dir, "events").filter($"user_id" % 2 === 0)
+        .filter($"event_type" === "view")
         .select($"event_id".as("v_id"), $"user_id",
           $"ts".cast("timestamp").as("ts"), $"value".as("v_value"))
       val maxTs = probes.map(_._3.getTime).max
@@ -1780,26 +1794,8 @@ object StreamQueries {
     // DELETES (every event_id divisible by 5). The emitted -U/+U
     // changelog folds to the aggregate over surviving rows only — the
     // retraction arithmetic is what's under the oracle gate.
-    "q_stream_groupagg" -> ((s, dir) => {
-      import s.implicits._
-      implicit val chEnc = Encoders.product[StatefulOps.Change[String, Long]]
-      val evs = t(s, dir, "events")
-        .filter($"event_id" % 3 === 0) // deterministic third per type
-        .select($"event_id", $"event_type").as[(Long, String)]
-        .collect().toSeq.sortBy(_._1)
-      val inserts = evs.map { case (id, tpe) =>
-        StatefulOps.Change(Changelog.Insert, tpe, id) }
-      val deletes = evs.collect { case (id, tpe) if id % 5 == 0 =>
-        StatefulOps.Change(Changelog.Delete, tpe, id) }
-      val sink = replay(s, chunks(inserts, 2) :+ deletes)(_.groupByKey(_.key)
-        .transformWithState(new StatefulOps.RetractSumProcessor[String, Long](),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
-      foldChangelog(
-        sink.select($"kind", $"value.key".as("event_type"),
-          $"value.sum".as("sum_id"), $"value.count".as("n")), "kind")
-        .orderBy($"event_type")
-    }),
+    "q_stream_groupagg" ->
+      ((s, dir) => retractSumReplay(s, dir, miniBatch = false)),
 
     // Retractable MAX (MaxWithRetractAggFunction parity): inserts replay,
     // then each type's 10 LARGEST event_ids retract — every delete hits
@@ -1809,10 +1805,7 @@ object StreamQueries {
     "q_stream_minmax" -> ((s, dir) => {
       import s.implicits._
       implicit val chEnc = Encoders.product[StatefulOps.Change[String, Long]]
-      val evs = t(s, dir, "events")
-        .filter($"event_id" % 3 === 0) // deterministic third per type
-        .select($"event_id", $"event_type").as[(Long, String)]
-        .collect().toSeq.sortBy(_._1)
+      val evs = idThirdByType(s, dir)
       val inserts = evs.map { case (id, tpe) =>
         StatefulOps.Change(Changelog.Insert, tpe, id) }
       // the 10 largest ids per type, retracted LARGEST FIRST so every
@@ -1824,8 +1817,7 @@ object StreamQueries {
       val sink = replay(s, chunks(inserts, 2) :+ deletes)(_.groupByKey(_.key)
         .transformWithState(
           new StatefulOps.RetractMinMaxProcessor[String, Long](isMax = true),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
+          TimeMode.None(), OutputMode.Update()).toDF())
       foldChangelog(
         sink.select($"kind", $"value.key".as("event_type"),
           $"value.extreme".as("max_id"), $"value.count".as("n")), "kind")
@@ -1837,27 +1829,8 @@ object StreamQueries {
     // step per key per micro-batch instead of per record — the folded
     // end state must still equal the per-record oracle exactly, while
     // the emission count collapses from O(records) to O(keys·batches).
-    "q_stream_minibatch" -> ((s, dir) => {
-      import s.implicits._
-      implicit val chEnc = Encoders.product[StatefulOps.Change[String, Long]]
-      val evs = t(s, dir, "events")
-        .filter($"event_id" % 3 === 0) // deterministic third per type
-        .select($"event_id", $"event_type").as[(Long, String)]
-        .collect().toSeq.sortBy(_._1)
-      val inserts = evs.map { case (id, tpe) =>
-        StatefulOps.Change(Changelog.Insert, tpe, id) }
-      val deletes = evs.collect { case (id, tpe) if id % 5 == 0 =>
-        StatefulOps.Change(Changelog.Delete, tpe, id) }
-      val sink = replay(s, chunks(inserts, 2) :+ deletes)(_.groupByKey(_.key)
-        .transformWithState(
-          new StatefulOps.RetractSumProcessor[String, Long](miniBatch = true),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
-      foldChangelog(
-        sink.select($"kind", $"value.key".as("event_type"),
-          $"value.sum".as("sum_id"), $"value.count".as("n")), "kind")
-        .orderBy($"event_type")
-    }),
+    "q_stream_minibatch" ->
+      ((s, dir) => retractSumReplay(s, dir, miniBatch = true)),
 
     // Streaming two-sided FULL OUTER join with retractions
     // (StreamingJoinOperator parity): purchases (left) and views (right)
@@ -1867,16 +1840,14 @@ object StreamQueries {
     // FULL OUTER JOIN over surviving rows.
     "q_stream_outer" -> ((s, dir) => {
       import s.implicits._
-      val ev = t(s, dir, "events")
-        .filter($"user_id" % 2 === 0) // deterministic half of the users
-        .select($"event_id", $"user_id", $"event_type", $"value")
-        .as[(Long, Long, String, Double)].collect().toSeq
-      def tagged(tpe: String, isLeft: Boolean, kind: Byte, keep: Long => Boolean) =
-        ev.collect { case (id, u, et, v) if et == tpe && keep(id) =>
-          (u, kind, isLeft, id, v) }.sortBy(_._4)
-      val inserts = (tagged("purchase", isLeft = true, Changelog.Insert, _ => true) ++
-        tagged("view", isLeft = false, Changelog.Insert, _ => true)).sortBy(_._4)
-      val deletes = tagged("view", isLeft = false, Changelog.Delete, _ % 3 == 0)
+      val ev = eventsInput[(Long, Long, String, Double)](s, dir,
+        "user_id % 2 = 0", // deterministic half of the users
+        $"event_id", $"user_id", $"event_type", $"value")
+      val inserts = ev.collect {
+        case (id, u, "purchase", v) => (u, Changelog.Insert, true, id, v)
+        case (id, u, "view", v) => (u, Changelog.Insert, false, id, v) }
+      val deletes = ev.collect { case (id, u, "view", v) if id % 3 == 0 =>
+        (u, Changelog.Delete, false, id, v) }
       val sink = replay(s, chunks(inserts, 2) :+ deletes) { ds =>
         val left = ds.filter(_._3).map(r => (r._1, r._2, (r._4, r._5)))
         val right = ds.filter(!_._3).map(r => (r._1, r._2, (r._4, r._5)))
@@ -1912,8 +1883,7 @@ object StreamQueries {
           .groupByKey(_.key)
           .transformWithState(
             new ProcessOps.UnboundedPrecedingOverProcessor(rangeMode = false),
-            org.apache.spark.sql.streaming.TimeMode.EventTime(),
-            org.apache.spark.sql.streaming.OutputMode.Append()).toDF())
+            TimeMode.EventTime(), OutputMode.Append()).toDF())
       sink.filter($"key" =!= "__flush")
         .select($"key".as("event_type"), $"v".as("event_id"),
           $"movingSum".as("moving_sum"), $"n")
@@ -1983,8 +1953,7 @@ object StreamQueries {
         math.round(e.value * 100)))
       val sink = replay(s, chunks(ranked, 2))(_.groupByKey(_.key)
         .transformWithState(new StatefulOps.FastTop1Processor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
+          TimeMode.None(), OutputMode.Update()).toDF())
       foldChangelog(sink, "kind")
         .select($"value.key".as("event_type"), $"value.id".as("event_id"),
           $"value.sort".as("cents"))
@@ -2001,8 +1970,7 @@ object StreamQueries {
         e.event_id, micros(e.ts)))
       val sink = replay(s, chunks(ranked, 2))(_.groupByKey(_.key)
         .transformWithState(new StatefulOps.AppendOnlyFirstNProcessor(3),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
+          TimeMode.None(), OutputMode.Update()).toDF())
       foldChangelog(sink, "kind")
         .select($"value.key".cast("long").as("user_id"),
           $"value.id".as("event_id"), $"value.sort".as("ts_us"))
@@ -2037,8 +2005,8 @@ object StreamQueries {
         val t = micros(e.ts)
         t >= mUs - 9 * hourUs + 1000000L && wsOf(t) + 3 * hourUs <= mUs
       }.map(in(_, 9000000L))
-      val sentinel = Seq(AllowedLateness.LWIn("sentinel",
-        new java.sql.Timestamp(mUs / 1000L + 10L * 86400 * 1000), 0L))
+      val sentinel =
+        Seq(AllowedLateness.LWIn("sentinel", farFuture(mUs / 1000L), 0L))
       val sink = replay(s, chunks(ins, 3) ++ Seq(reA ++ reB, sentinel))(in =>
         AllowedLateness.tumbleCounts(
           in.withWatermark("eventTime", "9 hours"), // lat+win+6h slack
@@ -2069,8 +2037,7 @@ object StreamQueries {
       val sink = replay(s, chunks(ins, 2) :+ dels)(
         _.groupByKey(r => s"${r.group}|${r.bucket}")
           .transformWithState(new StatefulOps.SplitDistinctProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update()).toDF())
+            TimeMode.None(), OutputMode.Update()).toDF())
       // the final-stage fold: signed sum of shard-count changes per group
       sink.groupBy($"key".as("event_type"))
         .agg(sum(when(col("kind") === Changelog.Insert ||
@@ -2088,22 +2055,18 @@ object StreamQueries {
     // exactly the batch keep-last state minus the deleted users.
     "q_sink_upsert" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val rows = sortedEvents(s, dir)
       val ups = rows.zipWithIndex.map { case (e, i) =>
         UpsCh(e.user_id, e.event_id, e.value, i.toLong, Changelog.Insert) }
       val dels = rows.map(_.user_id).distinct.filter(_ % 5 == 0).sorted.map(u =>
         UpsCh(u, -1L, 0.0, Long.MaxValue, Changelog.Delete))
       val table = Q.scratchDir("q_sink_upsert") + "/t"
-      val input = MemoryStream[UpsCh]
-      val q = graft.sources.UpsertSink.start(
-        input.toDS().toDF().withColumnRenamed("kind", Changelog.RowKindCol),
-        Seq("user_id"), "seq", table, buckets = 8,
-        checkpoint = Q.scratchDir("q_sink_upsert_ckpt"))
-      try (chunks(ups, 2) :+ dels).foreach { b =>
-        input.addData(b); q.processAllAvailable()
-      } finally q.stop()
-      graft.sources.UpsertSink.read(s, table)
+      replay(s, chunks(ups, 2) :+ dels, foreachSink = Some((b, _) => {
+          UpsertSink.mergeBatch(b.sparkSession, b, Seq("user_id"), "seq",
+            table, buckets = 8)
+          ()
+        }))(_.toDF().withColumnRenamed("kind", Changelog.RowKindCol))
+      UpsertSink.read(s, table)
         .select($"user_id", $"event_id".as("last_event_id"),
           $"value".as("last_value"))
         .orderBy($"user_id")
@@ -2143,103 +2106,16 @@ object StreamQueries {
     // (window, user, n_clicks, n_purchases, exact cents sum over both
     // sides); the oracle is the FULL OUTER join of the two per-window
     // batch aggregates. One shuffle, state evicted per fired window.
-    "q_stream_cogroup" -> ((s, dir) => {
-      import s.implicits._
-      val rows = sortedEvents(s, dir)
-        .filter(e => e.event_type == "click" || e.event_type == "purchase")
-      val sentinel = Ev(-1L, -1L,
-        new java.sql.Timestamp(rows.last.ts.getTime + 10L * 86400000L),
-        "click", 0.0)
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("window_start",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_clicks",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_purchases",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("sum_cents",
-          org.apache.spark.sql.types.LongType)))
-      replay(s, chunks(rows, 2) :+ Seq(sentinel), mode = "append") { ev =>
-        val clicks = ev.filter($"event_type" === "click")
-          .select($"user_id", $"ts", $"value")
-        val purchases = ev.filter($"event_type" === "purchase")
-          .select($"user_id", $"ts", $"value")
-        graft.streaming.CoGroup.tumbling(
-          clicks.toDF(), purchases.toDF(), Seq("user_id"), "ts",
-          3600000L, "1 second",
-          (key, winStart, ls, rs) => {
-            // exact cents via the double's shortest decimal rendering —
-            // no double addition. The testdata invariant is exact-2dp
-            // values (the whole dec2() oracle convention rests on it);
-            // the HALF_UP is a never-crash guard for >2dp data. The
-            // typed payload hands `value` over as a real Double now —
-            // no string cast contract
-            def cents(r: org.apache.spark.sql.Row): Long =
-              (BigDecimal(java.lang.Double.toString(r.getAs[Double]("value")))
-                .setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100).toLongExact
-            Iterator.single(new org.apache.spark.sql.catalyst.expressions.GenericRow(
-              Array[Any](new java.sql.Timestamp(winStart), key.toLong,
-                ls.length.toLong, rs.length.toLong,
-                ls.map(cents).sum + rs.map(cents).sum)))
-          },
-          outSchema)
-      }
-        .filter($"user_id" =!= -1L)
-        .select($"window_start".cast("timestamp_ntz").as("window_start"),
-          $"user_id", $"n_clicks", $"n_purchases", $"sum_cents")
-        .orderBy($"window_start", $"user_id")
-    }),
+    "q_stream_cogroup" -> ((s, dir) =>
+      clickPurchaseCoGroup(s, dir, _ => true, 3600000L, 3600000L)),
 
     // Sliding-window coGroup (CoGroup.sliding — the reference's
     // SlidingEventTimeWindows under CoGroupedStreams): size 2 h, slide
     // 1 h, so every event lands in TWO window instances; the oracle
     // restates the assignment as a union of the two shifted hour
     // buckets. Users subsampled to keep the row count bounded.
-    "q_stream_coslide" -> ((s, dir) => {
-      import s.implicits._
-      val rows = sortedEvents(s, dir)
-        .filter(e => (e.event_type == "click" || e.event_type == "purchase")
-          && e.user_id % 5 == 0)
-      val sentinel = Ev(-1L, -1L,
-        new java.sql.Timestamp(rows.last.ts.getTime + 10L * 86400000L),
-        "click", 0.0)
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("window_start",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_clicks",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_purchases",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("sum_cents",
-          org.apache.spark.sql.types.LongType)))
-      replay(s, chunks(rows, 2) :+ Seq(sentinel), mode = "append") { ev =>
-        val clicks = ev.filter($"event_type" === "click")
-          .select($"user_id", $"ts", $"value")
-        val purchases = ev.filter($"event_type" === "purchase")
-          .select($"user_id", $"ts", $"value")
-        graft.streaming.CoGroup.sliding(
-          clicks.toDF(), purchases.toDF(), Seq("user_id"), "ts",
-          7200000L, 3600000L, "1 second",
-          (key, winStart, ls, rs) => {
-            def cents(r: org.apache.spark.sql.Row): Long =
-              (BigDecimal(java.lang.Double.toString(r.getAs[Double]("value")))
-                .setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100).toLongExact
-            Iterator.single(new org.apache.spark.sql.catalyst.expressions.GenericRow(
-              Array[Any](new java.sql.Timestamp(winStart), key.toLong,
-                ls.length.toLong, rs.length.toLong,
-                ls.map(cents).sum + rs.map(cents).sum)))
-          },
-          outSchema)
-      }
-        .filter($"user_id" =!= -1L)
-        .select($"window_start".cast("timestamp_ntz").as("window_start"),
-          $"user_id", $"n_clicks", $"n_purchases", $"sum_cents")
-        .orderBy($"window_start", $"user_id")
-    }),
+    "q_stream_coslide" -> ((s, dir) =>
+      clickPurchaseCoGroup(s, dir, _ % 5 == 0, 7200000L, 3600000L)),
 
     // Session-window coGroup — the CoGroup.sliding doc's session recipe
     // made executable (the reference's session-gap CoGroupedStreams):
@@ -2268,49 +2144,25 @@ object StreamQueries {
           $"window_time")
         .as[SessEv].collect().toSeq
         .sortBy(e => (e.window_time.getTime, e.user_id))
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("window_start",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_clicks",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_purchases",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("sum_cents",
-          org.apache.spark.sql.types.LongType)))
       // the flush sentinel must SURVIVE the side filters (a type neither
       // side keeps would never reach the union or advance the watermark,
       // and the tail sessions' windows would never fire) — it rides the
       // click side and is dropped by the user_id >= 0 filter at the end
-      val far = new java.sql.Timestamp(maxTs + 10L * 86400000L)
-      replay(s,
+      val far = farFuture(maxTs)
+      coGroupResult(replay(s,
           chunks(annRows, 2) :+ Seq(SessEv(-1L, "click", 0.0, far, far)),
           mode = "append") { ev2 =>
-        val clicks = ev2.filter($"event_type" === "click")
+        def side(tpe: String) = ev2.filter($"event_type" === tpe)
           .select($"user_id", $"window_start", $"window_time", $"value")
-        val purchases = ev2.filter($"event_type" === "purchase")
-          .select($"user_id", $"window_start", $"window_time", $"value")
-        graft.streaming.CoGroup.tumbling(
-          clicks.toDF(), purchases.toDF(), Seq("user_id", "window_start"),
-          "window_time", 3600000L, "1 second",
+        CoGroup.tumbling(side("click"), side("purchase"),
+          Seq("user_id", "window_start"), "window_time", 3600000L, "1 second",
           (_, _, ls, rs) => {
             val any = (ls ++ rs).head
-            def cents(r: org.apache.spark.sql.Row): Long =
-              (BigDecimal(java.lang.Double.toString(r.getAs[Double]("value")))
-                .setScale(2, BigDecimal.RoundingMode.HALF_UP) * 100).toLongExact
-            Iterator.single(new org.apache.spark.sql.catalyst.expressions.GenericRow(
-              Array[Any](any.getAs[java.sql.Timestamp]("window_start"),
-                any.getAs[Long]("user_id"),
-                ls.length.toLong, rs.length.toLong,
-                ls.map(cents).sum + rs.map(cents).sum)))
+            coGroupRow(any.getAs[java.sql.Timestamp]("window_start"),
+              any.getAs[Long]("user_id"), ls, rs)
           },
-          outSchema)
-      }
-        .filter($"user_id" >= 0)
-        .select($"window_start".cast("timestamp_ntz").as("window_start"),
-          $"user_id", $"n_clicks", $"n_purchases", $"sum_cents")
-        .orderBy($"window_start", $"user_id")
+          coGroupSchema)
+      })
     }),
 
     // Event-time state-TTL dedup (StatefulOps.KeepFirstTtlProcessor —
@@ -2325,16 +2177,14 @@ object StreamQueries {
       implicit val ttlEnc = Encoders.product[StatefulOps.TtlIn]
       val rows = sortedEvents(s, dir).filter(_.user_id % 2 == 0).map(e =>
         StatefulOps.TtlIn(e.user_id.toString, e.ts, e.event_id))
-      val sentinel = StatefulOps.TtlIn("-1",
-        new java.sql.Timestamp(rows.last.ts.getTime + 10L * 86400000L), -1L)
+      val sentinel = StatefulOps.TtlIn("-1", farFuture(rows.last.ts.getTime), -1L)
       replay(s, chunks(rows, 2) :+ Seq(sentinel), mode = "append")(
         _.withWatermark("ts", "1 second")
           .as[StatefulOps.TtlIn]
           .groupByKey(_.key)
           .transformWithState(
             new StatefulOps.KeepFirstTtlProcessor(6L * 3600000L),
-            org.apache.spark.sql.streaming.TimeMode.EventTime(),
-            org.apache.spark.sql.streaming.OutputMode.Append()).toDF())
+            TimeMode.EventTime(), OutputMode.Append()).toDF())
         .filter($"key" =!= "-1")
         .select($"key".cast("long").as("user_id"), $"id".as("event_id"))
         .orderBy($"user_id", $"event_id")
@@ -2400,15 +2250,8 @@ object StreamQueries {
       val sent = rows.filter(e => e.user_id % 2 == 0 || micros(e.ts) < cutoff)
       val tagged = sent.map(e =>
         ((e.user_id % 2).toInt, (e.event_type, e.ts.getTime)))
-      val rounds = chunks(tagged, 6) ++ Seq(
-        Seq((0, ("sentinel", rows.last.ts.getTime + 10L * 86400000L))),
-        Seq.empty)
-      replay(s,
-          graft.streaming.WatermarkMux.stamp(rounds, delayMs = 0L,
-            idleTimeoutRounds = 2),
-          mode = "append")(graft.streaming.WatermarkMux.idleTumbleCounts(_,
-        windowMs = 3600000L))
-        .filter($"etype" =!= "sentinel")
+      stampedTumbleReplay(s, chunks(tagged, 6), Seq(0), rows.last.ts.getTime,
+          delayMs = 0L, idleTimeoutRounds = 2, 3600000L)
         .select(timestamp_millis($"ws").cast("timestamp_ntz")
           .as("window_start"), $"etype".as("event_type"), $"n")
         .orderBy($"window_start", $"event_type")
@@ -2431,19 +2274,11 @@ object StreamQueries {
       val slow = rows.filter(_.user_id % 4 != 0)
         .map(e => (e.event_type, e.ts.getTime)).toVector
       val spanMs = (rows.last.ts.getTime - rows.head.ts.getTime).max(1L)
-      val rounds = graft.streaming.WatermarkMux.alignRounds(
+      val rounds = WatermarkMux.alignRounds(
         Map(0 -> fast, 1 -> slow), (r: (String, Long)) => r._2,
         maxDriftMs = spanMs / 10, rowsPerRound = (slow.size / 6).max(1))
-      val sentinelTs = rows.last.ts.getTime + 10L * 86400000L
-      val allRounds = rounds ++ Seq(
-        Seq((0, ("sentinel", sentinelTs)), (1, ("sentinel", sentinelTs))),
-        Seq.empty[(Int, (String, Long))])
-      replay(s,
-          graft.streaming.WatermarkMux.stamp(allRounds, delayMs = 0L,
-            idleTimeoutRounds = 1000000),
-          mode = "append")(graft.streaming.WatermarkMux.idleTumbleCounts(_,
-        windowMs = 3600000L))
-        .filter($"etype" =!= "sentinel")
+      stampedTumbleReplay(s, rounds, Seq(0, 1), rows.last.ts.getTime,
+          delayMs = 0L, idleTimeoutRounds = 1000000, 3600000L)
         .select(timestamp_millis($"ws").cast("timestamp_ntz")
           .as("window_start"), $"etype".as("event_type"), $"n")
         .orderBy($"window_start", $"event_type")

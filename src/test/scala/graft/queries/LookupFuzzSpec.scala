@@ -159,19 +159,24 @@ class LookupFuzzSpec extends SparkSuite {
             col("k") % c.failMod <= c.maxRetries,
             col("k") * 31 + 7).otherwise(lit(-1L)))
         .collect().map(_.toString).sorted.toSeq
+      // up to 5 rows from each side of the difference, so a one-off
+      // failure names the rows it lost or invented
+      def delta(got: Seq[String]): String =
+        s"expected-got=${expected.diff(got).take(5).mkString("[", ", ", "]")} " +
+          s"got-expected=${got.diff(expected).take(5).mkString("[", ", ", "]")}"
       val sync = LookupFuzzGen.replay(spark, dir, c)
         .collect().map(_.toString).sorted.toSeq
       assert(sync == expected,
         s"lookup seed $seed SYNC diverged: keyMod=${c.keyMod} " +
           s"dim=k%${c.dimMod}!=${c.dimRes} fail=k%${c.failMod} " +
           s"retries=${c.maxRetries} cache=${c.cacheSize} " +
-          s"(expected=${expected.length}, got=${sync.length})")
+          s"(expected=${expected.length}, got=${sync.length}) ${delta(sync)}")
       for (ordered <- Seq(true, false)) {
         val async = LookupFuzzGen.replayAsync(spark, dir, c, ordered)
           .collect().map(_.toString).sorted.toSeq
         assert(async == expected,
           s"lookup seed $seed ASYNC(ordered=$ordered) diverged " +
-            s"(expected=${expected.length}, got=${async.length})")
+            s"(expected=${expected.length}, got=${async.length}) ${delta(async)}")
       }
     }
   }
