@@ -12,11 +12,6 @@ import graft.operators.{ConnectorDdl, MatchRecognizeSql, MaterializedTable, SqlH
   * TVF calls, then temporal-join spans — re-checked in that order until
   * none remain), and the residual plain-Spark statement executes once. A
   * statement using none of them falls straight through to `spark.sql`.
-  *
-  * The construct-specific entries ([[graft.cep.MatchRecognize]],
-  * [[graft.operators.WindowTvf.sql]], [[graft.operators.TemporalJoinSql.sql]])
-  * stay available for single-construct use; this is the one a user who
-  * just has SQL text should call.
   */
 object GraftSql {
 
@@ -67,10 +62,6 @@ object GraftSql {
         return spark.emptyDataFrame
       case _ => ()
     }
-    // connector DDL/DML (CREATE TABLE … WITH ('connector'=…) / INSERT
-    // INTO a registered connector table) routes to ConnectorDdl; the
-    // INSERT's query part re-enters this method, so the full extended
-    // surface works inside it
     // SET 'k' = 'v' / RESET 'k' (SqlSet/SqlReset — the reference's
     // session-config statements): session conf edits through the front
     // door; Spark's own unquoted SET syntax still falls through
@@ -98,49 +89,13 @@ object GraftSql {
         return Seq(plan).toDF("plan")
       case _ => ()
     }
-    if (MaterializedTable.isCreate(query)) {
-      MaterializedTable.create(spark, query, (s, q) => sql(s, q))
-      spark.emptyDataFrame
-    } else if (MaterializedTable.isAlter(spark, query)) {
-      MaterializedTable.alter(spark, query, (s, q) => sql(s, q))
-      spark.emptyDataFrame
-    } else if (MaterializedTable.isDrop(spark, query)) {
-      MaterializedTable.drop(spark, query)
-      spark.emptyDataFrame
-    } else if (ConnectorDdl.isCtas(query)) {
-      ConnectorDdl.createTableAs(spark, query, (s, q) => sql(s, q))
-      spark.emptyDataFrame
-    } else if (ConnectorDdl.isCreate(spark, query)) {
-      ConnectorDdl.createTable(spark, query)
-      spark.emptyDataFrame
-    } else if (ConnectorDdl.isCompact(spark, query)) {
-      ConnectorDdl.compactTable(spark, query)
-      spark.emptyDataFrame
-    } else if (ConnectorDdl.isTruncate(spark, query)) {
-      ConnectorDdl.truncateTable(spark, query)
-      spark.emptyDataFrame
-    } else if (ConnectorDdl.isDelete(spark, query)) {
-      ConnectorDdl.deleteFrom(spark, query)
-      spark.emptyDataFrame
-    } else if (ConnectorDdl.isUpdate(spark, query)) {
-      ConnectorDdl.updateTable(spark, query)
-      spark.emptyDataFrame
-    } else if (ConnectorDdl.isShowPartitions(spark, query)) {
-      ConnectorDdl.showPartitions(spark, query)
-    } else if (ConnectorDdl.isDescribe(spark, query)) {
-      ConnectorDdl.describeTable(spark, query)
-    } else if (ConnectorDdl.isShowCreate(spark, query)) {
-      ConnectorDdl.showCreateTable(spark, query)
-    } else if (ConnectorDdl.isAlter(spark, query)) {
-      ConnectorDdl.alterTable(spark, query)
-      spark.emptyDataFrame
-    } else if (ConnectorDdl.isDrop(spark, query)) {
-      ConnectorDdl.dropTable(spark, query)
-      spark.emptyDataFrame
-    } else if (ConnectorDdl.isInsert(spark, query)) {
-      ConnectorDdl.insertInto(spark, query, (s, q) => sql(s, q))
-      spark.emptyDataFrame
-    } else run(spark, query, forceExpand = false)
+    // materialized-table and connector DDL/DML (CREATE … WITH
+    // ('connector'=…), INSERT INTO a registered connector table, …):
+    // their query parts re-enter this method, so the full extended
+    // surface works inside them
+    MaterializedTable.step(spark, query, sql)
+      .orElse(ConnectorDdl.step(spark, query, sql))
+      .getOrElse(run(spark, query, forceExpand = false))
   }
 
   private def run(spark: SparkSession, query: String,

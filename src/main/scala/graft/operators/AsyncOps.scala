@@ -128,21 +128,23 @@ object AsyncOps {
       val pool = Executors.newFixedThreadPool(capacity)
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       // Try-typed queue: a failed future must surface its own exception
-      // promptly (and decrement inFlight), not a generic timeout 60s later.
+      // promptly, not a generic timeout 60s later.
       val queue = new java.util.concurrent.LinkedBlockingQueue[scala.util.Try[O]]()
-      val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
+      // results not yet EMITTED (running or queued), counted on this
+      // consumer thread only: a count the completion callback lowers
+      // lags its own put, so hasNext could see a result that next()
+      // already took and wait out the timeout for nothing
+      var pending = 0
       val input = rows.buffered
       new Iterator[O] {
         private def fill(): Unit =
-          while (inFlight.get() < capacity && input.hasNext) {
-            inFlight.incrementAndGet()
-            fn.invoke(input.next()).onComplete { r =>
-              queue.put(r); inFlight.decrementAndGet()
-            }
+          while (pending < capacity && input.hasNext) {
+            pending += 1
+            fn.invoke(input.next()).onComplete(r => queue.put(r))
           }
         def hasNext: Boolean = {
           fill()
-          val h = input.hasNext || inFlight.get() > 0 || !queue.isEmpty
+          val h = pending > 0
           if (!h) { pool.shutdown(); pool.awaitTermination(1, TimeUnit.SECONDS); fn.close() }
           h
         }
@@ -151,6 +153,7 @@ object AsyncOps {
           val o = queue.poll(timeoutMs, TimeUnit.MILLISECONDS)
           try {
             if (o == null) throw new java.util.concurrent.TimeoutException("async I/O timeout")
+            pending -= 1
             o.get
           } catch { case t: Throwable =>
             // failure aborts the task: release the pool and user

@@ -83,25 +83,58 @@ object ConnectorDdl {
     """(?is)^\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?([A-Za-z_][\w.]*)\s*;?\s*$""".r
   private val InsertPartRe =
     """(?is)^\s*PARTITION\s*\(([^)]*)\)\s*(.*)$""".r
-  private val TruncateRe =
-    """(?is)^\s*TRUNCATE\s+TABLE\s+([A-Za-z_][\w.]*)\s*$""".r
-  private val DeleteRe =
-    """(?is)^\s*DELETE\s+FROM\s+([A-Za-z_][\w.]*)(?:\s+WHERE\s+(.*))?$""".r
-  private val UpdateRe =
-    """(?is)^\s*UPDATE\s+([A-Za-z_][\w.]*)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?$""".r
+  private val DescribeRe =
+    """(?is)^\s*DESC(?:RIBE)?\s+(?:EXTENDED\s+)?([A-Za-z_][\w.]*)\s*;?\s*$""".r
+  private val ShowCreateRe =
+    """(?is)^\s*SHOW\s+CREATE\s+TABLE\s+([A-Za-z_][\w.]*)\s*;?\s*$""".r
 
-  /** Pull a top-level `PARTITIONED BY (…)` clause out of a CREATE
-    * statement (the greedy column-body regex cannot disambiguate it);
-    * returns the statement without the clause plus the partition cols.
+  /** A DML statement pattern, matched against the QUOTE-MASKED text with
+    * its groups sliced from the original: a ' WHERE ' inside a string
+    * literal in a SET expression must not split the statement. Binds
+    * like a Regex pattern (null for an absent optional group).
     */
-  private def splitPartitionClause(stmt: String): (String, Seq[String]) =
-    PartClauseRe.findFirstMatchIn(SqlText.maskQuoted(stmt)) match {
-      case Some(m) =>
-        (stmt.substring(0, m.start) + stmt.substring(m.end),
-          stmt.substring(m.start(1), m.end(1))
-            .split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      case None => (stmt, Seq.empty)
+  private final class DmlRe(re: scala.util.matching.Regex) {
+    def unapplySeq(stmt: String): Option[List[String]] = {
+      // strip the statement terminator FIRST: the mask blanks quoted
+      // literals to spaces, and a trailing \s*;?\s* tail would swallow
+      // them, truncating the sliced predicate spans
+      val clean = stmt.replaceAll("\\s+$", "").stripSuffix(";")
+        .replaceAll("\\s+$", "")
+      re.findFirstMatchIn(SqlText.maskQuotedOpaque(clean)).map(m =>
+        List.tabulate(m.groupCount)(i =>
+          if (m.group(i + 1) == null) null
+          else clean.substring(m.start(i + 1), m.end(i + 1))))
     }
+  }
+  private val TruncateRe =
+    new DmlRe("""(?is)^\s*TRUNCATE\s+TABLE\s+([A-Za-z_][\w.]*)\s*$""".r)
+  private val DeleteRe =
+    new DmlRe("""(?is)^\s*DELETE\s+FROM\s+([A-Za-z_][\w.]*)(?:\s+WHERE\s+(.*))?$""".r)
+  private val UpdateRe =
+    new DmlRe("""(?is)^\s*UPDATE\s+([A-Za-z_][\w.]*)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?$""".r)
+
+  /** CREATE TABLE with a column body and WITH options, binding (name,
+    * body, options, partition columns): a top-level `PARTITIONED BY
+    * (…)` clause is pulled out first (the greedy column-body regex
+    * cannot disambiguate it).
+    */
+  private object CreatePartRe {
+    def unapply(stmt: String): Option[(String, String, String, Seq[String])] = {
+      val (bare, partitions) =
+        PartClauseRe.findFirstMatchIn(SqlText.maskQuoted(stmt)) match {
+          case Some(m) =>
+            (stmt.substring(0, m.start) + stmt.substring(m.end),
+              stmt.substring(m.start(1), m.end(1))
+                .split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+          case None => (stmt, Seq.empty)
+        }
+      bare match {
+        case CreateRe(name, body, opts) => Some((name, body, opts, partitions))
+        case _ => None
+      }
+    }
+  }
+
   private val WatermarkRe =
     """(?is)^WATERMARK\s+FOR\s+(\w+)\s+AS\s+\w+\s*-\s*INTERVAL\s*'(\d+)'\s*(\w+)$""".r
   private val PkRe =
@@ -123,32 +156,72 @@ object ConnectorDdl {
     "file.modification-time" -> "_metadata.file_modification_time",
     "timestamp" -> "_metadata.file_modification_time")
 
-  /** Is this statement connector DDL/DML this object handles? A LIKE
-    * form claims the statement only when the base is a REGISTERED
-    * connector table — Spark-native `CREATE TABLE x LIKE y` catalog DDL
-    * falls through to spark.sql, the same contract isAlter/isDrop keep.
+  /** Run `stmt` if it is connector DDL/DML this object handles: CTAS,
+    * the connector CREATE forms, and COMPACT/TRUNCATE/DELETE/UPDATE/
+    * SHOW PARTITIONS/DESCRIBE/SHOW CREATE/ALTER/DROP/INSERT on a
+    * REGISTERED connector table — unregistered names fall through to
+    * spark.sql, so catalog tables keep their native DDL. A LIKE form is
+    * claimed when its base is registered, so Spark-native `CREATE TABLE
+    * x LIKE y` falls through too. `run` is the front-door SQL entry for
+    * the query parts of CTAS and INSERT. None when the statement is not
+    * this object's.
     */
-  def isCreate(spark: SparkSession, stmt: String): Boolean = stmt match {
-    // a column body or WITH options is the CONNECTOR form of LIKE —
-    // claim it even with an unregistered base so the user gets the
-    // registry diagnostic, not a Spark parse error on invalid syntax
-    case CreateLikeRe(_, body, opts, base, _) =>
-      body != null || opts != null || lookup(spark, base).isDefined
-    case _ => CreateRe.matches(splitPartitionClause(stmt)._1)
-  }
-
-  /** ALTER/DROP on a REGISTERED connector table (unregistered names fall
-    * through to spark.sql — catalog tables keep their native DDL).
-    */
-  def isAlter(spark: SparkSession, stmt: String): Boolean = stmt match {
-    case AlterRe(name, _, _) => lookup(spark, name).isDefined
-    case AlterAddRe(name, _) => lookup(spark, name).isDefined
-    case RenameRe(name, _) => lookup(spark, name).isDefined
-    case _ => false
-  }
-  def isDrop(spark: SparkSession, stmt: String): Boolean = stmt match {
-    case DropRe(_, name) => lookup(spark, name).isDefined
-    case _ => false
+  def step(spark: SparkSession, stmt: String,
+      run: (SparkSession, String) => DataFrame): Option[DataFrame] = {
+    object Registered {
+      def unapply(name: String): Option[TableDesc] = lookup(spark, name)
+    }
+    def done(u: Unit): Option[DataFrame] = Some(spark.emptyDataFrame)
+    stmt match {
+      case CtasRe(name, opts, query) =>
+        done(createTableAs(spark, name, opts, query, run))
+      // a column body or WITH options is the CONNECTOR form of LIKE —
+      // claim it even with an unregistered base so the user gets the
+      // registry diagnostic, not a Spark parse error on invalid syntax
+      case CreateLikeRe(name, body, opts, base, optMode)
+          if body != null || opts != null || lookup(spark, base).isDefined =>
+        done(createLike(spark, name, body, opts, base, optMode))
+      case CreatePartRe(name, body, opts, partitions) => done {
+        val p = parseBody(body)
+        partitions.foreach(c => require(p.fields.exists(_.name == c),
+          s"PARTITIONED BY column '$c' is not in the schema"))
+        register(spark, TableDesc(name, StructType(p.fields), p.computed,
+          p.watermark, p.pk, parseOptions(opts), partitions))
+      }
+      case CompactRe(name @ Registered(d)) => done(compactTable(spark, name, d))
+      case TruncateRe(Registered(d)) => done(rewriteRows(spark, d, _.limit(0)))
+      // SQL DELETE removes rows where the predicate is TRUE; a NULL
+      // predicate keeps the row — null-safe equality, not not()
+      case DeleteRe(Registered(d), pred) => done(rewriteRows(spark, d, df =>
+        if (pred == null) df.limit(0) // DELETE all
+        else df.filter(!(expr(pred) <=> lit(true)))))
+      case UpdateRe(name @ Registered(d), sets, where) =>
+        done(updateTable(spark, name, d, sets, where))
+      case ShowPartsRe(name @ Registered(d)) =>
+        Some(showPartitions(spark, name, d))
+      case DescribeRe(Registered(d)) => Some(describeTable(spark, d))
+      case ShowCreateRe(Registered(d)) => Some(showCreateTable(spark, d))
+      case AlterRe(name @ Registered(d), verb, items) =>
+        done(alterOptions(spark, name, d, verb, items))
+      case AlterAddRe(name @ Registered(d), body) =>
+        done(addColumns(spark, name, d, body))
+      // ALTER TABLE t RENAME TO t2 — SqlAlterTableRename: registry move,
+      // old view dropped, new view registered
+      case RenameRe(name @ Registered(d), newName) => done {
+        require(lookup(spark, newName).isEmpty, s"table $newName already exists")
+        registry.remove(key(spark, name))
+        spark.catalog.dropTempView(name)
+        register(spark, d.copy(name = newName), fresh = false)
+      }
+      // DROP TABLE [IF EXISTS] t — unregister and drop the temp view
+      case DropRe(_, name @ Registered(_)) => done {
+        registry.remove(key(spark, name))
+        spark.catalog.dropTempView(name)
+      }
+      case InsertRe(mode, name @ Registered(d), query) =>
+        done(insertInto(spark, mode, name, d, query, run))
+      case _ => None
+    }
   }
 
   /** `ALTER TABLE t SET ('k'='v', …)` / `RESET ('k', …)` — the
@@ -156,155 +229,94 @@ object ConnectorDdl {
     * change in place and the readable view refreshes under the merged
     * options. RESET items are bare or quoted key names.
     */
-  def alterTable(spark: SparkSession, stmt: String): Unit = stmt match {
-    case AlterRe(name, verb, items) =>
-      val d = lookup(spark, name).getOrElse(sys.error(s"unknown table $name"))
-      val next =
-        if (verb.equalsIgnoreCase("SET")) d.options ++ parseOptions(items)
-        else d.options -- splitTop(items).map { k =>
-          val t = k.trim
-          if (t.length >= 2 && t.head == '\'' && t.last == '\'')
-            t.substring(1, t.length - 1) else t
-        }
-      require(next.contains("connector"),
-        s"$name: cannot RESET 'connector' — the table would lose its type")
-      register(spark, d.copy(options = next), fresh = false)
-    // ALTER TABLE t ADD (col TYPE, c AS expr, …) — SqlAlterTableAdd:
-    // schema evolution by appending; parquet reads surface the new
-    // physical column as NULL for pre-existing files
-    case AlterAddRe(name, body) =>
-      val d = lookup(spark, name).getOrElse(sys.error(s"unknown table $name"))
-      val p = parseBody(body)
-      p.fields.foreach(f => require(!d.fields.fieldNames.contains(f.name),
-        s"$name: column '${f.name}' already exists"))
-      register(spark, d.copy(fields = StructType(d.fields.fields ++ p.fields),
-        computed = d.computed ++ p.computed,
-        watermark = p.watermark.orElse(d.watermark),
-        primaryKey = if (p.pk.nonEmpty) p.pk else d.primaryKey),
-        fresh = false)
-    // ALTER TABLE t RENAME TO t2 — SqlAlterTableRename: registry move,
-    // old view dropped, new view registered
-    case RenameRe(name, newName) =>
-      val d = lookup(spark, name).getOrElse(sys.error(s"unknown table $name"))
-      require(lookup(spark, newName).isEmpty, s"table $newName already exists")
-      registry.remove(key(spark, name))
-      spark.catalog.dropTempView(name)
-      register(spark, d.copy(name = newName), fresh = false)
-    case _ => sys.error("not a connector ALTER TABLE statement")
+  private def alterOptions(spark: SparkSession, name: String, d: TableDesc,
+      verb: String, items: String): Unit = {
+    val next =
+      if (verb.equalsIgnoreCase("SET")) d.options ++ parseOptions(items)
+      else d.options -- splitTop(items).map { k =>
+        val t = k.trim
+        if (t.length >= 2 && t.head == '\'' && t.last == '\'')
+          t.substring(1, t.length - 1) else t
+      }
+    require(next.contains("connector"),
+      s"$name: cannot RESET 'connector' — the table would lose its type")
+    register(spark, d.copy(options = next), fresh = false)
   }
 
-  /** `DROP TABLE [IF EXISTS] t` — unregister and drop the temp view. */
-  def dropTable(spark: SparkSession, stmt: String): Unit = stmt match {
-    case DropRe(_, name) =>
-      registry.remove(key(spark, name))
-      spark.catalog.dropTempView(name)
-    case _ => sys.error("not a connector DROP TABLE statement")
+  /** `ALTER TABLE t ADD (col TYPE, c AS expr, …)` — SqlAlterTableAdd:
+    * schema evolution by appending; parquet reads surface the new
+    * physical column as NULL for pre-existing files.
+    */
+  private def addColumns(spark: SparkSession, name: String, d: TableDesc,
+      body: String): Unit = {
+    val p = parseBody(body)
+    p.fields.foreach(f => require(!d.fields.fieldNames.contains(f.name),
+      s"$name: column '${f.name}' already exists"))
+    register(spark, d.copy(fields = StructType(d.fields.fields ++ p.fields),
+      computed = d.computed ++ p.computed,
+      watermark = p.watermark.orElse(d.watermark),
+      primaryKey = if (p.pk.nonEmpty) p.pk else d.primaryKey),
+      fresh = false)
   }
-
-  def isCtas(stmt: String): Boolean = CtasRe.matches(stmt)
-  def isCompact(spark: SparkSession, stmt: String): Boolean = stmt match {
-    case CompactRe(name) => lookup(spark, name).isDefined
-    case _ => false
-  }
-  def isShowPartitions(spark: SparkSession, stmt: String): Boolean =
-    stmt match {
-      case ShowPartsRe(name) => lookup(spark, name).isDefined
-      case _ => false
-    }
 
   /** CTAS (SqlCreateTableAs): `CREATE TABLE t WITH (…) AS <query>` —
     * the schema comes from the query, the first write materializes it.
     */
-  def createTableAs(spark: SparkSession, stmt: String,
-      runQuery: (SparkSession, String) => DataFrame): Unit = stmt match {
-    case CtasRe(name, opts, query) =>
-      val options = parseOptions(opts)
-      val df = runQuery(spark, query)
-      val desc = TableDesc(name, df.schema, Vector.empty, None, Nil,
-        options)
-      registry.put(key(spark, name), desc)
-      desc.connector match {
-        case "filesystem" =>
-          val fmt = options.getOrElse("format", "parquet")
-          df.write.format(fmt).options(formatOptions(desc, fmt))
-            .mode("overwrite").save(options("path"))
-          sourceFrame(spark, desc).createOrReplaceTempView(name)
-        case c => sys.error(s"CTAS unsupported for connector '$c'")
-      }
-    case _ => sys.error("not a CTAS statement")
+  private def createTableAs(spark: SparkSession, name: String, opts: String,
+      query: String, run: (SparkSession, String) => DataFrame): Unit = {
+    val options = parseOptions(opts)
+    val df = run(spark, query)
+    val desc = TableDesc(name, df.schema, Vector.empty, None, Nil, options)
+    registry.put(key(spark, name), desc)
+    desc.connector match {
+      case "filesystem" =>
+        val fmt = options.getOrElse("format", "parquet")
+        df.write.format(fmt).options(formatOptions(desc, fmt))
+          .mode("overwrite").save(options("path"))
+        sourceFrame(spark, desc).createOrReplaceTempView(name)
+      case c => sys.error(s"CTAS unsupported for connector '$c'")
+    }
   }
 
   /** `ALTER TABLE t COMPACT` (SqlAlterTableCompact — the filesystem
     * connector's compaction statement): merge small files in place,
     * rename-safe, then refresh the view.
     */
-  def compactTable(spark: SparkSession, stmt: String): Unit = stmt match {
-    case CompactRe(name) =>
-      val d = lookup(spark, name).getOrElse(sys.error(s"unknown table $name"))
-      require(d.connector == "filesystem", s"$name: COMPACT needs a filesystem table")
-      require(d.options.getOrElse("format", "parquet") == "parquet",
-        s"$name: COMPACT supports parquet tables")
-      require(d.partitions.isEmpty,
-        s"$name: COMPACT of partitioned tables is not supported (compact " +
-          "partition directories individually)")
-      val small = d.options.getOrElse("compaction.small-bytes",
-        (16L * 1024 * 1024).toString).toLong
-      val target = d.options.getOrElse("compaction.target-bytes",
-        (128L * 1024 * 1024).toString).toLong
-      graft.sources.FileCompaction.compactParquet(spark, d.options("path"),
-        small, target)
-      sourceFrame(spark, d).createOrReplaceTempView(name)
-    case _ => sys.error("not a COMPACT statement")
+  private def compactTable(spark: SparkSession, name: String,
+      d: TableDesc): Unit = {
+    require(d.connector == "filesystem", s"$name: COMPACT needs a filesystem table")
+    require(d.options.getOrElse("format", "parquet") == "parquet",
+      s"$name: COMPACT supports parquet tables")
+    require(d.partitions.isEmpty,
+      s"$name: COMPACT of partitioned tables is not supported (compact " +
+        "partition directories individually)")
+    val small = d.options.getOrElse("compaction.small-bytes",
+      (16L * 1024 * 1024).toString).toLong
+    val target = d.options.getOrElse("compaction.target-bytes",
+      (128L * 1024 * 1024).toString).toLong
+    graft.sources.FileCompaction.compactParquet(spark, d.options("path"),
+      small, target)
+    sourceFrame(spark, d).createOrReplaceTempView(name)
   }
 
   /** `SHOW PARTITIONS t` — partition directory values of a partitioned
     * filesystem table (SqlShowPartitions).
     */
-  def showPartitions(spark: SparkSession, stmt: String): DataFrame =
-    stmt match {
-      case ShowPartsRe(name) =>
-        val d = lookup(spark, name).getOrElse(sys.error(s"unknown table $name"))
-        require(d.partitions.nonEmpty, s"$name is not partitioned")
-        import spark.implicits._
-        // walk one level per partition column — multi-column tables
-        // nest (a=1/b=x), and only full-depth paths are partitions
-        def walk(dir: java.io.File, depth: Int): Seq[String] = {
-          val level = Option(dir.listFiles()).getOrElse(Array.empty)
-            .filter(f => f.isDirectory && f.getName.contains("="))
-          if (depth == d.partitions.length - 1) level.map(_.getName).toSeq
-          else level.toSeq.flatMap(f =>
-            walk(f, depth + 1).map(f.getName + "/" + _))
-        }
-        walk(new java.io.File(d.options("path")), 0).sorted.toDF("partition")
-      case _ => sys.error("not a SHOW PARTITIONS statement")
+  private def showPartitions(spark: SparkSession, name: String,
+      d: TableDesc): DataFrame = {
+    require(d.partitions.nonEmpty, s"$name is not partitioned")
+    import spark.implicits._
+    // walk one level per partition column — multi-column tables
+    // nest (a=1/b=x), and only full-depth paths are partitions
+    def walk(dir: java.io.File, depth: Int): Seq[String] = {
+      val level = Option(dir.listFiles()).getOrElse(Array.empty)
+        .filter(f => f.isDirectory && f.getName.contains("="))
+      if (depth == d.partitions.length - 1) level.map(_.getName).toSeq
+      else level.toSeq.flatMap(f =>
+        walk(f, depth + 1).map(f.getName + "/" + _))
     }
-
-  /** DML statements parse against the QUOTE-MASKED text (group spans
-    * slice the original): a ' WHERE ' inside a string literal in a SET
-    * expression must not split the statement.
-    */
-  private def dmlMatch(re: scala.util.matching.Regex, stmt: String)
-      : Option[(scala.util.matching.Regex.Match, String)] = {
-    // strip the statement terminator FIRST: the mask blanks quoted
-    // literals to spaces, and a trailing \s*;?\s* tail would swallow
-    // them, truncating the sliced predicate spans
-    val clean = stmt.replaceAll("\\s+$", "").stripSuffix(";")
-      .replaceAll("\\s+$", "")
-    re.findFirstMatchIn(SqlText.maskQuotedOpaque(clean)).map((_, clean))
+    walk(new java.io.File(d.options("path")), 0).sorted.toDF("partition")
   }
-  private def grp(m: scala.util.matching.Regex.Match, orig: String,
-      i: Int): String =
-    if (m.group(i) == null) null else orig.substring(m.start(i), m.end(i))
-
-  def isTruncate(spark: SparkSession, stmt: String): Boolean =
-    dmlMatch(TruncateRe, stmt).exists { case (m, o) =>
-      lookup(spark, grp(m, o, 1)).isDefined }
-  def isDelete(spark: SparkSession, stmt: String): Boolean =
-    dmlMatch(DeleteRe, stmt).exists { case (m, o) =>
-      lookup(spark, grp(m, o, 1)).isDefined }
-  def isUpdate(spark: SparkSession, stmt: String): Boolean =
-    dmlMatch(UpdateRe, stmt).exists { case (m, o) =>
-      lookup(spark, grp(m, o, 1)).isDefined }
 
   /** Copy-on-write rewrite of a filesystem table's physical rows — the
     * execution shape of the reference's batch row-level DELETE/UPDATE
@@ -341,30 +353,6 @@ object ConnectorDdl {
     sourceFrame(spark, d).createOrReplaceTempView(d.name)
   }
 
-  def truncateTable(spark: SparkSession, stmt: String): Unit =
-    dmlMatch(TruncateRe, stmt) match {
-      case Some((m, o)) =>
-        val name = grp(m, o, 1)
-        val d = lookup(spark, name).getOrElse(sys.error(s"unknown table $name"))
-        rewriteRows(spark, d, df => df.limit(0))
-      case None => sys.error("not a TRUNCATE statement")
-    }
-
-  def deleteFrom(spark: SparkSession, stmt: String): Unit =
-    dmlMatch(DeleteRe, stmt) match {
-      case Some((m, o)) =>
-        val name = grp(m, o, 1)
-        val d = lookup(spark, name).getOrElse(sys.error(s"unknown table $name"))
-        Option(grp(m, o, 2)) match {
-          // SQL DELETE removes rows where the predicate is TRUE; a NULL
-          // predicate keeps the row — null-safe equality, not not()
-          case Some(p) =>
-            rewriteRows(spark, d, _.filter(!(expr(p) <=> lit(true))))
-          case None => rewriteRows(spark, d, _.limit(0)) // DELETE all
-        }
-      case None => sys.error("not a DELETE statement")
-    }
-
   /** Split SET assignments at top-level commas — parens and quotes only
     * ([[splitTop]] also tracks < > for MAP<...> type bodies, which would
     * miscount comparison operators inside SET expressions).
@@ -385,110 +373,84 @@ object ConnectorDdl {
     parts.result().map(_.trim).filter(_.nonEmpty)
   }
 
-  def updateTable(spark: SparkSession, stmt: String): Unit =
-    dmlMatch(UpdateRe, stmt) match {
-      case Some((m, o)) =>
-        val name = grp(m, o, 1)
-        val d = lookup(spark, name).getOrElse(sys.error(s"unknown table $name"))
-        val assignments = splitAssignments(grp(m, o, 2)).map { a =>
-          val i = SqlText.maskQuoted(a).indexOf('=')
-          require(i > 0, s"bad SET assignment: $a")
-          val c = a.substring(0, i).trim
-          require(d.fields.fieldNames.contains(c),
-            s"$name: SET target '$c' is not a physical column")
-          c -> a.substring(i + 1).trim
-        }
-        val dup = assignments.groupBy(_._1).collectFirst {
-          case (c, as) if as.length > 1 => c }
-        require(dup.isEmpty, s"$name: column '${dup.get}' assigned twice")
-        val cond = Option(grp(m, o, 3)).map(expr).getOrElse(lit(true))
-        val byCol = assignments.toMap
-        // ONE projection over the ORIGINAL frame: every SET expression
-        // and the WHERE condition see the pre-update snapshot (SQL
-        // semantics) — a sequential withColumn fold would let later
-        // assignments read already-updated values
-        rewriteRows(spark, d, df => df.select(d.fields.fields.toSeq.map {
-          f => byCol.get(f.name) match {
-            case Some(e) => when(cond, expr(e).cast(f.dataType))
-              .otherwise(col(f.name)).as(f.name)
-            case None => col(f.name)
-          }
-        }: _*))
-      case None => sys.error("not an UPDATE statement")
+  /** `UPDATE t SET c = e, … [WHERE p]` (`whereOrNull` is the predicate
+    * or null). */
+  private def updateTable(spark: SparkSession, name: String, d: TableDesc,
+      sets: String, whereOrNull: String): Unit = {
+    val assignments = splitAssignments(sets).map { a =>
+      val i = SqlText.maskQuoted(a).indexOf('=')
+      require(i > 0, s"bad SET assignment: $a")
+      val c = a.substring(0, i).trim
+      require(d.fields.fieldNames.contains(c),
+        s"$name: SET target '$c' is not a physical column")
+      c -> a.substring(i + 1).trim
     }
-
-  private val DescribeRe =
-    """(?is)^\s*DESC(?:RIBE)?\s+(?:EXTENDED\s+)?([A-Za-z_][\w.]*)\s*;?\s*$""".r
-  private val ShowCreateRe =
-    """(?is)^\s*SHOW\s+CREATE\s+TABLE\s+([A-Za-z_][\w.]*)\s*;?\s*$""".r
-
-  def isDescribe(spark: SparkSession, stmt: String): Boolean = stmt match {
-    case DescribeRe(name) => lookup(spark, name).isDefined
-    case _ => false
-  }
-  def isShowCreate(spark: SparkSession, stmt: String): Boolean = stmt match {
-    case ShowCreateRe(name) => lookup(spark, name).isDefined
-    case _ => false
+    val dup = assignments.groupBy(_._1).collectFirst {
+      case (c, as) if as.length > 1 => c }
+    require(dup.isEmpty, s"$name: column '${dup.get}' assigned twice")
+    val cond = Option(whereOrNull).map(expr).getOrElse(lit(true))
+    val byCol = assignments.toMap
+    // ONE projection over the ORIGINAL frame: every SET expression
+    // and the WHERE condition see the pre-update snapshot (SQL
+    // semantics) — a sequential withColumn fold would let later
+    // assignments read already-updated values
+    rewriteRows(spark, d, df => df.select(d.fields.fields.toSeq.map {
+      f => byCol.get(f.name) match {
+        case Some(e) => when(cond, expr(e).cast(f.dataType))
+          .otherwise(col(f.name)).as(f.name)
+        case None => col(f.name)
+      }
+    }: _*))
   }
 
   /** `DESCRIBE t` for a registered connector table — one row per
     * column in Spark's (col_name, data_type, comment) shape, with
     * computed/watermark/key/partition items annotated.
     */
-  def describeTable(spark: SparkSession, stmt: String): DataFrame = stmt match {
-    case DescribeRe(name) =>
-      val d = lookup(spark, name).getOrElse(sys.error(s"unknown table $name"))
-      val rows =
-        d.fields.fields.toSeq.map(f => (f.name, f.dataType.sql.toLowerCase,
-          if (d.partitions.contains(f.name)) "partition key" else "physical")) ++
-        d.computed.map { case (n, e) => (n, "", s"computed: $e") } ++
-        d.watermark.map { case (c, delay) =>
-          ("WATERMARK", "", s"$c - INTERVAL '$delay'") }.toSeq ++
-        (if (d.primaryKey.nonEmpty)
-          Seq(("PRIMARY KEY", "", d.primaryKey.mkString(", ")))
-        else Seq.empty)
-      import spark.implicits._
-      rows.toDF("col_name", "data_type", "comment")
-    case _ => sys.error("not a DESCRIBE statement")
+  private def describeTable(spark: SparkSession, d: TableDesc): DataFrame = {
+    val rows =
+      d.fields.fields.toSeq.map(f => (f.name, f.dataType.sql.toLowerCase,
+        if (d.partitions.contains(f.name)) "partition key" else "physical")) ++
+      d.computed.map { case (n, e) => (n, "", s"computed: $e") } ++
+      d.watermark.map { case (c, delay) =>
+        ("WATERMARK", "", s"$c - INTERVAL '$delay'") }.toSeq ++
+      (if (d.primaryKey.nonEmpty)
+        Seq(("PRIMARY KEY", "", d.primaryKey.mkString(", ")))
+      else Seq.empty)
+    import spark.implicits._
+    rows.toDF("col_name", "data_type", "comment")
   }
 
   /** `SHOW CREATE TABLE t` (SqlShowCreateTable) — the DDL text
     * reconstructed from the registry (metadata columns reconstruct as
     * their computed `_metadata` form).
     */
-  def showCreateTable(spark: SparkSession, stmt: String): DataFrame = stmt match {
-    case ShowCreateRe(name) =>
-      val d = lookup(spark, name).getOrElse(sys.error(s"unknown table $name"))
-      val items =
-        d.fields.fields.toSeq.map(f => s"  ${f.name} ${f.dataType.sql}") ++
-        d.computed.map { case (n, e) => s"  $n AS $e" } ++
-        d.watermark.map { case (c, delay) =>
-          val Array(n, unit) = delay.split(" ", 2)
-          s"  WATERMARK FOR $c AS $c - INTERVAL '$n' ${unit.toUpperCase}"
-        }.toSeq ++
-        (if (d.primaryKey.nonEmpty)
-          Seq(s"  PRIMARY KEY (${d.primaryKey.mkString(", ")}) NOT ENFORCED")
-        else Seq.empty)
-      val part =
-        if (d.partitions.nonEmpty)
-          s"\nPARTITIONED BY (${d.partitions.mkString(", ")})"
-        else ""
-      // escape quotes AND backslashes so option values (paths, csv
-      // delimiters, escape chars) round-trip as executable DDL — the
-      // quote-span scanner treats \ as an escape, so a bare trailing
-      // backslash would swallow the closing quote
-      def esc(s: String) = s.replace("\\", "\\\\").replace("'", "''")
-      val opts = d.options.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"'${esc(k)}' = '${esc(v)}'" }.mkString(",\n  ")
-      val ddl = s"CREATE TABLE ${d.name} (\n" + items.mkString(",\n") +
-        s"\n)$part WITH (\n  $opts\n)"
-      import spark.implicits._
-      Seq(ddl).toDF("result")
-    case _ => sys.error("not a SHOW CREATE TABLE statement")
-  }
-  def isInsert(spark: SparkSession, stmt: String): Boolean = stmt match {
-    case InsertRe(_, name, _) => lookup(spark, name).isDefined
-    case _ => false
+  private def showCreateTable(spark: SparkSession, d: TableDesc): DataFrame = {
+    val items =
+      d.fields.fields.toSeq.map(f => s"  ${f.name} ${f.dataType.sql}") ++
+      d.computed.map { case (n, e) => s"  $n AS $e" } ++
+      d.watermark.map { case (c, delay) =>
+        val Array(n, unit) = delay.split(" ", 2)
+        s"  WATERMARK FOR $c AS $c - INTERVAL '$n' ${unit.toUpperCase}"
+      }.toSeq ++
+      (if (d.primaryKey.nonEmpty)
+        Seq(s"  PRIMARY KEY (${d.primaryKey.mkString(", ")}) NOT ENFORCED")
+      else Seq.empty)
+    val part =
+      if (d.partitions.nonEmpty)
+        s"\nPARTITIONED BY (${d.partitions.mkString(", ")})"
+      else ""
+    // escape quotes AND backslashes so option values (paths, csv
+    // delimiters, escape chars) round-trip as executable DDL — the
+    // quote-span scanner treats \ as an escape, so a bare trailing
+    // backslash would swallow the closing quote
+    def esc(s: String) = s.replace("\\", "\\\\").replace("'", "''")
+    val opts = d.options.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"'${esc(k)}' = '${esc(v)}'" }.mkString(",\n  ")
+    val ddl = s"CREATE TABLE ${d.name} (\n" + items.mkString(",\n") +
+      s"\n)$part WITH (\n  $opts\n)"
+    import spark.implicits._
+    Seq(ddl).toDF("result")
   }
 
   /** Split at top-level commas (quote- and paren-aware). */
@@ -615,43 +577,30 @@ object ConnectorDdl {
     }
   }
 
-  /** Execute a CREATE TABLE … [PARTITIONED BY (…)] WITH (…) [LIKE …]
-    * statement. LIKE (SqlCreateTableLike): the new table inherits the
-    * base's schema, computed columns, watermark, primary key, partitions
-    * and — unless `(EXCLUDING OPTIONS)` — its WITH options; new columns
+  /** `CREATE TABLE t [(…)] [WITH (…)] LIKE base [(INCLUDING|EXCLUDING
+    * OPTIONS)]` (SqlCreateTableLike): the new table inherits the base's
+    * schema, computed columns, watermark, primary key, partitions and —
+    * unless `(EXCLUDING OPTIONS)` — its WITH options; new columns
     * append, new options override.
     */
-  def createTable(spark: SparkSession, stmt: String): Unit = {
-    stmt match {
-      case CreateLikeRe(name, bodyOrNull, optsOrNull, baseName, optMode) =>
-        val base = lookup(spark, baseName).getOrElse(
-          sys.error(s"LIKE base '$baseName' is not a registered connector table"))
-        val extra = Option(bodyOrNull).map(parseBody)
-          .getOrElse(ParsedBody(Vector.empty, Vector.empty, None, Nil))
-        val newOpts = Option(optsOrNull).map(parseOptions).getOrElse(Map.empty)
-        val baseOpts =
-          if (Option(optMode).exists(_.equalsIgnoreCase("EXCLUDING")))
-            Map.empty[String, String]
-          else base.options
-        register(spark, TableDesc(name,
-          StructType(base.fields.fields ++ extra.fields),
-          base.computed ++ extra.computed,
-          extra.watermark.orElse(base.watermark),
-          if (extra.pk.nonEmpty) extra.pk else base.primaryKey,
-          baseOpts ++ newOpts, base.partitions))
-        return
-      case _ => ()
-    }
-    val (bare, partitions) = splitPartitionClause(stmt)
-    bare match {
-      case CreateRe(name, body, opts) =>
-        val p = parseBody(body)
-        partitions.foreach(c => require(p.fields.exists(_.name == c),
-          s"PARTITIONED BY column '$c' is not in the schema"))
-        register(spark, TableDesc(name, StructType(p.fields), p.computed,
-          p.watermark, p.pk, parseOptions(opts), partitions))
-      case _ => sys.error("not a connector CREATE TABLE statement")
-    }
+  private def createLike(spark: SparkSession, name: String,
+      bodyOrNull: String, optsOrNull: String, baseName: String,
+      optMode: String): Unit = {
+    val base = lookup(spark, baseName).getOrElse(
+      sys.error(s"LIKE base '$baseName' is not a registered connector table"))
+    val extra = Option(bodyOrNull).map(parseBody)
+      .getOrElse(ParsedBody(Vector.empty, Vector.empty, None, Nil))
+    val newOpts = Option(optsOrNull).map(parseOptions).getOrElse(Map.empty)
+    val baseOpts =
+      if (Option(optMode).exists(_.equalsIgnoreCase("EXCLUDING")))
+        Map.empty[String, String]
+      else base.options
+    register(spark, TableDesc(name,
+      StructType(base.fields.fields ++ extra.fields),
+      base.computed ++ extra.computed,
+      extra.watermark.orElse(base.watermark),
+      if (extra.pk.nonEmpty) extra.pk else base.primaryKey,
+      baseOpts ++ newOpts, base.partitions))
   }
 
   /** Re-read a registered table with per-statement option overrides —
@@ -669,13 +618,6 @@ object ConnectorDdl {
       case c => sys.error(s"OPTIONS hint unsupported for connector '$c'")
     }
   }
-
-  /** Per-statement scratch checkpoint dir, reaped at JVM exit so
-    * repeated smoke jobs don't accumulate state-store files in /tmp
-    * (one process-wide hook — Q.scratchDir).
-    */
-  private def scratchCkpt(prefix: String): String =
-    graft.queries.Q.scratchDir(prefix)
 
   /** Upsert ordering column for INSERTs into a PRIMARY KEY table: the
     * per-statement/per-batch sequence composed with a monotone
@@ -801,179 +743,177 @@ object ConnectorDdl {
     * <query>` — static partition values (SqlInsert static partitions)
     * become literal columns appended to the query result.
     */
-  def insertInto(spark: SparkSession, stmt: String,
-      runQuery: (SparkSession, String) => DataFrame): Unit = stmt match {
-    case InsertRe(mode, name, query0) =>
-      val d = lookup(spark, name).getOrElse(sys.error(s"unknown table $name"))
-      val (query, static) = query0 match {
-        case InsertPartRe(pairs, rest) =>
-          (rest, pairs.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { p =>
-            val i = p.indexOf('=')
-            require(i > 0, s"bad static partition spec: $p")
-            val v = p.substring(i + 1).trim
-            p.substring(0, i).trim ->
-              (if (v.length >= 2 && v.head == '\'' && v.last == '\'')
-                v.substring(1, v.length - 1) else v)
-          })
-        case _ => (query0, Seq.empty)
-      }
-      // SQL INSERT semantics: the query's columns map POSITIONALLY to
-      // the table's declared (non-static) columns and CAST to their
-      // types — without this a literal like 1.0 (DECIMAL(2,1)) would be
-      // stored as decimal while the table schema reads DOUBLE, and the
-      // schema-mismatch read reinterprets the unscaled representation
-      static.foreach { case (c, _) =>
-        require(d.partitions.contains(c),
-          s"static partition '$c' is not a partition column of $name")
-      }
-      val targets = d.fields.fields.toSeq
-        .filterNot(f => static.exists(_._1 == f.name))
-      val raw = runQuery(spark, query)
-      require(raw.columns.length == targets.length,
-        s"INSERT INTO $name: query produces ${raw.columns.length} columns, " +
-          s"table expects ${targets.length}" +
-          (if (static.nonEmpty) " (after static partitions)" else ""))
-      val aligned = raw.select(raw.columns.zip(targets).map {
-        // backtick-quote: an unaliased literal column is NAMED like
-        // "9.0", which a bare col() would parse as a field path
-        case (c, f) => col(s"`$c`").cast(f.dataType).as(f.name)
-      }: _*)
-      val df = static.foldLeft(aligned) { case (acc, (c, v)) =>
-        val f = d.fields.find(_.name == c).getOrElse(
-          sys.error(s"static partition '$c' is not in $name's schema"))
-        acc.withColumn(c, lit(v).cast(f.dataType))
-      }.select(d.fields.fieldNames.map(col).toSeq: _*)
-      if (CdcFormats.contains(d.options.getOrElse("format", "parquet")))
-        sys.error(s"$name: CDC-format tables are read-only here — write " +
-          "envelopes with the producing system, or use a parquet/csv sink")
-      d.connector match {
-        case "print" =>
-          // print PER PARTITION on the executors (the reference's
-          // PrintSinkFunction prints per task manager) — never a
-          // driver-side collect, which would OOM on a big INSERT
-          if (df.isStreaming) {
-            // foreachBatch + executor-side print — the console sink
-            // truncates to 20 rows/20 chars AND collects each batch to
-            // the driver, both wrong for a sink of record
-            val q = df.writeStream
-              .option("checkpointLocation", scratchCkpt(s"print_${name}_ckpt"))
-              .foreachBatch { (batch: DataFrame, _: Long) =>
-                batch.foreachPartition {
-                  (it: Iterator[org.apache.spark.sql.Row]) =>
-                    it.foreach(r =>
-                      System.out.println(s"+I[${r.mkString(", ")}]"))
-                }
-              }
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            q.awaitTermination()
-          } else df.foreachPartition {
-            // System.out (not Scala's Console-cached println): read
-            // dynamically per call, so the task-thread output lands on
-            // the process's CURRENT stdout
-            (it: Iterator[org.apache.spark.sql.Row]) =>
-              it.foreach(r =>
-                System.out.println(s"+I[${r.mkString(", ")}]"))
-          }
-        case "blackhole" =>
-          if (df.isStreaming) {
-            // draining a stream into a blackhole is the reference's
-            // standard smoke-job shape — use the streaming noop sink
-            val q = df.writeStream.format("noop")
-              .option("checkpointLocation", scratchCkpt(s"bh_${name}_ckpt"))
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            q.awaitTermination()
-          } else df.write.format("noop").mode("overwrite").save()
-        case "filesystem" if d.primaryKey.nonEmpty && !df.isStreaming =>
-          val seq = d.insertSeq.incrementAndGet()
-          graft.sources.UpsertSink.mergeBatch(spark,
-            df.withColumn("__ddl_seq", ddlSeq(seq)), d.primaryKey, "__ddl_seq",
-            d.options("path"),
-            d.options.getOrElse("sink.buckets", "8").toInt)
-          graft.sources.UpsertSink.read(spark, d.options("path"))
-            .drop("__ddl_seq").createOrReplaceTempView(name)
-        case "filesystem" if df.isStreaming && d.primaryKey.nonEmpty =>
-          // streaming INSERT into a PRIMARY KEY table: changelog-mode
-          // inference (the reference's FlinkChangelogModeInferenceProgram
-          // decision) routes an UPDATING query through the keyed upsert
-          // merge — each micro-batch carries the latest row per key
-          // (Update mode), merged last-writer-wins via the bucketed
-          // UpsertSink. An insert-only query appends through the same
-          // merge (new keys only), so both modes land on the keyed store.
-          val inf = graft.streaming.ChangelogInference.infer(df)
-          val mode =
-            if (inf.needsRowKind) org.apache.spark.sql.streaming.OutputMode.Update()
-            else org.apache.spark.sql.streaming.OutputMode.Append()
-          val ckpt = d.options.getOrElse("sink.checkpoint",
-            java.nio.file.Files.createTempDirectory(s"ddl_${name}_ckpt")
-              .toString)
-          val path = d.options("path")
-          val buckets = d.options.getOrElse("sink.buckets", "8").toInt
-          val pk = d.primaryKey
-          val q = df.writeStream.outputMode(mode)
-            .option("checkpointLocation", ckpt)
+  private def insertInto(spark: SparkSession, mode: String, name: String,
+      d: TableDesc, query0: String,
+      run: (SparkSession, String) => DataFrame): Unit = {
+    val (query, static) = query0 match {
+      case InsertPartRe(pairs, rest) =>
+        (rest, pairs.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { p =>
+          val i = p.indexOf('=')
+          require(i > 0, s"bad static partition spec: $p")
+          val v = p.substring(i + 1).trim
+          p.substring(0, i).trim ->
+            (if (v.length >= 2 && v.head == '\'' && v.last == '\'')
+              v.substring(1, v.length - 1) else v)
+        })
+      case _ => (query0, Seq.empty)
+    }
+    // SQL INSERT semantics: the query's columns map POSITIONALLY to
+    // the table's declared (non-static) columns and CAST to their
+    // types — without this a literal like 1.0 (DECIMAL(2,1)) would be
+    // stored as decimal while the table schema reads DOUBLE, and the
+    // schema-mismatch read reinterprets the unscaled representation
+    static.foreach { case (c, _) =>
+      require(d.partitions.contains(c),
+        s"static partition '$c' is not a partition column of $name")
+    }
+    val targets = d.fields.fields.toSeq
+      .filterNot(f => static.exists(_._1 == f.name))
+    val raw = run(spark, query)
+    require(raw.columns.length == targets.length,
+      s"INSERT INTO $name: query produces ${raw.columns.length} columns, " +
+        s"table expects ${targets.length}" +
+        (if (static.nonEmpty) " (after static partitions)" else ""))
+    val aligned = raw.select(raw.columns.zip(targets).map {
+      // backtick-quote: an unaliased literal column is NAMED like
+      // "9.0", which a bare col() would parse as a field path
+      case (c, f) => col(s"`$c`").cast(f.dataType).as(f.name)
+    }: _*)
+    val df = static.foldLeft(aligned) { case (acc, (c, v)) =>
+      val f = d.fields.find(_.name == c).getOrElse(
+        sys.error(s"static partition '$c' is not in $name's schema"))
+      acc.withColumn(c, lit(v).cast(f.dataType))
+    }.select(d.fields.fieldNames.map(col).toSeq: _*)
+    if (CdcFormats.contains(d.options.getOrElse("format", "parquet")))
+      sys.error(s"$name: CDC-format tables are read-only here — write " +
+        "envelopes with the producing system, or use a parquet/csv sink")
+    d.connector match {
+      case "print" =>
+        // print PER PARTITION on the executors (the reference's
+        // PrintSinkFunction prints per task manager) — never a
+        // driver-side collect, which would OOM on a big INSERT
+        if (df.isStreaming) {
+          // foreachBatch + executor-side print — the console sink
+          // truncates to 20 rows/20 chars AND collects each batch to
+          // the driver, both wrong for a sink of record
+          val q = df.writeStream
+            .option("checkpointLocation", graft.queries.Q.scratchDir(s"print_${name}_ckpt"))
             .foreachBatch { (batch: DataFrame, _: Long) =>
-              val seq = d.insertSeq.incrementAndGet()
-              graft.sources.UpsertSink.mergeBatch(batch.sparkSession,
-                batch.withColumn("__ddl_seq", ddlSeq(seq)), pk, "__ddl_seq",
-                path, buckets)
-              ()
+              batch.foreachPartition {
+                (it: Iterator[org.apache.spark.sql.Row]) =>
+                  it.foreach(r =>
+                    System.out.println(s"+I[${r.mkString(", ")}]"))
+              }
             }
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start()
           q.awaitTermination()
-          graft.sources.UpsertSink.read(spark, path)
-            .drop("__ddl_seq").createOrReplaceTempView(name)
-        case "filesystem" if df.isStreaming =>
-          // a streaming INSERT INTO is the reference's job shape: the
-          // statement starts a continuous write. Bounded-source runs
-          // (file-monitor over a finite dir) drain via AvailableNow and
-          // return when caught up; an unbounded source keeps running —
-          // the caller holds the query handle via spark.streams.
-          // Changelog-mode inference gates the append file sink: an
-          // UPDATING query (unwindowed aggregate, arbitrary stateful op)
-          // cannot append to a keyless file table — the reference's
-          // planner rejects exactly this ("Table sink doesn't support
-          // consuming update changes"); declare a PRIMARY KEY to route
-          // through the upsert materialization instead.
-          val inf = graft.streaming.ChangelogInference.infer(df)
-          if (inf.needsRowKind)
-            sys.error(s"Table sink '$name' doesn't support consuming " +
-              "update changes which is produced by this streaming query " +
-              "(unwindowed aggregate / stateful operator). Declare a " +
-              "PRIMARY KEY on the table for upsert materialization, or " +
-              "make the query insert-only (window the aggregate on event " +
-              "time).")
-          val fmt = d.options.getOrElse("format", "parquet")
-          val ckpt = d.options.getOrElse("sink.checkpoint",
-            java.nio.file.Files.createTempDirectory(s"ddl_${name}_ckpt")
-              .toString)
-          val ws0 = df.writeStream.format(fmt)
-            .options(formatOptions(d, fmt))
-            .option("checkpointLocation", ckpt)
+        } else df.foreachPartition {
+          // System.out (not Scala's Console-cached println): read
+          // dynamically per call, so the task-thread output lands on
+          // the process's CURRENT stdout
+          (it: Iterator[org.apache.spark.sql.Row]) =>
+            it.foreach(r =>
+              System.out.println(s"+I[${r.mkString(", ")}]"))
+        }
+      case "blackhole" =>
+        if (df.isStreaming) {
+          // draining a stream into a blackhole is the reference's
+          // standard smoke-job shape — use the streaming noop sink
+          val q = df.writeStream.format("noop")
+            .option("checkpointLocation", graft.queries.Q.scratchDir(s"bh_${name}_ckpt"))
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          val q = (if (d.partitions.nonEmpty)
-            ws0.partitionBy(d.partitions: _*) else ws0)
-            .start(d.options("path"))
+            .start()
           q.awaitTermination()
-          sourceFrame(spark, d.copy(options = d.options - "scan.streaming"))
-            .createOrReplaceTempView(name)
-        case "filesystem" =>
-          val fmt = d.options.getOrElse("format", "parquet")
-          val w0 = df.write.format(fmt).options(formatOptions(d, fmt))
-            .mode(if (mode.equalsIgnoreCase("OVERWRITE")) "overwrite" else "append")
-          // partitioned OVERWRITE replaces only the partitions the
-          // query produced (the reference's dynamic-partition overwrite;
-          // a static PARTITION clause pins exactly one of them)
-          val w = if (d.partitions.nonEmpty)
-            w0.partitionBy(d.partitions: _*)
-              .option("partitionOverwriteMode", "dynamic")
-          else w0
-          w.save(d.options("path"))
-          sourceFrame(spark, d).createOrReplaceTempView(name)
-        case c => sys.error(s"connector '$c' is not writable")
-      }
-    case _ => sys.error("not a connector INSERT statement")
+        } else df.write.format("noop").mode("overwrite").save()
+      case "filesystem" if d.primaryKey.nonEmpty && !df.isStreaming =>
+        val seq = d.insertSeq.incrementAndGet()
+        graft.sources.UpsertSink.mergeBatch(spark,
+          df.withColumn("__ddl_seq", ddlSeq(seq)), d.primaryKey, "__ddl_seq",
+          d.options("path"),
+          d.options.getOrElse("sink.buckets", "8").toInt)
+        graft.sources.UpsertSink.read(spark, d.options("path"))
+          .drop("__ddl_seq").createOrReplaceTempView(name)
+      case "filesystem" if df.isStreaming && d.primaryKey.nonEmpty =>
+        // streaming INSERT into a PRIMARY KEY table: changelog-mode
+        // inference (the reference's FlinkChangelogModeInferenceProgram
+        // decision) routes an UPDATING query through the keyed upsert
+        // merge — each micro-batch carries the latest row per key
+        // (Update mode), merged last-writer-wins via the bucketed
+        // UpsertSink. An insert-only query appends through the same
+        // merge (new keys only), so both modes land on the keyed store.
+        val inf = graft.streaming.ChangelogInference.infer(df)
+        val mode =
+          if (inf.needsRowKind) org.apache.spark.sql.streaming.OutputMode.Update()
+          else org.apache.spark.sql.streaming.OutputMode.Append()
+        val ckpt = d.options.getOrElse("sink.checkpoint",
+          java.nio.file.Files.createTempDirectory(s"ddl_${name}_ckpt")
+            .toString)
+        val path = d.options("path")
+        val buckets = d.options.getOrElse("sink.buckets", "8").toInt
+        val pk = d.primaryKey
+        val q = df.writeStream.outputMode(mode)
+          .option("checkpointLocation", ckpt)
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            val seq = d.insertSeq.incrementAndGet()
+            graft.sources.UpsertSink.mergeBatch(batch.sparkSession,
+              batch.withColumn("__ddl_seq", ddlSeq(seq)), pk, "__ddl_seq",
+              path, buckets)
+            ()
+          }
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        graft.sources.UpsertSink.read(spark, path)
+          .drop("__ddl_seq").createOrReplaceTempView(name)
+      case "filesystem" if df.isStreaming =>
+        // a streaming INSERT INTO is the reference's job shape: the
+        // statement starts a continuous write. Bounded-source runs
+        // (file-monitor over a finite dir) drain via AvailableNow and
+        // return when caught up; an unbounded source keeps running —
+        // the caller holds the query handle via spark.streams.
+        // Changelog-mode inference gates the append file sink: an
+        // UPDATING query (unwindowed aggregate, arbitrary stateful op)
+        // cannot append to a keyless file table — the reference's
+        // planner rejects exactly this ("Table sink doesn't support
+        // consuming update changes"); declare a PRIMARY KEY to route
+        // through the upsert materialization instead.
+        val inf = graft.streaming.ChangelogInference.infer(df)
+        if (inf.needsRowKind)
+          sys.error(s"Table sink '$name' doesn't support consuming " +
+            "update changes which is produced by this streaming query " +
+            "(unwindowed aggregate / stateful operator). Declare a " +
+            "PRIMARY KEY on the table for upsert materialization, or " +
+            "make the query insert-only (window the aggregate on event " +
+            "time).")
+        val fmt = d.options.getOrElse("format", "parquet")
+        val ckpt = d.options.getOrElse("sink.checkpoint",
+          java.nio.file.Files.createTempDirectory(s"ddl_${name}_ckpt")
+            .toString)
+        val ws0 = df.writeStream.format(fmt)
+          .options(formatOptions(d, fmt))
+          .option("checkpointLocation", ckpt)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        val q = (if (d.partitions.nonEmpty)
+          ws0.partitionBy(d.partitions: _*) else ws0)
+          .start(d.options("path"))
+        q.awaitTermination()
+        sourceFrame(spark, d.copy(options = d.options - "scan.streaming"))
+          .createOrReplaceTempView(name)
+      case "filesystem" =>
+        val fmt = d.options.getOrElse("format", "parquet")
+        val w0 = df.write.format(fmt).options(formatOptions(d, fmt))
+          .mode(if (mode.equalsIgnoreCase("OVERWRITE")) "overwrite" else "append")
+        // partitioned OVERWRITE replaces only the partitions the
+        // query produced (the reference's dynamic-partition overwrite;
+        // a static PARTITION clause pins exactly one of them)
+        val w = if (d.partitions.nonEmpty)
+          w0.partitionBy(d.partitions: _*)
+            .option("partitionOverwriteMode", "dynamic")
+        else w0
+        w.save(d.options("path"))
+        sourceFrame(spark, d).createOrReplaceTempView(name)
+      case c => sys.error(s"connector '$c' is not writable")
+    }
   }
 }

@@ -56,14 +56,30 @@ object MaterializedTable {
   private val DropRe =
     """(?is)^\s*DROP\s+MATERIALIZED\s+TABLE\s+([A-Za-z_][\w.]*)\s*;?\s*$""".r
 
-  def isCreate(stmt: String): Boolean = CreateRe.matches(stmt)
-  def isAlter(spark: SparkSession, stmt: String): Boolean = stmt match {
-    case AlterRe(name, _) => lookup(spark, name).isDefined
-    case _ => false
-  }
-  def isDrop(spark: SparkSession, stmt: String): Boolean = stmt match {
-    case DropRe(name) => lookup(spark, name).isDefined
-    case _ => false
+  /** Run `stmt` if it is materialized-table DDL: every CREATE
+    * MATERIALIZED TABLE, and ALTER/DROP MATERIALIZED TABLE on a
+    * REGISTERED name (others fall through to spark.sql). `run` is the
+    * front-door SQL entry, so the AS query may use every extended
+    * construct. None when the statement is not this module's.
+    */
+  def step(spark: SparkSession, stmt: String,
+      run: (SparkSession, String) => DataFrame): Option[DataFrame] = {
+    object Registered {
+      def unapply(name: String): Option[MatDesc] = lookup(spark, name)
+    }
+    def done(u: Unit): Option[DataFrame] = Some(spark.emptyDataFrame)
+    stmt match {
+      case CreateRe(name, opts, fn, fUnit, mode, query) =>
+        done(create(spark, name, opts, fn, fUnit, mode, query, run))
+      case AlterRe(name @ Registered(d), verb) =>
+        done(alter(spark, name, d, verb, run))
+      case DropRe(name @ Registered(d)) => done {
+        registry.remove(key(spark, name))
+        stopContinuous(spark, d)
+        spark.catalog.dropTempView(d.name)
+      }
+      case _ => None
+    }
   }
 
   private def registerView(spark: SparkSession, d: MatDesc): Unit = {
@@ -128,71 +144,54 @@ object MaterializedTable {
     d.listener = None
   }
 
-  /** Execute CREATE MATERIALIZED TABLE. `run` is the front-door SQL
-    * entry so the AS query may use every extended construct.
-    */
-  def create(spark: SparkSession, stmt: String,
-      run: (SparkSession, String) => DataFrame): Unit = stmt match {
-    case CreateRe(name, optsOrNull, fn, fUnit, modeOrNull, query) =>
-      val options = Option(optsOrNull).map(o =>
-        ConnectorDdl.parseOptions(o)).getOrElse(Map.empty)
-      val path = options.getOrElse("path", {
-        // default storage is JVM-scoped scratch; reaped at exit so
-        // repeated Verify/Bench runs don't accumulate materializations
-        graft.queries.Q.scratchDir(s"mt_$name") + "/t"
-      })
-      val probe = run(spark, query)
-      val mode = Option(modeOrNull).map(_.toUpperCase).getOrElse(
-        if (probe.isStreaming) "CONTINUOUS" else "FULL")
-      val ckpt = options.getOrElse("checkpoint",
-        java.nio.file.Files.createTempDirectory(s"mt_${name}_ckpt").toString)
-      val d = MatDesc(name, query, path, s"$fn ${fUnit.toLowerCase}",
-        mode, ckpt, None, schema = probe.schema)
-      mode match {
-        case "FULL" =>
-          require(!probe.isStreaming,
-            s"$name: REFRESH_MODE = FULL needs a bounded query")
-          probe.write.mode("overwrite").parquet(path)
-        case "CONTINUOUS" =>
-          startContinuous(spark, d, probe)
-          d.job.foreach(_.processAllAvailable()) // initial image
-      }
-      registry.put(key(spark, name), d)
-      registerView(spark, d)
-    case _ => sys.error("not a CREATE MATERIALIZED TABLE statement")
+  private def create(spark: SparkSession, name: String, optsOrNull: String,
+      fn: String, fUnit: String, modeOrNull: String, query: String,
+      run: (SparkSession, String) => DataFrame): Unit = {
+    val options = Option(optsOrNull).map(o =>
+      ConnectorDdl.parseOptions(o)).getOrElse(Map.empty)
+    val path = options.getOrElse("path", {
+      // default storage is JVM-scoped scratch; reaped at exit so
+      // repeated Verify/Bench runs don't accumulate materializations
+      graft.queries.Q.scratchDir(s"mt_$name") + "/t"
+    })
+    val probe = run(spark, query)
+    val mode = Option(modeOrNull).map(_.toUpperCase).getOrElse(
+      if (probe.isStreaming) "CONTINUOUS" else "FULL")
+    val ckpt = options.getOrElse("checkpoint",
+      java.nio.file.Files.createTempDirectory(s"mt_${name}_ckpt").toString)
+    val d = MatDesc(name, query, path, s"$fn ${fUnit.toLowerCase}",
+      mode, ckpt, None, schema = probe.schema)
+    mode match {
+      case "FULL" =>
+        require(!probe.isStreaming,
+          s"$name: REFRESH_MODE = FULL needs a bounded query")
+        probe.write.mode("overwrite").parquet(path)
+      case "CONTINUOUS" =>
+        startContinuous(spark, d, probe)
+        d.job.foreach(_.processAllAvailable()) // initial image
+    }
+    registry.put(key(spark, name), d)
+    registerView(spark, d)
   }
 
   /** REFRESH (full re-materialization), SUSPEND (stop the continuous
     * job, checkpoint kept), RESUME (restart it from the checkpoint).
     */
-  def alter(spark: SparkSession, stmt: String,
-      run: (SparkSession, String) => DataFrame): Unit = stmt match {
-    case AlterRe(name, verb) =>
-      val d = lookup(spark, name).getOrElse(sys.error(s"unknown table $name"))
-      verb.toUpperCase match {
-        case "REFRESH" =>
-          require(d.mode == "FULL",
-            s"$name: REFRESH applies to FULL mode (continuous tables " +
-              "stay fresh; SUSPEND/RESUME control the job)")
-          run(spark, d.query).write.mode("overwrite").parquet(d.path)
-          registerView(spark, d)
-        case "SUSPEND" =>
-          require(d.mode == "CONTINUOUS", s"$name: SUSPEND needs CONTINUOUS mode")
-          stopContinuous(spark, d)
-        case "RESUME" =>
-          require(d.mode == "CONTINUOUS", s"$name: RESUME needs CONTINUOUS mode")
-          require(d.job.isEmpty, s"$name is already running")
-          startContinuous(spark, d, run(spark, d.query))
-      }
-    case _ => sys.error("not an ALTER MATERIALIZED TABLE statement")
-  }
-
-  def drop(spark: SparkSession, stmt: String): Unit = stmt match {
-    case DropRe(name) =>
-      registry.remove(key(spark, name)).foreach { d =>
+  private def alter(spark: SparkSession, name: String, d: MatDesc,
+      verb: String, run: (SparkSession, String) => DataFrame): Unit =
+    verb.toUpperCase match {
+      case "REFRESH" =>
+        require(d.mode == "FULL",
+          s"$name: REFRESH applies to FULL mode (continuous tables " +
+            "stay fresh; SUSPEND/RESUME control the job)")
+        run(spark, d.query).write.mode("overwrite").parquet(d.path)
+        registerView(spark, d)
+      case "SUSPEND" =>
+        require(d.mode == "CONTINUOUS", s"$name: SUSPEND needs CONTINUOUS mode")
         stopContinuous(spark, d)
-        spark.catalog.dropTempView(d.name)
-      }
-    case _ => sys.error("not a DROP MATERIALIZED TABLE statement")
-  }
+      case "RESUME" =>
+        require(d.mode == "CONTINUOUS", s"$name: RESUME needs CONTINUOUS mode")
+        require(d.job.isEmpty, s"$name is already running")
+        startContinuous(spark, d, run(spark, d.query))
+    }
 }

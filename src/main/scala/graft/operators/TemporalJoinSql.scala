@@ -33,8 +33,8 @@ import org.apache.spark.sql.functions._
   * reference (where it comes from the right table's WATERMARK
   * declaration), it is not part of the join syntax — it defaults to the
   * right column named like the probe-time column and can be overridden
-  * with `rightTimeCol` or, for text-only callers ([[graft.GraftSql]]),
-  * the session conf `spark.graft.temporalJoin.rightTimeCol`. Streaming
+  * with the session conf `spark.graft.temporalJoin.rightTimeCol`
+  * (`SET 'spark.graft.temporalJoin.rightTimeCol' = 'vts'`). Streaming
   * routes read `spark.graft.temporalJoin.watermarkDelay` (default
   * `0 seconds`) — the WATERMARK ... INTERVAL bound of the reference;
   * out-of-order streams need it set or late rows drop.
@@ -130,13 +130,13 @@ object TemporalJoinSql {
     * spliced + dequalified text plus the view name for the caller to
     * drop after execution. None when the statement has no span.
     */
-  private[graft] def step(spark: SparkSession, query: String,
-      rightTimeCol: Option[String] = None): Option[(String, Seq[String])] = {
+  private[graft] def step(spark: SparkSession,
+      query: String): Option[(String, Seq[String])] = {
     // match on the quote-masked text so a span inside a string literal is
     // never taken for the join idiom; positions line up with `query`
     val masked = SqlText.maskQuoted(query)
     JoinRe.findFirstMatchIn(masked).map(m =>
-      rewriteSpan(spark, query, masked, m, rightTimeCol))
+      rewriteSpan(spark, query, masked, m))
       .orElse(lateralStep(spark, query, masked))
   }
 
@@ -237,20 +237,8 @@ object TemporalJoinSql {
     Some((out, views.result()))
   }
 
-  /** Execute a SQL statement containing the FOR SYSTEM_TIME AS OF join. */
-  def sql(spark: SparkSession, query: String,
-      rightTimeCol: Option[String] = None): DataFrame = {
-    val (text, views) = step(spark, query, rightTimeCol).getOrElse(
-      throw new IllegalArgumentException(
-        "no `FROM l [AS] a JOIN r FOR SYSTEM_TIME AS OF a.ts [AS] b ON …` " +
-          "span found in statement"))
-    try spark.sql(text)
-    finally views.foreach(spark.catalog.dropTempView)
-  }
-
   private def rewriteSpan(spark: SparkSession, query: String, masked: String,
-      m: scala.util.matching.Regex.Match,
-      rightTimeCol: Option[String]): (String, Seq[String]) = {
+      m: scala.util.matching.Regex.Match): (String, Seq[String]) = {
     // the textual splice replaces the span with `FROM <view>` at ITS
     // nesting level only — a span inside a derived-table subquery would
     // splice at the wrong level, so reject it loudly
@@ -290,17 +278,15 @@ object TemporalJoinSql {
     require(left.isStreaming || !right.isStreaming,
       "temporal join with a streaming BUILD side needs a streaming probe " +
         "side too (a batch probe cannot wait on stream versions)")
-    // version-time and watermark-delay hooks for callers that enter
-    // through plain SQL text (GraftSql) and cannot pass parameters: the
-    // session confs mirror the reference's per-table WATERMARK
+    // version-time and watermark-delay hooks reachable from SQL text:
+    // the session confs mirror the reference's per-table WATERMARK
     // declaration and table.exec.* options
-    val rightTs = rightTimeCol
-      .orElse(spark.conf.getOption("spark.graft.temporalJoin.rightTimeCol")
-        .filter(_.nonEmpty))
+    val rightTs = spark.conf
+      .getOption("spark.graft.temporalJoin.rightTimeCol").filter(_.nonEmpty)
       .getOrElse {
         require(right.columns.contains(tsCol),
-          s"right side $rt has no version-time column '$tsCol'; pass " +
-            "rightTimeCol or set spark.graft.temporalJoin.rightTimeCol")
+          s"right side $rt has no version-time column '$tsCol'; set " +
+            "spark.graft.temporalJoin.rightTimeCol")
         tsCol
       }
     val wmDelay = spark.conf

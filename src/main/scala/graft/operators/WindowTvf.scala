@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * `window_start`/`window_end`, and the rest of the statement is ordinary
   * SQL over that expanded table.
   *
-  * Spark has no TVF syntax, so `sql` rewrites the statement: the
+  * Spark has no TVF syntax, so `step` rewrites the statement: the
   * `TABLE(TVF(…))` span is parsed, expanded into a DataFrame with the
   * window columns (built-in `window`-function bucketing for tumble, an
   * explode over the covering starts for hop, growing slice ends for
@@ -40,7 +40,7 @@ object WindowTvf {
     * rewrite loses an ORDER BY/HAVING output-name reference).
     */
   private[graft] def step(spark: SparkSession, query: String,
-      forceExpand: Boolean = false): Option[Step] =
+      forceExpand: Boolean): Option[Step] =
     findCall(query).map { call =>
       val (tableName, partCols) = parseTableArg(call)
       val df = spark.table(tableName)
@@ -66,31 +66,6 @@ object WindowTvf {
           Seq(view), batchSessionRoute = false)
       }
     }
-
-  /** Execute a SQL statement whose FROM references a window TVF. */
-  def sql(spark: SparkSession, query: String): DataFrame =
-    sqlImpl(spark, query, forceExpand = false)
-
-  private def sqlImpl(spark: SparkSession, query: String,
-      forceExpand: Boolean): DataFrame = {
-    val s = step(spark, query, forceExpand).getOrElse(
-      throw new IllegalArgumentException(
-        "no TUMBLE/HOP/CUMULATE/SESSION(TABLE …) call found in statement"))
-    try spark.sql(s.text)
-    catch {
-      // the session_window rewrite can lose an output-name reference
-      // (window_start appearing only inside SELECT expressions leaves no
-      // alias for ORDER BY/HAVING to resolve against) — on batch, fall
-      // back to the analytic expansion, which always aliases. Streaming
-      // pure-agg SESSION statements keep the loud error: their expansion
-      // would need the SessionWindows.annotate route plus a re-aggregate,
-      // which the step() dispatch deliberately does not compose
-      case e: org.apache.spark.sql.AnalysisException
-          if s.batchSessionRoute && !forceExpand =>
-        sqlImpl(spark, query, forceExpand = true)
-    }
-    finally s.views.foreach(spark.catalog.dropTempView)
-  }
 
   /** Rewrite a pure-window-aggregate `SESSION(TABLE …)` statement into a
     * `session_window` aggregate: the TVF span becomes the raw table, the

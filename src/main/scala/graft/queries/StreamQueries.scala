@@ -864,26 +864,30 @@ object StreamQueries {
     * static-dim): the case's probe and version envelopes in (micro-ts,
     * id) order, plus the far-future flush-probe sentinel (probeId = -1;
     * NUL-prefixed key, disjoint from every CAST/CONCAT key the generator
-    * can produce). One input keeps the triple-path assertion honest: all
-    * routes replay literally the same envelopes.
+    * can produce), ten days past the last envelope (past the epoch when
+    * neither arm keeps a row). One input keeps the triple-path assertion
+    * honest: all routes replay literally the same envelopes.
     */
   private def temporalCaseInput(s: SparkSession, dir: String,
       c: StreamFuzzGen.TemporalCase): (Seq[TemporalEvent], TemporalEvent) = {
     import s.implicits._
-    val rows =
+    // rows matching neither arm make no envelope — the stage's filter
+    // pushes the union of the arms into the scan
+    val envs =
       eventsInput[(String, java.sql.Timestamp, Long, Long, Boolean, Boolean)](
-        s, dir, "true", strCol(c.keySql, "k"), tsCol, col("event_id"),
-        centsCol, expr(c.probeFilterSql).as("pf"),
-        expr(c.versionFilterSql).as("vf"))
-    val envs = rows.flatMap { case (k, ts, id, cents, pf, vf) =>
-      // a row matching both arms is BOTH a probe and a version (two
-      // envelopes, version first so same-position iteration order is
-      // deterministic; resolution is watermark-driven either way)
-      (if (vf) Seq(TemporalEvent(k, ts, isProbe = false, id, cents)) else Nil) ++
-      (if (pf) Seq(TemporalEvent(k, ts, isProbe = true, id, 0L)) else Nil)
-    }
+        s, dir, s"(${c.probeFilterSql}) OR (${c.versionFilterSql})",
+        strCol(c.keySql, "k"), tsCol, col("event_id"), centsCol,
+        expr(c.probeFilterSql).as("pf"), expr(c.versionFilterSql).as("vf"))
+      .flatMap { case (k, ts, id, cents, pf, vf) =>
+        // a row matching both arms is BOTH a probe and a version (two
+        // envelopes, version first so same-position iteration order is
+        // deterministic; resolution is watermark-driven either way)
+        (if (vf) Seq(TemporalEvent(k, ts, isProbe = false, id, cents)) else Nil) ++
+        (if (pf) Seq(TemporalEvent(k, ts, isProbe = true, id, 0L)) else Nil)
+      }
     val sentinel = TemporalEvent("\u0000flush",
-      farFuture(rows.last._2.getTime), isProbe = true, -1L, 0L)
+      farFuture(envs.lastOption.fold(0L)(_.eventTime.getTime)),
+      isProbe = true, -1L, 0L)
     (envs, sentinel)
   }
 

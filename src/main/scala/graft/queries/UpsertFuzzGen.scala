@@ -5,7 +5,7 @@ import scala.util.Random
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Seeded random generator for PRIMARY-KEY upsert differential cases —
-  * fuzzes [[graft.operators.ConnectorDdl.insertInto]]'s PK arm (the
+  * fuzzes the PK arm of [[graft.operators.ConnectorDdl.step]]'s INSERT (the
   * keyed merge through [[graft.sources.UpsertSink.mergeBatch]]; the
   * reference's SinkUpsertMaterializer last-row-per-key contract,
   * flink-table-runtime SinkUpsertMaterializer.java) with shapes the one

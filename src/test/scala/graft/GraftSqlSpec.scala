@@ -95,10 +95,10 @@ class GraftSqlSpec extends SparkSuite {
     assert(rows.head.get(1).toString == "PT2H")
   }
 
-  test("the same fallback works through WindowTvf.sql directly") {
+  test("the SESSION fallback serves an ORDER BY on window_start alone") {
     Seq(("u1", ts(1)), ("u1", ts(2)))
       .toDF("uid", "ts").createOrReplaceTempView("gs_sess2")
-    val out = graft.operators.WindowTvf.sql(spark,
+    val out = GraftSql.sql(spark,
       """SELECT uid, window_end - window_start AS dur
         |FROM TABLE(SESSION(TABLE gs_sess2 PARTITION BY uid,
         |  DESCRIPTOR(ts), INTERVAL '1' HOUR))
@@ -224,5 +224,44 @@ class GraftSqlSpec extends SparkSuite {
         "SELECT /*+ STATE_TTL('t'='1h') */ x FROM gs_opt_plain")
     }
     assert(e2.getMessage.contains("STATE_TTL"))
+  }
+
+  test("DDL/DML on an unregistered name falls through; on a registered one it is claimed") {
+    import graft.operators.{ConnectorDdl, MaterializedTable}
+    // one row per statement form whose arm claims registered names only;
+    // {t} is the table name. A claimed statement runs (or fails with the
+    // module's own error); only an unclaimed one returns None
+    val connectorForms = Seq(
+      "ALTER TABLE {t} SET ('k' = 'v')", "ALTER TABLE {t} RESET ('k')",
+      "ALTER TABLE {t} ADD (extra INT)", "ALTER TABLE {t} RENAME TO {t}_renamed",
+      "DROP TABLE {t}", "DROP TABLE IF EXISTS {t}", "ALTER TABLE {t} COMPACT",
+      "SHOW PARTITIONS {t}", "DESCRIBE {t}", "DESC EXTENDED {t}",
+      "SHOW CREATE TABLE {t}", "TRUNCATE TABLE {t}",
+      "DELETE FROM {t} WHERE id = 1", "DELETE FROM {t}",
+      "UPDATE {t} SET id = 2 WHERE id = 1", "INSERT INTO {t} SELECT 1, 'a'",
+      "INSERT OVERWRITE {t} SELECT 1, 'a'")
+    val matForms = Seq("ALTER MATERIALIZED TABLE {t} REFRESH",
+      "ALTER MATERIALIZED TABLE {t} SUSPEND",
+      "ALTER MATERIALIZED TABLE {t} RESUME", "DROP MATERIALIZED TABLE {t}")
+    def claimed(step: String => Option[org.apache.spark.sql.DataFrame],
+        stmt: String): Boolean =
+      scala.util.Try(step(stmt)).map(_.isDefined).getOrElse(true)
+    val connectorStep = (q: String) => ConnectorDdl.step(spark, q, GraftSql.sql)
+    val matStep = (q: String) => MaterializedTable.step(spark, q, GraftSql.sql)
+    connectorForms.zipWithIndex.foreach { case (form, i) =>
+      assert(connectorStep(form.replace("{t}", s"gs_unreg_$i")).isEmpty, form)
+      val t = s"gs_reg_$i"
+      GraftSql.sql(spark,
+        s"""CREATE TABLE $t (id INT, tag STRING) WITH ('connector' = 'filesystem',
+           |  'path' = '${tmpDir("gs_reg")}/t', 'format' = 'parquet')""".stripMargin)
+      assert(claimed(connectorStep, form.replace("{t}", t)), form)
+    }
+    matForms.zipWithIndex.foreach { case (form, i) =>
+      assert(matStep(form.replace("{t}", s"gs_unreg_mt_$i")).isEmpty, form)
+      val t = s"gs_reg_mt_$i"
+      GraftSql.sql(spark, s"CREATE MATERIALIZED TABLE $t " +
+        "FRESHNESS = INTERVAL '1' MINUTE AS SELECT 1 AS x")
+      assert(claimed(matStep, form.replace("{t}", t)), form)
+    }
   }
 }

@@ -533,8 +533,8 @@ class ConnectorDdlSpec extends SparkSuite {
   test("CREATE TABLE LIKE with an UNREGISTERED base falls through to Spark") {
     // Spark-native catalog DDL must keep working: the LIKE arm claims a
     // statement only when the base is a registered connector table
-    assert(!ConnectorDdl.isCreate(spark,
-      "CREATE TABLE native_kid LIKE native_base"))
+    assert(ConnectorDdl.step(spark,
+      "CREATE TABLE native_kid LIKE native_base", GraftSql.sql).isEmpty)
     // the front door routes it to spark.sql — the failure is Spark's
     // own missing-table analysis error, not the registry error
     val e = intercept[org.apache.spark.sql.AnalysisException] {

@@ -66,6 +66,19 @@ class OperatorSpec extends SparkSuite {
     assert(out.sorted == (0L until 50L).map(_ * 2))
   }
 
+  test("unordered async never waits on a result it already emitted") {
+    // immediate futures at capacity 1 over 400 partitions: every result
+    // completes while its predecessor is being taken, the window in which
+    // a callback-side in-flight count lags its own queue put
+    val instant = new AsyncOps.AsyncFunction[Long, Long] {
+      override def invoke(in: Long)(implicit ec: ExecutionContext): Future[Long] =
+        Future(in)
+    }
+    val ds = spark.range(0, 20000, 1, 400).as[Long]
+    assert(AsyncOps.unorderedAsync(ds, instant, capacity = 1, timeoutMs = 1500)
+      .count() == 20000L)
+  }
+
   test("async retry: transient failures recover, exhaustion propagates") {
     // fails the first 2 attempts per element, succeeds on the 3rd
     class Flaky2 extends AsyncOps.AsyncFunction[Long, Long] {

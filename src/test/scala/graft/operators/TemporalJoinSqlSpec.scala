@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 
-import graft.SparkSuite
+import graft.{GraftSql, SparkSuite}
 
 /** The FOR SYSTEM_TIME AS OF SQL front door: span parsing, alias
   * qualifier rewriting, differing key/version-time column names, and
@@ -10,6 +10,11 @@ import graft.SparkSuite
   */
 class TemporalJoinSqlSpec extends SparkSuite {
   import spark.implicits._
+
+  /** The front door with the version-time column named `vts`. */
+  private def tj(query: String): DataFrame =
+    graft.queries.Q.withConf(spark,
+      "spark.graft.temporalJoin.rightTimeCol" -> "vts")(GraftSql.sql(spark, query))
 
   private def setup(): Unit = {
     Seq((1L, "u1", 100L), (2L, "u1", 250L), (3L, "u2", 50L))
@@ -20,12 +25,11 @@ class TemporalJoinSqlSpec extends SparkSuite {
 
   test("each probe joins the latest version at or before its time") {
     setup()
-    val out = TemporalJoinSql.sql(spark,
+    val out = tj(
       """SELECT p.p_id, r.rate FROM probes AS p
         |JOIN rates FOR SYSTEM_TIME AS OF p.ts AS r
         |ON p.user_id = r.uid
-        |ORDER BY p.p_id""".stripMargin,
-      rightTimeCol = Some("vts"))
+        |ORDER BY p.p_id""".stripMargin)
     assert(out.collect().toSeq == Seq(
       Row(1L, 1.0),        // ts 100: version 90 current
       Row(2L, 2.0),        // ts 250: version 200 current
@@ -34,12 +38,11 @@ class TemporalJoinSqlSpec extends SparkSuite {
 
   test("right-side columns surface through the r-alias namespace") {
     setup()
-    val out = TemporalJoinSql.sql(spark,
+    val out = tj(
       """SELECT p.p_id, r.vts, r.rate FROM probes p
         |JOIN rates FOR SYSTEM_TIME AS OF p.ts r
         |ON r.uid = p.user_id
-        |WHERE r.rate IS NOT NULL ORDER BY p.p_id""".stripMargin,
-      rightTimeCol = Some("vts"))
+        |WHERE r.rate IS NOT NULL ORDER BY p.p_id""".stripMargin)
     assert(out.collect().toSeq == Seq(Row(1L, 90L, 1.0), Row(2L, 200L, 2.0)))
   }
 
@@ -54,11 +57,10 @@ class TemporalJoinSqlSpec extends SparkSuite {
       .createOrReplaceTempView("s_probes")
     rates.toDS().toDF("uid", "vts", "rate")
       .createOrReplaceTempView("s_rates")
-    val out = TemporalJoinSql.sql(spark,
+    val out = tj(
       """SELECT p.p_id, r.rate FROM s_probes AS p
         |JOIN s_rates FOR SYSTEM_TIME AS OF p.ts AS r
-        |ON p.user_id = r.uid""".stripMargin,
-      rightTimeCol = Some("vts"))
+        |ON p.user_id = r.uid""".stripMargin)
     assert(out.isStreaming)
     // the union shares ONE watermark: enqueue the first window on both
     // sides BEFORE start so neither side's batch advances it past the
@@ -90,12 +92,11 @@ class TemporalJoinSqlSpec extends SparkSuite {
 
   test("alias-like sequences inside string literals are not rewritten") {
     setup()
-    val out = TemporalJoinSql.sql(spark,
+    val out = tj(
       """SELECT p.p_id, 'p.note' AS tag, r.rate FROM probes AS p
         |JOIN rates FOR SYSTEM_TIME AS OF p.ts AS r
         |ON p.user_id = r.uid
-        |WHERE r.rate IS NOT NULL ORDER BY p.p_id""".stripMargin,
-      rightTimeCol = Some("vts"))
+        |WHERE r.rate IS NOT NULL ORDER BY p.p_id""".stripMargin)
     assert(out.collect().toSeq == Seq(
       Row(1L, "p.note", 1.0), Row(2L, "p.note", 2.0)))
   }
@@ -104,12 +105,11 @@ class TemporalJoinSqlSpec extends SparkSuite {
     setup()
     // Spark's default parser accepts \' inside a single-quoted literal;
     // the quote scanner must not close the span there and rewrite the tail
-    val out = TemporalJoinSql.sql(spark,
+    val out = tj(
       """SELECT p.p_id, 'can\'t match p.rate' AS tag, r.rate FROM probes AS p
         |JOIN rates FOR SYSTEM_TIME AS OF p.ts AS r
         |ON p.user_id = r.uid
-        |WHERE r.rate IS NOT NULL ORDER BY p.p_id""".stripMargin,
-      rightTimeCol = Some("vts"))
+        |WHERE r.rate IS NOT NULL ORDER BY p.p_id""".stripMargin)
     assert(out.collect().toSeq == Seq(
       Row(1L, "can't match p.rate", 1.0), Row(2L, "can't match p.rate", 2.0)))
   }
@@ -119,12 +119,11 @@ class TemporalJoinSqlSpec extends SparkSuite {
       .toDF("p_id", "user_id", "region", "ts").createOrReplaceTempView("probes2")
     Seq(("u1", "eu", 90L, 1.0), ("u1", "us", 95L, 2.0), ("u2", "eu", 400L, 9.0))
       .toDF("uid", "region", "vts", "rate").createOrReplaceTempView("rates2")
-    val out = TemporalJoinSql.sql(spark,
+    val out = tj(
       """SELECT p.p_id, r.rate FROM probes2 AS p
         |JOIN rates2 FOR SYSTEM_TIME AS OF p.ts AS r
         |ON p.user_id = r.uid AND p.region = r.region
-        |ORDER BY p.p_id""".stripMargin,
-      rightTimeCol = Some("vts"))
+        |ORDER BY p.p_id""".stripMargin)
     assert(out.collect().toSeq == Seq(
       Row(1L, 1.0),    // (u1, eu): version 90
       Row(2L, 2.0),    // (u1, us): version 95 — distinct composite key
@@ -135,48 +134,44 @@ class TemporalJoinSqlSpec extends SparkSuite {
     setup()
     // reference joinCondition semantics: the residual filters the
     // (probe, matched version) pair — probe 1 matched rate 1.0 fails it
-    val out = TemporalJoinSql.sql(spark,
+    val out = tj(
       """SELECT p.p_id, r.rate FROM probes AS p
         |JOIN rates FOR SYSTEM_TIME AS OF p.ts AS r
         |ON p.user_id = r.uid AND r.rate > 1.5
-        |ORDER BY p.p_id""".stripMargin,
-      rightTimeCol = Some("vts"))
+        |ORDER BY p.p_id""".stripMargin)
     assert(out.collect().toSeq == Seq(Row(2L, 2.0)))
   }
 
   test("BETWEEN and CASE ANDs stay inside their ON term") {
     setup()
-    val out = TemporalJoinSql.sql(spark,
+    val out = tj(
       """SELECT p.p_id, r.rate FROM probes AS p
         |JOIN rates FOR SYSTEM_TIME AS OF p.ts AS r
         |ON p.user_id = r.uid AND r.rate BETWEEN 1.5 AND 3.0
         |  AND CASE WHEN r.rate > 0 AND r.rate < 100 THEN true ELSE false END
-        |ORDER BY p.p_id""".stripMargin,
-      rightTimeCol = Some("vts"))
+        |ORDER BY p.p_id""".stripMargin)
     assert(out.collect().toSeq == Seq(Row(2L, 2.0)))
   }
 
   test("top-level OR in the ON clause is rejected loudly") {
     setup()
     val e = intercept[IllegalArgumentException] {
-      TemporalJoinSql.sql(spark,
+      tj(
         """SELECT p.p_id FROM probes AS p
           |JOIN rates FOR SYSTEM_TIME AS OF p.ts AS r
-          |ON p.user_id = r.uid OR r.rate > 1""".stripMargin,
-        rightTimeCol = Some("vts"))
+          |ON p.user_id = r.uid OR r.rate > 1""".stripMargin)
     }
     assert(e.getMessage.contains("conjunction"))
   }
 
   test("a residual's string literal is not dequalified") {
     setup()
-    val out = TemporalJoinSql.sql(spark,
+    val out = tj(
       """SELECT p.p_id, r.rate FROM probes AS p
         |JOIN rates FOR SYSTEM_TIME AS OF p.ts AS r
         |ON p.user_id = r.uid AND CONCAT('r.', 'uid') = 'r.uid'
         |  AND r.rate IS NOT NULL
-        |ORDER BY p.p_id""".stripMargin,
-      rightTimeCol = Some("vts"))
+        |ORDER BY p.p_id""".stripMargin)
     assert(out.collect().toSeq == Seq(Row(1L, 1.0), Row(2L, 2.0)))
   }
 
@@ -185,12 +180,11 @@ class TemporalJoinSqlSpec extends SparkSuite {
       .toDF("p_id", "user_id", "window", "ts").createOrReplaceTempView("probes_kw")
     Seq(("u1", "w1", 90L, 1.0), ("u1", "w2", 95L, 2.0))
       .toDF("uid", "window", "vts", "rate").createOrReplaceTempView("rates_kw")
-    val out = TemporalJoinSql.sql(spark,
+    val out = tj(
       """SELECT p.p_id, r.rate FROM probes_kw AS p
         |JOIN rates_kw FOR SYSTEM_TIME AS OF p.ts AS r
         |ON p.user_id = r.uid AND p.window = r.window
-        |ORDER BY p.p_id""".stripMargin,
-      rightTimeCol = Some("vts"))
+        |ORDER BY p.p_id""".stripMargin)
     assert(out.collect().toSeq == Seq(Row(1L, 1.0), Row(2L, 2.0)))
   }
 
@@ -206,11 +200,10 @@ class TemporalJoinSqlSpec extends SparkSuite {
       .toDF("uid", "vts", "rate").createOrReplaceTempView("wm_rates")
     graft.queries.Q.withConf(spark,
         "spark.graft.temporalJoin.watermarkDelay" -> "1 hour") {
-      val out = TemporalJoinSql.sql(spark,
+      val out = tj(
         """SELECT p.p_id, r.rate FROM wm_probes AS p
           |JOIN wm_rates FOR SYSTEM_TIME AS OF p.ts AS r
-          |ON p.user_id = r.uid""".stripMargin,
-        rightTimeCol = Some("vts"))
+          |ON p.user_id = r.uid""".stripMargin)
       val name = s"tjwm_${System.nanoTime()}"
       val q = out.writeStream.format("memory").queryName(name)
         .outputMode("append").option("checkpointLocation", tmpDir("ckpt")).start()
@@ -236,12 +229,11 @@ class TemporalJoinSqlSpec extends SparkSuite {
   test("span inside a derived-table subquery is rejected loudly") {
     setup()
     val e = intercept[IllegalArgumentException] {
-      TemporalJoinSql.sql(spark,
+      tj(
         """SELECT * FROM (
           |  SELECT p.p_id FROM probes AS p
           |  JOIN rates FOR SYSTEM_TIME AS OF p.ts AS r
-          |  ON p.user_id = r.uid) t""".stripMargin,
-        rightTimeCol = Some("vts"))
+          |  ON p.user_id = r.uid) t""".stripMargin)
     }
     assert(e.getMessage.contains("subquery"))
   }
@@ -258,11 +250,10 @@ class TemporalJoinSqlSpec extends SparkSuite {
     // into keyed state at query start (TemporalRowTimeJoinOperator.java:78)
     Seq(("u1", ts(90), 1.0), ("u1", ts(200), 2.0), ("u2", ts(400), 9.0))
       .toDF("uid", "vts", "rate").createOrReplaceTempView("m_rates")
-    val out = TemporalJoinSql.sql(spark,
+    val out = tj(
       """SELECT p.p_id, r.rate FROM m_probes AS p
         |JOIN m_rates FOR SYSTEM_TIME AS OF p.ts AS r
-        |ON p.user_id = r.uid""".stripMargin,
-      rightTimeCol = Some("vts"))
+        |ON p.user_id = r.uid""".stripMargin)
     assert(out.isStreaming)
     val name = s"tjmix_${System.nanoTime()}"
     val q = out.writeStream.format("memory").queryName(name)
@@ -294,11 +285,10 @@ class TemporalJoinSqlSpec extends SparkSuite {
     Seq(("u1", "eu", ts(90), 1.0), ("u1", "us", ts(95), 2.0),
       ("u1", "eu", ts(200), 3.0))
       .toDF("uid", "region", "vts", "rate").createOrReplaceTempView("m2_rates")
-    val out = TemporalJoinSql.sql(spark,
+    val out = tj(
       """SELECT p.p_id, r.rate FROM m2_probes AS p
         |JOIN m2_rates FOR SYSTEM_TIME AS OF p.ts AS r
-        |ON p.user_id = r.uid AND p.region = r.region""".stripMargin,
-      rightTimeCol = Some("vts"))
+        |ON p.user_id = r.uid AND p.region = r.region""".stripMargin)
     val name = s"tjmix2_${System.nanoTime()}"
     val q = out.writeStream.format("memory").queryName(name)
       .outputMode("append").option("checkpointLocation", tmpDir("ckpt")).start()
@@ -329,11 +319,10 @@ class TemporalJoinSqlSpec extends SparkSuite {
       .createOrReplaceTempView("s2_probes")
     rates.toDS().toDF("uid", "region", "vts", "rate")
       .createOrReplaceTempView("s2_rates")
-    val out = TemporalJoinSql.sql(spark,
+    val out = tj(
       """SELECT p.p_id, r.rate FROM s2_probes AS p
         |JOIN s2_rates FOR SYSTEM_TIME AS OF p.ts AS r
-        |ON p.user_id = r.uid AND p.region = r.region""".stripMargin,
-      rightTimeCol = Some("vts"))
+        |ON p.user_id = r.uid AND p.region = r.region""".stripMargin)
     probes.addData(Seq((1L, "u1", "eu", ts(100)), (2L, "u1", "us", ts(100))))
     rates.addData(Seq(("u1", "eu", ts(90), 1.0), ("u1", "us", ts(95), 2.0)))
     val name = s"tjs2_${System.nanoTime()}"
@@ -349,17 +338,13 @@ class TemporalJoinSqlSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("missing span and wrong alias fail loudly") {
+  test("a span on the wrong alias fails loudly") {
     setup()
-    val e1 = intercept[IllegalArgumentException] {
-      TemporalJoinSql.sql(spark, "SELECT * FROM probes JOIN rates ON 1 = 1")
-    }
-    assert(e1.getMessage.contains("FOR SYSTEM_TIME AS OF"))
-    val e2 = intercept[IllegalArgumentException] {
-      TemporalJoinSql.sql(spark,
+    val e = intercept[IllegalArgumentException] {
+      GraftSql.sql(spark,
         """SELECT p.p_id FROM probes p JOIN rates FOR SYSTEM_TIME AS OF x.ts r
           |ON p.user_id = r.uid""".stripMargin)
     }
-    assert(e2.getMessage.contains("probe side"))
+    assert(e.getMessage.contains("probe side"))
   }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.sql.Timestamp
 
-import graft.SparkSuite
+import graft.{GraftSql, SparkSuite}
 
 /** Window TVF front door: TABLE(TVF(…)) parsing, per-shape expansion
   * semantics, and rejection of malformed calls. The oracle queries
@@ -24,7 +24,7 @@ class WindowTvfSpec extends SparkSuite {
 
   test("TUMBLE annotates each row with its bucket; aggregation downstream") {
     seed()
-    val out = WindowTvf.sql(spark,
+    val out = GraftSql.sql(spark,
       """SELECT window_start, window_end, SUM(v) AS s
         |FROM TABLE(TUMBLE(TABLE tvf_events, DESCRIPTOR(ts), INTERVAL '1' HOUR))
         |GROUP BY window_start, window_end ORDER BY window_start""".stripMargin)
@@ -35,7 +35,7 @@ class WindowTvfSpec extends SparkSuite {
 
   test("the TVF exposes window_time = window_end - 1ms (event-time attr)") {
     seed()
-    val out = WindowTvf.sql(spark,
+    val out = GraftSql.sql(spark,
       """SELECT DISTINCT window_end, window_time
         |FROM TABLE(TUMBLE(TABLE tvf_events, DESCRIPTOR(ts), INTERVAL '1' HOUR))
         |ORDER BY window_end""".stripMargin)
@@ -46,7 +46,7 @@ class WindowTvfSpec extends SparkSuite {
 
   test("HOP multiplies each row into size/slide covering windows") {
     seed()
-    val rows = WindowTvf.sql(spark,
+    val rows = GraftSql.sql(spark,
       """SELECT window_start, window_end, v
         |FROM TABLE(HOP(TABLE tvf_events, DESCRIPTOR(ts), INTERVAL '30' MINUTES, INTERVAL '1' HOUR))
         |WHERE v = 1 ORDER BY window_start""".stripMargin)
@@ -58,7 +58,7 @@ class WindowTvfSpec extends SparkSuite {
 
   test("CUMULATE emits growing slices from the shared start") {
     seed()
-    val rows = WindowTvf.sql(spark,
+    val rows = GraftSql.sql(spark,
       """SELECT window_end, v
         |FROM TABLE(CUMULATE(TABLE tvf_events, DESCRIPTOR(ts), INTERVAL '1' HOUR, INTERVAL '4' HOURS))
         |WHERE v = 4 ORDER BY window_end""".stripMargin)
@@ -69,7 +69,7 @@ class WindowTvfSpec extends SparkSuite {
 
   test("SESSION partitions by key and merges gap-connected rows") {
     seed()
-    val out = WindowTvf.sql(spark,
+    val out = GraftSql.sql(spark,
       """SELECT window_start AS s, window_end AS e, user_id, COUNT(*) AS n
         |FROM TABLE(SESSION(TABLE tvf_events PARTITION BY user_id, DESCRIPTOR(ts), INTERVAL '1' HOUR))
         |GROUP BY window_start, window_end, user_id ORDER BY user_id, s""".stripMargin)
@@ -85,7 +85,7 @@ class WindowTvfSpec extends SparkSuite {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Timestamp, Long)]
     input.toDS().toDF("ts", "v").createOrReplaceTempView("tvf_stream")
-    val agg = WindowTvf.sql(spark,
+    val agg = GraftSql.sql(spark,
       """SELECT window_start, SUM(v) AS s
         |FROM TABLE(TUMBLE(TABLE tvf_stream, DESCRIPTOR(ts), INTERVAL '1' HOUR))
         |GROUP BY window_start""".stripMargin)
@@ -112,7 +112,7 @@ class WindowTvfSpec extends SparkSuite {
     val input = MemoryStream[(String, Timestamp, Long)]
     input.toDS().toDF("user_id", "ts", "v")
       .withWatermark("ts", "0 seconds").createOrReplaceTempView(view)
-    val agg = WindowTvf.sql(spark, sqlText)
+    val agg = GraftSql.sql(spark, sqlText)
     assert(agg.isStreaming)
     val name = s"${view}_${System.nanoTime()}"
     val q = agg.writeStream.format("memory").queryName(name)
@@ -174,7 +174,7 @@ class WindowTvfSpec extends SparkSuite {
     seed()
     // annotation shape (no GROUP BY): every row carries its session's
     // bounds — must take the analytic path, not the session_window route
-    val out = WindowTvf.sql(spark,
+    val out = GraftSql.sql(spark,
       """SELECT user_id, v, window_start, window_end
         |FROM TABLE(SESSION(TABLE tvf_events PARTITION BY user_id, DESCRIPTOR(ts), INTERVAL '1' HOUR))
         |ORDER BY user_id, v""".stripMargin)
@@ -188,7 +188,7 @@ class WindowTvfSpec extends SparkSuite {
 
   test("batch SESSION in window-agg shape routes to one session_window agg") {
     seed()
-    val df = WindowTvf.sql(spark,
+    val df = GraftSql.sql(spark,
       """SELECT window_start AS s, window_end AS e, user_id, COUNT(*) AS n
         |FROM TABLE(SESSION(TABLE tvf_events PARTITION BY user_id, DESCRIPTOR(ts), INTERVAL '1' HOUR))
         |GROUP BY window_start, window_end, user_id""".stripMargin)
@@ -208,7 +208,7 @@ class WindowTvfSpec extends SparkSuite {
     // (the TVF contract) and only then aggregated globally per window —
     // a global session_window would merge u1's 0:00/0:30 rows with u2's
     // 1:00 row into one session
-    val out = WindowTvf.sql(spark,
+    val out = GraftSql.sql(spark,
       """SELECT window_start, window_end, SUM(v) AS s
         |FROM TABLE(SESSION(TABLE tvf_events PARTITION BY user_id, DESCRIPTOR(ts), INTERVAL '1' HOUR))
         |GROUP BY window_start, window_end ORDER BY window_start""".stripMargin)
@@ -222,7 +222,7 @@ class WindowTvfSpec extends SparkSuite {
 
   test("select-list FROM (EXTRACT) does not break the session_window rewrite") {
     seed()
-    val out = WindowTvf.sql(spark,
+    val out = GraftSql.sql(spark,
       """SELECT window_start, EXTRACT(HOUR FROM window_end) AS h, user_id, SUM(v) AS s
         |FROM TABLE(SESSION(TABLE tvf_events PARTITION BY user_id, DESCRIPTOR(ts), INTERVAL '1' HOUR))
         |GROUP BY window_start, window_end, user_id ORDER BY window_start, user_id""".stripMargin)
@@ -235,7 +235,7 @@ class WindowTvfSpec extends SparkSuite {
 
   test("string literals in the session_window rewrite survive untouched") {
     seed()
-    val out = WindowTvf.sql(spark,
+    val out = GraftSql.sql(spark,
       """SELECT window_start, 'window_start (label' AS lbl, user_id, SUM(v) AS s
         |FROM TABLE(SESSION(TABLE tvf_events PARTITION BY user_id, DESCRIPTOR(ts), INTERVAL '1' HOUR))
         |GROUP BY window_start, window_end, user_id ORDER BY window_start, user_id""".stripMargin)
@@ -252,7 +252,7 @@ class WindowTvfSpec extends SparkSuite {
     // window_end - window_start is NOT a bare item: the rewrite must not
     // inject an output alias mid-expression (parse error); the bare-alias
     // form `window_start ws` must keep the user alias too
-    val out = WindowTvf.sql(spark,
+    val out = GraftSql.sql(spark,
       """SELECT window_start ws, window_end - window_start AS dur, user_id, SUM(v) AS s
         |FROM TABLE(SESSION(TABLE tvf_events PARTITION BY user_id, DESCRIPTOR(ts), INTERVAL '1' HOUR))
         |GROUP BY window_start, window_end, user_id ORDER BY ws, user_id""".stripMargin)
@@ -266,14 +266,11 @@ class WindowTvfSpec extends SparkSuite {
   test("malformed calls are rejected with clear errors") {
     seed()
     assert(intercept[IllegalArgumentException] {
-      WindowTvf.sql(spark, "SELECT * FROM tvf_events")
-    }.getMessage.contains("no TUMBLE/HOP"))
-    assert(intercept[IllegalArgumentException] {
-      WindowTvf.sql(spark,
+      GraftSql.sql(spark,
         "SELECT * FROM TABLE(SESSION(TABLE tvf_events, DESCRIPTOR(ts), INTERVAL '1' HOUR))")
     }.getMessage.contains("PARTITION BY"))
     assert(intercept[IllegalArgumentException] {
-      WindowTvf.sql(spark,
+      GraftSql.sql(spark,
         "SELECT * FROM TABLE(TUMBLE(TABLE tvf_events, DESCRIPTOR(ts), '1 hour'))")
     }.getMessage.contains("INTERVAL"))
   }

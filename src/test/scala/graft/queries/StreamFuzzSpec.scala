@@ -722,11 +722,15 @@ class StreamFuzzSpec extends SparkSuite {
     // one semantics, two processors: TemporalJoinProcessor (typed) and
     // RowTemporalJoinProcessor (the DataFrame/SQL route) must agree on
     // identical replays — buffering, ms-collision last-write-wins,
-    // resolve order, GC
-    for (seed <- 1L to 4L) {
-      val c = StreamFuzzGen.genTemporal(seed)
+    // resolve order, GC. The last case keeps no row on either arm: its
+    // replay is the flush sentinel alone, and every route emits nothing
+    val noRows = StreamFuzzGen.genTemporal(1L)
+      .copy(probeFilterSql = "false", versionFilterSql = "false")
+    for (c <- (1L to 4L).map(StreamFuzzGen.genTemporal) :+ noRows) {
+      val seed = c.seed
       val typed = StreamQueries.streamTemporalFuzzReplay(spark, dir, c)
         .collect().map(_.toString).sorted.toSeq
+      if (c == noRows) assert(typed.isEmpty, s"no-row case emitted $typed")
       val row = StreamQueries.streamTemporalFuzzReplayRow(spark, dir, c)
         .collect().map(_.toString).sorted.toSeq
       assert(row == typed,

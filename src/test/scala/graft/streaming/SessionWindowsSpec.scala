@@ -4,8 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.SparkSuite
-import graft.operators.WindowTvf
+import graft.{GraftSql, SparkSuite}
 
 /** Streaming per-row SESSION annotation: the close/retain core, parity
   * with the batch analytic expansion, out-of-order merging within the
@@ -99,7 +98,7 @@ class SessionWindowsSpec extends SparkSuite {
       .filter(_._1 != "uF").toSet
     // batch oracle: the analytic expansion over the same rows
     seedData.toDF("user_id", "ts", "v").createOrReplaceTempView("sw_batch")
-    val expected = WindowTvf.sql(spark,
+    val expected = GraftSql.sql(spark,
       """SELECT user_id, v, window_start, window_end, window_time
         |FROM TABLE(SESSION(TABLE sw_batch PARTITION BY user_id,
         |  DESCRIPTOR(ts), INTERVAL '1' HOUR))""".stripMargin)
@@ -154,7 +153,7 @@ class SessionWindowsSpec extends SparkSuite {
     input.toDS().toDF("user_id", "ts", "v")
       .withWatermark("ts", "0 seconds")
       .createOrReplaceTempView("sw_stream")
-    val df = WindowTvf.sql(spark,
+    val df = GraftSql.sql(spark,
       """SELECT user_id, v, window_start, window_end
         |FROM TABLE(SESSION(TABLE sw_stream PARTITION BY user_id,
         |  DESCRIPTOR(ts), INTERVAL '1' HOUR))
