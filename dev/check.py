@@ -7,8 +7,12 @@ Registers each testdata parquet as a DuckDB view, runs every SQL in
 oracle_sql.json, and compares to the Spark-written parquet in
 <verifyOutDir>/<name>/ — columns sorted by name, rows sorted by all
 columns, exact value equality (with NaN==NaN).
+
+Each PASS/FAIL line names a short sha256 of the oracle's canonical rows
+and columns, so a change to the oracle texts is checked by `diff` of two
+runs' outputs: equal digests mean equal rows.
 """
-import sys, json, math, glob
+import sys, json, math, glob, hashlib
 import duckdb
 import pandas as pd
 
@@ -28,6 +32,10 @@ def canon(df):
     rows = [tuple(cell(v) for v in row) for row in df.itertuples(index=False)]
     return sorted(rows), list(df.columns)
 
+def digest(rows, cols):
+    """Short sha256 of canon()'s output."""
+    return hashlib.sha256(repr((cols, rows)).encode()).hexdigest()[:16]
+
 def main(sfdir, outdir):
     con = duckdb.connect()
     for t in TABLES:
@@ -35,27 +43,28 @@ def main(sfdir, outdir):
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
+        label = name
         try:
+            drows, dcols = canon(con.execute(sql).df())
+            label = f"{name} [{digest(drows, dcols)}]"
             files = glob.glob(f"{outdir}/{name}/*.parquet")
             if not files:
-                print(f"FAIL {name}: no spark output"); n_fail += 1; continue
+                print(f"FAIL {label}: no spark output"); n_fail += 1; continue
             sdf = pd.concat([pd.read_parquet(f) for f in sorted(files)])
-            ddf = con.execute(sql).df()
             srows, scols = canon(sdf)
-            drows, dcols = canon(ddf)
             if scols != dcols:
-                print(f"FAIL {name}: columns spark={scols} duck={dcols}"); n_fail += 1; continue
+                print(f"FAIL {label}: columns spark={scols} duck={dcols}"); n_fail += 1; continue
             if len(srows) != len(drows):
-                print(f"FAIL {name}: rowcount spark={len(srows)} duck={len(drows)}"); n_fail += 1; continue
+                print(f"FAIL {label}: rowcount spark={len(srows)} duck={len(drows)}"); n_fail += 1; continue
             if srows != drows:
                 bad = [(a, b) for a, b in zip(srows, drows) if a != b][:3]
-                print(f"FAIL {name}: value mismatch, first diffs:")
+                print(f"FAIL {label}: value mismatch, first diffs:")
                 for a, b in bad:
                     print(f"  spark={a}\n  duck ={b}")
                 n_fail += 1; continue
-            print(f"PASS {name} ({len(srows)} rows)"); n_pass += 1
+            print(f"PASS {label} ({len(srows)} rows)"); n_pass += 1
         except Exception as e:
-            print(f"FAIL {name}: {type(e).__name__}: {e}"); n_fail += 1
+            print(f"FAIL {label}: {type(e).__name__}: {e}"); n_fail += 1
     print(f"\n{n_pass} passed, {n_fail} failed of {len(oracle)}")
     return 1 if n_fail else 0
 

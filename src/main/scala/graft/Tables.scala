@@ -9,7 +9,8 @@ import org.apache.spark.sql.types.StructType
   * `SparkEntry.queries` entry and for the DuckDB oracle, so the load path must
   * stay a plain parquet scan (on the file's own schema, see [[scan]]) —
   * Catalyst then gets full pushdown (filters, column pruning) into the file
-  * source.
+  * source. The `events.ts` decode lives here for both engines: [[load]]
+  * for Spark, [[duckEvents]] for every DuckDB oracle.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -52,8 +53,8 @@ object Tables {
     // cannot represent — read as raw int64 and truncate), and plain
     // TIMESTAMP(MICROS, isAdjustedToUTC=false) (which Spark reads as
     // TIMESTAMP_NTZ directly). Detect from the scanned schema so either
-    // generation loads; DuckDB's oracle-side make_timestamp(epoch_ns(ts)//1000)
-    // is an identity under both.
+    // generation loads. This is the Spark half of the decode; [[duckEvents]]
+    // is the DuckDB half, and the two must truncate alike.
     val raw = scan(spark, s"$sfDir/$name.parquet")
     if (name == "events") {
       import org.apache.spark.sql.functions._
@@ -72,6 +73,18 @@ object Tables {
       }
     } else raw
   }
+
+  /** The DuckDB half of the `events.ts` decode in [[loadUncached]]: a
+    * parenthesised relation that stands in for `events` anywhere in an
+    * oracle: as a CTE body, or in `FROM` with the oracle's filter. It has
+    * all six columns, with `ts` a microsecond TIMESTAMP under either
+    * parquet encoding: `epoch_ns` reads both, and integer `//` truncates
+    * NANOS exactly as Spark's `ts DIV 1000L`. An oracle whose output is
+    * `*` over it lists its columns, or `props` leaks into the result.
+    */
+  val duckEvents: String =
+    "(SELECT event_id, user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts, " +
+      "event_type, value, props FROM events)"
 
   /** The parquet file at `path`, read on its memoized schema: the first
     * call for a path infers it, every call (the first included) then

@@ -847,8 +847,7 @@ object ConnectorDdl {
           if (inf.needsRowKind) org.apache.spark.sql.streaming.OutputMode.Update()
           else org.apache.spark.sql.streaming.OutputMode.Append()
         val ckpt = d.options.getOrElse("sink.checkpoint",
-          java.nio.file.Files.createTempDirectory(s"ddl_${name}_ckpt")
-            .toString)
+          graft.queries.Q.scratchDir(s"ddl_${name}_ckpt"))
         val path = d.options("path")
         val buckets = d.options.getOrElse("sink.buckets", "8").toInt
         val pk = d.primaryKey
@@ -888,8 +887,7 @@ object ConnectorDdl {
             "time).")
         val fmt = d.options.getOrElse("format", "parquet")
         val ckpt = d.options.getOrElse("sink.checkpoint",
-          java.nio.file.Files.createTempDirectory(s"ddl_${name}_ckpt")
-            .toString)
+          graft.queries.Q.scratchDir(s"ddl_${name}_ckpt"))
         val ws0 = df.writeStream.format(fmt)
           .options(formatOptions(d, fmt))
           .option("checkpointLocation", ckpt)

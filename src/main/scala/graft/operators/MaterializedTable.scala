@@ -158,7 +158,7 @@ object MaterializedTable {
     val mode = Option(modeOrNull).map(_.toUpperCase).getOrElse(
       if (probe.isStreaming) "CONTINUOUS" else "FULL")
     val ckpt = options.getOrElse("checkpoint",
-      java.nio.file.Files.createTempDirectory(s"mt_${name}_ckpt").toString)
+      graft.queries.Q.scratchDir(s"mt_${name}_ckpt"))
     val d = MatDesc(name, query, path, s"$fn ${fUnit.toLowerCase}",
       mode, ckpt, None, schema = probe.schema)
     mode match {

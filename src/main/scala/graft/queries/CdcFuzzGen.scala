@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.Tables
 import graft.streaming.Changelog
 
 /** Seeded random generator for CDC-FORMAT differential cases — fuzzes
@@ -49,9 +50,7 @@ object CdcFuzzGen {
       * is not delete-marked, carrying that row's image.
       */
     def oracleSql: String =
-      s"""WITH e AS (SELECT event_id, user_id,
-         |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-         |  FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
          |f AS (SELECT user_id % $pkMod AS pk, event_id AS ev,
          |    CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents,
          |    event_id

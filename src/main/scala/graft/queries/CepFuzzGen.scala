@@ -2,6 +2,8 @@ package graft.queries
 
 import scala.util.Random
 
+import graft.Tables
+
 /** Seeded random generator for CEP differential cases — fuzzes the NFA
   * ([[graft.cep.NFA]] / [[graft.cep.CEP.batch]], the reference's
   * CepOperator analogue) with random strict-contiguity patterns the
@@ -89,13 +91,12 @@ object CepFuzzGen {
         s"us_${k - 1} <= us + ${m * 60000000L}").toSeq
       s"""WITH o AS (
          |  SELECT user_id, event_id,
-         |    epoch_us(make_timestamp(epoch_ns(ts) // 1000)) AS us,
+         |    epoch_us(ts) AS us,
          |    event_type,
          |    CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents,
          |    ${leadCols.mkString(",\n    ")}
-         |  FROM events
-         |  WINDOW w AS (PARTITION BY user_id
-         |    ORDER BY make_timestamp(epoch_ns(ts) // 1000), event_id))
+         |  FROM ${Tables.duckEvents}
+         |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
          |SELECT user_id, event_id AS a_id, event_id_${k - 1} AS z_id
          |FROM o
          |WHERE ${(preds ++ withinPred).mkString("\n  AND ")}""".stripMargin
@@ -130,11 +131,9 @@ object CepFuzzGen {
     * construction).
     */
   val duckCev: String =
-    """SELECT user_id, event_id,
-      |    epoch_us(make_timestamp(epoch_ns(ts) // 1000)) AS us,
-      |    event_type,
-      |    CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents
-      |  FROM events""".stripMargin
+    s"""SELECT user_id, event_id, epoch_us(ts) AS us, event_type,
+       |    CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents
+       |  FROM ${Tables.duckEvents}""".stripMargin
 
   /** A quantifier case — fuzzes the NFA's repetition machinery
     * (Pattern.java times:482 / optional:397 / oneOrMore:415 with

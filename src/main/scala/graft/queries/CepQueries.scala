@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Tables
 import graft.cep.{AfterMatchSkip, CEP, MatchRecognize, Pattern}
 import Q._
 
@@ -143,14 +144,13 @@ object CepQueries {
   // NOTE: ts is epoch-microseconds on both sides (unix_micros in Spark,
   // epoch_us in DuckDB) so ordering never ties at second granularity.
   private val ordered =
-    """SELECT user_id, epoch_us(make_timestamp(epoch_ns(ts) // 1000)) AS ts,
-      |       event_type, event_id,
-      |       lead(event_type) OVER w AS next_type,
-      |       lead(event_id) OVER w AS next_id,
-      |       lead(epoch_us(make_timestamp(epoch_ns(ts) // 1000))) OVER w AS next_ts
-      |FROM events
-      |WINDOW w AS (PARTITION BY user_id
-      |             ORDER BY make_timestamp(epoch_ns(ts) // 1000), event_id)""".stripMargin
+    s"""SELECT user_id, epoch_us(ts) AS ts,
+       |       event_type, event_id,
+       |       lead(event_type) OVER w AS next_type,
+       |       lead(event_id) OVER w AS next_id,
+       |       lead(epoch_us(ts)) OVER w AS next_ts
+       |FROM ${Tables.duckEvents}
+       |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin
 
   val oracles: Map[String, String] = Map(
     "q_cep_next" ->
@@ -162,9 +162,8 @@ object CepQueries {
     "q_cep_run" ->
       s"""WITH numbered AS (
         |  SELECT user_id, event_type, event_id,
-        |    row_number() OVER (PARTITION BY user_id
-        |      ORDER BY make_timestamp(epoch_ns(ts) // 1000), event_id) AS rn
-        |  FROM events),
+        |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
+        |  FROM ${Tables.duckEvents}),
         |o AS (
         |  SELECT user_id, event_type, event_id, rn,
         |    MAX(CASE WHEN event_type <> 'click' THEN rn END)
@@ -197,7 +196,7 @@ object CepQueries {
         |WHERE event_type = 'purchase'
         |  AND (next_ts IS NULL OR next_ts > ts + 7200000000)
         |  AND ts + 7200000000 <
-        |    (SELECT MAX(epoch_us(make_timestamp(epoch_ns(ts) // 1000))) FROM events)
+        |    (SELECT MAX(epoch_us(ts)) FROM ${Tables.duckEvents})
         |ORDER BY user_id, buy_ts""".stripMargin,
 
     // maximal strictly-decreasing runs via lag + gaps-and-islands: a row
@@ -208,9 +207,8 @@ object CepQueries {
         |  SELECT user_id, event_id,
         |    row_number() OVER w AS rn,
         |    CASE WHEN event_id < lag(event_id) OVER w THEN 1 ELSE 0 END AS is_down
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id
-        |               ORDER BY make_timestamp(epoch_ns(ts) // 1000), event_id)),
+        |  FROM ${Tables.duckEvents}
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
         |g AS (
         |  SELECT user_id, event_id, rn, is_down,
         |    rn - SUM(is_down) OVER (PARTITION BY user_id ORDER BY rn

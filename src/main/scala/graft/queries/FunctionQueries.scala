@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Tables
 import Q._
 
 /** Scalar function surface parity — the reference declares 207 built-ins in
@@ -516,7 +517,7 @@ object FunctionQueries {
         |FROM orders ORDER BY o_orderkey""".stripMargin,
 
     "q_fn_ts" ->
-      """SELECT event_id,
+      s"""SELECT event_id,
         |  epoch_us(ts) // 1000000 AS epoch_s,
         |  CAST(hour(ts) AS BIGINT) AS h,
         |  CAST(minute(ts) AS BIGINT) AS mi,
@@ -524,7 +525,7 @@ object FunctionQueries {
         |  CAST(dayofyear(ts) AS BIGINT) AS doy,
         |  date_trunc('hour', ts) AS ts_hour,
         |  strftime(ts, '%Y-%m-%d') AS day
-        |FROM (SELECT event_id, make_timestamp(epoch_ns(ts) // 1000) AS ts FROM events)
+        |FROM ${Tables.duckEvents}
         |ORDER BY event_id""".stripMargin,
 
     "q_fn_json" ->

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Tables
 import graft.queries.Q._
 import graft.operators.{AsyncOps, LookupJoin}
 import graft.sources.{AvroIO, SequenceFileIO}
@@ -477,8 +478,8 @@ object IntegrationQueries {
 
     "q_fmt_avro" ->
       s"""SELECT event_type, COUNT(*) AS n, ${dsumSql("value")} AS sum_value,
-        |  MAX(make_timestamp(epoch_ns(ts) // 1000)) AS max_ts
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |  MAX(ts) AS max_ts
+        |FROM ${Tables.duckEvents} GROUP BY event_type ORDER BY event_type""".stripMargin,
 
     "q_fmt_seqfile" ->
       s"""SELECT o_orderstatus, COUNT(*) AS n,
@@ -541,11 +542,10 @@ object IntegrationQueries {
         |WHERE rank <= 2 ORDER BY o_orderstatus, rank""".stripMargin,
 
     "q_stream_countslide" ->
-      """WITH ordered AS (
+      s"""WITH ordered AS (
         |  SELECT user_id, event_id,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY make_timestamp(epoch_ns(ts) // 1000), event_id) AS rn
-        |  FROM events WHERE user_id % 3 = 0)
+        |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
+        |  FROM ${Tables.duckEvents} WHERE user_id % 3 = 0)
         |SELECT CAST(o.user_id AS VARCHAR) AS key,
         |  CAST(o.rn // 4 AS BIGINT) AS fire_id,
         |  CAST(SUM(i.event_id) AS BIGINT) AS sum_ids,
@@ -557,11 +557,10 @@ object IntegrationQueries {
         |ORDER BY key, fire_id""".stripMargin,
 
     "q_stream_countwin" ->
-      """WITH ordered AS (
+      s"""WITH ordered AS (
         |  SELECT user_id, event_id,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY make_timestamp(epoch_ns(ts) // 1000), event_id) AS rn
-        |  FROM events WHERE user_id % 3 = 0)
+        |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
+        |  FROM ${Tables.duckEvents} WHERE user_id % 3 = 0)
         |SELECT CAST(user_id AS VARCHAR) AS key,
         |  CAST((rn - 1) // 10 AS BIGINT) AS window_id,
         |  CAST(SUM(event_id) AS BIGINT) AS sum_ids,

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Tables
 import Q._
 
 /** Join parity — reference `FlinkJoinType` INNER/LEFT/RIGHT/FULL/SEMI/ANTI
@@ -289,9 +290,9 @@ object JoinQueries {
         |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
 
     "q_join_interval" ->
-      """SELECT p.event_id AS p_id, e.event_id AS e_id
-        |FROM (SELECT event_id, user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts FROM events WHERE event_type = 'purchase') p
-        |JOIN (SELECT event_id, user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts FROM events WHERE event_type = 'error') e
+      s"""SELECT p.event_id AS p_id, e.event_id AS e_id
+        |FROM (SELECT * FROM ${Tables.duckEvents} WHERE event_type = 'purchase') p
+        |JOIN (SELECT * FROM ${Tables.duckEvents} WHERE event_type = 'error') e
         |ON p.user_id = e.user_id
         | AND e.ts >= p.ts - INTERVAL 1 HOUR
         | AND e.ts <= p.ts
@@ -303,7 +304,7 @@ object JoinQueries {
         |ORDER BY c_custkey""".stripMargin,
 
     "q_join_asof" ->
-      """WITH e AS (SELECT event_id, user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
         |p AS (SELECT event_id AS p_id, user_id, ts FROM e WHERE event_type = 'purchase'),
         |v AS (SELECT event_id AS v_id, user_id, ts, value AS v_value FROM e WHERE event_type = 'view')
         |SELECT p.p_id, v.v_id AS r_v_id, v.v_value AS r_v_value
@@ -311,7 +312,7 @@ object JoinQueries {
         |ORDER BY p_id""".stripMargin,
 
     "q_join_asof_sql" ->
-      """WITH e AS (SELECT event_id, user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
         |p AS (SELECT event_id AS p_id, user_id, ts FROM e WHERE event_type = 'purchase'),
         |v AS (SELECT event_id AS v_id, user_id, ts, value AS v_value FROM e WHERE event_type = 'view')
         |SELECT p.p_id, v.v_id AS r_v_id, v.v_value AS r_v_value
@@ -321,7 +322,7 @@ object JoinQueries {
     // identical result to q_join_asof_sql — the two SQL syntaxes are
     // equivalent by the reference's definition
     "q_join_asof_lateral" ->
-      """WITH e AS (SELECT event_id, user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
         |p AS (SELECT event_id AS p_id, user_id, ts FROM e WHERE event_type = 'purchase'),
         |v AS (SELECT event_id AS v_id, user_id, ts, value AS v_value FROM e WHERE event_type = 'view')
         |SELECT p.p_id, v.v_id AS r_v_id, v.v_value AS r_v_value
@@ -329,7 +330,7 @@ object JoinQueries {
         |ORDER BY p_id""".stripMargin,
 
     "q_join_asof_tvf" ->
-      """WITH e AS (SELECT event_id, user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
         |p AS (SELECT event_id AS p_id, user_id, ts,
         |        time_bucket(INTERVAL 1 HOUR, ts) AS window_start
         |      FROM e WHERE event_type = 'purchase'),
@@ -339,7 +340,7 @@ object JoinQueries {
         |ORDER BY p_id""".stripMargin,
 
     "q_join_asof_multi" ->
-      """WITH e AS (SELECT event_id, user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
         |p AS (SELECT event_id AS p_id, user_id, CAST(ts AS DATE) AS day, ts FROM e WHERE event_type = 'purchase'),
         |v AS (SELECT event_id AS v_id, user_id, CAST(ts AS DATE) AS day, ts, value AS v_value FROM e WHERE event_type = 'view')
         |SELECT p.p_id, v.v_id AS r_v_id, v.v_value AS r_v_value

@@ -5,6 +5,7 @@ import scala.util.Random
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.operators.{AsyncOps, LookupJoin}
 
 /** Seeded random generator for LOOKUP-JOIN differential cases — fuzzes
@@ -43,9 +44,7 @@ object LookupFuzzGen {
       cacheSize: Int) {
 
     def oracleSql: String =
-      s"""WITH e AS (SELECT event_id, user_id,
-         |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-         |  FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
          |p AS (SELECT event_id, user_id % $keyMod AS k
          |  FROM e WHERE $filterSql)
          |SELECT event_id, k,
@@ -101,9 +100,7 @@ object LookupFuzzGen {
       accessMode: Boolean) {
 
     private def header: String =
-      s"""e AS (SELECT event_id, user_id,
-         |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-         |  FROM events),
+      s"""e AS ${Tables.duckEvents},
          |p AS (SELECT event_id, user_id % $keyMod AS k,
          |    row_number() OVER (ORDER BY event_id) - 1 AS tick
          |  FROM e WHERE $filterSql)""".stripMargin
@@ -180,9 +177,7 @@ object LookupFuzzGen {
       versionPeriod: Long) {
 
     def oracleSql: String =
-      s"""WITH e AS (SELECT event_id, user_id,
-         |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-         |  FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
          |p AS (SELECT event_id, user_id % $keyMod AS k,
          |    row_number() OVER (ORDER BY event_id) - 1 AS tick
          |  FROM e WHERE $filterSql)

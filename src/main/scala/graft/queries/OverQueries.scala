@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Tables
 import Q._
 
 /** Over-window (analytic) parity — reference `BatchExecOverAggregate`
@@ -274,17 +275,17 @@ object OverQueries {
         |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin,
 
     "q_dedup_first" ->
-      """SELECT user_id, event_id, ts, event_type FROM (
-        |  SELECT user_id, event_id, make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type,
+      s"""SELECT user_id, event_id, ts, event_type FROM (
+        |  SELECT user_id, event_id, ts, event_type,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM events)
+        |  FROM ${Tables.duckEvents})
         |WHERE rn = 1 ORDER BY user_id""".stripMargin,
 
     "q_dedup_last" ->
-      """SELECT user_id, event_id, ts, event_type FROM (
-        |  SELECT user_id, event_id, make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type,
+      s"""SELECT user_id, event_id, ts, event_type FROM (
+        |  SELECT user_id, event_id, ts, event_type,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events)
+        |  FROM ${Tables.duckEvents})
         |WHERE rn = 1 ORDER BY user_id""".stripMargin
   )
 }

@@ -16,6 +16,10 @@ import graft.Tables
   *     exceeds DECIMAL(38,_) in either engine.
   *   - Every query output carries a deterministic total ORDER BY.
   *   - Derived integers are cast to BIGINT on both sides.
+  *   - Both engines decode `events.ts` in [[graft.Tables]]: Spark reads it
+  *     through [[t]], and an oracle reads it through
+  *     [[graft.Tables.duckEvents]] in place of `events`, never by its own
+  *     `epoch_ns` arithmetic (RegistrySpec pins this).
   */
 object Q {
   type QFn = (SparkSession, String) => DataFrame

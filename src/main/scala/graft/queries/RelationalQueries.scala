@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Tables
 import Q._
 
 /** Calc (fused project+filter), values, set ops, sort/limit — reference
@@ -205,7 +206,7 @@ object RelationalQueries {
         |ORDER BY o_orderkey""".stripMargin,
 
     "q_window_join" ->
-      """WITH e AS (SELECT event_id, user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
         |c AS (SELECT time_bucket(INTERVAL 1 HOUR, ts) AS w, user_id, event_id AS click_id
         |      FROM e WHERE event_type = 'click'),
         |p AS (SELECT time_bucket(INTERVAL 1 HOUR, ts) AS w, user_id, event_id AS purchase_id

@@ -5,10 +5,16 @@ import scala.util.Random
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Seeded random generator for STREAMING differential cases — the
   * streaming-side sibling of [[FuzzGen]] (which fuzzes the batch SQL
-  * surface). Four independent families, each a pure function of the
-  * seed over the `events` table:
+  * surface). It holds 22 case types, one per streaming operator under
+  * test (window and session aggregation, retraction, distinct, dedup,
+  * Top-N and Top-1, the stream joins, OVER, temporal, coGroup, lateness,
+  * idleness, watermark alignment, broadcast state, temporal sort), each
+  * with a `gen*` that is a pure function of the seed over the `events`
+  * table. [[FuzzFamilies]] registers them. The first four:
   *   - [[gen]]: windowed event-time aggregations (tumble/hop, keys,
   *     exact aggregates) — Spark's built-in incremental window path;
   *   - [[genSession]]: SESSION-window annotation through
@@ -81,11 +87,8 @@ object StreamFuzzGen {
       val aggSel = aggs.map { case (e, a) => s"$e AS $a" }
       val groupN = 1 + keys.length
       val groupBy = (1 to groupN).mkString(", ")
-      val base = "SELECT event_id, user_id, " +
-        "make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value " +
-        "FROM events"
       if (!isHop) {
-        s"""WITH e AS ($base), f AS (SELECT * FROM e WHERE $filterSql)
+        s"""WITH e AS ${Tables.duckEvents}, f AS (SELECT * FROM e WHERE $filterSql)
            |SELECT time_bucket(INTERVAL $winMinutes MINUTE, ts) AS window_start,
            |  ${(keySel ++ aggSel).mkString(",\n  ")}
            |FROM f GROUP BY $groupBy""".stripMargin
@@ -93,7 +96,7 @@ object StreamFuzzGen {
         val n = winMinutes / slideMinutes
         val starts = (0 until n).map(k =>
           s"time_bucket(INTERVAL $slideMinutes MINUTE, ts) - INTERVAL ${k * slideMinutes} MINUTE")
-        s"""WITH e AS ($base), f AS (SELECT * FROM e WHERE $filterSql)
+        s"""WITH e AS ${Tables.duckEvents}, f AS (SELECT * FROM e WHERE $filterSql)
            |SELECT ws AS window_start,
            |  ${(keySel ++ aggSel).mkString(",\n  ")}
            |FROM f, UNNEST([${starts.mkString(",\n  ")}]) AS u(ws)
@@ -124,9 +127,7 @@ object StreamFuzzGen {
       val kAlias = keys.map(_._2)
       val kSel = keys.map { case (e, a) => s"$e AS $a" }.mkString(", ")
       val part = kAlias.mkString(", ")
-      s"""WITH e AS (SELECT event_id, user_id,
-         |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-         |  FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
          |f AS (SELECT $kSel, event_id, ts FROM e WHERE $filterSql),
          |m AS (SELECT $part, event_id, ts,
          |  CASE WHEN ts - lag(ts) OVER (PARTITION BY $part ORDER BY ts, event_id)
@@ -160,9 +161,7 @@ object StreamFuzzGen {
       gapSql: String) { // INT minutes per row, shared dialect
 
     def oracleSql: String =
-      s"""WITH e AS (SELECT event_id, user_id,
-         |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-         |  FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
          |f AS (SELECT CAST($keySql AS STRING) AS k, event_id, ts,
          |    CAST($gapSql AS BIGINT) AS gapm
          |  FROM e WHERE $filterSql),
@@ -241,9 +240,7 @@ object StreamFuzzGen {
       * over inserts minus deletes.
       */
     def oracleSql: String =
-      s"""WITH e AS (SELECT event_id, user_id,
-         |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-         |  FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
          |f AS (SELECT CAST($keySql AS STRING) AS k,
          |    CAST($valueSql AS BIGINT) AS v, event_id
          |  FROM e WHERE $filterSql),
@@ -274,9 +271,7 @@ object StreamFuzzGen {
       deleteRes: Int) {
 
     def oracleSql: String =
-      s"""WITH e AS (SELECT event_id, user_id,
-         |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-         |  FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
          |f AS (SELECT CAST($groupSql AS STRING) AS g,
          |    CAST($valueSql AS BIGINT) AS v, event_id
          |  FROM e WHERE $filterSql),
@@ -336,9 +331,7 @@ object StreamFuzzGen {
       s"length($colName) % $rwMod = $rwRes"
 
     def oracleSql: String =
-      s"""WITH e AS (SELECT event_id, user_id,
-         |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-         |  FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
          |f AS (SELECT CAST($keySql AS STRING) AS k,
          |    CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents,
          |    epoch_us(ts) AS us
@@ -391,9 +384,7 @@ object StreamFuzzGen {
 
     def oracleSql: String = {
       val f =
-        s"""WITH e AS (SELECT event_id, user_id,
-           |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-           |  FROM events),
+        s"""WITH e AS ${Tables.duckEvents},
            |f AS (SELECT CAST($keySql AS STRING) AS k, ts, event_id AS id
            |  FROM e WHERE $filterSql)""".stripMargin
       mode match {
@@ -439,9 +430,7 @@ object StreamFuzzGen {
       delRes: Int) {
 
     def oracleSql: String =
-      s"""WITH e AS (SELECT event_id, user_id,
-         |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-         |  FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
          |f AS (SELECT CAST($keySql AS STRING) AS k, event_id AS id,
          |    CAST($sortSql AS BIGINT) AS v
          |  FROM e WHERE $filterSql),
@@ -485,9 +474,7 @@ object StreamFuzzGen {
       * right rows.
       */
     def oracleSql: String = {
-      val e = """WITH e AS (SELECT event_id, user_id,
-        |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-        |  FROM events),""".stripMargin
+      val e = s"WITH e AS ${Tables.duckEvents},"
       val lDel =
         if (isSemiAnti) ""
         else s" AND NOT (event_id % $lDelMod = $lDelRes)"
@@ -533,9 +520,7 @@ object StreamFuzzGen {
 
     /** DuckDB restatement: the same range join in exact micros. */
     def oracleSql: String =
-      s"""WITH e AS (SELECT event_id, user_id,
-         |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-         |  FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
          |l AS (SELECT CAST($keySql AS STRING) AS k, event_id AS l_id,
          |    epoch_us(ts) AS us
          |  FROM e WHERE event_id % 2 = 0 AND ($leftFilterSql)),
@@ -563,9 +548,7 @@ object StreamFuzzGen {
       winMinutes: Int) {
 
     def oracleSql: String =
-      s"""WITH e AS (SELECT event_id, user_id,
-         |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-         |  FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
          |l AS (SELECT time_bucket(INTERVAL $winMinutes MINUTE, ts) AS ws,
          |    CAST($keySql AS STRING) AS k, event_id AS l_id
          |  FROM e WHERE event_id % 2 = 0 AND ($leftFilterSql)),
@@ -595,9 +578,7 @@ object StreamFuzzGen {
 
     def oracleSql: String = {
       val base =
-        s"""WITH e AS (SELECT event_id, user_id,
-           |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-           |  FROM events),
+        s"""WITH e AS ${Tables.duckEvents},
            |f AS (SELECT CAST($keySql AS STRING) AS k, ts, event_id,
            |    CAST($valueSql AS BIGINT) AS v
            |  FROM e WHERE $filterSql)""".stripMargin
@@ -648,9 +629,7 @@ object StreamFuzzGen {
 
     def oracleSql: String = {
       val base =
-        s"""WITH e AS (SELECT event_id, user_id,
-           |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-           |  FROM events),
+        s"""WITH e AS ${Tables.duckEvents},
            |f AS (SELECT CAST($keySql AS STRING) AS k, ts, event_id,
            |    CAST($valueSql AS BIGINT) AS v
            |  FROM e WHERE $filterSql)""".stripMargin
@@ -698,9 +677,7 @@ object StreamFuzzGen {
       * operator's (-1, -1) sentinel.
       */
     def oracleSql: String =
-      s"""WITH e AS (SELECT event_id, user_id,
-         |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-         |  FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
          |p AS (SELECT CAST($keySql AS STRING) AS k, epoch_ms(ts) AS pms,
          |    event_id AS probe_id
          |  FROM e WHERE $probeFilterSql),
@@ -745,9 +722,7 @@ object StreamFuzzGen {
       * delete-marked op clears to the (-1, -1) miss sentinel.
       */
     def oracleSql: String =
-      s"""WITH e AS (SELECT event_id, user_id,
-         |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-         |  FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
          |tagged AS (
          |  SELECT CAST($keySql AS STRING) AS k, ts, event_id, 0 AS tag,
          |    FALSE AS is_probe,
@@ -795,9 +770,7 @@ object StreamFuzzGen {
     def isSliding: Boolean = slideMinutes != winMinutes
 
     def oracleSql: String = {
-      val e = """WITH e AS (SELECT event_id, user_id,
-        |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-        |  FROM events),""".stripMargin
+      val e = s"WITH e AS ${Tables.duckEvents},"
       def side(name: String, parity: Int, f: String) =
         s"""$name AS (SELECT CAST($keySql AS STRING) AS k, ts,
            |    event_id AS id,
@@ -887,9 +860,7 @@ object StreamFuzzGen {
 
     def oracleSql: String = {
       val w = windowMs
-      s"""WITH e AS (SELECT event_id, user_id,
-         |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-         |  FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
          |f AS (SELECT event_id, event_type, ts, epoch_ms(ts) AS tms,
          |    epoch_ms(time_bucket(INTERVAL $winMinutes MINUTE, ts)) AS ws
          |  FROM e WHERE $filterSql),
@@ -981,7 +952,7 @@ object StreamFuzzGen {
          |ORDER BY 1, 2""".stripMargin
 
     def oracleSql: String = restatement(
-      "SELECT user_id, epoch_ns(ts) // 1000 AS us, event_type FROM events")
+      s"SELECT user_id, epoch_us(ts) AS us, event_type FROM ${Tables.duckEvents}")
 
     /** Data-dependent validity check — Some(reason) when this case's
       * occupancy/silent-rounds preconditions fail on the actual rows
@@ -1082,7 +1053,7 @@ object StreamFuzzGen {
          |ORDER BY 1, 2""".stripMargin
 
     def oracleSql: String = restatement(
-      "SELECT user_id, epoch_ns(ts) // 1000 AS us, event_type FROM events")
+      s"SELECT user_id, epoch_us(ts) AS us, event_type FROM ${Tables.duckEvents}")
   }
 
   /** The alignment case for a seed — a pure function of the seed. */
@@ -1179,10 +1150,8 @@ object StreamFuzzGen {
          |HAVING MAX(CASE WHEN pass THEN 1 ELSE 0 END) = 0
          |ORDER BY k, data_id, rule_name""".stripMargin
 
-    def oracleSql: String = restatement(
-      """SELECT event_id, user_id,
-        |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-        |  FROM events""".stripMargin)
+    def oracleSql: String =
+      restatement(s"SELECT * FROM ${Tables.duckEvents}")
   }
 
   /** A TEMPORAL-SORT case — exercises
@@ -1232,9 +1201,9 @@ object StreamFuzzGen {
          |ORDER BY k, id""".stripMargin
 
     def oracleSql: String = restatement(
-      """SELECT event_id, user_id, epoch_ns(ts) // 1000 AS us,
-        |    event_type, value
-        |  FROM events""".stripMargin)
+      s"""SELECT event_id, user_id, epoch_us(ts) AS us,
+         |    event_type, value
+         |  FROM ${Tables.duckEvents}""".stripMargin)
   }
 
   /** The temporal-sort case for a seed — a pure function of the seed. */
@@ -1294,9 +1263,9 @@ object StreamFuzzGen {
            |ORDER BY k, id""".stripMargin
 
     def oracleSql: String = restatement(
-      """SELECT event_id, user_id, epoch_ns(ts) // 1000 AS us,
-        |    event_type, value
-        |  FROM events""".stripMargin)
+      s"""SELECT event_id, user_id, epoch_us(ts) AS us,
+         |    event_type, value
+         |  FROM ${Tables.duckEvents}""".stripMargin)
   }
 
   /** The Top-1/First-N case for a seed — a pure function of the seed. */

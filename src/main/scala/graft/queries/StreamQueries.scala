@@ -3,11 +3,14 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreWriter
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import org.apache.spark.sql.execution.streaming.state.{StateStore, StateStoreId, StateStoreProviderId}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, TimeMode}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 
+import graft.Tables
 import graft.queries.Q._
 import graft.cep.{CEP, Pattern}
 import graft.sources.UpsertSink
@@ -100,9 +103,11 @@ object StreamQueries {
     * sink state). `keepCheckpoint` runs on the caller's checkpoint
     * directory and leaves it in place for an offline [[graft.streaming
     * .StateReader]] read, with changelog checkpointing OFF so the
-    * statestore source sees plain snapshots. Any other checkpoint is
-    * deleted after the last leg — repeated verify/bench runs must not
-    * leak state-store files into the temp dir.
+    * statestore source sees plain snapshots. Any other checkpoint is a
+    * [[Q.scratchDir]], deleted after the last leg — repeated verify/bench
+    * runs must not leak state-store files into the temp dir. Each leg
+    * closes its state stores when it stops ([[closeStateStores]]), so
+    * nothing writes into the checkpoint after that delete.
     */
   private[queries] def replay[T: Encoder](s: SparkSession,
       batches: Seq[Seq[T]], mode: String = "update",
@@ -146,8 +151,7 @@ object StreamQueries {
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
         keepCheckpoint.isEmpty.toString)
     val name = s"qstream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = keepCheckpoint.getOrElse(
-      java.nio.file.Files.createTempDirectory("qstream_ckpt").toString)
+    val ckpt = keepCheckpoint.getOrElse(Q.scratchDir("qstream_ckpt"))
     // legs: batch index ranges split at the boundaries
     try (0 +: bounds :+ batches.length).sliding(2).foreach { case Seq(from, to) =>
       val q = withConf(s, conf: _*) {
@@ -161,7 +165,7 @@ object StreamQueries {
       try batches.slice(from, to).foreach { b =>
         input.addData(b); q.processAllAvailable()
       }
-      finally q.stop()
+      finally { q.stop(); closeStateStores(q) }
     }
     finally if (keepCheckpoint.isEmpty) // every leg: no ckpt leak on failure
       Q.deleteRecursively(java.nio.file.Paths.get(ckpt))
@@ -170,6 +174,28 @@ object StreamQueries {
     else if (foreachSink.isDefined) s.emptyDataFrame
     else s.table(name)
   }
+
+  /** Closes the state stores a stopped query left loaded in this JVM.
+    * Spark keeps a stopped query's providers loaded until its state-store
+    * maintenance, on a timer (60 s by default), finds them inactive. That
+    * pass first uploads each RocksDB provider's queued snapshot (a `.zip`
+    * and its `SSTs` files) into the checkpoint and only then closes it, so
+    * a checkpoint deleted in between is re-created. Closing the providers
+    * here drops the queued snapshot instead (a restart rebuilds it from the
+    * changelog each commit wrote), so nothing writes into the checkpoint
+    * after `stop()`.
+    */
+  private def closeStateStores(q: StreamingQuery): Unit =
+    Option(q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution)
+      .foreach(_.executedPlan.foreach {
+        case w: StateStoreWriter =>
+          val info = w.getStateInfo
+          for (p <- 0 until info.numPartitions; name <- w.stateStoreNames)
+            StateStore.removeFromLoadedProvidersAndClose(StateStoreProviderId(
+              StateStoreId(info.checkpointLocation, info.operatorId, p, name),
+              info.queryRunId))
+        case _ =>
+      })
 
   /** The restart arm's foreachBatch sink: a batchId-IDEMPOTENT buffer —
     * the exact contract a transactional production sink implements for
@@ -2304,7 +2330,7 @@ object StreamQueries {
     * ONE oracle text.
     */
   private val tumbleOracle =
-    """WITH e AS (SELECT event_id, user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value FROM events)
+    s"""WITH e AS ${Tables.duckEvents}
       |SELECT time_bucket(INTERVAL 1 HOUR, ts) AS window_start,
       |  time_bucket(INTERVAL 1 HOUR, ts) + INTERVAL 1 HOUR AS window_end,
       |  event_type, COUNT(*) AS n,
@@ -2320,7 +2346,7 @@ object StreamQueries {
     "q_stream_late" -> tumbleOracle,
 
     "q_stream_dedup_last" ->
-      """WITH e AS (SELECT event_id, user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value FROM events)
+      s"""WITH e AS ${Tables.duckEvents}
         |SELECT user_id, event_id AS last_event_id, value AS last_value FROM (
         |  SELECT user_id, event_id, value,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
@@ -2342,7 +2368,7 @@ object StreamQueries {
         |WHERE rn <= 3 ORDER BY event_type, id""".stripMargin,
 
     "q_stream_asof" ->
-      """WITH e AS (SELECT event_id, user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value FROM events WHERE user_id % 2 = 0),
+      s"""WITH e AS (SELECT * FROM ${Tables.duckEvents} WHERE user_id % 2 = 0),
         |p AS (SELECT event_id AS p_id, user_id, ts FROM e WHERE event_type = 'purchase'),
         |v AS (SELECT event_id AS v_id, user_id, ts, value AS v_value FROM e WHERE event_type = 'view')
         |SELECT p.p_id, v.v_id AS r_v_id, v.v_value AS r_v_value
@@ -2350,7 +2376,7 @@ object StreamQueries {
         |ORDER BY p_id""".stripMargin,
 
     "q_stream_hop" ->
-      """WITH e AS (SELECT make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value FROM events)
+      s"""WITH e AS ${Tables.duckEvents}
         |SELECT ws AS window_start, ws + INTERVAL 1 HOUR AS window_end,
         |  event_type, COUNT(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
@@ -2359,9 +2385,9 @@ object StreamQueries {
         |GROUP BY 1, 2, 3 ORDER BY window_start, event_type""".stripMargin,
 
     "q_stream_interval" ->
-      """SELECT p.event_id AS p_id, e.event_id AS e_id
-        |FROM (SELECT event_id, user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts FROM events WHERE event_type = 'purchase' AND user_id % 2 = 0) p
-        |JOIN (SELECT event_id, user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts FROM events WHERE event_type = 'error' AND user_id % 2 = 0) e
+      s"""SELECT p.event_id AS p_id, e.event_id AS e_id
+        |FROM (SELECT * FROM ${Tables.duckEvents} WHERE event_type = 'purchase' AND user_id % 2 = 0) p
+        |JOIN (SELECT * FROM ${Tables.duckEvents} WHERE event_type = 'error' AND user_id % 2 = 0) e
         |ON p.user_id = e.user_id
         | AND e.ts >= p.ts - INTERVAL 1 HOUR
         | AND e.ts <= p.ts
@@ -2390,8 +2416,7 @@ object StreamQueries {
         |ORDER BY user_id, p_id, v_id""".stripMargin,
 
     "q_stream_over" ->
-      """WITH e AS (SELECT event_id, event_type, make_timestamp(epoch_ns(ts) // 1000) AS ts
-        |           FROM events WHERE event_type IN ('purchase', 'error') AND user_id % 2 = 0)
+      s"""WITH e AS (SELECT * FROM ${Tables.duckEvents} WHERE event_type IN ('purchase', 'error') AND user_id % 2 = 0)
         |SELECT event_type, event_id,
         |  CAST(SUM(event_id) OVER w AS BIGINT) AS moving_sum,
         |  ROW_NUMBER() OVER w AS n
@@ -2401,19 +2426,18 @@ object StreamQueries {
         |ORDER BY event_type, event_id""".stripMargin,
 
     "q_stream_cep" ->
-      """WITH o AS (
+      s"""WITH o AS (
         |  SELECT user_id, event_type, event_id,
         |    lead(event_type) OVER w AS next_type,
         |    lead(event_id) OVER w AS next_id
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id
-        |               ORDER BY make_timestamp(epoch_ns(ts) // 1000), event_id))
+        |  FROM ${Tables.duckEvents}
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
         |SELECT user_id, event_id AS purchase_id, next_id AS error_id
         |FROM o WHERE event_type = 'purchase' AND next_type = 'error'
         |ORDER BY user_id, purchase_id""".stripMargin,
 
     "q_stream_ptjoin" ->
-      """WITH e AS (SELECT event_id, user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
         |v AS (SELECT event_id, user_id, ts, value FROM e WHERE event_type = 'view'),
         |le AS (SELECT user_id, event_id AS v_id, value AS v_value,
         |         row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
@@ -2447,8 +2471,8 @@ object StreamQueries {
         |WHERE rn = 1 ORDER BY event_type""".stripMargin,
 
     "q_stream_firstn" ->
-      """WITH e AS (SELECT user_id, event_id,
-        |  CAST(epoch_ns(ts) // 1000 AS BIGINT) AS ts_us FROM events)
+      s"""WITH e AS (SELECT user_id, event_id,
+        |  epoch_us(ts) AS ts_us FROM ${Tables.duckEvents})
         |SELECT user_id, event_id, ts_us FROM (
         |  SELECT user_id, event_id, ts_us,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS rn
@@ -2456,7 +2480,7 @@ object StreamQueries {
         |WHERE rn <= 3 ORDER BY user_id, event_id""".stripMargin,
 
     "q_stream_lateness" ->
-      """WITH e AS (SELECT event_id, make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
         |mx AS (SELECT MAX(ts) AS m FROM e),
         |okre AS (SELECT e.* FROM e, mx WHERE ts > m - INTERVAL 1 HOUR),
         |latere AS (SELECT e.* FROM e, mx
@@ -2482,7 +2506,7 @@ object StreamQueries {
 
     // same result as the batch window join by construction
     "q_stream_winjoin" ->
-      """WITH e AS (SELECT event_id, user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
         |c AS (SELECT time_bucket(INTERVAL 1 HOUR, ts) AS w, user_id, event_id AS click_id
         |      FROM e WHERE event_type = 'click'),
         |p AS (SELECT time_bucket(INTERVAL 1 HOUR, ts) AS w, user_id, event_id AS purchase_id
@@ -2494,8 +2518,7 @@ object StreamQueries {
     // the coGroup result equals the FULL OUTER join of the two
     // per-window batch aggregates (one-sided keys included)
     "q_stream_cogroup" ->
-      """WITH e AS (SELECT user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-        |           FROM events WHERE event_type IN ('click', 'purchase')),
+      s"""WITH e AS (SELECT * FROM ${Tables.duckEvents} WHERE event_type IN ('click', 'purchase')),
         |c AS (SELECT time_bucket(INTERVAL 1 HOUR, ts) AS w, user_id, COUNT(*) AS n,
         |        SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)) AS cents
         |      FROM e WHERE event_type = 'click' GROUP BY 1, 2),
@@ -2513,9 +2536,7 @@ object StreamQueries {
     // sliding assignment = each event in the bucket it starts AND the
     // one before (size 2h, slide 1h)
     "q_stream_coslide" ->
-      """WITH e AS (SELECT user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-        |           FROM events
-        |           WHERE event_type IN ('click', 'purchase') AND user_id % 5 = 0),
+      s"""WITH e AS (SELECT * FROM ${Tables.duckEvents} WHERE event_type IN ('click', 'purchase') AND user_id % 5 = 0),
         |ex AS (SELECT user_id, event_type, value, time_bucket(INTERVAL 1 HOUR, ts) AS w FROM e
         |       UNION ALL
         |       SELECT user_id, event_type, value, time_bucket(INTERVAL 1 HOUR, ts) - INTERVAL 1 HOUR FROM e),
@@ -2537,9 +2558,7 @@ object StreamQueries {
     // exact cents in one grouped pass; ties among equal timestamps don't
     // affect the island assignment (diff 0 ≤ gap)
     "q_stream_cosession" ->
-      """WITH e AS (SELECT user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-        |           FROM events
-        |           WHERE event_type IN ('click', 'purchase') AND user_id % 3 = 0),
+      s"""WITH e AS (SELECT * FROM ${Tables.duckEvents} WHERE event_type IN ('click', 'purchase') AND user_id % 3 = 0),
         |m AS (SELECT user_id, ts, event_type, value,
         |  CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts) <= INTERVAL 1 HOUR
         |    THEN 0 ELSE 1 END AS new_s FROM e),
@@ -2555,7 +2574,7 @@ object StreamQueries {
     // per-user gaps-and-islands firsts at the 6-hour gap — ms-truncated
     // timestamps on both engines
     "q_stream_dedup_ttl" ->
-      """WITH e AS (SELECT event_id, user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts FROM events WHERE user_id % 2 = 0),
+      s"""WITH e AS (SELECT * FROM ${Tables.duckEvents} WHERE user_id % 2 = 0),
         |g AS (SELECT user_id, event_id,
         |    epoch_ms(ts) - lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_ms
         |  FROM e)
@@ -2567,8 +2586,8 @@ object StreamQueries {
     // (phase-2 keys); the history half reaches the result only through
     // the checkpoint→read→bootstrap cycle
     "q_state_bootstrap" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000 AS usec,
-        |  CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents FROM events),
+      s"""WITH e AS (SELECT user_id, epoch_us(ts) AS usec,
+        |  CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents FROM ${Tables.duckEvents}),
         |c AS (SELECT MIN(usec) + (MAX(usec) - MIN(usec)) // 2 AS cutoff FROM e)
         |SELECT user_id, COUNT(*) AS n, CAST(SUM(cents) AS BIGINT) AS sum_cents
         |FROM e GROUP BY user_id
@@ -2579,7 +2598,7 @@ object StreamQueries {
     // full, odd-parity users only before the one-third time cutoff (the
     // stall point) — integer micros arithmetic on both engines
     "q_stream_idle" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000 AS us, make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type FROM events),
+      s"""WITH e AS (SELECT user_id, epoch_us(ts) AS us, ts, event_type FROM ${Tables.duckEvents}),
         |c AS (SELECT MIN(us) + (MAX(us) - MIN(us)) // 3 AS cutoff FROM e)
         |SELECT time_bucket(INTERVAL 1 HOUR, ts) AS window_start, event_type, COUNT(*) AS n
         |FROM e WHERE user_id % 2 = 0 OR us < (SELECT cutoff FROM c)
@@ -2587,12 +2606,12 @@ object StreamQueries {
 
     // alignment changes pacing, never results: the full tumble counts
     "q_stream_aligned" ->
-      """WITH e AS (SELECT make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type FROM events)
+      s"""WITH e AS ${Tables.duckEvents}
         |SELECT time_bucket(INTERVAL 1 HOUR, ts) AS window_start, event_type, COUNT(*) AS n
         |FROM e GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
 
     "q_sink_upsert" ->
-      """WITH e AS (SELECT event_id, user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts, value FROM events)
+      s"""WITH e AS ${Tables.duckEvents}
         |SELECT user_id, event_id AS last_event_id, value AS last_value FROM (
         |  SELECT user_id, event_id, value,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
@@ -2600,7 +2619,7 @@ object StreamQueries {
         |WHERE rn = 1 AND user_id % 5 <> 0 ORDER BY user_id""".stripMargin,
 
     "q_stream_session" ->
-      """WITH e AS (SELECT event_id, user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts FROM events WHERE user_id % 3 = 0),
+      s"""WITH e AS (SELECT * FROM ${Tables.duckEvents} WHERE user_id % 3 = 0),
         |m AS (SELECT user_id, event_id, ts,
         |  CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) <= INTERVAL 1 HOUR
         |    THEN 0 ELSE 1 END AS new_s FROM e),

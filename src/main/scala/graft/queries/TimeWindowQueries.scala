@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Tables
 import Q._
 
 /** SQL window TVF parity — the reference's TUMBLE/HOP/CUMULATE/SESSION
@@ -128,7 +129,7 @@ object TimeWindowQueries {
     // WindowTvf front door expands the TVF and hands the rest to spark.sql;
     // oracles are shared with the DataFrame forms above.
     "q_tvf_tumble" -> ((s, dir) => {
-      graft.Tables.registerAll(s, dir)
+      Tables.registerAll(s, dir)
       graft.GraftSql.sql(s,
         """SELECT window_start, window_end, event_type, COUNT(*) AS n,
           |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
@@ -140,7 +141,7 @@ object TimeWindowQueries {
     // TUMBLE with the optional OFFSET argument: windows align to
     // :15 boundaries instead of the hour (window() startTime shift).
     "q_tvf_tumble_offset" -> ((s, dir) => {
-      graft.Tables.registerAll(s, dir)
+      Tables.registerAll(s, dir)
       graft.GraftSql.sql(s,
         """SELECT window_start, window_end, event_type, COUNT(*) AS n
           |FROM TABLE(TUMBLE(TABLE events, DESCRIPTOR(ts), INTERVAL '1' HOUR, INTERVAL '15' MINUTES))
@@ -153,7 +154,7 @@ object TimeWindowQueries {
     // expanded TUMBLE view must leave a statement Spark's grouping-sets
     // analysis accepts — gates the COMPOSITION, not just the TVF.
     "q_tvf_groupingsets" -> ((s, dir) => {
-      graft.Tables.registerAll(s, dir)
+      Tables.registerAll(s, dir)
       graft.GraftSql.sql(s,
         """SELECT window_start, event_type, user_id % 3 AS ubucket, COUNT(*) AS n
           |FROM TABLE(TUMBLE(TABLE events, DESCRIPTOR(ts), INTERVAL '1' HOUR))
@@ -162,7 +163,7 @@ object TimeWindowQueries {
     }),
 
     "q_tvf_hop" -> ((s, dir) => {
-      graft.Tables.registerAll(s, dir)
+      Tables.registerAll(s, dir)
       graft.GraftSql.sql(s,
         """SELECT window_start, window_end, event_type, COUNT(*) AS n,
           |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
@@ -172,7 +173,7 @@ object TimeWindowQueries {
     }),
 
     "q_tvf_cumulate" -> ((s, dir) => {
-      graft.Tables.registerAll(s, dir)
+      Tables.registerAll(s, dir)
       graft.GraftSql.sql(s,
         """SELECT window_start, window_end, event_type, COUNT(*) AS n,
           |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
@@ -182,7 +183,7 @@ object TimeWindowQueries {
     }),
 
     "q_tvf_session" -> ((s, dir) => {
-      graft.Tables.registerAll(s, dir)
+      Tables.registerAll(s, dir)
       graft.GraftSql.sql(s,
         """SELECT window_start AS session_start, window_end AS session_end,
           |  user_id, COUNT(*) AS n,
@@ -209,19 +210,16 @@ object TimeWindowQueries {
     })
   )
 
-  private val evCte =
-    "SELECT event_id, user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value FROM events"
-
   private val baseOracles: Map[String, String] = Map(
     "q_window_tumble" ->
-      s"""WITH e AS ($evCte)
+      s"""WITH e AS ${Tables.duckEvents}
         |SELECT time_bucket(INTERVAL 1 HOUR, ts) AS window_start,
         |  time_bucket(INTERVAL 1 HOUR, ts) + INTERVAL 1 HOUR AS window_end,
         |  event_type, COUNT(*) AS n, ${dsumSql("value")} AS sum_value
         |FROM e GROUP BY 1, 2, 3 ORDER BY window_start, event_type""".stripMargin,
 
     "q_window_hop" ->
-      s"""WITH e AS ($evCte)
+      s"""WITH e AS ${Tables.duckEvents}
         |SELECT ws AS window_start, ws + INTERVAL 1 HOUR AS window_end,
         |  event_type, COUNT(*) AS n, ${dsumSql("value")} AS sum_value
         |FROM e, UNNEST([time_bucket(INTERVAL 30 MINUTE, ts),
@@ -229,7 +227,7 @@ object TimeWindowQueries {
         |GROUP BY 1, 2, 3 ORDER BY window_start, event_type""".stripMargin,
 
     "q_window_session" ->
-      s"""WITH e AS ($evCte),
+      s"""WITH e AS ${Tables.duckEvents},
         |m AS (SELECT user_id, ts, value,
         |  CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
         |            <= INTERVAL 1 HOUR THEN 0 ELSE 1 END AS new_s
@@ -243,9 +241,9 @@ object TimeWindowQueries {
         |FROM g GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin,
 
     "q_window_session_dyn" ->
-      s"""WITH e AS (SELECT event_id, user_id, make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value,
+      s"""WITH e AS (SELECT *,
         |  CASE WHEN event_type = 'purchase' THEN INTERVAL 2 HOUR ELSE INTERVAL 1 HOUR END AS gap
-        |  FROM events),
+        |  FROM ${Tables.duckEvents}),
         |m AS (SELECT user_id, ts, value, event_id, ts + gap AS myend,
         |  MAX(ts + gap) OVER (PARTITION BY user_id ORDER BY ts, event_id
         |                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
@@ -258,7 +256,7 @@ object TimeWindowQueries {
         |FROM g GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin,
 
     "q_window_cumulate" ->
-      s"""WITH e AS ($evCte)
+      s"""WITH e AS ${Tables.duckEvents}
         |SELECT time_bucket(INTERVAL 4 HOUR, ts) AS window_start, we AS window_end,
         |  event_type, COUNT(*) AS n, ${dsumSql("value")} AS sum_value
         |FROM e, UNNEST(generate_series(time_bucket(INTERVAL 4 HOUR, ts) + INTERVAL 1 HOUR,
@@ -268,7 +266,7 @@ object TimeWindowQueries {
         |GROUP BY 1, 2, 3 ORDER BY window_start, window_end, event_type""".stripMargin,
 
     "q_window_topn" ->
-      s"""WITH e AS ($evCte),
+      s"""WITH e AS ${Tables.duckEvents},
         |per_user AS (
         |  SELECT time_bucket(INTERVAL 1 DAY, ts) AS window_start, event_type, user_id,
         |    SUM(CAST(value AS DECIMAL(12,2))) AS sum_dec
@@ -281,7 +279,7 @@ object TimeWindowQueries {
         |WHERE rn <= 2 ORDER BY window_start, event_type, rn""".stripMargin,
 
     "q_window_dedup" ->
-      s"""WITH e AS ($evCte)
+      s"""WITH e AS ${Tables.duckEvents}
         |SELECT window_start, user_id, event_id, ts FROM (
         |  SELECT time_bucket(INTERVAL 6 HOUR, ts) AS window_start, user_id, event_id, ts,
         |    row_number() OVER (PARTITION BY time_bucket(INTERVAL 6 HOUR, ts), user_id
@@ -296,13 +294,13 @@ object TimeWindowQueries {
   val oracles: Map[String, String] = baseOracles ++ Map(
     "q_tvf_tumble" -> baseOracles("q_window_tumble"),
     "q_tvf_tumble_offset" ->
-      s"""WITH e AS ($evCte)
+      s"""WITH e AS ${Tables.duckEvents}
         |SELECT time_bucket(INTERVAL 1 HOUR, ts, INTERVAL 15 MINUTE) AS window_start,
         |  time_bucket(INTERVAL 1 HOUR, ts, INTERVAL 15 MINUTE) + INTERVAL 1 HOUR AS window_end,
         |  event_type, COUNT(*) AS n
         |FROM e GROUP BY 1, 2, 3 ORDER BY window_start, event_type""".stripMargin,
     "q_tvf_groupingsets" ->
-      s"""WITH e AS ($evCte)
+      s"""WITH e AS ${Tables.duckEvents}
         |SELECT time_bucket(INTERVAL 1 HOUR, ts) AS window_start,
         |  event_type, user_id % 3 AS ubucket, COUNT(*) AS n
         |FROM e

@@ -5,6 +5,8 @@ import scala.util.Random
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Seeded random generators for the WINDOW-FAMILY leftovers the core
   * stream fuzz ([[StreamFuzzGen]]) doesn't reach:
   *
@@ -58,9 +60,7 @@ object WindowFuzzGen {
       val keySel = keys.map { case (e, a) => s"$e AS $a" }
       val aggSel = aggs.map { case (e, a) => s"$e AS $a" }
       val groupBy = (1 to 2 + keys.length).mkString(", ")
-      s"""WITH e AS (SELECT event_id, user_id,
-         |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-         |  FROM events),
+      s"""WITH e AS ${Tables.duckEvents},
          |f AS (SELECT * FROM e WHERE $filterSql)
          |SELECT time_bucket(INTERVAL $maxMinutes MINUTE, ts) AS window_start,
          |  we AS window_end,
@@ -89,9 +89,7 @@ object WindowFuzzGen {
 
     def oracleSql: String = {
       val ordered =
-        s"""WITH e AS (SELECT event_id, user_id,
-           |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-           |  FROM events),
+        s"""WITH e AS ${Tables.duckEvents},
            |f AS (SELECT CAST($keySql AS STRING) AS k,
            |    CAST($valueSql AS BIGINT) AS v, ts, event_id
            |  FROM e WHERE $filterSql),
@@ -129,9 +127,7 @@ object WindowFuzzGen {
 
     def oracleSql: String = {
       val base =
-        s"""WITH e AS (SELECT event_id, user_id,
-           |    make_timestamp(epoch_ns(ts) // 1000) AS ts, event_type, value
-           |  FROM events),
+        s"""WITH e AS ${Tables.duckEvents},
            |f AS (SELECT time_bucket(INTERVAL $winMinutes MINUTE, ts)
            |      AS window_start,
            |    CAST($partSql AS STRING) AS pk, user_id, event_id, ts,

@@ -149,8 +149,8 @@ class GraftSqlSpec extends SparkSuite {
   }
 
   test("OPTIONS hint overrides a connector table's options per statement") {
-    val dir1 = java.nio.file.Files.createTempDirectory("gs_opt1").toString
-    val dir2 = java.nio.file.Files.createTempDirectory("gs_opt2").toString
+    val dir1 = tmpDir("gs_opt1")
+    val dir2 = tmpDir("gs_opt2")
     Seq((1L, "one")).toDF("id", "tag").write.mode("overwrite").parquet(dir1)
     Seq((2L, "two"), (3L, "three")).toDF("id", "tag")
       .write.mode("overwrite").parquet(dir2)

@@ -101,7 +101,7 @@ class PlanQualitySpec extends SparkSuite {
       // the dim must be a real scan with a surviving selective filter —
       // a LocalRelation constant-folds its filter away and the pruning
       // rule sees nothing selective to reuse
-      val dimDir = java.nio.file.Files.createTempDirectory("dpp_dim").toString
+      val dimDir = tmpDir("dpp_dim")
       Seq(("F", 1L), ("O", 2L), ("P", 3L)).toDF("status", "flag")
         .write.mode("overwrite").parquet(dimDir)
       Q.withConf(spark,

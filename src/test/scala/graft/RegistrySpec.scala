@@ -7,7 +7,8 @@ import graft.queries.{FuzzFamilies, FuzzGen}
 /** Consistency of the query registry ([[SparkEntry]]) and the fuzz-family
   * registry ([[FuzzFamilies]]) it folds in: no module silently shadows
   * another's key, no promoted fuzz row loses its oracle, and the dump's
-  * sweep arms are exactly what the registry derives. Pure registry
+  * sweep arms are exactly what the registry derives, and no oracle
+  * decodes `events.ts` outside [[Tables.duckEvents]]. Pure registry
   * checks — no query runs.
   */
 class RegistrySpec extends AnyFunSuite {
@@ -67,5 +68,20 @@ class RegistrySpec extends AnyFunSuite {
         Seq(s"q_fuzz_$seed" -> FuzzGen.sql(seed)))
     }
     assert(FuzzDump.arms("nosuchfamily").isEmpty)
+  }
+
+  test("every oracle decodes events.ts only through Tables.duckEvents") {
+    val fuzz = for {
+      arm <- Seq("all", "recover", "cdc")
+      seed <- 1L to 3L
+      a <- FuzzDump.arms(arm).get(seed)
+    } yield a.name -> a.oracleSql
+    for ((name, sql) <- SparkEntry.oracleSql.toSeq ++ fuzz) {
+      val rest = sql.replace(Tables.duckEvents, "")
+      assert(!rest.contains("epoch_ns(") && !rest.contains("make_timestamp("),
+        s"$name decodes events.ts outside Tables.duckEvents")
+      // a literal left un-interpolated would reach DuckDB as text
+      assert(!rest.contains("${"), s"$name holds an uninterpolated placeholder")
+    }
   }
 }

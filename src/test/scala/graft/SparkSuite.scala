@@ -4,19 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for operator specs. RocksDB state store is
-  * required by transformWithState; checkpoint dirs are per-suite temp.
+/** Shared local SparkSession for operator specs (shared across suites,
+  * so no suite stops it). RocksDB state store is required by
+  * transformWithState. Every spec temp dir comes from [[tmpDir]], a
+  * [[graft.queries.Q.scratchDir]] reaped at JVM exit.
   */
 trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSuite.session
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
-  override def afterAll(): Unit = {
-    // session is shared across suites; do not stop it here
-    super.afterAll()
-  }
+  def tmpDir(prefix: String): String = graft.queries.Q.scratchDir(prefix)
 }
 
 object SparkSuite {
@@ -30,7 +26,7 @@ object SparkSuite {
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+        graft.queries.Q.scratchDir("graft-warehouse"))
       .config("spark.sql.autoBroadcastJoinThreshold", "10MB")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -9,11 +9,8 @@ import graft.{GraftSql, SparkSuite}
 class ConnectorDdlSpec extends SparkSuite {
   import spark.implicits._
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   test("filesystem source table: schema, computed column, SELECT") {
-    val dir = tmp("ddl_src")
+    val dir = tmpDir("ddl_src")
     Seq((1L, 10.0, "a"), (2L, 20.0, "b"), (3L, 30.0, "a"))
       .toDF("id", "amount", "tag").write.mode("overwrite").parquet(dir)
     GraftSql.sql(spark,
@@ -31,7 +28,7 @@ class ConnectorDdlSpec extends SparkSuite {
   }
 
   test("streaming filesystem source applies the WATERMARK clause") {
-    val dir = tmp("ddl_stream")
+    val dir = tmpDir("ddl_stream")
     Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
       .toDF("id", "ts").write.mode("overwrite").parquet(dir)
     GraftSql.sql(spark,
@@ -47,7 +44,7 @@ class ConnectorDdlSpec extends SparkSuite {
   }
 
   test("INSERT INTO filesystem sink writes and re-registers the view") {
-    val dir = tmp("ddl_sink") + "/out"
+    val dir = tmpDir("ddl_sink") + "/out"
     GraftSql.sql(spark,
       s"""CREATE TABLE fs_sink (tag STRING, total DOUBLE)
          |WITH ('connector' = 'filesystem', 'path' = '$dir',
@@ -62,7 +59,7 @@ class ConnectorDdlSpec extends SparkSuite {
   }
 
   test("PRIMARY KEY filesystem table: INSERT upserts by key") {
-    val dir = tmp("ddl_pk") + "/t"
+    val dir = tmpDir("ddl_pk") + "/t"
     GraftSql.sql(spark,
       s"""CREATE TABLE pk_t (k BIGINT, v STRING, PRIMARY KEY (k) NOT ENFORCED)
          |WITH ('connector' = 'filesystem', 'path' = '$dir',
@@ -80,7 +77,7 @@ class ConnectorDdlSpec extends SparkSuite {
     // all rows of one INSERT share the statement seq; the intra-batch
     // tiebreaker (monotonically increasing id inside the __ddl_seq
     // struct) must make the LATER duplicate win deterministically
-    val dir = tmp("ddl_pk_dup") + "/t"
+    val dir = tmpDir("ddl_pk_dup") + "/t"
     GraftSql.sql(spark,
       s"""CREATE TABLE pkdup_t (k BIGINT, v STRING, PRIMARY KEY (k) NOT ENFORCED)
          |WITH ('connector' = 'filesystem', 'path' = '$dir',
@@ -94,8 +91,8 @@ class ConnectorDdlSpec extends SparkSuite {
   }
 
   test("streaming INSERT INTO: source table with watermark drains to a sink") {
-    val src = tmp("ddl_sjob_src")
-    val dst = tmp("ddl_sjob_dst") + "/out"
+    val src = tmpDir("ddl_sjob_src")
+    val dst = tmpDir("ddl_sjob_dst") + "/out"
     Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:10:00"), 5.0),
       (2L, java.sql.Timestamp.valueOf("2024-01-01 00:20:00"), 7.0),
       (3L, java.sql.Timestamp.valueOf("2024-01-01 01:10:00"), 9.0))
@@ -119,8 +116,8 @@ class ConnectorDdlSpec extends SparkSuite {
   }
 
   test("EXECUTE STATEMENT SET runs every INSERT (multi-sink job)") {
-    val d1 = tmp("ddl_ss1") + "/a"
-    val d2 = tmp("ddl_ss2") + "/b"
+    val d1 = tmpDir("ddl_ss1") + "/a"
+    val d2 = tmpDir("ddl_ss2") + "/b"
     Seq((1L, 2.0), (2L, 3.0)).toDF("id", "v")
       .createOrReplaceTempView("ss_in")
     GraftSql.sql(spark,
@@ -168,7 +165,7 @@ class ConnectorDdlSpec extends SparkSuite {
   }
 
   test("PARTITIONED BY: partitioned writes, static partitions, pruning") {
-    val dir = tmp("ddl_part") + "/t"
+    val dir = tmpDir("ddl_part") + "/t"
     GraftSql.sql(spark,
       s"""CREATE TABLE part_t (id BIGINT, v DOUBLE, tag STRING)
          |PARTITIONED BY (tag)
@@ -198,8 +195,8 @@ class ConnectorDdlSpec extends SparkSuite {
   }
 
   test("ALTER TABLE SET/RESET edits options in place; DROP unregisters") {
-    val d1 = tmp("ddl_alter1")
-    val d2 = tmp("ddl_alter2")
+    val d1 = tmpDir("ddl_alter1")
+    val d2 = tmpDir("ddl_alter2")
     Seq((1L, "one")).toDF("id", "tag").write.mode("overwrite").parquet(d1)
     Seq((2L, "two"), (3L, "three")).toDF("id", "tag")
       .write.mode("overwrite").parquet(d2)
@@ -231,7 +228,7 @@ class ConnectorDdlSpec extends SparkSuite {
   }
 
   test("CDC-format table: PK batch scan materializes, streaming scan is a changelog") {
-    val dir = tmp("ddl_cdc")
+    val dir = tmpDir("ddl_cdc")
     val lines = Seq(
       """{"after":{"id":1,"v":"a"},"op":"c","ts_ms":10}""",
       """{"before":{"id":1,"v":"a"},"after":{"id":1,"v":"b"},"op":"u","ts_ms":20}""",
@@ -261,7 +258,7 @@ class ConnectorDdlSpec extends SparkSuite {
   }
 
   test("METADATA columns map to Spark's _metadata; DESCRIBE and SHOW CREATE TABLE round-trip") {
-    val dir = tmp("ddl_meta")
+    val dir = tmpDir("ddl_meta")
     Seq((1L, "x"), (2L, "y")).toDF("id", "tag").write.mode("overwrite").parquet(dir)
     GraftSql.sql(spark,
       s"""CREATE TABLE meta_t (
@@ -294,7 +291,7 @@ class ConnectorDdlSpec extends SparkSuite {
   }
 
   test("format-scoped options pass through: delimiter, header, gzip compression") {
-    val dir = tmp("ddl_fmtopt") + "/t"
+    val dir = tmpDir("ddl_fmtopt") + "/t"
     GraftSql.sql(spark,
       s"""CREATE TABLE fmtopt_t (id BIGINT, tag STRING)
          |WITH ('connector' = 'filesystem', 'path' = '$dir',
@@ -311,7 +308,7 @@ class ConnectorDdlSpec extends SparkSuite {
   }
 
   test("CTAS, ALTER TABLE COMPACT, and SHOW PARTITIONS") {
-    val dir = tmp("ddl_ctas") + "/t"
+    val dir = tmpDir("ddl_ctas") + "/t"
     Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "tag")
       .createOrReplaceTempView("ctas_in")
     // CTAS: schema from the query, materialized on create
@@ -336,7 +333,7 @@ class ConnectorDdlSpec extends SparkSuite {
     assert(GraftSql.sql(spark, "SELECT COUNT(*) AS n FROM ctas_t")
       .head().getLong(0) == 7L)
     // SHOW PARTITIONS over a partitioned table
-    val pdir = tmp("ddl_showp") + "/t"
+    val pdir = tmpDir("ddl_showp") + "/t"
     GraftSql.sql(spark,
       s"""CREATE TABLE showp_t (id BIGINT, tag STRING) PARTITIONED BY (tag)
          |WITH ('connector' = 'filesystem', 'path' = '$pdir',
@@ -349,7 +346,7 @@ class ConnectorDdlSpec extends SparkSuite {
   }
 
   test("ALTER TABLE ADD evolves the schema; RENAME TO moves the name") {
-    val dir = tmp("ddl_evolve")
+    val dir = tmpDir("ddl_evolve")
     Seq(Tuple1(1L)).toDF("id").write.mode("overwrite").parquet(dir)
     GraftSql.sql(spark,
       s"""CREATE TABLE evolve_t (id BIGINT)
@@ -373,7 +370,7 @@ class ConnectorDdlSpec extends SparkSuite {
   }
 
   test("RENAME of a materialized PK table keeps it readable; nested SHOW PARTITIONS") {
-    val dir = tmp("ddl_pkren") + "/t"
+    val dir = tmpDir("ddl_pkren") + "/t"
     GraftSql.sql(spark,
       s"""CREATE TABLE pkren_t (k BIGINT, v STRING, PRIMARY KEY (k) NOT ENFORCED)
          |WITH ('connector' = 'filesystem', 'path' = '$dir',
@@ -386,7 +383,7 @@ class ConnectorDdlSpec extends SparkSuite {
       .as[(Long, String)].collect().toSeq == Seq((1L, "a")))
 
     // multi-column partitioning: SHOW PARTITIONS walks the nesting
-    val pdir = tmp("ddl_showp2") + "/t"
+    val pdir = tmpDir("ddl_showp2") + "/t"
     GraftSql.sql(spark,
       s"""CREATE TABLE showp2_t (id BIGINT, a STRING, b STRING)
          |PARTITIONED BY (a, b)
@@ -401,7 +398,7 @@ class ConnectorDdlSpec extends SparkSuite {
   }
 
   test("row-level DELETE, UPDATE, and TRUNCATE rewrite the table copy-on-write") {
-    val dir = tmp("ddl_dml") + "/t"
+    val dir = tmpDir("ddl_dml") + "/t"
     GraftSql.sql(spark,
       s"""CREATE TABLE dml_t (id BIGINT, v DOUBLE, tag STRING)
          |WITH ('connector' = 'filesystem', 'path' = '$dir',
@@ -424,7 +421,7 @@ class ConnectorDdlSpec extends SparkSuite {
   }
 
   test("DML edge semantics: NULL predicates, snapshot SET, quoted WHERE, fresh PK dirs") {
-    val dir = tmp("ddl_dml_edge") + "/t"
+    val dir = tmpDir("ddl_dml_edge") + "/t"
     GraftSql.sql(spark,
       s"""CREATE TABLE dmle_t (id BIGINT, v DOUBLE, w DOUBLE, note STRING)
          |WITH ('connector' = 'filesystem', 'path' = '$dir',
@@ -451,7 +448,7 @@ class ConnectorDdlSpec extends SparkSuite {
     assert(r3.getDouble(0) == 8.0 && r3.getDouble(1) == 7.0 &&
       r3.getString(2) == "see where it goes")
     // partitioned DELETE: a full copy-on-write rewrite keeps layout
-    val pdir = tmp("ddl_dml_part") + "/t"
+    val pdir = tmpDir("ddl_dml_part") + "/t"
     GraftSql.sql(spark,
       s"""CREATE TABLE dmle_p (id BIGINT, tag STRING) PARTITIONED BY (tag)
          |WITH ('connector' = 'filesystem', 'path' = '$pdir',
@@ -486,7 +483,7 @@ class ConnectorDdlSpec extends SparkSuite {
   }
 
   test("SHOW CREATE TABLE round-trips watermark, key, and partitions") {
-    val dir = tmp("ddl_showfull") + "/t"
+    val dir = tmpDir("ddl_showfull") + "/t"
     GraftSql.sql(spark,
       s"""CREATE TABLE showfull_t (
          |  id BIGINT, ts TIMESTAMP(3), region STRING,
@@ -509,7 +506,7 @@ class ConnectorDdlSpec extends SparkSuite {
   }
 
   test("CREATE TABLE LIKE inherits schema and options; EXCLUDING drops them") {
-    val dir = tmp("ddl_like") + "/src"
+    val dir = tmpDir("ddl_like") + "/src"
     Seq((1L, "x")).toDF("id", "tag").write.mode("overwrite").parquet(dir)
     GraftSql.sql(spark,
       s"""CREATE TABLE like_base (id BIGINT, tag STRING)
@@ -552,7 +549,7 @@ class ConnectorDdlSpec extends SparkSuite {
   }
 
   test("row-level DML stays STATIC overwrite under a dynamic session conf") {
-    val dir = tmp("ddl_dml_dyn") + "/t"
+    val dir = tmpDir("ddl_dml_dyn") + "/t"
     GraftSql.sql(spark,
       s"""CREATE TABLE dmldyn_t (id BIGINT, tag STRING) PARTITIONED BY (tag)
          |WITH ('connector' = 'filesystem', 'path' = '$dir',
@@ -578,8 +575,8 @@ class ConnectorDdlSpec extends SparkSuite {
     // over a streaming scan is an UPDATE stream; the PRIMARY KEY on the
     // target routes it through the keyed upsert merge automatically
     // (FlinkChangelogModeInferenceProgram → upsert materialization)
-    val src = tmp("ddl_chlog_src")
-    val out = tmp("ddl_chlog_out") + "/t"
+    val src = tmpDir("ddl_chlog_src")
+    val out = tmpDir("ddl_chlog_out") + "/t"
     Seq((1L, "a", 10.0), (2L, "a", 5.0), (3L, "b", 7.0))
       .toDF("id", "tag", "v").write.mode("overwrite").parquet(src)
     GraftSql.sql(spark,
@@ -605,8 +602,8 @@ class ConnectorDdlSpec extends SparkSuite {
   }
 
   test("streaming INSERT of an updating aggregate into a KEYLESS table fails loudly") {
-    val src = tmp("ddl_chlog2_src")
-    val out = tmp("ddl_chlog2_out") + "/t"
+    val src = tmpDir("ddl_chlog2_src")
+    val out = tmpDir("ddl_chlog2_out") + "/t"
     Seq((1L, "a", 10.0)).toDF("id", "tag", "v").write.mode("overwrite").parquet(src)
     GraftSql.sql(spark,
       s"""CREATE TABLE chlog2_src (id BIGINT, tag STRING, v DOUBLE)
@@ -645,7 +642,7 @@ class ConnectorDdlSpec extends SparkSuite {
   }
 
   test("streaming INSERT into a blackhole drains the stream") {
-    val src = tmp("ddl_bh_src")
+    val src = tmpDir("ddl_bh_src")
     Seq((1L, 2.0)).toDF("id", "v").write.mode("overwrite").parquet(src)
     GraftSql.sql(spark,
       s"""CREATE TABLE bh_src (id BIGINT, v DOUBLE)
@@ -658,7 +655,7 @@ class ConnectorDdlSpec extends SparkSuite {
   }
 
   test("SHOW CREATE TABLE escapes backslashes in option values") {
-    val dir = tmp("ddl_bslash") + "/t"
+    val dir = tmpDir("ddl_bslash") + "/t"
     Seq((1L, "x")).toDF("id", "tag").write.mode("overwrite").parquet(dir)
     // input uses the ESCAPED form '\\' — the quote scanner treats \'
     // as an escaped quote, so a bare '\' is not expressible directly
@@ -677,7 +674,7 @@ class ConnectorDdlSpec extends SparkSuite {
   }
 
   test("SHOW CREATE TABLE escapes quotes in option values and round-trips") {
-    val dir = tmp("ddl_quote") + "/t"
+    val dir = tmpDir("ddl_quote") + "/t"
     Seq((1L, "x")).toDF("id", "tag").write.mode("overwrite").parquet(dir)
     GraftSql.sql(spark,
       s"""CREATE TABLE quoted_t (id BIGINT, tag STRING)

@@ -8,11 +8,8 @@ import graft.{GraftSql, SparkSuite}
 class MaterializedTableSpec extends SparkSuite {
   import spark.implicits._
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   test("FULL mode: stale until ALTER ... REFRESH re-materializes") {
-    val src = tmp("mt_full_src")
+    val src = tmpDir("mt_full_src")
     Seq((1L, "a"), (2L, "b")).toDF("id", "tag").write.mode("overwrite").parquet(src)
     GraftSql.sql(spark,
       s"""CREATE TABLE mt_base (id BIGINT, tag STRING)
@@ -39,7 +36,7 @@ class MaterializedTableSpec extends SparkSuite {
   }
 
   test("CONTINUOUS mode: streaming job with SUSPEND/RESUME from checkpoint") {
-    val src = tmp("mt_cont_src")
+    val src = tmpDir("mt_cont_src")
     Seq((1L, 5.0)).toDF("id", "v").write.mode("overwrite").parquet(src)
     GraftSql.sql(spark,
       s"""CREATE TABLE mt_stream_src (id BIGINT, v DOUBLE)
@@ -77,7 +74,7 @@ class MaterializedTableSpec extends SparkSuite {
     // the streaming source has no data yet → no parquet files at the
     // storage path; the view must register from the probe's schema
     // instead of dying on schema inference
-    val src = tmp("mt_empty_src")
+    val src = tmpDir("mt_empty_src")
     GraftSql.sql(spark,
       s"""CREATE TABLE mt_empty_in (id BIGINT, v DOUBLE)
          |WITH ('connector' = 'filesystem', 'path' = '$src',
@@ -97,7 +94,7 @@ class MaterializedTableSpec extends SparkSuite {
   }
 
   test("CONTINUOUS over an UPDATING query gets the engine diagnostic") {
-    val src = tmp("mt_upd_src")
+    val src = tmpDir("mt_upd_src")
     Seq((1L, "a", 2.0)).toDF("id", "tag", "v").write.mode("overwrite").parquet(src)
     GraftSql.sql(spark,
       s"""CREATE TABLE mt_upd_in (id BIGINT, tag STRING, v DOUBLE)

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Row
@@ -18,7 +17,7 @@ class AvroIOSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("round-trips a TPC-H table through Avro container files") {
-    val dir = Files.createTempDirectory("avro").toString + "/supplier"
+    val dir = tmpDir("avro") + "/supplier"
     val supplier = Tables.load(spark, sf, "supplier")
     AvroIO.write(supplier.repartition(2), dir)
     val back = AvroIO.read(spark, dir, supplier.schema)
@@ -35,7 +34,7 @@ class AvroIOSpec extends SparkSuite {
       (2L, None, Seq.empty[Double], Timestamp.valueOf("1969-12-31 23:59:59.999999"))
     ).toDF("id", "s", "xs", "ts")
       .withColumn("nested", struct($"id".as("k"), $"s".as("v")))
-    val dir = Files.createTempDirectory("avro").toString + "/mixed"
+    val dir = tmpDir("avro") + "/mixed"
     AvroIO.write(df, dir)
     val back = AvroIO.read(spark, dir, df.schema).orderBy($"id").collect().toSeq
     assert(back.map(_.getLong(0)) == Seq(1L, 2L))

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -15,7 +14,7 @@ class SequenceFileIOSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("write/read round-trips a table through (LongWritable, Text) pairs") {
-    val dir = Files.createTempDirectory("seqfile").toString + "/nation"
+    val dir = tmpDir("seqfile") + "/nation"
     val nation = Tables.load(spark, sf, "nation")
     SequenceFileIO.write(nation.repartition(3), dir, keyCol = "n_nationkey")
     val back = SequenceFileIO.read(spark, dir, nation.schema)
@@ -29,7 +28,7 @@ class SequenceFileIOSpec extends SparkSuite {
   }
 
   test("key-only read skips JSON deserialization and returns the key column") {
-    val dir = Files.createTempDirectory("seqfile").toString + "/keys"
+    val dir = tmpDir("seqfile") + "/keys"
     val nation = Tables.load(spark, sf, "nation")
     SequenceFileIO.write(nation, dir, keyCol = "n_nationkey")
     val keys = SequenceFileIO.readKeys(spark, dir)
@@ -41,7 +40,7 @@ class SequenceFileIOSpec extends SparkSuite {
     val df = Seq(
       (1L, java.sql.Timestamp.valueOf("2026-01-02 03:04:05.123456")))
       .toDF("id", "ts")
-    val dir = Files.createTempDirectory("seqfile").toString + "/ts"
+    val dir = tmpDir("seqfile") + "/ts"
     SequenceFileIO.write(df, dir, keyCol = "id")
     val back = SequenceFileIO.read(spark, dir, df.schema).collect().head
     assert(back.getTimestamp(1) ==
@@ -50,7 +49,7 @@ class SequenceFileIOSpec extends SparkSuite {
 
   test("null key column fails with a clear error") {
     val df = Seq((Some(1L), "a"), (None, "b")).toDF("id", "s")
-    val dir = Files.createTempDirectory("seqfile").toString + "/nullkey"
+    val dir = tmpDir("seqfile") + "/nullkey"
     val e = intercept[Exception] { SequenceFileIO.write(df, dir, keyCol = "id") }
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
@@ -62,7 +61,7 @@ class SequenceFileIOSpec extends SparkSuite {
       (1L, Some("a"), Seq(1, 2)),
       (2L, None, Seq.empty[Int])
     ).toDF("id", "s", "xs")
-    val dir = Files.createTempDirectory("seqfile").toString + "/nulls"
+    val dir = tmpDir("seqfile") + "/nulls"
     SequenceFileIO.write(df, dir, keyCol = "id")
     val back = SequenceFileIO.read(spark, dir, df.schema)
       .orderBy($"id").collect().toSeq

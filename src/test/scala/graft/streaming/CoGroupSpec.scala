@@ -48,7 +48,7 @@ class CoGroupSpec extends SparkSuite {
     assert(!out.queryExecution.analyzed.toString.contains("to_json"),
       "coGroup payload must be a typed union struct, not to_json text")
     val name = "cogroup_sink"
-    val ckpt = java.nio.file.Files.createTempDirectory("cogroup_ckpt")
+    val ckpt = java.nio.file.Paths.get(tmpDir("cogroup_ckpt"))
     // SparkSuite's shared session already pins the RocksDB provider
     // (transformWithState requires it) — never set/unset it here, an
     // unset would strip the suite-wide conf for every later suite
@@ -101,7 +101,7 @@ class CoGroupSpec extends SparkSuite {
         Array[Any](key, win, ls.length.toLong, rs.length.toLong))),
       outSchema)
     val name = "cogroup_slide_sink"
-    val ckpt = java.nio.file.Files.createTempDirectory("cogroup_slide_ckpt")
+    val ckpt = java.nio.file.Paths.get(tmpDir("cogroup_slide_ckpt"))
     val q = out.writeStream.format("memory").queryName(name)
       .outputMode("append")
       .option("checkpointLocation", ckpt.toString).start()
@@ -156,7 +156,7 @@ class CoGroupSpec extends SparkSuite {
         Array[Any](key, (ls.length + rs.length).toLong))),
       outSchema)
     val name = "cogroup_nullkey_sink"
-    val ckpt = java.nio.file.Files.createTempDirectory("cogroup_nullkey")
+    val ckpt = java.nio.file.Paths.get(tmpDir("cogroup_nullkey"))
     val q = out.writeStream.format("memory").queryName(name)
       .outputMode("append")
       .option("checkpointLocation", ckpt.toString).start()
@@ -205,7 +205,7 @@ class CoGroupSpec extends SparkSuite {
       },
       outSchema)
     val name = "cogroup_hetero_sink"
-    val ckpt = java.nio.file.Files.createTempDirectory("cogroup_hetero_ckpt")
+    val ckpt = java.nio.file.Paths.get(tmpDir("cogroup_hetero_ckpt"))
     val q = out.writeStream.format("memory").queryName(name)
       .outputMode("append")
       .option("checkpointLocation", ckpt.toString).start()
