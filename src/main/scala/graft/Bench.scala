@@ -1,104 +1,56 @@
 package graft
 
-import java.util.UUID
-import scala.collection.mutable
-import scala.jdk.CollectionConverters._
+import java.util.concurrent.TimeoutException
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import graft.queries.Q.QFn
+import perfbench.{Canary, Harness, Host, Json, OpRecord, Tracer}
 
 /** The perf surface and the one timing loop: every key is timed
   * as `fn(spark, sfDir).count()`, the build (the query-function call —
-  * for a replay key, the whole replay) apart from the count, and every
-  * micro-batch its streaming queries ran is tallied per key.
+  * for a replay key, the whole replay) apart from the count, under its
+  * own perfbench [[Tracer]], whose per-layer metrics (Catalyst phases,
+  * codegen, jobs/stages/tasks, shuffle, micro-batch components, state
+  * store) are the key's layers.
   *
   * stdout is EXACTLY ONE JSON line (also written to bench_out.json); the
-  * per-key layers go to bench_layers.json next to it. SPARK_GRAFT_ONLY
-  * (comma-separated names, dev only) times a subset.
+  * per-key layers go to bench_layers.json next to it, with the contention
+  * canary's seconds before and after the pool and the host's steal share
+  * over it. SPARK_GRAFT_ONLY (comma-separated names, dev only) times a
+  * subset.
   */
 object Bench {
 
-  /** One key's layers: build and action wall seconds, the micro-batches
-    * of the streaming runs it started with their summed `durationMs` per
-    * component, `incomplete` when a run's termination event did not
-    * arrive within the wait bound, and the error of a failed key.
+  /** One key's layers: build and action wall seconds, the Tracer's
+    * per-layer metrics (the `per_layer` names of BENCHMARK.json),
+    * `incomplete` when the key left a streaming query running, and the
+    * error of a failed key.
     */
-  final case class Layers(buildS: Double, actionS: Double, batches: Int,
-      durationMs: Map[String, Long], incomplete: Boolean,
+  final case class Layers(buildS: Double, actionS: Double,
+      layers: Map[String, Double], incomplete: Boolean,
       error: Option[String])
 
   /** The bench_layers.json record: the warm-up's `SparkEntry.entry` row
-    * count (or its error) and each timed key's [[Layers]], in run order.
+    * count (or its error), the canary's seconds before and after the
+    * pool, the stolen share of the host's CPU time over the pool, and
+    * each timed key's [[Layers]], in run order.
     */
   final case class Sidecar(entryRows: Either[String, Long],
+      canaryS: Seq[Double], stealFrac: Double,
       keys: Seq[(String, Layers)]) {
     def json: String = {
       import DumpIO.jsonString
       val entry = entryRows.fold(e => s""""entry_error":${jsonString(e)}""",
         n => s""""entry_rows":$n""")
       val ks = keys.map { case (k, l) =>
-        val dur = l.durationMs.toSeq.sorted.map { case (c, ms) => s"${jsonString(c)}:$ms" }
-          .mkString("{", ",", "}")
         jsonString(k) + s""":{"build_s":${l.buildS},"action_s":${l.actionS},""" +
-          s""""batches":${l.batches},"duration_ms":$dur""" +
+          s""""layers":${Json.numMap(l.layers)}""" +
           (if (l.incomplete) ""","incomplete":true""" else "") +
           l.error.fold("")(e => s""","error":${jsonString(e)}""") + "}"
       }.mkString("{", ",", "}")
-      s"""{$entry,"keys":$ks}"""
-    }
-  }
-
-  /** Upper bound on the post-key wait for termination events. */
-  private val TerminationWaitMs = 60000L
-
-  /** Session listener that tags each streaming run with the key being
-    * timed and tallies its progress events. `onQueryStarted` runs
-    * synchronously inside `start()` (Spark's listener contract), so a run
-    * is tagged before it can make progress; progress and termination
-    * arrive FIFO on the listener bus, so once a run's termination event
-    * is in, all its progress events are too.
-    */
-  private final class StreamTally extends StreamingQueryListener {
-    private var key: Option[String] = None
-    private val keyOf = mutable.Map[UUID, String]()
-    private val running = mutable.Set[UUID]()
-    private val batches = mutable.Map[String, Int]().withDefaultValue(0)
-    private val durations = mutable.Map[String, mutable.Map[String, Long]]()
-
-    def begin(k: String): Unit = synchronized { key = Some(k) }
-
-    /** Stops tagging, then waits until every run of `k` has terminated
-      * (true) or the bound passes (false); returns with `k`'s tally.
-      */
-    def end(k: String): (Boolean, Int, Map[String, Long]) = synchronized {
-      key = None
-      val deadline = System.currentTimeMillis() + TerminationWaitMs
-      def pending = running.exists(keyOf(_) == k)
-      while (pending && System.currentTimeMillis() < deadline)
-        wait(math.max(1L, deadline - System.currentTimeMillis()))
-      (!pending, batches(k), durations.getOrElse(k, Map.empty).toMap)
-    }
-
-    override def onQueryStarted(
-        e: StreamingQueryListener.QueryStartedEvent): Unit = synchronized {
-      key.foreach { k => keyOf(e.runId) = k; running += e.runId }
-    }
-    override def onQueryProgress(
-        e: StreamingQueryListener.QueryProgressEvent): Unit = synchronized {
-      keyOf.get(e.progress.runId).foreach { k =>
-        batches(k) += 1
-        val sum = durations.getOrElseUpdate(k, mutable.Map())
-        e.progress.durationMs.asScala.foreach { case (c, ms) =>
-          sum(c) = sum.getOrElse(c, 0L) + ms.longValue
-        }
-      }
-    }
-    override def onQueryTerminated(
-        e: StreamingQueryListener.QueryTerminatedEvent): Unit = synchronized {
-      running -= e.runId
-      notifyAll()
+      s"""{$entry,"canary_s":${canaryS.map(Json.n).mkString("[", ",", "]")},""" +
+        s""""steal_frac":${Json.n(stealFrac)},"keys":$ks}"""
     }
   }
 
@@ -132,14 +84,8 @@ object Bench {
     */
   def run(spark: SparkSession, sfDir: String,
       selected: Map[String, QFn]): (String, Sidecar) = {
-    val tally = new StreamTally
-    spark.streams.addListener(tally)
-    try timeAll(spark, sfDir, selected, tally)
-    finally spark.streams.removeListener(tally)
-  }
-
-  private def timeAll(spark: SparkSession, sfDir: String,
-      selected: Map[String, QFn], tally: StreamTally): (String, Sidecar) = {
+    val sc = spark.sparkContext
+    val cpus = sc.defaultParallelism
     // warmup: JIT + codegen, so the first timed query isn't charged for
     // session startup. It reads sf0.001, so it loads none of the timed
     // run's tables unless sfDir is sf0.001 too.
@@ -149,15 +95,23 @@ object Bench {
         Left(e.toString)
       }
     val layers = Seq.newBuilder[(String, Layers)]
+    var nextId = 0
     def timed(name: String, fn: QFn): (String, Double) = {
-      tally.begin(name)
+      nextId += 1
+      val tracer = new Tracer(spark)
+      sc.setLocalProperty(Tracer.OpProperty, nextId.toString)
+      tracer.install()
+      val (compiles0, compileNs0) = Harness.codegenNow()
+      val cpu0 = Host.cpuS()
+      val startMs = System.currentTimeMillis()
       var built = -1L
+      var rows = 0L
       val t0 = System.nanoTime()
       val error =
         try {
           val df = fn(spark, sfDir)
           built = System.nanoTime()
-          df.count()
+          rows = df.count()
           None
         } catch { case e: Throwable =>
           // stderr only — stdout must stay exactly one JSON line. The
@@ -167,14 +121,26 @@ object Bench {
           Some(e.toString)
         }
       val t1 = System.nanoTime()
+      val endMs = System.currentTimeMillis()
+      val cpuS = Host.cpuS() - cpu0
+      val (compiles1, compileNs1) = Harness.codegenNow()
+      sc.setLocalProperty(Tracer.OpProperty, null)
+      // outside the timed region: the key's trace is complete once the
+      // listener bus has delivered every event its jobs and runs posted
+      detach(tracer)
       if (built < 0) built = t1
-      // outside the timed region: the key's streaming numbers are complete
-      val (complete, batches, durationMs) = tally.end(name)
-      if (!complete)
-        System.err.println(s"[bench] $name: a streaming run did not terminate")
+      val wallS = (t1 - t0) / 1e9
+      val op = OpRecord(nextId, name, "bench", startMs, endMs, wallS,
+        (built - t0) / 1e9, rows, "", error.getOrElse(""),
+        compiles1 - compiles0, compileNs1 - compileNs0, cpuS)
+      // keys run one at a time on a session with no active query, so a
+      // query still active now was started by this key and never stopped
+      val leaked = spark.streams.active.nonEmpty
+      if (leaked)
+        System.err.println(s"[bench] $name left a streaming query running")
       layers += name -> Layers((built - t0) / 1e9, (t1 - built) / 1e9,
-        batches, durationMs, !complete, error)
-      name -> (t1 - t0) / 1e9
+        tracer.layers(Seq(op), wallS, cpus), leaked, error)
+      name -> wallS
     }
     // the b_ scale PROBES run LAST: the 64× octaves are ~300 s of wall by
     // design (growth IS the measurement), and interleaving them with the
@@ -183,9 +149,13 @@ object Bench {
     // tail can't touch any q_ number
     val (probes, queries) =
       selected.partition { case (n, _) => n.startsWith("b_") }
+    val canaryBefore = Canary.run(cpus)
+    val host0 = Host.cpuJiffies()
     val queryResults = queries.map { case (n, f) => timed(n, f) }
     // after every q_ number is banked
     val probeResults = probes.map { case (n, f) => timed(n, f) }
+    val stealFrac = Host.stealSince(host0)
+    val canaryAfter = Canary.run(cpus)
     val results = queryResults ++ probeResults
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -208,7 +178,20 @@ object Bench {
     // used (past rounds had to adjudicate whether a number came from
     // local[8]-under-contention or the host's 32 cpus)
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","total_queries":$total,"total_probes":$probeTotal,"queries":$qs,"failed":$failedJson,"sf":"$sfDir","master":"${spark.sparkContext.master}","parallelism":${spark.sparkContext.defaultParallelism},"stream_threads":1}"""
-    (line, Sidecar(entryRows, timedLayers))
+      s"""{"metric":"total","value":$total,"unit":"sec","total_queries":$total,"total_probes":$probeTotal,"queries":$qs,"failed":$failedJson,"sf":"$sfDir","master":"${sc.master}","parallelism":${sc.defaultParallelism},"stream_threads":1}"""
+    (line, Sidecar(entryRows, Seq(canaryBefore, canaryAfter), stealFrac,
+      timedLayers))
+  }
+
+  /** Detaches `tracer` once the listener bus is empty. Spark bounds one
+    * drain at 10 s; a longer backlog is drained again rather than cutting
+    * the key's trace short or failing the run.
+    */
+  @annotation.tailrec
+  private def detach(tracer: Tracer): Unit = {
+    val drained =
+      try { tracer.detach(); true }
+      catch { case _: TimeoutException => false }
+    if (!drained) detach(tracer)
   }
 }

@@ -643,6 +643,11 @@ object SqlQueries {
               .config("spark.sql.warehouse.dir", wh)
               .config("javax.jdo.option.ConnectionURL",
                 "jdbc:derby:memory:q_sql_hive_ms;create=true")
+              // Hive's session makes this dir at start and never removes
+              // it; its default is a new `<session id>_resources` dir in
+              // java.io.tmpdir per JVM
+              .config("hive.downloaded.resources.dir",
+                Q.scratchDir("q_sql_hive_resources"))
               .enableHiveSupport()
               .getOrCreate()
             hiveSession = Some(h)

@@ -3,9 +3,10 @@ package graft
 /** The harness cannot report a failed query as a fast one: [[Bench.run]]
   * names a throwing key in the line's `failed` list, keeps the line to
   * one line, and its sidecar accounts for every key — build and action
-  * inside the recorded time, micro-batches only where a streaming run
-  * was started — leaving the session's streaming listeners as it found
-  * them.
+  * inside the recorded time, jobs where the key ran any, micro-batches
+  * only where a streaming run was started, each under a per_layer name
+  * of BENCHMARK.json — records the canary before and after the pool,
+  * and leaves the session's streaming listeners as it found them.
   */
 class BenchSpec extends SparkSuite {
 
@@ -23,8 +24,11 @@ class BenchSpec extends SparkSuite {
     assert(sidecar.entryRows.exists(_ > 0), sidecar.entryRows)
     val layers = sidecar.keys.toMap
     assert(layers.keySet == selected.keySet)
-    assert(layers("q_stream_tumble").batches >= 2, layers("q_stream_tumble"))
-    assert(layers("q_join_inner").batches == 0)
+    assert(layers("q_stream_tumble").layers("stream.batches") >= 2,
+      layers("q_stream_tumble"))
+    assert(layers("q_join_inner").layers("stream.batches") == 0)
+    assert(layers("q_join_inner").layers("spark.jobs") >= 1,
+      layers("q_join_inner"))
     assert(layers("q_boom").error.exists(_.contains("boom")))
     assert(layers.values.forall(!_.incomplete))
     for ((k, l) <- layers) {
@@ -33,5 +37,14 @@ class BenchSpec extends SparkSuite {
       // 1e-9: the two halves are converted to seconds separately
       assert(l.buildS + l.actionS <= recorded + 1e-9, s"$k: $l vs $recorded")
     }
+    assert(sidecar.canaryS.size == 2, sidecar.canaryS)
+    // one harness: every layer is one of the benchmark's per_layer names
+    val benchmark = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("BENCHMARK.json")), "UTF-8")
+    val perLayer = "\"name\":\\s*\"([^\"]+)\"".r
+      .findAllMatchIn(benchmark.drop(benchmark.indexOf("\"per_layer\"")))
+      .map(_.group(1)).toSet
+    val names = layers.values.flatMap(_.layers.keySet).toSet
+    assert(names.nonEmpty && names.subsetOf(perLayer), names -- perLayer)
   }
 }

@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import perfbench.{OpRecord, Tracer}
 
 /** Pins the two `Tables` memos. registerAll checks the catalog, so a
   * repeat call is a no-op, while a view replaced outside it or an sfDir
@@ -62,42 +59,24 @@ class TablesSpec extends SparkSuite {
       "the probe's restore registerAll must bring back the 1x views")
   }
 
-  /** Spark jobs started by `body` on this thread. The jobs run in a job
-    * group; a sentinel job in the same group runs last, and the count is
-    * read only after its end event: the listener bus delivers events in
-    * order, so every earlier job's start has been counted by then.
+  /** Spark jobs started by `body` on this thread, as perfbench's
+    * [[Tracer]] counts them: the body's jobs carry its op id, and
+    * `detach` drains the listener bus before the count is read.
     */
   private def jobsStartedBy(body: => Unit): Int = {
     val sc = spark.sparkContext
-    val group = s"tables-spec-${System.nanoTime()}"
-    val sentinel = "tables-spec-sentinel"
-    val started = new AtomicInteger
-    val sentinelJob = new AtomicInteger(-1)
-    val done = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) {
-          if (e.properties.getProperty("spark.job.description") == sentinel)
-            sentinelJob.set(e.jobId)
-          else started.incrementAndGet()
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == sentinelJob.get) done.countDown()
+    val tracer = new Tracer(spark)
+    sc.setLocalProperty(Tracer.OpProperty, "1")
+    tracer.install()
+    val startMs = System.currentTimeMillis()
+    try body
+    finally {
+      sc.setLocalProperty(Tracer.OpProperty, null)
+      tracer.detach()
     }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "TablesSpec")
-      body
-      sc.setJobDescription(sentinel)
-      sc.parallelize(Seq(1), 1).count()
-      assert(done.await(60, TimeUnit.SECONDS), "sentinel job end not delivered")
-      started.get
-    } finally {
-      sc.clearJobGroup()
-      sc.setJobDescription(null)
-      sc.removeSparkListener(listener)
-    }
+    val op = OpRecord(1, "body", "spec", startMs, System.currentTimeMillis(),
+      0.0, 0.0, 0L, "", "", 0L, 0L, 0.0)
+    tracer.layers(Seq(op), 0.0, 1)("spark.jobs").toInt
   }
 
   test("a new session's registerAll starts no Spark job once the JVM has read the schemas") {
