@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.TimeoutException
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.queries.Q.QFn
 import perfbench.{Canary, Harness, Host, Json, OpRecord, Tracer}
@@ -24,12 +24,12 @@ object Bench {
 
   /** One key's layers: build and action wall seconds, the Tracer's
     * per-layer metrics (the `per_layer` names of BENCHMARK.json),
-    * `incomplete` when the key left a streaming query running, and the
-    * error of a failed key.
+    * `incomplete` when the key left a streaming query running, the
+    * error of a failed key, and the [[planSha]] of a built one.
     */
   final case class Layers(buildS: Double, actionS: Double,
       layers: Map[String, Double], incomplete: Boolean,
-      error: Option[String])
+      error: Option[String], planSha: Option[String])
 
   /** The bench_layers.json record: the warm-up's `SparkEntry.entry` row
     * count (or its error), the canary's seconds before and after the
@@ -47,6 +47,7 @@ object Bench {
         jsonString(k) + s""":{"build_s":${l.buildS},"action_s":${l.actionS},""" +
           s""""layers":${Json.numMap(l.layers)}""" +
           (if (l.incomplete) ""","incomplete":true""" else "") +
+          l.planSha.fold("")(h => s""","plan_sha":"$h"""") +
           l.error.fold("")(e => s""","error":${jsonString(e)}""") + "}"
       }.mkString("{", ",", "}")
       s"""{$entry,"canary_s":${canaryS.map(Json.n).mkString("[", ",", "]")},""" +
@@ -105,11 +106,12 @@ object Bench {
       val cpu0 = Host.cpuS()
       val startMs = System.currentTimeMillis()
       var built = -1L
+      var df: DataFrame = null
       var rows = 0L
       val t0 = System.nanoTime()
       val error =
         try {
-          val df = fn(spark, sfDir)
+          df = fn(spark, sfDir)
           built = System.nanoTime()
           rows = df.count()
           None
@@ -139,7 +141,8 @@ object Bench {
       if (leaked)
         System.err.println(s"[bench] $name left a streaming query running")
       layers += name -> Layers((built - t0) / 1e9, (t1 - built) / 1e9,
-        tracer.layers(Seq(op), wallS, cpus), leaked, error)
+        tracer.layers(Seq(op), wallS, cpus), leaked, error,
+        Option(df).flatMap(d => scala.util.Try(planSha(d)).toOption))
       name -> wallS
     }
     // the b_ scale PROBES run LAST: the 64× octaves are ~300 s of wall by
@@ -181,6 +184,22 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","total_queries":$total,"total_probes":$probeTotal,"queries":$qs,"failed":$failedJson,"sf":"$sfDir","master":"${sc.master}","parallelism":${sc.defaultParallelism},"stream_threads":1}"""
     (line, Sidecar(entryRows, Seq(canaryBefore, canaryAfter), stealFrac,
       timedLayers))
+  }
+
+  /** A fingerprint of `df`'s physical plan before exchange planning and
+    * AQE: the sha256 of `sparkPlan`'s tree string with expression ids
+    * (`#12`) and plan ids (`plan_id=3`) removed, so two builds that plan
+    * a key alike give the same hex. What differs between two runs of one
+    * build goes too: lambda class names (`$Lambda$7601/0x7fe3…`),
+    * identity hashes (`@6dd30df3`) and file locations (a key's scratch
+    * dir has a random name).
+    */
+  def planSha(df: DataFrame): String = {
+    val tree = df.queryExecution.sparkPlan.treeString
+      .replaceAll("#\\d+|plan_id=\\d+", "")
+      .replaceAll("\\$Lambda\\$\\d+/0x[0-9a-f]+|@[0-9a-f]+\\b|file:[^,\\[\\]]*\\]?", "")
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(tree.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
 
   /** Detaches `tracer` once the listener bus is empty. Spark bounds one

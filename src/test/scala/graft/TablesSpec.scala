@@ -1,7 +1,5 @@
 package graft
 
-import perfbench.{OpRecord, Tracer}
-
 /** Pins the two `Tables` memos. registerAll checks the catalog, so a
   * repeat call is a no-op, while a view replaced outside it or an sfDir
   * change re-registers without any invalidation call. The JVM-wide schema
@@ -57,26 +55,6 @@ class TablesSpec extends SparkSuite {
     Tables.registerAll(spark, sfA)
     assert(spark.table("lineitem").count() == base,
       "the probe's restore registerAll must bring back the 1x views")
-  }
-
-  /** Spark jobs started by `body` on this thread, as perfbench's
-    * [[Tracer]] counts them: the body's jobs carry its op id, and
-    * `detach` drains the listener bus before the count is read.
-    */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tracer = new Tracer(spark)
-    sc.setLocalProperty(Tracer.OpProperty, "1")
-    tracer.install()
-    val startMs = System.currentTimeMillis()
-    try body
-    finally {
-      sc.setLocalProperty(Tracer.OpProperty, null)
-      tracer.detach()
-    }
-    val op = OpRecord(1, "body", "spec", startMs, System.currentTimeMillis(),
-      0.0, 0.0, 0L, "", "", 0L, 0L, 0.0)
-    tracer.layers(Seq(op), 0.0, 1)("spark.jobs").toInt
   }
 
   test("a new session's registerAll starts no Spark job once the JVM has read the schemas") {
