@@ -71,25 +71,6 @@ object CEP {
     }
   }
 
-  /** One micro-batch step of the streaming buffer: merge the new rows
-    * into the (already sorted) retained buffer, scan incrementally, trim
-    * matched prefixes and expired events. Pure so the state-bound
-    * properties are directly testable.
-    *
-    * Scale properties (the reference's NFA prunes computation states the
-    * same way, CepOperator.advanceTime):
-    *   - the stored buffer stays sorted, so a batch costs
-    *     O(buffer + batch·log batch) — no full re-sort;
-    *   - only anchors whose within-window overlaps the new events are
-    *     re-scanned: an older anchor saw an identical window in a prior
-    *     batch and is known-failed;
-    *   - events behind `maxTs − within` can never join a future match
-    *     (every stage consumes events at or after its anchor) → evicted;
-    *   - without `within`, `maxBufferPerKey` caps state per key, dropping
-    *     oldest events first (documented lossy bound).
-    *
-    * Returns (matches over the merged buffer, retained buffer — sorted).
-    */
   /** Linear merge of two sorted runs (stable: existing first on ties). */
   private def mergeSorted[E](existingSorted: IndexedSeq[E], fresh: Seq[E],
       tsFn: E => Long): Vector[E] = {
@@ -116,32 +97,6 @@ object CEP {
         case i => i
       }
     case None => 0
-  }
-
-  def step[E](existingSorted: IndexedSeq[E], freshUnsorted: Seq[E],
-      pattern: Pattern[E], nfa: NFA[E], tsFn: E => Long,
-      maxBufferPerKey: Option[Int]): (Seq[(Int, Int, Seq[(String, Seq[E])])], IndexedSeq[E]) = {
-    if (freshUnsorted.isEmpty) return (Nil, existingSorted)
-    val fresh = freshUnsorted.sortBy(tsFn)
-    val all = mergeSorted(existingSorted, fresh, tsFn)
-    val scanFrom = scanFrontier(all, tsFn(fresh.head), pattern, tsFn)
-    val matches = nfa.findMatches(all, scanFrom)
-    // trim everything up to the last match end (skip past last row);
-    // expire events whose within-window closed behind the newest event
-    val afterMatches =
-      if (matches.isEmpty) all
-      else all.drop(matches.last._2 + 1)
-    val expired = pattern.withinMs match {
-      case Some(w) if afterMatches.nonEmpty =>
-        val horizon = tsFn(all.last) - w
-        afterMatches.filter(e => tsFn(e) >= horizon)
-      case _ => afterMatches
-    }
-    val retained = maxBufferPerKey match {
-      case Some(cap) if expired.length > cap => expired.takeRight(cap)
-      case _ => expired
-    }
-    (matches, retained.toIndexedSeq)
   }
 
   /** Streaming state for overlapping skip strategies: the sorted buffer
@@ -183,42 +138,54 @@ object CEP {
     (h1.toLong << 32) | (h2.toLong & 0xffffffffL)
   }
 
-  /** [[step]] generalized to any after-match skip strategy — the
-    * reference honors every AfterMatchSkipStrategy in its CepOperator.
-    * Three buffer regimes:
+  /** One micro-batch step of the streaming buffer under any after-match
+    * skip strategy — the reference honors every AfterMatchSkipStrategy
+    * in its CepOperator: merge the new rows into the (already sorted)
+    * retained buffer, scan incrementally, trim and evict. Pure so the
+    * state-bound properties are directly testable.
     *
-    *   - SKIP PAST LAST ROW: matches cannot overlap — trim the buffer
-    *     past each match (the [[step]] path, unchanged);
-    *   - SKIP TO FIRST/LAST: the scan is stateful (a jump decides which
-    *     anchors are ever visited), so the buffer trims to the LAST
-    *     match's jump position ([[NFA.findMatchesResume]]) — anchors
-    *     inside a jumped span stay skipped across micro-batches;
+    * Two buffer regimes:
+    *
+    *   - SKIP PAST LAST ROW / TO FIRST / TO LAST: the scan is stateful (a
+    *     jump decides which anchors are ever visited), so the buffer trims
+    *     to the LAST match's jump position ([[NFA.findMatchesResume]]:
+    *     past the last match's end for SKIP PAST LAST ROW, 0 with no
+    *     match) — anchors inside a jumped span stay skipped across
+    *     micro-batches;
     *   - NO SKIP / SKIP TO NEXT: every anchor is scanned independently —
     *     the buffer is bounded only by the within-horizon (or cap), and
     *     re-found matches are suppressed by identity against
     *     `state.emitted`, whose entries evict with their anchors.
     *
+    * Scale properties (the reference's NFA prunes computation states the
+    * same way, CepOperator.advanceTime):
+    *   - the stored buffer stays sorted, so a batch costs
+    *     O(buffer + batch·log batch) — no full re-sort;
+    *   - only anchors whose within-window overlaps the new events are
+    *     re-scanned: an older anchor saw an identical window in a prior
+    *     batch and is known-failed;
+    *   - events behind `maxTs − within` can never join a future match
+    *     (every stage consumes events at or after its anchor) → evicted;
+    *   - without `within`, `maxBufferPerKey` caps state per key, dropping
+    *     oldest events first (documented lossy bound).
+    *
     * Batch parity holds for patterns whose matches are stable once
-    * complete (no trailing growable quantifier) — the same
-    * emit-on-completion contract the SKIP PAST LAST ROW path always had.
+    * complete (no trailing growable quantifier) — emit on completion.
+    * Returns (matches over the merged buffer, next state — sorted buffer).
     */
-  def stepSkip[E](state: StepState[E], freshUnsorted: Seq[E],
+  def step[E](state: StepState[E], freshUnsorted: Seq[E],
       pattern: Pattern[E], nfa: NFA[E], tsFn: E => Long,
-      maxBufferPerKey: Option[Int], skip: AfterMatchSkip)
+      maxBufferPerKey: Option[Int],
+      skip: AfterMatchSkip = AfterMatchSkip.SkipPastLastRow)
       : (Seq[(Int, Int, Seq[(String, Seq[E])])], StepState[E]) = {
     if (freshUnsorted.isEmpty) return (Nil, state)
-    if (skip == AfterMatchSkip.SkipPastLastRow) {
-      val (ms, retained) =
-        step(state.buffer, freshUnsorted, pattern, nfa, tsFn, maxBufferPerKey)
-      return (ms, StepState(retained, Map.empty))
-    }
     val fresh = freshUnsorted.sortBy(tsFn)
     val all = mergeSorted(state.buffer, fresh, tsFn)
     val scanFrom = scanFrontier(all, tsFn(fresh.head), pattern, tsFn)
     val (matches, resume) = nfa.findMatchesResume(all, scanFrom, skip)
     val jumpy = skip match {
-      case AfterMatchSkip.SkipToFirst(_) | AfterMatchSkip.SkipToLast(_) => true
-      case _ => false
+      case AfterMatchSkip.NoSkip | AfterMatchSkip.SkipToNext => false
+      case _ => true
     }
     // jump strategies never revisit an anchor, so nothing dedupes; the
     // independent-anchor strategies rescan and need the identity filter
@@ -248,38 +215,47 @@ object CEP {
     (newMs, StepState(retained.toIndexedSeq, emitted))
   }
 
-  class CepProcessor[E](pattern: Pattern[E], tsFn: E => Long, eventEnc: Encoder[E],
-      maxBufferPerKey: Option[Int] = None,
-      skip: AfterMatchSkip = AfterMatchSkip.SkipPastLastRow)
-      extends StatefulProcessor[String, E, CepMatch[E]] {
+  /** The streaming CEP operator (CepOperator.java:82) behind both front
+    * doors, [[streaming]] and [[MatchRecognize.streaming]]: the key's
+    * sorted event buffer (ListState), the emitted-match identities of
+    * the overlapping skip strategies (MapState), and the key's match
+    * count (ValueState — MATCH_NUMBER() numbers matches per key across
+    * micro-batches). Each match leaves as `emit(key, per-key match
+    * number, match stages)`.
+    */
+  class CepProcessor[E, O](pattern: Pattern[E], tsFn: E => Long,
+      eventEnc: Encoder[E], maxBufferPerKey: Option[Int],
+      skip: AfterMatchSkip, emit: (String, Long, Seq[(String, Seq[E])]) => O)
+      extends StatefulProcessor[String, E, O] {
     @transient private var buf: ListState[E] = _
     @transient private var emitted: MapState[Long, Long] = _
+    @transient private var nMatches: ValueState[Long] = _
     private val nfa = new NFA[E](pattern, tsFn)
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
       buf = getHandle.getListState[E]("buffer", eventEnc, TTLConfig.NONE)
       emitted = getHandle.getMapState[Long, Long]("emitted",
         Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
+      nMatches = getHandle.getValueState[Long]("nMatches",
+        Encoders.scalaLong, TTLConfig.NONE)
     }
 
     override def handleInputRows(key: String, rows: Iterator[E],
-        timerValues: TimerValues): Iterator[CepMatch[E]] = {
+        timerValues: TimerValues): Iterator[O] = {
       val before = StepState(buf.get().toIndexedSeq, emitted.iterator().toMap)
       val (matches, after) =
-        stepSkip(before, rows.toSeq, pattern, nfa, tsFn, maxBufferPerKey, skip)
-      val out = matches.map { case (_, _, m) =>
-        // first/last consumed event bound the match (optional stages may
-        // be empty, so flatten rather than reading head/last stages)
-        val evs = m.flatMap(_._2)
-        CepMatch(key, tsFn(evs.head), tsFn(evs.last), m)
-      }
+        step(before, rows.toSeq, pattern, nfa, tsFn, maxBufferPerKey, skip)
       buf.clear()
       after.buffer.foreach(buf.appendValue)
       (before.emitted.keySet -- after.emitted.keySet).foreach(emitted.removeKey)
       after.emitted.foreach { case (h, ts) =>
         if (before.emitted.get(h) != Some(ts)) emitted.updateValue(h, ts)
       }
-      out.iterator
+      val n0 = if (nMatches.exists()) nMatches.get() else 0L
+      if (matches.nonEmpty) nMatches.update(n0 + matches.length)
+      matches.iterator.zipWithIndex.map { case ((_, _, m), i) =>
+        emit(key, n0 + i + 1, m)
+      }
     }
   }
 
@@ -299,8 +275,13 @@ object CEP {
     implicit val strEnc: Encoder[String] = Encoders.STRING
     events.groupByKey(keyFn)
       .transformWithState(
-        new CepProcessor[E](pattern, tsFn, implicitly[Encoder[E]],
-          maxBufferPerKey, skip),
+        new CepProcessor[E, CepMatch[E]](pattern, tsFn, implicitly[Encoder[E]],
+          maxBufferPerKey, skip, (key, _, m) => {
+            // first/last consumed event bound the match (optional stages
+            // may be empty, so flatten rather than reading head/last stages)
+            val evs = m.flatMap(_._2)
+            CepMatch(key, tsFn(evs.head), tsFn(evs.last), m)
+          }),
         TimeMode.None(), OutputMode.Update())
   }
 }

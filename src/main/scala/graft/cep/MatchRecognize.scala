@@ -600,15 +600,9 @@ object MatchRecognize {
         var matchNo = 0L
         nfa.findMatches(sorted, 0, spec.skip).iterator.flatMap { case (s, _, m) =>
           matchNo += 1
-          if (!spec.allRows) {
-            val stageMap: Map[String, IndexedSeq[Row]] =
-              m.groupBy(_._1).map { case (k, vs) => k -> vs.flatMap(_._2).toIndexedSeq }
-            val cls = m.reverseIterator.find(_._2.nonEmpty).map(_._1).getOrElse("")
-            val ctx = MeasureCtx(stageMap, cls, matchNo)
-            val anchor = sorted(s)
-            Iterator.single(
-              Row.fromSeq(partIdx.map(anchor.get) ++ measureFns.map(_(ctx))))
-          } else {
+          if (!spec.allRows)
+            Iterator.single(matchRow(m, matchNo, sorted(s), partIdx, measureFns))
+          else {
             // RUNNING semantics: each consumed row is emitted with the
             // measures over the prefix up to and including it
             var running = Map.empty[String, IndexedSeq[Row]]
@@ -632,10 +626,11 @@ object MatchRecognize {
     * reference CepOperator's contract for equal-time elements), not by
     * the secondary ORDER BY columns the batch path honors — feed
     * secondary-sorted input when tie order must match batch. Rows
-    * buffer per key and matches emit incrementally via
-    * [[CEP.stepSkip]] (sorted-merge buffer, incremental scan,
-    * within-horizon eviction). The state bound rule is CEP.streaming's:
-    * the clause carries WITHIN or `maxBufferPerKey` caps the buffer.
+    * buffer per key and matches emit incrementally through the one
+    * streaming CEP operator, [[CEP.CepProcessor]] (sorted-merge buffer,
+    * incremental scan, within-horizon eviction, per-key MATCH_NUMBER()).
+    * The state bound rule is CEP.streaming's: the clause carries WITHIN
+    * or `maxBufferPerKey` caps the buffer.
     * Every AFTER MATCH skip strategy streams (the reference's
     * CepOperator honors all of AfterMatchSkipStrategy.java): PAST LAST
     * ROW trims the buffer at each match; the overlapping strategies
@@ -664,58 +659,24 @@ object MatchRecognize {
     implicit val keyEnc: Encoder[String] = Encoders.STRING
     df.groupByKey(r => partIdx.map(i => String.valueOf(r.get(i))).mkString("\u0000"))
       .transformWithState(
-        new MatchProcessor(pattern, tsFn, Encoders.row(schema),
-          maxBufferPerKey, partIdx, measureFns, spec.skip),
+        new CEP.CepProcessor[Row, Row](pattern, tsFn, Encoders.row(schema),
+          maxBufferPerKey, spec.skip, (_, matchNo, m) =>
+            matchRow(m, matchNo, m.flatMap(_._2).head, partIdx, measureFns)),
         org.apache.spark.sql.streaming.TimeMode.None(),
         org.apache.spark.sql.streaming.OutputMode.Update())
   }
 
-  private class MatchProcessor(pattern: Pattern[Row], tsFn: Row => Long,
-      rowEnc: Encoder[Row], maxBufferPerKey: Option[Int],
-      partIdx: Seq[Int], measureFns: Seq[MeasureCtx => Any],
-      skip: AfterMatchSkip)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, Row, Row] {
-
-    @transient private var buf: org.apache.spark.sql.streaming.ListState[Row] = _
-    @transient private var nMatches: org.apache.spark.sql.streaming.ValueState[Long] = _
-    @transient private var emitted: org.apache.spark.sql.streaming.MapState[Long, Long] = _
-    private val nfa = new NFA[Row](pattern, tsFn)
-
-    override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      buf = getHandle.getListState[Row]("buffer", rowEnc,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      nMatches = getHandle.getValueState[Long]("nMatches",
-        Encoders.scalaLong, org.apache.spark.sql.streaming.TTLConfig.NONE)
-      emitted = getHandle.getMapState[Long, Long]("emitted",
-        Encoders.scalaLong, Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[Row],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[Row] = {
-      val before = CEP.StepState(buf.get().toIndexedSeq, emitted.iterator().toMap)
-      val (matches, after) =
-        CEP.stepSkip(before, rows.toSeq, pattern, nfa, tsFn, maxBufferPerKey, skip)
-      buf.clear()
-      after.buffer.foreach(buf.appendValue)
-      (before.emitted.keySet -- after.emitted.keySet).foreach(emitted.removeKey)
-      after.emitted.foreach { case (h, ts) =>
-        if (before.emitted.get(h) != Some(ts)) emitted.updateValue(h, ts)
-      }
-      var matchNo = if (nMatches.exists()) nMatches.get() else 0L
-      val out = matches.map { case (_, _, m) =>
-        matchNo += 1
-        val stageMap: Map[String, IndexedSeq[Row]] =
-          m.groupBy(_._1).map { case (k, vs) => k -> vs.flatMap(_._2).toIndexedSeq }
-        val cls = m.reverseIterator.find(_._2.nonEmpty).map(_._1).getOrElse("")
-        val ctx = MeasureCtx(stageMap, cls, matchNo)
-        val anchor = m.flatMap(_._2).head
-        Row.fromSeq(partIdx.map(anchor.get) ++ measureFns.map(_(ctx)))
-      }
-      nMatches.update(matchNo)
-      out.iterator
-    }
+  /** ONE ROW PER MATCH output row: the anchor's partition columns, then
+    * each measure over the match's stages (CLASSIFIER() is the last
+    * non-empty stage, MATCH_NUMBER() is `matchNo`).
+    */
+  private def matchRow(m: Seq[(String, Seq[Row])], matchNo: Long, anchor: Row,
+      partIdx: Seq[Int], measureFns: Seq[MeasureCtx => Any]): Row = {
+    val stageMap: Map[String, IndexedSeq[Row]] =
+      m.groupBy(_._1).map { case (k, vs) => k -> vs.flatMap(_._2).toIndexedSeq }
+    val cls = m.reverseIterator.find(_._2.nonEmpty).map(_._1).getOrElse("")
+    Row.fromSeq(partIdx.map(anchor.get) ++
+      measureFns.map(_(MeasureCtx(stageMap, cls, matchNo))))
   }
 
   private def buildPattern(spec: Spec, schema: StructType): Pattern[Row] = {

@@ -150,7 +150,7 @@ class NFA[E](pattern: Pattern[E], timestampOf: E => Long) extends Serializable {
     * immediately after the LAST match's skip jump (0 when no match).
     * Jump strategies make the scan stateful — an anchor inside a jumped
     * span must never be visited — so a streaming caller trims its buffer
-    * to this position before the next incremental scan (CEP.stepSkip).
+    * to this position before the next incremental scan (CEP.step).
     */
   def findMatchesResume(events: IndexedSeq[E], from: Int = 0,
       skip: AfterMatchSkip = AfterMatchSkip.SkipPastLastRow)

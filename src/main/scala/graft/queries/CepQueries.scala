@@ -265,8 +265,8 @@ object CepQueries {
   /** STREAMING NFA replay for a [[CepFuzzGen.Case]] with an optional
     * checkpoint stop/restart — the recovery arm for the CEP partial-match
     * state (the reference checkpoints the NFA's SharedBuffer in
-    * CepOperator.java:82; here the CepProcessor's buffer ListState +
-    * emitted-hash MapState must restore mid-replay). The (ts, id)-sorted
+    * CepOperator.java:82; here [[CEP.CepProcessor]]'s buffer ListState,
+    * emitted-hash MapState and match counter must restore mid-replay). The (ts, id)-sorted
     * events replay in four micro-batches through [[CEP.streaming]] under
     * SkipToNext (the batch replay's convention), so the resumed run's
     * sink must equal the SAME LEAD restatement `cepFuzzReplay` is gated

@@ -203,7 +203,8 @@ object FuzzFamilies {
     recover = Some(Recover("q_fuzz_recover_t")))
 
   /** Batch-NFA CEP; a restart replays the case through the STREAMING
-    * CepProcessor instead (the batch NFA has no checkpoint to resume).
+    * CEP operator (CEP.CepProcessor) instead (the batch NFA has no
+    * checkpoint to resume).
     */
   val cep = FuzzFamily[CepFuzzGen.Case]("cep", "q_fuzz_cep_", CepFuzzGen.gen,
     Seq(c => c.steps.length == 2 && c.withinMinutes.isDefined, // 2-step windowed
@@ -213,9 +214,9 @@ object FuzzFamilies {
       else CepQueries.cepStreamFuzzReplay(s, dir, c, r),
     _.oracleSql,
     // NFA partial-match recovery on the windowed 2-step case: the
-    // CepProcessor's buffer ListState + emitted-hash MapState restore
-    // mid-replay (the reference checkpoints the SharedBuffer in
-    // CepOperator.java:82)
+    // CEP.CepProcessor's buffer ListState, emitted-hash MapState and
+    // match counter restore mid-replay (the reference checkpoints the
+    // SharedBuffer in CepOperator.java:82)
     recover = Some(Recover("q_fuzz_recover_c")))
 
   val dedup = FuzzFamily[StreamFuzzGen.DedupCase]("dedup", "q_fuzz_stream_d",
@@ -435,7 +436,7 @@ object FuzzFamilies {
     (s, dir, c, r) => StreamQueries.streamT1FuzzReplay(s, dir, c, r),
     _.oracleSql,
     // Fast Top-1's SINGLE-RECORD champion ValueState — a distinct
-    // recovery shape from RetractableTopN's sorted-map state: a lost
+    // recovery shape from the top-n operator's sorted-map state: a lost
     // champion re-emits +I without -U and the fold breaks
     recover = Some(Recover("q_fuzz_recover_top", pick = _.arm == "top1")))
 

@@ -22,7 +22,7 @@ import graft.Tables
   *   - [[genRetract]]: retract group aggregation through
   *     [[graft.streaming.StatefulOps]] (SUM / MIN / MAX arms);
   *   - [[genTopN]]: retractable Top-N diffs through
-  *     [[graft.streaming.RetractableTopN]].
+  *     [[graft.streaming.StreamingRank.topN]].
   *
   * Every case drives three executions:
   *   - STREAMING: MemoryStream replay through the incremental,
@@ -41,9 +41,8 @@ import graft.Tables
   * of an exact decimal sum.
   *
   * Reference bar: the semantics under test are the reference's
-  * group-window / session-window-TVF / GroupAggFunction /
-  * RetractableTopNFunction operators (flink-table-runtime; SURVEY
-  * §2.4–2.7).
+  * group-window / session-window-TVF / GroupAggFunction / retracting
+  * top-n operators (flink-table-runtime; SURVEY §2.4–2.7).
   */
 object StreamFuzzGen {
 
@@ -409,8 +408,9 @@ object StreamFuzzGen {
   }
 
   /** A retractable Top-N case — exercises
-    * [[graft.streaming.RetractableTopN]] (the UpdatableTopNFunction /
-    * RetractableTopNFunction analogue): filtered events INSERT
+    * [[graft.streaming.StreamingRank.topN]] (the analogue of the
+    * reference's updatable / retracting top-n functions): filtered
+    * events INSERT
     * (id, sort) per key, a random subset UPSERTs with a shifted sort
     * (rank movement in/out of the visible top-n), a random subset
     * DELETEs; the emitted top-n diff changelog folds to the final
@@ -657,8 +657,9 @@ object StreamFuzzGen {
   }
 
   /** An event-time temporal/as-of join case — exercises
-    * [[graft.streaming.TemporalJoin.TemporalJoinProcessor]] (the
-    * reference's TemporalRowTimeJoinOperator versioned-map-state
+    * [[graft.streaming.TemporalJoin.TemporalJoinProcessor]] through its
+    * stream-stream front door, [[graft.streaming.TemporalJoin.asOfStream]]
+    * (the reference's TemporalRowTimeJoinOperator versioned-map-state
     * semantics): version-filter rows build per-key (ts → cents) version
     * histories, probe-filter rows resolve watermark-driven against the
     * version current at their timestamp. The operator keys versions at

@@ -14,8 +14,7 @@ import graft.Tables
 import graft.queries.Q._
 import graft.cep.{CEP, Pattern}
 import graft.sources.UpsertSink
-import graft.streaming.{AllowedLateness, Changelog, CoGroup, OuterJoin, ProcTimeJoin, ProcessOps, RetractableTopN, SessionWindows, StatefulOps, StreamingRank, TemporalJoin, WatermarkMux}
-import graft.streaming.TemporalJoin.TemporalEvent
+import graft.streaming.{AllowedLateness, Changelog, CoGroup, OuterJoin, ProcTimeJoin, ProcessOps, SessionWindows, StatefulOps, StreamingRank, TemporalJoin, WatermarkMux}
 
 /** Streaming oracle parity — driver-visible proof that the stateful
   * streaming operators produce the SAME table a batch query does, through
@@ -233,6 +232,13 @@ object StreamQueries {
   case class Ev(event_id: Long, user_id: Long, ts: java.sql.Timestamp,
       event_type: String, value: Double)
 
+  /** Temporal-join replay envelope: a probe (isProbe, probeId) or a
+    * version (value effective from eventTime on) of one MemoryStream,
+    * split into the join's two sides by [[streamTemporalFuzzReplay]].
+    */
+  case class TemporalEvent(key: String, eventTime: java.sql.Timestamp,
+      isProbe: Boolean, probeId: Long, value: Long)
+
   /** Session-annotated event replayed into the session-coGroup phase. */
   case class SessEv(user_id: Long, event_type: String, value: Double,
       window_start: java.sql.Timestamp, window_time: java.sql.Timestamp)
@@ -341,18 +347,14 @@ object StreamQueries {
       case "first" =>
         replay(s, chunks(rows, 2))(_.groupByKey(_.key)
           .transformWithState(
-            new StatefulOps.KeepFirstProcessor[String, StatefulOps.TtlIn](
-              ttlEnc),
+            new StatefulOps.KeepFirstProcessor[String, StatefulOps.TtlIn](),
             TimeMode.None(), OutputMode.Update()).toDF())
           .select($"key".as("k"), $"id")
       case "last" =>
-        val sink = replay(s, chunks(rows, 2))(_.groupByKey(_.key)
-          .transformWithState(
-            new StatefulOps.KeepLastProcessor[String, StatefulOps.TtlIn](
-              ttlEnc),
-            TimeMode.None(), OutputMode.Update()).toDF())
-        foldChangelog(sink.select($"kind", $"key".as("k"),
-          $"value.id".as("id")), "kind")
+        val sink = replay(s, chunks(rows, 2))(in =>
+          StreamingRank.keepLastRows(in.toDF(), Seq("key")))
+        foldChangelog(sink.select(col(Changelog.RowKindCol), $"key".as("k"),
+          $"id"), Changelog.RowKindCol)
       case "first_ttl" =>
         val sentinel = StatefulOps.TtlIn("\u0000flush",
           farFuture(rows.last.ts.getTime), -1L)
@@ -378,26 +380,22 @@ object StreamQueries {
       c: StreamFuzzGen.TopNCase,
       restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
-    implicit val chEnc = Encoders.product[RetractableTopN.TopNChange]
     val trips = eventsInput[(String, Long, Long)](s, dir, c.filterSql,
       strCol(c.keySql, "k"), col("event_id"), longCol(c.sortSql, "v"))
-    val inserts = trips.map { case (k, id, v) =>
-      RetractableTopN.TopNChange(Changelog.Insert, k, id, v) }
+    val inserts = trips.map { case (k, id, v) => (Changelog.Insert, k, id, v) }
     val updates = trips.collect {
       case (k, id, v) if id % c.updMod == c.updRes =>
-        RetractableTopN.TopNChange(Changelog.UpdateAfter, k, id,
-          v - c.updDelta) }
+        (Changelog.UpdateAfter, k, id, v - c.updDelta) }
     val deletes = trips.collect {
       case (k, id, v) if id % c.delMod == c.delRes =>
-        RetractableTopN.TopNChange(Changelog.Delete, k, id, v) }
+        (Changelog.Delete, k, id, v) }
     val batches = chunks(inserts, 2) ++
       Seq(updates, deletes).filter(_.nonEmpty)
-    val sink = replay(s, batches, restarts = restarts)(_.groupByKey(_.key)
-      .transformWithState(
-        new RetractableTopN.RetractableTopNProcessor(c.n),
-        TimeMode.None(), OutputMode.Update()).toDF())
-    foldChangelog(sink, "kind")
-      .select($"key".as("k"), $"id", $"sort")
+    val sink = replay(s, batches, restarts = restarts)(in =>
+      StreamingRank.topN(in.toDF(Changelog.RowKindCol, "k", "id", "sort"),
+        Seq("k"), Seq(("sort", true)), c.n))
+    foldChangelog(sink, Changelog.RowKindCol)
+      .select($"k", $"id", $"sort")
   }
 
   /** Measured scale law for the stateful streaming path — the streaming
@@ -886,13 +884,13 @@ object StreamQueries {
         $"movingSum".as("moving_sum"), $"n")
   }
 
-  /** Shared input for the THREE temporal replays (typed, Row,
+  /** Shared input for the TWO temporal replays (stream-stream,
     * static-dim): the case's probe and version envelopes in (micro-ts,
     * id) order, plus the far-future flush-probe sentinel (probeId = -1;
     * NUL-prefixed key, disjoint from every CAST/CONCAT key the generator
     * can produce), ten days past the last envelope (past the epoch when
-    * neither arm keeps a row). One input keeps the triple-path assertion
-    * honest: all routes replay literally the same envelopes.
+    * neither arm keeps a row). One input keeps the two-route assertion
+    * honest: both routes replay literally the same envelopes.
     */
   private def temporalCaseInput(s: SparkSession, dir: String,
       c: StreamFuzzGen.TemporalCase): (Seq[TemporalEvent], TemporalEvent) = {
@@ -917,45 +915,25 @@ object StreamQueries {
     (envs, sentinel)
   }
 
-  /** MemoryStream replay for a [[StreamFuzzGen.TemporalCase]]: probe and
-    * version rows union (micro-ts, event_id)-sorted into the temporal
-    * join processor's envelope stream; probes resolve watermark-driven
-    * against the version current at their (millisecond) timestamp. A
-    * far-future sentinel probe (probeId = -1, key disjoint from every
-    * real CAST/CONCAT result) pushes the watermark past the last real
-    * probe so the tail resolves; its own timestamp stays ahead of the
-    * final watermark, so it leaves no output trace — and its row is
-    * dropped on probe_id >= 0 regardless.
+  /** MemoryStream replay for a [[StreamFuzzGen.TemporalCase]] through
+    * the DataFrame front door the SQL surface routes to
+    * ([[TemporalJoin.asOfStream]]): the (micro-ts, event_id)-sorted
+    * envelopes of one MemoryStream split into the probe and version
+    * sides; probes resolve watermark-driven against the version current
+    * at their (millisecond) timestamp. A far-future sentinel probe
+    * (probeId = -1, key disjoint from every real CAST/CONCAT result)
+    * pushes the watermark past the last real probe so the tail
+    * resolves; its own timestamp stays ahead of the final watermark, so
+    * it leaves no output trace — and its row is dropped on
+    * probe_id >= 0 regardless.
     */
   private[queries] def streamTemporalFuzzReplay(s: SparkSession, dir: String,
       c: StreamFuzzGen.TemporalCase,
       restarts: Seq[Int] = Nil): DataFrame = {
     import s.implicits._
-    implicit val outEnc = Encoders.product[TemporalJoin.AsOfMatch]
     val (envs, sentinel) = temporalCaseInput(s, dir, c)
     replay(s, chunks(envs, 3) :+ Seq(sentinel), mode = "append",
-        restarts = restarts)(_.withWatermark("eventTime", "1 hour")
-      .groupByKey(_.key)
-      .transformWithState(new TemporalJoin.TemporalJoinProcessor(),
-        TimeMode.EventTime(), OutputMode.Append()).toDF())
-      .filter($"probeId" >= 0)
-      .select($"key".as("k"), $"probeId".as("probe_id"),
-        $"versionTs".as("v_ts"), $"value".as("v_cents"))
-  }
-
-  /** The SAME [[StreamFuzzGen.TemporalCase]] through the ROW-payload
-    * DataFrame front door ([[TemporalJoin.asOfStream]] →
-    * RowTemporalJoinProcessor — the path the SQL surface routes to)
-    * instead of the typed processor: probes and versions split from one
-    * MemoryStream into the two DataFrame sides. Output shape matches
-    * [[streamTemporalFuzzReplay]], so the spec can assert the two
-    * processors implement ONE semantics.
-    */
-  private[queries] def streamTemporalFuzzReplayRow(s: SparkSession,
-      dir: String, c: StreamFuzzGen.TemporalCase): DataFrame = {
-    import s.implicits._
-    val (envs, sentinel) = temporalCaseInput(s, dir, c)
-    replay(s, chunks(envs, 3) :+ Seq(sentinel), mode = "append") { ds =>
+        restarts = restarts) { ds =>
       val probeSide = ds.filter(_.isProbe)
         .select($"key".as("k"), $"eventTime".as("ts"),
           $"probeId".as("probe_id"))
@@ -977,7 +955,7 @@ object StreamQueries {
     * first batch): only probes stream; versions are a batch dim deduped
     * to the operator's one-version-per-(key, ms) contract (latest
     * (micro-ts, id) wins — the same rule the stream-stream arrival order
-    * produces). For an ascending replay the three temporal routes must
+    * produces). For an ascending replay the two temporal routes must
     * agree row-for-row.
     */
   private[queries] def streamTemporalFuzzReplayStatic(s: SparkSession,
@@ -1674,21 +1652,21 @@ object StreamQueries {
 
     // Streaming retractable top-n: inserts arrive over 3 batches, then a
     // batch of DELETES (every event_id divisible by 7) — the reference's
-    // RetractableTopNFunction changelog contract. The emitted diff stream
-    // folds to the top-3 event_ids per type among surviving rows.
+    // retractable rank changelog contract, through the top-n operator's
+    // DataFrame entry. The emitted diff stream folds to the top-3
+    // event_ids per type among surviving rows.
     "q_stream_topn" -> ((s, dir) => {
       import s.implicits._
-      implicit val chEnc = Encoders.product[RetractableTopN.TopNChange]
       val evs = idThirdByType(s, dir)
-      val inserts = evs.map { case (id, tpe) =>
-        RetractableTopN.TopNChange(Changelog.Insert, tpe, id, id) }
+      val inserts = evs.map { case (id, tpe) => (Changelog.Insert, tpe, id, id) }
       val deletes = evs.collect { case (id, tpe) if id % 7 == 0 =>
-        RetractableTopN.TopNChange(Changelog.Delete, tpe, id, id) }
-      val sink = replay(s, chunks(inserts, 2) :+ deletes)(_.groupByKey(_.key)
-        .transformWithState(new RetractableTopN.RetractableTopNProcessor(3),
-          TimeMode.None(), OutputMode.Update()).toDF())
-      foldChangelog(sink, "kind")
-        .select($"key".as("event_type"), $"id")
+        (Changelog.Delete, tpe, id, id) }
+      val sink = replay(s, chunks(inserts, 2) :+ deletes)(in =>
+        StreamingRank.topN(
+          in.toDF(Changelog.RowKindCol, "event_type", "id", "sort"),
+          Seq("event_type"), Seq(("sort", true)), 3))
+      foldChangelog(sink, Changelog.RowKindCol)
+        .select($"event_type", $"id")
         .orderBy($"event_type", $"id")
     }),
 
@@ -1922,7 +1900,7 @@ object StreamQueries {
 
     // Streaming CEP (CepOperator parity): the q_cep_next strict-adjacency
     // purchase→error pattern over a 4-batch replay through the
-    // incremental NFA (CEP.streaming → stepSkip). Matches append exactly
+    // incremental NFA (CEP.streaming → CEP.step). Matches append exactly
     // once regardless of where micro-batch boundaries fall; the sink must
     // equal the batch MATCH_RECOGNIZE oracle.
     "q_stream_cep" -> ((s, dir) => {

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.streaming._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Processing-time temporal join — the reference's
   * TemporalProcessTimeJoinOperator.java:48 (flink-table-runtime/.../join/
@@ -38,10 +38,8 @@ object ProcTimeJoin {
   def procTimeJoin(probeSide: DataFrame, buildSide: DataFrame,
       keyCols: Seq[String], rightCols: Seq[String],
       leftOuter: Boolean = true, ttl: TTLConfig = TTLConfig.NONE): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, struct, to_json}
+    import org.apache.spark.sql.functions.{col, lit, struct}
     require(keyCols.nonEmpty, "procTimeJoin needs at least one key column")
-    def keyExpr = if (keyCols.lengthCompare(1) == 0) col(keyCols.head).cast("string")
-      else to_json(struct(keyCols.map(col): _*))
     val leftSchema = probeSide.schema
     val rightStruct = StructType(rightCols.map(c => buildSide.schema(c)))
     val kindCol = Changelog.RowKindCol
@@ -49,11 +47,11 @@ object ProcTimeJoin {
       if (buildSide.columns.contains(kindCol)) col(kindCol).cast("tinyint")
       else lit(Changelog.Insert)
     val taggedLeft = probeSide
-      .select(keyExpr.as("__pj_key"), lit(true).as("__pj_probe"),
+      .select(StreamKeys.text(keyCols).as("__pj_key"), lit(true).as("__pj_probe"),
         lit(Changelog.Insert).as("__pj_kind"),
         struct(leftSchema.fieldNames.map(col).toSeq: _*).as("__pj_l"))
     val taggedRight = buildSide
-      .select(keyExpr.as("__pj_key"), lit(false).as("__pj_probe"),
+      .select(StreamKeys.text(keyCols).as("__pj_key"), lit(false).as("__pj_probe"),
         buildKind.as("__pj_kind"),
         struct(rightCols.map(col): _*).as("__pj_r"))
     val unioned = taggedLeft.unionByName(taggedRight, allowMissingColumns = true)
@@ -70,9 +68,8 @@ object ProcTimeJoin {
   def joinTagged(unioned: DataFrame, leftSchema: StructType,
       rightStruct: StructType, leftOuter: Boolean = true,
       ttl: TTLConfig = TTLConfig.NONE): DataFrame = {
-    val outSchema = StructType(leftSchema.fields ++
-      rightStruct.fields.map(f => f.copy(name = s"r_${f.name}", nullable = true)))
-    implicit val outEnc: org.apache.spark.sql.Encoder[Row] = Encoders.row(outSchema)
+    implicit val outEnc: org.apache.spark.sql.Encoder[Row] =
+      Encoders.row(TemporalJoin.joinedSchema(leftSchema, rightStruct))
     implicit val keyEnc: org.apache.spark.sql.Encoder[String] = Encoders.STRING
     unioned
       .groupByKey((r: Row) => r.getString(r.fieldIndex("__pj_key")))

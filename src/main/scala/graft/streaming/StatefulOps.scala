@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.types.StructType
 
 /** Streaming stateful operators on `transformWithState` — the Spark-4
   * analogue of the reference's keyed-state operators (SURVEY.md §2.7,
@@ -19,14 +21,18 @@ object StatefulOps {
     * flink-table-runtime/.../operators/deduplicate/ProcTimeDeduplicateKeepFirstRowFunction.java:28:
     * the first row wins, later rows are dropped; emits an insert-only
     * stream. (`dropDuplicates` covers the SQL path; this processor is the
-    * keyed-state form that composes with the other changelog operators.)
+    * keyed-state form that composes with the other changelog operators,
+    * and [[StreamingRank]]'s `rn = 1 ORDER BY ts ASC` route with
+    * `V = Row`.) `ttl` expires the key's "seen" mark on processing time
+    * (the reference's `table.exec.state.ttl`); it needs
+    * TimeMode.ProcessingTime.
     */
-  class KeepFirstProcessor[K, V](vEnc: Encoder[V])
+  class KeepFirstProcessor[K, V](ttl: TTLConfig = TTLConfig.NONE)
       extends StatefulProcessor[K, V, V] {
     @transient private var seen: ValueState[Boolean] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       seen = getHandle.getValueState[Boolean]("seen",
-        Encoders.scalaBoolean, TTLConfig.NONE)
+        Encoders.scalaBoolean, ttl)
     override def handleInputRows(key: K, rows: Iterator[V],
         timerValues: TimerValues): Iterator[V] = {
       if (seen.exists()) Iterator.empty
@@ -82,24 +88,27 @@ object StatefulOps {
   /** Keep-LAST-row-per-key streaming dedup emitting a retract stream —
     * semantics of ProcTimeDeduplicateKeepLastRowFunction.java:32 +
     * StreamExecChangelogNormalize.java:77: each new row for a key retracts
-    * the previous one (-U old, +U new; first row emits +I).
+    * the previous one (-U old, +U new; first row emits +I). Rows of
+    * `schema` in, `__rowkind` byte + the row out — the form
+    * [[StreamingRank.keepLastRows]] builds; `ttl` as in
+    * [[KeepFirstProcessor]].
     */
-  class KeepLastProcessor[K, V](vEnc: Encoder[V])
-      extends StatefulProcessor[K, V, Change[K, V]] {
-    @transient private var last: ValueState[V] = _
+  class KeepLastProcessor(schema: StructType, ttl: TTLConfig = TTLConfig.NONE)
+      extends StatefulProcessor[String, Row, Row] {
+    @transient private var last: ValueState[Row] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      last = getHandle.getValueState[V]("last", vEnc, TTLConfig.NONE)
-    override def handleInputRows(key: K, rows: Iterator[V],
-        timerValues: TimerValues): Iterator[Change[K, V]] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[Change[K, V]]
-      rows.foreach { v =>
+      last = getHandle.getValueState[Row]("last", Encoders.row(schema), ttl)
+    private def tag(kind: Byte, r: Row): Row =
+      new GenericRow((kind +: r.toSeq).toArray[Any])
+    override def handleInputRows(key: String, rows: Iterator[Row],
+        timerValues: TimerValues): Iterator[Row] = {
+      val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+      rows.foreach { r =>
         if (last.exists()) {
-          out += Change(Changelog.UpdateBefore, key, last.get())
-          out += Change(Changelog.UpdateAfter, key, v)
-        } else {
-          out += Change(Changelog.Insert, key, v)
-        }
-        last.update(v)
+          out += tag(Changelog.UpdateBefore, last.get())
+          out += tag(Changelog.UpdateAfter, r)
+        } else out += tag(Changelog.Insert, r)
+        last.update(r)
       }
       out.iterator
     }
@@ -647,17 +656,4 @@ object StatefulOps {
       out.iterator
     }
   }
-
-  // ---- typed-API entry points -------------------------------------------
-
-  def keepFirst[K: Encoder, V: Encoder](ds: Dataset[V], keyFn: V => K): Dataset[V] =
-    ds.groupByKey(keyFn)
-      .transformWithState(new KeepFirstProcessor[K, V](implicitly[Encoder[V]]),
-        TimeMode.None(), OutputMode.Update())
-
-  def keepLast[K: Encoder, V: Encoder](ds: Dataset[V], keyFn: V => K)(
-      implicit chEnc: Encoder[Change[K, V]]): Dataset[Change[K, V]] =
-    ds.groupByKey(keyFn)
-      .transformWithState(new KeepLastProcessor[K, V](implicitly[Encoder[V]]),
-        TimeMode.None(), OutputMode.Update())
 }

@@ -27,8 +27,9 @@ import org.apache.spark.sql.types._
   *
   * Input may itself be a changelog (a `__rowkind` column on the child):
   * +I/+U upsert by the unique id column, -D deletes it — the reference's
-  * RetractableTopNFunction contract. Append-only inputs need no id column
-  * (arrival order synthesizes one, the AppendOnlyTopNFunction case).
+  * retracting top-n contract (StreamExecRank over a changelog input).
+  * Append-only inputs need no id column (arrival order synthesizes one,
+  * the AppendOnlyTopNFunction case).
   *
   * At scale this is the same shape as the reference: state per key is the
   * key's row set (bounded by retention/TTL upstream), the stream shuffles
@@ -70,7 +71,7 @@ object StreamingRank {
       if (isTimeDedup) {
         if (r.orderCols.head._2) keepFirstRows(r.child, r.partitionCols, ttl)
         else keepLastRows(r.child, r.partitionCols, ttl)
-      } else topN(r.child, r, idCol, ttl)
+      } else topN(r.child, r.partitionCols, r.orderCols, r.n, idCol, ttl)
     // drop key-materialization columns: both our own helpers and the
     // `_w0`-style projections Spark's ExtractWindowExpressions added for
     // non-column partition/order expressions — neither is user-visible
@@ -191,22 +192,32 @@ object StreamingRank {
   private def keepFirstRows(child: DataFrame, partitionCols: Seq[String],
       ttl: TTLConfig): DataFrame =
     groupByPartitionKey(child, partitionCols)
-      .transformWithState(new RowKeepFirstProcessor(child.schema, ttl),
+      .transformWithState(new StatefulOps.KeepFirstProcessor[String, Row](ttl),
         timeModeFor(ttl), OutputMode.Update())(Encoders.row(child.schema))
 
-  /** rn = 1 ORDER BY ts DESC: newest row wins — retract-stream output. */
-  private def keepLastRows(child: DataFrame, partitionCols: Seq[String],
-      ttl: TTLConfig): DataFrame = {
-    val out = outSchema(child)
+  /** rn = 1 ORDER BY ts DESC: newest row per key wins — retract-stream
+    * output (`__rowkind` + the child's columns), the keep-last
+    * operator's DataFrame entry.
+    */
+  def keepLastRows(child: DataFrame, partitionCols: Seq[String],
+      ttl: TTLConfig = TTLConfig.NONE): DataFrame =
     groupByPartitionKey(child, partitionCols)
-      .transformWithState(new RowKeepLastProcessor(child.schema, out, ttl),
-        timeModeFor(ttl), OutputMode.Update())(Encoders.row(out))
-  }
+      .transformWithState(new StatefulOps.KeepLastProcessor(child.schema, ttl),
+        timeModeFor(ttl), OutputMode.Update())(Encoders.row(outSchema(child)))
 
-  private def topN(child: DataFrame, spec: ResolvedSpec, idCol: String,
-      ttl: TTLConfig): DataFrame = {
+  /** The streaming top-n operator's DataFrame entry (StreamExecRank.java:87
+    * → the reference's retracting top-n function): per partition key,
+    * the visible top `n` rows by `orderCols` ((column, ascending) pairs,
+    * ties by id) as a changelog — `__rowkind` + the child's columns, the
+    * DIFF of the visible top-n with rank-movement cascades. A child with a
+    * `__rowkind` column is itself a changelog correlated by the LongType
+    * `idCol` (+I/+U upsert, -D delete); an append-only child without
+    * `idCol` gets arrival-order ids.
+    */
+  def topN(child: DataFrame, partitionCols: Seq[String],
+      orderCols: Seq[(String, Boolean)], n: Int, idCol: String = "id",
+      ttl: TTLConfig = TTLConfig.NONE): DataFrame = {
     val schema = child.schema
-    val out = outSchema(child)
     val idIdx = if (schema.fieldNames.contains(idCol)) {
       require(schema(idCol).dataType == LongType,
         s"rank id column $idCol must be LongType")
@@ -216,65 +227,28 @@ object StreamingRank {
         s"changelog rank input needs a LongType '$idCol' column to correlate updates")
       -1
     }
-    val orderIdxs = spec.orderCols.map { case (name, asc) =>
+    val orderIdxs = orderCols.map { case (name, asc) =>
       (schema.fieldIndex(name), asc)
     }
-    groupByPartitionKey(child, spec.partitionCols)
+    groupByPartitionKey(child, partitionCols)
       .transformWithState(
-        new RowTopNProcessor(spec.n, schema, out, idIdx, orderIdxs, ttl),
-        timeModeFor(ttl), OutputMode.Update())(Encoders.row(out))
+        new RowTopNProcessor(n, schema, idIdx, orderIdxs, ttl),
+        timeModeFor(ttl), OutputMode.Update())(Encoders.row(outSchema(child)))
   }
 
-  // ---------------------------------------------------------- processors
+  // ---------------------------------------------------------- processor
 
-  /** Append-only keep-first per key (StreamExecDeduplicate keep-first). */
-  class RowKeepFirstProcessor(schema: StructType,
-      ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, Row, Row] {
-    @transient private var seen: ValueState[Boolean] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getValueState[Boolean]("seen",
-        Encoders.scalaBoolean, ttl)
-    override def handleInputRows(key: String, rows: Iterator[Row],
-        timerValues: TimerValues): Iterator[Row] =
-      if (seen.exists()) Iterator.empty
-      else { seen.update(true); rows.take(1) }
-  }
-
-  /** Keep-last per key emitting +I then -U/+U retract pairs. */
-  class RowKeepLastProcessor(schema: StructType, out: StructType,
-      ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, Row, Row] {
-    @transient private var last: ValueState[Row] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      last = getHandle.getValueState[Row]("last", Encoders.row(schema), ttl)
-    private def tag(kind: Byte, r: Row): Row =
-      new org.apache.spark.sql.catalyst.expressions.GenericRow(
-        (kind +: r.toSeq).toArray[Any])
-    override def handleInputRows(key: String, rows: Iterator[Row],
-        timerValues: TimerValues): Iterator[Row] = {
-      val outRows = scala.collection.mutable.ArrayBuffer.empty[Row]
-      rows.foreach { r =>
-        if (last.exists()) {
-          outRows += tag(Changelog.UpdateBefore, last.get())
-          outRows += tag(Changelog.UpdateAfter, r)
-        } else outRows += tag(Changelog.Insert, r)
-        last.update(r)
-      }
-      outRows.iterator
-    }
-  }
-
-  /** Generic-row retractable top-n, reference state shape
-    * (RetractableTopNFunction.java:56): `rows` holds id → full row
+  /** The one retractable top-n operator, reference state shape (the
+    * retracting top-n function's data state + sorted index, see
+    * [[TopNIndex]]): `rows` holds id → full row
     * (point reads/writes only), `idx` holds id → sort-key projection and
     * is mirrored into a [[TopNIndex]] sorted set once per micro-batch.
     * Each change costs O(log m) index mutation + O(n) boundary walk and
     * reads only the affected ids' payloads; the emitted changelog is the
     * DIFF of the visible top-n, rank cascades included.
     */
-  class RowTopNProcessor(n: Int, schema: StructType, out: StructType,
-      idIdx: Int, orderIdxs: Seq[(Int, Boolean)],
+  class RowTopNProcessor(n: Int, schema: StructType, idIdx: Int,
+      orderIdxs: Seq[(Int, Boolean)],
       ttl: TTLConfig = TTLConfig.NONE)
       extends StatefulProcessor[String, Row, Row] {
     @transient private var rowsState: MapState[Long, Row] = _

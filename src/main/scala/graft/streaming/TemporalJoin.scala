@@ -1,8 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.streaming._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Streaming as-of/temporal join — semantics of
   * flink-table-runtime/.../operators/join/temporal/TemporalRowTimeJoinOperator.java:78:
@@ -22,31 +23,19 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * buffer — state is bounded by watermark lag plus one current version
   * per key. Late rows on either side are dropped.
   *
-  * The resolve+GC core is the pure [[advance]], unit-testable without a
-  * streaming query.
+  * One operator, [[TemporalJoinProcessor]], serves both front doors
+  * ([[asOfStream]], [[asOfStreamStatic]]); its resolve+GC core is the
+  * pure [[advance]], unit-testable without a streaming query.
   */
 object TemporalJoin {
 
-  /** Union envelope: a left probe (isProbe, probeId) or a right version
-    * (value effective from eventTime on). The TIMESTAMP column carries
-    * the watermark through to the operator.
+  /** Resolve+GC core over arbitrary probe/version payloads: probes with
+    * ts ≤ wm resolve (stable ts order — presort for tie rules) against
+    * the latest version at or before their timestamp; versions
+    * superseded at or below wm evict. Returns (resolved (ts, probe,
+    * matched version), retained probes, version timestamps to remove).
     */
-  case class TemporalEvent(key: String, eventTime: java.sql.Timestamp,
-      isProbe: Boolean, probeId: Long, value: Long)
-
-  case class AsOfMatch(key: String, probeId: Long, probeTs: Long,
-      versionTs: Long, value: Long, matched: Boolean)
-
-  case class ProbeBuf(ts: Long, probeId: Long)
-
-  /** Generic resolve+GC core over arbitrary probe/version payloads:
-    * probes with ts ≤ wm resolve (stable ts order — presort for tie
-    * rules) against the latest version at or before their timestamp;
-    * versions superseded at or below wm evict. Returns
-    * (resolved (ts, probe, matched version), retained probes, version
-    * timestamps to remove).
-    */
-  def advanceGeneric[P, V](probes: Seq[(Long, P)], versions: Seq[(Long, V)],
+  def advance[P, V](probes: Seq[(Long, P)], versions: Seq[(Long, V)],
       wm: Long): (Seq[(Long, P, Option[(Long, V)])], Seq[(Long, P)], Seq[Long]) = {
     val sortedV = versions.sortBy(_._1).toIndexedSeq
     val (due, remaining) = probes.partition(_._1 <= wm)
@@ -63,132 +52,52 @@ object TemporalJoin {
     (out, remaining, evict)
   }
 
-  /** Resolve all probes with ts ≤ wm against the version history, in
-    * (ts, probeId) order, then GC versions superseded at or below wm.
-    * Returns (matches, retained probes, version timestamps to remove).
+  /** Output shape of every temporal front door (both event-time routes
+    * here and [[ProcTimeJoin.procTimeJoin]]): each left column, then
+    * `r_<col>` per right payload column, nullable — a probe with no
+    * current version null-pads.
     */
-  def advance(key: String, probes: Seq[ProbeBuf], versions: Seq[(Long, Long)],
-      wm: Long): (Seq[AsOfMatch], Seq[ProbeBuf], Seq[Long]) = {
-    val (out, remaining, evict) = advanceGeneric(
-      probes.sortBy(p => (p.ts, p.probeId)).map(p => (p.ts, p.probeId)),
-      versions, wm)
-    val matches = out.map {
-      case (ts, pid, Some((vts, v))) => AsOfMatch(key, pid, ts, vts, v, matched = true)
-      case (ts, pid, None) => AsOfMatch(key, pid, ts, -1L, -1L, matched = false)
-    }
-    (matches, remaining.map { case (ts, pid) => ProbeBuf(ts, pid) }, evict)
-  }
-
-  /** Timers are COALESCED, as in the other event-time processors: one
-    * live timer per key at the smallest buffered timestamp, re-armed
-    * after each drain. A timer per row (the naive reading of the
-    * reference, whose timer service dedupes) makes every watermark
-    * advance invoke handleExpiredTimer once per buffered timestamp, each
-    * invocation reading the key's full probe list and version map —
-    * quadratic state-store traffic per key per batch.
-    */
-  class TemporalJoinProcessor
-      extends StatefulProcessor[String, TemporalEvent, AsOfMatch] {
-    @transient private var probes: ListState[ProbeBuf] = _
-    @transient private var versions: MapState[Long, Long] = _
-    @transient private var ptimer: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      probes = getHandle.getListState[ProbeBuf]("probes",
-        Encoders.product[ProbeBuf], TTLConfig.NONE)
-      versions = getHandle.getMapState[Long, Long]("versions",
-        Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
-      ptimer = getHandle.getValueState[Long]("ptimer",
-        Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    private def arm(ts: Long): Unit = {
-      val cur = if (ptimer.exists()) ptimer.get() else Long.MaxValue
-      if (ts < cur) { getHandle.registerTimer(ts); ptimer.update(ts) }
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[TemporalEvent],
-        timerValues: TimerValues): Iterator[AsOfMatch] = {
-      val wm = timerValues.getCurrentWatermarkInMs()
-      var minNew = Long.MaxValue
-      rows.foreach { e =>
-        val ts = e.eventTime.getTime
-        if (ts > wm) { // late rows on either side are dropped
-          if (e.isProbe) probes.appendValue(ProbeBuf(ts, e.probeId))
-          else versions.updateValue(ts, e.value)
-          if (ts < minNew) minNew = ts
-        }
-      }
-      if (minNew != Long.MaxValue) arm(minNew)
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[AsOfMatch] = {
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val (out, remaining, evict) =
-        advance(key, probes.get().toSeq, versions.iterator().toSeq, wm)
-      if (out.nonEmpty) {
-        probes.clear()
-        remaining.foreach(probes.appendValue)
-      }
-      evict.foreach(versions.removeKey)
-      ptimer.clear()
-      if (remaining.nonEmpty) arm(remaining.map(_.ts).min)
-      out.iterator
-    }
-  }
-
-  // ------------------------------------------------ DataFrame-level form
+  private[streaming] def joinedSchema(left: StructType,
+      rightStruct: StructType): StructType =
+    StructType(left.fields ++
+      rightStruct.fields.map(f => f.copy(name = s"r_${f.name}", nullable = true)))
 
   /** DataFrame-level streaming as-of join — the generic (any payload)
     * form the SQL front door routes to: each left probe row joins the
-    * right version current at its event time, with the same
-    * watermark-driven buffering, exactly-once resolution and version GC
-    * as the typed processor. Output = every left column + `r_<col>` for
-    * each right payload column (NULLs when no version existed — LEFT
-    * semantics, the batch AsOfJoin contract). Late rows on either side
-    * (at or behind the watermark on arrival) are dropped.
-    */
-  def asOfStream(probeSide: DataFrame, versionSide: DataFrame, keyCol: String,
-      tsCol: String, rightCols: Seq[String],
-      watermarkDelay: String = "0 seconds"): DataFrame =
-    asOfStream(probeSide, versionSide, Seq(keyCol), tsCol, rightCols,
-      watermarkDelay)
-
-  /** Composite-key form: the grouping key is the JSON rendering of the
-    * key-column struct (field names disambiguate, so distinct value
-    * combinations map to distinct keys), mirroring the batch
+    * right version current at its event time, with watermark-driven
+    * buffering, exactly-once resolution and version GC. Output = every
+    * left column + `r_<col>` for each right payload column (NULLs when
+    * no version existed — LEFT semantics, the batch AsOfJoin contract).
+    * Late rows on either side (at or behind the watermark on arrival)
+    * are dropped. A composite key groups by the JSON rendering of the
+    * key-column struct ([[StreamKeys.text]]), mirroring the batch
     * [[graft.operators.AsOfJoin]] multi-column partition.
     */
   def asOfStream(probeSide: DataFrame, versionSide: DataFrame,
       keyCols: Seq[String], tsCol: String, rightCols: Seq[String],
-      watermarkDelay: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, struct, to_json}
+      watermarkDelay: String = "0 seconds"): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit, struct}
     require(keyCols.nonEmpty, "asOfStream needs at least one key column")
-    def keyExpr = if (keyCols.lengthCompare(1) == 0) col(keyCols.head).cast("string")
-      else to_json(struct(keyCols.map(col): _*))
     val leftSchema = probeSide.schema
     val rightStruct = StructType(rightCols.map(c => versionSide.schema(c)))
     val taggedLeft = probeSide
-      .select(keyExpr.as("__tj_key"),
+      .select(StreamKeys.text(keyCols).as("__tj_key"),
         col(tsCol).cast("timestamp").as("__tj_ts"), lit(true).as("__tj_probe"),
         struct(leftSchema.fieldNames.map(col).toSeq: _*).as("__tj_l"))
     val taggedRight = versionSide
-      .select(keyExpr.as("__tj_key"),
+      .select(StreamKeys.text(keyCols).as("__tj_key"),
         col(tsCol).cast("timestamp").as("__tj_ts"), lit(false).as("__tj_probe"),
         struct(rightCols.map(col): _*).as("__tj_r"))
     val unioned = taggedLeft
       .unionByName(taggedRight, allowMissingColumns = true)
       .withWatermark("__tj_ts", watermarkDelay)
-    val outSchema = StructType(leftSchema.fields ++
-      rightStruct.fields.map(f => f.copy(name = s"r_${f.name}", nullable = true)))
-    implicit val outEnc: org.apache.spark.sql.Encoder[Row] = Encoders.row(outSchema)
+    implicit val outEnc: org.apache.spark.sql.Encoder[Row] =
+      Encoders.row(joinedSchema(leftSchema, rightStruct))
     implicit val keyEnc: org.apache.spark.sql.Encoder[String] = Encoders.STRING
     unioned
       .groupByKey((r: Row) => r.getString(r.fieldIndex("__tj_key")))
       .transformWithState(
-        new RowTemporalJoinProcessor(unioned.schema, leftSchema, rightStruct),
+        new TemporalJoinProcessor(unioned.schema, leftSchema, rightStruct),
         TimeMode.EventTime(), OutputMode.Append())
   }
 
@@ -205,33 +114,29 @@ object TemporalJoin {
   def asOfStreamStatic(probeSide: DataFrame, staticVersions: DataFrame,
       keyCols: Seq[String], tsCol: String, rightCols: Seq[String],
       watermarkDelay: String = "0 seconds"): DataFrame = {
-    import org.apache.spark.sql.functions.{col, collect_list, lit, struct, to_json}
+    import org.apache.spark.sql.functions.{col, collect_list, lit, struct}
     require(probeSide.isStreaming, "probe side must be a streaming DataFrame")
     require(!staticVersions.isStreaming, "version side must be bounded")
     require(keyCols.nonEmpty, "asOfStreamStatic needs at least one key column")
-    def keyExpr(df: DataFrame) =
-      if (keyCols.lengthCompare(1) == 0) col(keyCols.head).cast("string")
-      else to_json(struct(keyCols.map(col): _*))
     val leftSchema = probeSide.schema
     val rightStruct = StructType(rightCols.map(c => staticVersions.schema(c)))
     // probe rows carry a NULL __tj_r so the union schema matches the
     // stream-stream operator's input shape
     val taggedLeft = probeSide
-      .select(keyExpr(probeSide).as("__tj_key"),
+      .select(StreamKeys.text(keyCols).as("__tj_key"),
         col(tsCol).cast("timestamp").as("__tj_ts"), lit(true).as("__tj_probe"),
         struct(leftSchema.fieldNames.map(col).toSeq: _*).as("__tj_l"),
         lit(null).cast(rightStruct).as("__tj_r"))
       .withWatermark("__tj_ts", watermarkDelay)
     // one initial-state row per key: the key's version list
     val versionsByKey = staticVersions
-      .select(keyExpr(staticVersions).as("__tj_key"),
+      .select(StreamKeys.text(keyCols).as("__tj_key"),
         struct(col(tsCol).cast("timestamp").as("ts"),
           struct(rightCols.map(col): _*).as("v")).as("__tj_ver"))
       .groupBy("__tj_key")
       .agg(collect_list(col("__tj_ver")).as("versions"))
-    val outSchema = StructType(leftSchema.fields ++
-      rightStruct.fields.map(f => f.copy(name = s"r_${f.name}", nullable = true)))
-    val outEnc: org.apache.spark.sql.Encoder[Row] = Encoders.row(outSchema)
+    val outEnc: org.apache.spark.sql.Encoder[Row] =
+      Encoders.row(joinedSchema(leftSchema, rightStruct))
     implicit val keyEnc: org.apache.spark.sql.Encoder[String] = Encoders.STRING
     val initEnc: org.apache.spark.sql.Encoder[Row] =
       Encoders.row(versionsByKey.schema)
@@ -239,26 +144,35 @@ object TemporalJoin {
     taggedLeft
       .groupByKey((r: Row) => r.getString(r.fieldIndex("__tj_key")))
       .transformWithState(
-        new RowTemporalJoinProcessor(taggedLeft.schema, leftSchema, rightStruct),
+        new TemporalJoinProcessor(taggedLeft.schema, leftSchema, rightStruct),
         TimeMode.EventTime(), OutputMode.Append(), initState)(outEnc, initEnc)
   }
 
-  /** Row-payload twin of [[TemporalJoinProcessor]]: probes buffer as
-    * (ts, seq, leftRow) — `seq` preserves arrival order on equal
-    * timestamps — versions as ts → payload struct; the watermark timer
-    * resolves and GCs through [[advanceGeneric]].
+  /** The event-time temporal join operator over the tagged union
+    * (`__tj_ts`, `__tj_probe`, `__tj_l` probe struct, `__tj_r` version
+    * struct): probes buffer as (ts, seq, leftRow) — `seq` preserves
+    * arrival order on equal timestamps — versions as ts → payload
+    * struct; the watermark timer resolves and GCs through [[advance]].
+    *
+    * Timers are COALESCED, as in the other event-time processors: one
+    * live timer per key at the smallest buffered timestamp, re-armed
+    * after each drain. A timer per row (the naive reading of the
+    * reference, whose timer service dedupes) makes every watermark
+    * advance invoke handleExpiredTimer once per buffered timestamp, each
+    * invocation reading the key's full probe list and version map —
+    * quadratic state-store traffic per key per batch.
     *
     * Also usable with transformWithState INITIAL STATE
     * ([[asOfStreamStatic]]): the initial-state row is a key's full
     * version list from the bounded build side, loaded straight into the
     * versions MapState before the first batch.
     */
-  class RowTemporalJoinProcessor(unionSchema: StructType,
+  class TemporalJoinProcessor(unionSchema: StructType,
       leftSchema: StructType, rightStruct: StructType)
       extends StatefulProcessorWithInitialState[String, Row, Row, Row] {
     private val probeSchema = StructType(Seq(
-      StructField("ts", org.apache.spark.sql.types.LongType),
-      StructField("seq", org.apache.spark.sql.types.LongType),
+      StructField("ts", LongType),
+      StructField("seq", LongType),
       StructField("p", leftSchema)))
     @transient private var probes: ListState[Row] = _
     @transient private var versions: MapState[Long, Row] = _
@@ -279,9 +193,6 @@ object TemporalJoin {
         Encoders.scalaLong, TTLConfig.NONE)
     }
 
-    /** Coalesced timer (see [[TemporalJoinProcessor]]): one live timer
-      * per key at the smallest buffered timestamp.
-      */
     private def arm(ts: Long): Unit = {
       val cur = if (ptimer.exists()) ptimer.get() else Long.MaxValue
       if (ts < cur) { getHandle.registerTimer(ts); ptimer.update(ts) }
@@ -307,8 +218,7 @@ object TemporalJoin {
         val ts = e.getTimestamp(tsIdx).getTime
         if (ts > wm) { // late rows on either side are dropped
           if (e.getBoolean(probeIdx)) {
-            probes.appendValue(new org.apache.spark.sql.catalyst.expressions.GenericRow(
-              Array[Any](ts, n, e.getStruct(lIdx))))
+            probes.appendValue(new GenericRow(Array[Any](ts, n, e.getStruct(lIdx))))
             n += 1L
           } else versions.updateValue(ts, e.getStruct(rIdx))
           if (ts < minNew) minNew = ts
@@ -326,12 +236,11 @@ object TemporalJoin {
         .map(r => (r.getLong(0), (r.getLong(1), r.getStruct(2))))
         .sortBy { case (ts, (n, _)) => (ts, n) }
       val (out, remaining, evict) =
-        advanceGeneric(buffered, versions.iterator().toSeq, wm)
+        advance(buffered, versions.iterator().toSeq, wm)
       if (out.nonEmpty) {
         probes.clear()
         remaining.foreach { case (ts, (n, p)) =>
-          probes.appendValue(new org.apache.spark.sql.catalyst.expressions.GenericRow(
-            Array[Any](ts, n, p)))
+          probes.appendValue(new GenericRow(Array[Any](ts, n, p)))
         }
       }
       evict.foreach(versions.removeKey)
@@ -342,8 +251,7 @@ object TemporalJoin {
           case Some((_, v)) => v.toSeq
           case None => Seq.fill[Any](rightStruct.length)(null)
         }
-        new org.apache.spark.sql.catalyst.expressions.GenericRow(
-          (p.toSeq ++ rVals).toArray[Any])
+        new GenericRow((p.toSeq ++ rVals).toArray[Any])
       }
     }
   }

@@ -3,8 +3,8 @@ package graft.streaming
 import scala.collection.mutable
 
 /** Sorted top-n index — the state shape of the reference's retractable
-  * rank operators (flink-table-runtime/.../operators/rank/
-  * RetractableTopNFunction.java:56 `treeMap` sorted index + data state;
+  * rank operators (flink-table-runtime/.../operators/rank/: the
+  * retracting top-n function's `treeMap` sorted index + data state;
   * UpdatableTopNFunction.java:71): a per-key ordered set over
   * (sortKey, id), mirrored from a point-addressable MapState once per
   * micro-batch, with per-record O(log m) mutation and O(n) boundary

@@ -287,9 +287,9 @@ class CepSpec extends SparkSuite {
     // feed 50 batches of 20 events each, timestamps advancing 10 apart
     (0 until 50).foreach { b =>
       val fresh = (0 until 20).map(i => Ev("k", b * 200L + i * 10L, "F", 0))
-      val (ms, retained) = CEP.step[Ev](buf, fresh, p, nfa, _.ts, None)
+      val (ms, next) = CEP.step[Ev](CEP.StepState(buf, Map.empty), fresh, p, nfa, _.ts, None)
       assert(ms.isEmpty)
-      buf = retained
+      buf = next.buffer
       // events whose within-window closed are evicted: buffer holds at
       // most the last `within` span (100ms / 10ms spacing + 1 = 11 events)
       assert(buf.size <= 11, s"buffer grew to ${buf.size} at batch $b")
@@ -302,8 +302,8 @@ class CepSpec extends SparkSuite {
     var buf = IndexedSeq.empty[Ev]
     (0 until 30).foreach { b =>
       val fresh = (0 until 10).map(i => Ev("k", b * 10L + i, "F", 0))
-      val (_, retained) = CEP.step[Ev](buf, fresh, p, nfa, _.ts, Some(25))
-      buf = retained
+      val (_, next) = CEP.step[Ev](CEP.StepState(buf, Map.empty), fresh, p, nfa, _.ts, Some(25))
+      buf = next.buffer
     }
     assert(buf.size == 25)
     // the cap keeps the NEWEST events
@@ -315,11 +315,11 @@ class CepSpec extends SparkSuite {
       .next("g")(_.kind == "G").within(1000)
     val nfa = new NFA[Ev](p, _.ts)
     // batch 1: F alone (no match), batch 2: adjacent G completes it
-    val (m1, buf1) = CEP.step[Ev](IndexedSeq.empty, Seq(Ev("k", 10, "F", 0)), p, nfa, _.ts, None)
-    assert(m1.isEmpty && buf1.size == 1)
-    val (m2, buf2) = CEP.step[Ev](buf1, Seq(Ev("k", 20, "G", 0)), p, nfa, _.ts, None)
+    val (m1, st1) = CEP.step[Ev](CEP.StepState.empty, Seq(Ev("k", 10, "F", 0)), p, nfa, _.ts, None)
+    assert(m1.isEmpty && st1.buffer.size == 1)
+    val (m2, st2) = CEP.step[Ev](st1, Seq(Ev("k", 20, "G", 0)), p, nfa, _.ts, None)
     assert(m2.size == 1)
-    assert(buf2.isEmpty) // matched events trimmed (skip past last row)
+    assert(st2.buffer.isEmpty) // matched events trimmed (skip past last row)
   }
 
   test("step: out-of-order arrival merges into sorted buffer") {
@@ -328,9 +328,9 @@ class CepSpec extends SparkSuite {
     val nfa = new NFA[Ev](p, _.ts)
     // G arrives first, F (earlier ts) arrives out of order in batch 2:
     // the merged sorted buffer makes them adjacent → match
-    val (m1, buf1) = CEP.step[Ev](IndexedSeq.empty, Seq(Ev("k", 20, "G", 0)), p, nfa, _.ts, None)
+    val (m1, st1) = CEP.step[Ev](CEP.StepState.empty, Seq(Ev("k", 20, "G", 0)), p, nfa, _.ts, None)
     assert(m1.isEmpty)
-    val (m2, _) = CEP.step[Ev](buf1, Seq(Ev("k", 10, "F", 0)), p, nfa, _.ts, None)
+    val (m2, _) = CEP.step[Ev](st1, Seq(Ev("k", 10, "F", 0)), p, nfa, _.ts, None)
     assert(m2.size == 1)
   }
 }

@@ -64,24 +64,24 @@ class CepStepPropertySpec extends AnyFunSuite {
         val nfa = new NFA[E](p, _.ts)
         val batchMatches = consumed(nfa.findMatches(events))
 
-        var buf = IndexedSeq.empty[E]
+        var st = CEP.StepState.empty[E]
         val streamed = Seq.newBuilder[Seq[E]]
         var prev = 0
         cuts.foreach { c =>
           if (c > prev) {
-            val (ms, retained) =
-              CEP.step[E](buf, events.slice(prev, c), p, nfa, _.ts, None)
+            val (ms, next) =
+              CEP.step[E](st, events.slice(prev, c), p, nfa, _.ts, None)
             streamed ++= consumed(ms)
-            buf = retained
+            st = next
             prev = c
           }
         }
         // events after the last cut
         if (prev < events.length) {
-          val (ms, retained) =
-            CEP.step[E](buf, events.slice(prev, events.length), p, nfa, _.ts, None)
+          val (ms, next) =
+            CEP.step[E](st, events.slice(prev, events.length), p, nfa, _.ts, None)
           streamed ++= consumed(ms)
-          buf = retained
+          st = next
         }
         streamed.result() == batchMatches
       }
@@ -105,7 +105,7 @@ class CepStepPropertySpec extends AnyFunSuite {
           var prev = 0
           (cuts :+ events.length).distinct.sorted.foreach { c =>
             if (c > prev) {
-              val (ms, next) = CEP.stepSkip[E](
+              val (ms, next) = CEP.step[E](
                 st, events.slice(prev, c), p, nfa, _.ts, None, skip)
               streamed ++= consumed(ms)
               st = next
@@ -130,7 +130,7 @@ class CepStepPropertySpec extends AnyFunSuite {
         var ok = true
         (cuts :+ events.length).distinct.sorted.foreach { c =>
           if (c > prev) {
-            val (_, next) = CEP.stepSkip[E](
+            val (_, next) = CEP.step[E](
               st, events.slice(prev, c), p, nfa, _.ts, None,
               AfterMatchSkip.NoSkip)
             st = next
@@ -157,9 +157,9 @@ class CepStepPropertySpec extends AnyFunSuite {
         var ok = true
         (cuts.filter(_ > 0) :+ events.length).distinct.sorted.foreach { c =>
           if (c > prev) {
-            val (_, retained) =
-              CEP.step[E](buf, events.slice(prev, c), p, nfa, _.ts, None)
-            buf = retained
+            val (_, next) = CEP.step[E](
+              CEP.StepState(buf, Map.empty), events.slice(prev, c), p, nfa, _.ts, None)
+            buf = next.buffer
             prev = c
             // every retained event is within the horizon of the max seen ts
             val maxTs = events(c - 1).ts

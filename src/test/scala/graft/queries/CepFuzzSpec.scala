@@ -401,7 +401,7 @@ class CepFuzzSpec extends SparkSuite {
     val evs = CepQueries.cepEvents(spark, dir).collect().toSeq
       .sortBy(e => (e.ts, e.event_id))
     // NoSkip + Any branching exercises the streaming buffer's
-    // emitted-identity dedup across re-scans (stepSkip's independent-
+    // emitted-identity dedup across re-scans (CEP.step's independent-
     // anchor regime) — a lost identity double-emits, an over-broad one
     // suppresses a genuinely new branch
     for (seed <- 1L to 4L) {
@@ -858,7 +858,7 @@ class CepFuzzSpec extends SparkSuite {
   test("incremental streaming CEP equals the batch NFA per fuzz seed") {
     import graft.cep.{AfterMatchSkip, CEP, Pattern}
     import spark.implicits._
-    // (ts, id)-sorted replay: CEP.stepSkip's stable merge then sees ties
+    // (ts, id)-sorted replay: CEP.step's stable merge then sees ties
     // in id order, matching the batch tieFn = event_id convention
     val evs = CepQueries.cepEvents(spark, dir).collect().toSeq
       .sortBy(e => (e.ts, e.event_id))

@@ -718,33 +718,28 @@ class StreamFuzzSpec extends SparkSuite {
     }
   }
 
-  test("Row-payload temporal front door equals the typed processor per seed") {
-    // one semantics, two processors: TemporalJoinProcessor (typed) and
-    // RowTemporalJoinProcessor (the DataFrame/SQL route) must agree on
-    // identical replays — buffering, ms-collision last-write-wins,
-    // resolve order, GC. The last case keeps no row on either arm: its
-    // replay is the flush sentinel alone, and every route emits nothing
+  test("stream-stream and bounded-dim routes agree per seed") {
+    // one operator, two front doors: the stream-stream union
+    // (asOfStream) and the bounded-dim initial-state load
+    // (asOfStreamStatic) must agree on identical replays — buffering,
+    // ms-collision last-write-wins, resolve order, GC. The last case
+    // keeps no row on either arm: its replay is the flush sentinel
+    // alone, and every route emits nothing
     val noRows = StreamFuzzGen.genTemporal(1L)
       .copy(probeFilterSql = "false", versionFilterSql = "false")
     for (c <- (1L to 4L).map(StreamFuzzGen.genTemporal) :+ noRows) {
       val seed = c.seed
-      val typed = StreamQueries.streamTemporalFuzzReplay(spark, dir, c)
+      val stream = StreamQueries.streamTemporalFuzzReplay(spark, dir, c)
         .collect().map(_.toString).sorted.toSeq
-      if (c == noRows) assert(typed.isEmpty, s"no-row case emitted $typed")
-      val row = StreamQueries.streamTemporalFuzzReplayRow(spark, dir, c)
-        .collect().map(_.toString).sorted.toSeq
-      assert(row == typed,
-        s"temporal row-path seed $seed diverged: key=${c.keySql} " +
-          s"pf=${c.probeFilterSql} vf=${c.versionFilterSql} " +
-          s"(typed=${typed.length} rows, row=${row.length})")
-      // third route: bounded-dim initial state (asOfStreamStatic) — for
-      // an ascending replay it must agree with the stream-stream runs
+      if (c == noRows) assert(stream.isEmpty, s"no-row case emitted $stream")
+      // for an ascending replay the bounded-dim route must agree with
+      // the stream-stream run
       val static = StreamQueries.streamTemporalFuzzReplayStatic(spark, dir, c)
         .collect().map(_.toString).sorted.toSeq
-      assert(static == typed,
+      assert(static == stream,
         s"temporal static-dim seed $seed diverged: key=${c.keySql} " +
           s"pf=${c.probeFilterSql} vf=${c.versionFilterSql} " +
-          s"(typed=${typed.length} rows, static=${static.length})")
+          s"(stream=${stream.length} rows, static=${static.length})")
     }
   }
 

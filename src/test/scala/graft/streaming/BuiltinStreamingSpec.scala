@@ -4,7 +4,6 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 import graft.SparkSuite
 
@@ -164,39 +163,46 @@ class BuiltinStreamingSpec extends SparkSuite {
   }
 
   test("streaming temporal join resolves probes at the watermark, out of order") {
-    import TemporalJoin._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[TemporalEvent]
-    val out = input.toDS()
-      .withWatermark("eventTime", "0 milliseconds")
-      .groupByKey(_.key)
-      .transformWithState(new TemporalJoinProcessor(),
-        TimeMode.EventTime(), OutputMode.Append())
+    // one interleaved stream of (key, ts, isProbe, probeId, value),
+    // split into the two sides of the DataFrame front door
+    val input = MemoryStream[(String, Timestamp, Boolean, Long, Long)]
+    val events = input.toDS().toDF("k", "ts", "isProbe", "probeId", "value")
+    val out = TemporalJoin.asOfStream(
+      events.filter($"isProbe").select($"k", $"ts", $"probeId"),
+      events.filter(!$"isProbe")
+        .select($"k", $"ts", unix_millis($"ts").as("vms"), $"value"),
+      Seq("k"), "ts", Seq("vms", "value"), watermarkDelay = "0 milliseconds")
     val name = s"tj_${System.nanoTime()}"
     val q = out.writeStream.format("memory").queryName(name)
       .outputMode("append").option("checkpointLocation", tmpDir("ckpt")).start()
+    def probe(sec: Long, id: Long) = ("A", ts(sec), true, id, 0L)
+    def version(sec: Long, v: Long) = ("A", ts(sec), false, 0L, v)
     try {
       // batch 1: the PROBE at 150 arrives BEFORE the version at 100 —
       // watermark buffering must still match them (TemporalRowTimeJoin
       // semantics, impossible with process-as-it-arrives)
       input.addData(Seq(
-        TemporalEvent("A", ts(1), isProbe = true, 2L, 0L), // no version yet
-        TemporalEvent("A", ts(150), isProbe = true, 1L, 0L),
-        TemporalEvent("A", ts(100), isProbe = false, 0L, 10L),
-        TemporalEvent("A", ts(200), isProbe = false, 0L, 20L)))
+        probe(1, 2L), // no version yet
+        probe(150, 1L),
+        version(100, 10L),
+        version(200, 20L)))
       q.processAllAvailable()
       // batch 2: late probe (behind watermark 200) is dropped; probe at
       // 500 resolves against version 200 once the sentinel advances wm
-      input.addData(Seq(
-        TemporalEvent("A", ts(50), isProbe = true, 9L, 0L),
-        TemporalEvent("A", ts(500), isProbe = true, 3L, 0L)))
+      input.addData(Seq(probe(50, 9L), probe(500, 3L)))
       q.processAllAvailable()
-      input.addData(Seq(TemporalEvent("A", ts(9000), isProbe = false, 0L, 99L)))
+      input.addData(Seq(version(9000, 99L)))
       q.processAllAvailable()
-      input.addData(Seq(TemporalEvent("A", ts(20000), isProbe = true, 8L, 0L)))
+      input.addData(Seq(probe(20000, 8L)))
       q.processAllAvailable()
-      val rows = spark.table(name).as[AsOfMatch].collect()
-        .map(m => m.probeId -> ((m.versionTs, m.value, m.matched))).toMap
+      // (version ts, value, matched); an unmatched probe null-pads
+      val rows = spark.table(name).collect().map { r =>
+        val matched = !r.isNullAt(r.fieldIndex("r_value"))
+        r.getAs[Long]("probeId") -> (if (matched)
+          (r.getAs[Long]("r_vms"), r.getAs[Long]("r_value"), true)
+          else (-1L, -1L, false))
+      }.toMap
       assert(rows(1L) == ((100000L, 10L, true)))  // version@100s current at 150s
       assert(rows(2L) == ((-1L, -1L, false)))     // probe before any version
       assert(rows(3L) == ((200000L, 20L, true)))  // resolved after wm passed 500s
@@ -205,23 +211,23 @@ class BuiltinStreamingSpec extends SparkSuite {
   }
 
   test("temporal advance: GC keeps only the current version at the watermark") {
-    import TemporalJoin._
     val versions = Seq((100L, 10L), (200L, 20L), (300L, 30L), (400L, 40L))
-    val (out, remaining, evict) = advance("k",
-      Seq(ProbeBuf(250L, 1L), ProbeBuf(350L, 2L), ProbeBuf(999L, 3L)),
-      versions, wm = 350L)
+    // probes are (ts, probeId)
+    val (out, remaining, evict) = TemporalJoin.advance(
+      Seq((250L, 1L), (350L, 2L), (999L, 3L)), versions, wm = 350L)
     // probes ≤ wm resolve in order; the 999 probe stays buffered
-    assert(out.map(m => (m.probeId, m.versionTs, m.value)) ==
-      Seq((1L, 200L, 20L), (2L, 300L, 30L)))
-    assert(remaining == Seq(ProbeBuf(999L, 3L)))
+    assert(out.map { case (_, pid, v) => (pid, v) } ==
+      Seq((1L, Some((200L, 20L))), (2L, Some((300L, 30L)))))
+    assert(remaining == Seq((999L, 3L)))
     // versions 100 and 200 are superseded by 300 at wm=350; 300 stays
     // current, 400 is still future
     assert(evict == Seq(100L, 200L))
   }
 
   test("temporal advance: nothing evicted before the second version matures") {
-    import TemporalJoin._
-    val (_, _, evict) = advance("k", Nil, Seq((100L, 1L), (200L, 2L)), wm = 150L)
+    val (_, _, evict) = TemporalJoin.advance(
+      Seq.empty[(Long, Long)], Seq((100L, 1L), (200L, 2L)), wm = 150L)
     assert(evict.isEmpty) // 100 is still the current version at wm=150
   }
+
 }

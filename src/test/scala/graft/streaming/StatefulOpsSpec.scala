@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
@@ -51,7 +51,7 @@ class StatefulOpsSpec extends SparkSuite {
       Seq(Ranked("b", 5, 9)))
     val out = runBatches[Ranked, Ranked](batches,
       ds => ds.groupByKey(_.key)
-        .transformWithState(new KeepFirstProcessor[String, Ranked](implicitly),
+        .transformWithState(new KeepFirstProcessor[String, Ranked](),
           TimeMode.None(), OutputMode.Update()))
     assert(out(0).toSet == Set(Ranked("a", 1, 10), Ranked("b", 2, 20)))
     assert(out(1).toSet == Set(Ranked("c", 4, 1))) // a already seen
@@ -62,15 +62,14 @@ class StatefulOpsSpec extends SparkSuite {
     val batches = Seq(
       Seq(Ranked("a", 1, 10)),
       Seq(Ranked("a", 2, 20), Ranked("b", 3, 30)))
-    val out = runBatches[Ranked, Change[String, Ranked]](batches,
-      ds => ds.groupByKey(_.key)
-        .transformWithState(new KeepLastProcessor[String, Ranked](implicitly),
-          TimeMode.None(), OutputMode.Update()))
-    assert(out(0) == Seq(Change(Changelog.Insert, "a", Ranked("a", 1, 10))))
+    // rows in, `__rowkind` + row out
+    val out = runBatches[Ranked, Row](batches,
+      ds => StreamingRank.keepLastRows(ds.toDF(), Seq("key")))
+    assert(out(0) == Seq(Row(Changelog.Insert, "a", 1L, 10L)))
     assert(out(1).toSet == Set(
-      Change(Changelog.UpdateBefore, "a", Ranked("a", 1, 10)),
-      Change(Changelog.UpdateAfter, "a", Ranked("a", 2, 20)),
-      Change(Changelog.Insert, "b", Ranked("b", 3, 30))))
+      Row(Changelog.UpdateBefore, "a", 1L, 10L),
+      Row(Changelog.UpdateAfter, "a", 2L, 20L),
+      Row(Changelog.Insert, "b", 3L, 30L)))
   }
 
   test("retractable sum: +I, -U/+U, and -D on empty group (RecordCounter)") {

@@ -10,7 +10,7 @@ import graft.SparkSuite
 /** Model-based randomized check of the SQL rank rewrite: random upsert/
   * delete changelogs through the RowTopNProcessor must fold to exactly
   * the batch `ROW_NUMBER() <= n` result over the final table state —
-  * the dynamic-table contract the reference's RetractableTopNFunction
+  * the dynamic-table contract the reference's retracting top-n function
   * guarantees.
   */
 class StreamingRankModelSpec extends SparkSuite {

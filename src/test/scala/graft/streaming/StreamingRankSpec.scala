@@ -9,10 +9,11 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 
-/** SQL-pattern recognition for streaming rank: the idiomatic
-  * `ROW_NUMBER() OVER (…) <= n` filter — which Spark itself rejects on a
-  * stream — routes to the retractable top-n / dedup processors and emits
-  * the exact changelog sequences the operator specs pin.
+/** The streaming rank operators and their SQL-pattern recognition: the
+  * top-n operator's DataFrame entry ([[StreamingRank.topN]]) pins the
+  * rank-movement cascades, and the idiomatic `ROW_NUMBER() OVER (…) <= n`
+  * filter — which Spark itself rejects on a stream — routes to the
+  * top-n / dedup processors and emits the same changelog sequences.
   */
 class StreamingRankSpec extends SparkSuite {
   import spark.implicits._
@@ -41,9 +42,43 @@ class StreamingRankSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("rn <= 2 over a changelog stream matches the RetractableTopN pins") {
-    // same scenario as RetractableTopNSpec "update/delete cascades":
-    // tuples are (__rowkind, key, id, sort)
+  /** [[StreamingRank.topN]] (top-2 by ascending sort) over batches of
+    * (__rowkind, key, id, sort) changes; returns rows per batch.
+    */
+  private def runTop2(batches: Seq[Seq[(Byte, String, Long, Long)]]): Seq[Seq[Row]] =
+    runRows(batches, df => StreamingRank.topN(
+      df.toDF(Changelog.RowKindCol, "key", "id", "sort"),
+      Seq("key"), Seq(("sort", true)), 2))
+
+  test("update/delete cascades through the visible top-2") {
+    val out = runTop2(Seq(
+      Seq((Changelog.Insert, "k", 1L, 30L), (Changelog.Insert, "k", 2L, 10L)),
+      Seq((Changelog.UpdateAfter, "k", 1L, 5L)),  // 1 moves to front
+      Seq((Changelog.Insert, "k", 3L, 7L)),       // 3 evicts 2
+      Seq((Changelog.Delete, "k", 1L, 0L))))      // delete promotes 2
+    def c(kind: Byte, id: Long, sort: Long) = Row(kind, "k", id, sort)
+    assert(out(0) == Seq(c(Changelog.Insert, 1, 30), c(Changelog.Insert, 2, 10)))
+    assert(out(1) == Seq(
+      c(Changelog.UpdateBefore, 1, 30), c(Changelog.UpdateAfter, 1, 5)))
+    assert(out(2) == Seq(
+      c(Changelog.Delete, 2, 10), c(Changelog.Insert, 3, 7)))
+    assert(out(3) == Seq(
+      c(Changelog.Delete, 1, 5), c(Changelog.Insert, 2, 10)))
+  }
+
+  test("row outside the top-n emits nothing until it becomes visible") {
+    val out = runTop2(Seq(
+      Seq((Changelog.Insert, "k", 1L, 1L), (Changelog.Insert, "k", 2L, 2L),
+        (Changelog.Insert, "k", 3L, 9L)),          // 3 invisible
+      Seq((Changelog.UpdateAfter, "k", 3L, 0L))))  // 3 jumps to #1
+    def c(kind: Byte, id: Long, sort: Long) = Row(kind, "k", id, sort)
+    assert(out(0) == Seq(c(Changelog.Insert, 1, 1), c(Changelog.Insert, 2, 2)))
+    assert(out(1) == Seq(c(Changelog.Delete, 2, 2), c(Changelog.Insert, 3, 0)))
+  }
+
+  test("rn <= 2 over a changelog stream matches the top-n operator pins") {
+    // same scenario as "update/delete cascades through the visible
+    // top-2", through the SQL pattern: tuples are (__rowkind, key, id, sort)
     val batches = Seq(
       Seq((Changelog.Insert, "k", 1L, 30L), (Changelog.Insert, "k", 2L, 10L)),
       Seq((Changelog.UpdateAfter, "k", 1L, 5L)),  // 1 moves to front
@@ -66,7 +101,7 @@ class StreamingRankSpec extends SparkSuite {
   }
 
   test("append-only input needs no id column and no __rowkind") {
-    // RetractableTopNSpec "row outside the top-n" adapted to append-only:
+    // "row outside the top-n emits nothing …" adapted to append-only:
     // (key, name, sort) — note: no LongType id, ids synthesize by arrival
     val batches = Seq(
       Seq(("k", "a", 1L), ("k", "b", 2L), ("k", "c", 9L)), // c invisible
@@ -175,6 +210,52 @@ class StreamingRankSpec extends SparkSuite {
       assert(rows.last == Row(Changelog.Insert, "k", 2L, 20L),
         s"expected fresh insert after TTL eviction, got $rows")
     } finally q.stop()
+  }
+
+  test("stateTtl evicts idle keep-first and keep-last state") {
+    // rn = 1 by event time routes to the dedup processors; with a TTL a
+    // key's state expires on processing time, so its next row is a FIRST
+    // row again: keep-first emits it (instead of dropping it) and
+    // keep-last emits +I (instead of a -U/+U pair). Polled like the
+    // top-n TTL test above.
+    val t = (ms: Long) => new Timestamp(ms)
+    def run(asc: Boolean): Seq[Row] = {
+      implicit val sqlCtx = spark.sqlContext
+      val input = MemoryStream[(String, Timestamp, String)]
+      val named = input.toDS().toDF("key", "ts", "payload")
+      val w = Window.partitionBy("key").orderBy(if (asc) $"ts".asc else $"ts".desc)
+      val out = StreamingRank.rewrite(
+        named.withColumn("rn", row_number().over(w)).filter($"rn" === 1).drop("rn"),
+        stateTtl = Some(java.time.Duration.ofMillis(500)))
+      val name = s"dedupttl_${System.nanoTime()}"
+      val q = out.writeStream.format("memory").queryName(name)
+        .outputMode("update")
+        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(100))
+        .option("checkpointLocation", tmpDir("ckpt")).start()
+      def await(n: Int, deadlineMs: Long = 30000): Boolean = {
+        val until = System.currentTimeMillis() + deadlineMs
+        var ok = spark.table(name).count() >= n
+        while (!ok && System.currentTimeMillis() < until) {
+          Thread.sleep(100); ok = spark.table(name).count() >= n
+        }
+        ok
+      }
+      try {
+        input.addData(Seq(("a", t(10), "v1")))
+        assert(await(1))
+        Thread.sleep(1200) // well past the 500ms TTL
+        input.addData(Seq(("a", t(30), "v2")))
+        assert(await(2))
+        Thread.sleep(500) // a stray third row would land here
+        spark.table(name).collect().toSeq
+      } finally q.stop()
+    }
+    // keep-first: the post-expiry row is the key's first row again
+    assert(run(asc = true) == Seq(Row("a", t(10), "v1"), Row("a", t(30), "v2")))
+    // keep-last: +I, and after expiry +I again — no retraction of v1
+    assert(run(asc = false) == Seq(
+      Row(Changelog.Insert, "a", t(10), "v1"),
+      Row(Changelog.Insert, "a", t(30), "v2")))
   }
 
   test("a non-rank filter is rejected with a clear error") {

@@ -3,7 +3,7 @@ package graft.streaming
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
-import TemporalJoin._
+import TemporalJoin.advance
 
 /** Properties of the temporal-join core: resolution matches a
   * brute-force as-of model, and version GC is SAFE — evicting versions
@@ -20,9 +20,9 @@ class TemporalAdvancePropertySpec extends AnyFunSuite {
   private val genVersions: Gen[Seq[(Long, Long)]] =
     Gen.listOf(Gen.choose(0L, 50L)).map(_.distinct.map(ts => ts -> (ts * 10)))
 
-  private val genProbes: Gen[Seq[ProbeBuf]] =
+  /** Probes as (ts, probeId). */
+  private val genProbes: Gen[Seq[(Long, Long)]] =
     Gen.listOf(Gen.zip(Gen.choose(0L, 60L), Gen.choose(0L, 1000L)))
-      .map(_.map { case (ts, id) => ProbeBuf(ts, id) })
 
   /** Brute-force as-of model: latest version at or before the probe. */
   private def model(versions: Seq[(Long, Long)], ts: Long): Option[(Long, Long)] =
@@ -30,24 +30,21 @@ class TemporalAdvancePropertySpec extends AnyFunSuite {
 
   test("advance resolves exactly the released probes, per the as-of model") {
     check(Prop.forAll(genVersions, genProbes, Gen.choose(0L, 60L)) { (vs, ps, wm) =>
-      val (out, remaining, _) = advance("k", ps, vs, wm)
-      val releasedOk = out.forall { m =>
-        model(vs, m.probeTs) match {
-          case Some((vts, v)) => m.matched && m.versionTs == vts && m.value == v
-          case None => !m.matched
-        }
+      val (out, remaining, _) = advance(ps, vs, wm)
+      val releasedOk = out.forall { case (probeTs, _, matched) =>
+        matched == model(vs, probeTs)
       }
       val partitionOk =
-        out.map(_.probeId).toSet ++ remaining.map(_.probeId).toSet ==
-          ps.map(_.probeId).toSet &&
-        out.forall(_.probeTs <= wm) && remaining.forall(_.ts > wm)
+        out.map(_._2).toSet ++ remaining.map(_._2).toSet ==
+          ps.map(_._2).toSet &&
+        out.forall(_._1 <= wm) && remaining.forall(_._1 > wm)
       releasedOk && partitionOk
     })
   }
 
   test("version GC never changes any future probe's resolution") {
     check(Prop.forAll(genVersions, Gen.choose(0L, 60L)) { (vs, wm) =>
-      val (_, _, evicted) = advance("k", Nil, vs, wm)
+      val (_, _, evicted) = advance(Seq.empty[(Long, Long)], vs, wm)
       val retained = vs.filterNot(v => evicted.contains(v._1))
       // every probe the watermark has NOT released resolves identically
       // against the full history and the GC'd history
