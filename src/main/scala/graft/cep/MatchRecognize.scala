@@ -14,9 +14,9 @@ import org.apache.spark.sql.types._
   * Supported subset (parity with the reference's most-used surface):
   *
   *   - `PARTITION BY c1, c2` / `ORDER BY c1, c2`
-  *   - `MEASURES expr AS alias, …` with `V.col` (last row of V),
-  *     `FIRST(V.col)`, `LAST(V.col)`, `COUNT(V.*)`, `COUNT(*)`,
-  *     `SUM/MIN/MAX/AVG(V.col)`
+  *   - `MEASURES m AS alias, …`, each `m` one of `V.col` (last row of
+  *     V), `FIRST(V.col)`, `LAST(V.col)`, `COUNT(V.*)`, `COUNT(*)`,
+  *     `SUM/MIN/MAX/AVG(V.col)`, `CLASSIFIER()`, `MATCH_NUMBER()`
   *   - `ONE ROW PER MATCH` (the only row-per-match mode, as in the
   *     reference's streaming planner)
   *   - `AFTER MATCH SKIP PAST LAST ROW` (the default strategy)
@@ -26,11 +26,15 @@ import org.apache.spark.sql.types._
   *   - `WITHIN INTERVAL 'n' SECOND|MINUTE|HOUR|DAY` (reference extension,
   *     Pattern.within) — the first ORDER BY column must be a TIMESTAMP or
   *     an epoch-microseconds BIGINT
-  *   - `DEFINE V AS predicate, …` — predicates over the CURRENT row's
-  *     columns (`V.col` or bare `col`), literals, arithmetic, comparison,
-  *     AND/OR/NOT. Pattern variables without a DEFINE match any row (SQL
-  *     default). Cross-variable references (LAST(other.col)) are not in
-  *     the subset.
+  *   - `DEFINE V AS predicate, …` — any Spark SQL boolean expression
+  *     over the CURRENT row (comparisons, AND/OR/NOT with SQL
+  *     three-valued logic, IN, CASE, LIKE, built-in functions), evaluated
+  *     by Catalyst as one column per variable; a NULL result does not
+  *     match. `V.col` of a pattern variable reads the current row's
+  *     `col`; `PREV(x[, n])` / `NEXT(x[, n])` are `lag`/`lead` over the
+  *     clause's PARTITION BY and ORDER BY (batch only). Pattern variables
+  *     without a DEFINE match any row (SQL default). Cross-variable
+  *     references (LAST(other.col)) are not in the subset.
   *
   * Output: one row per match — partition columns then measures, ordered
   * as written.
@@ -39,13 +43,10 @@ object MatchRecognize {
 
   // ---------------------------------------------------------------- AST
 
+  /** A MEASURES expression. */
   private sealed trait Ex
   private case class VarField(variable: String, field: String) extends Ex
-  private case class ColRef(field: String) extends Ex
-  private case class Lit(v: Any) extends Ex
-  private case class Bin(op: String, l: Ex, r: Ex) extends Ex
-  private case class Not(e: Ex) extends Ex
-  /** FIRST/LAST/COUNT/SUM/MIN/MAX/AVG over a variable's rows (measures). */
+  /** FIRST/LAST/COUNT/SUM/MIN/MAX/AVG over a variable's rows. */
   private case class Agg(fn: String, variable: String, field: String) extends Ex
   /** CLASSIFIER(): the pattern variable that matched the current row
     * (ALL ROWS PER MATCH) or the last variable (ONE ROW PER MATCH).
@@ -53,12 +54,6 @@ object MatchRecognize {
   private case object Classifier extends Ex
   /** MATCH_NUMBER(): 1-based sequence of the match within its partition. */
   private case object MatchNum extends Ex
-  /** PREV/NEXT row navigation (DEFINE only): since SQL MATCH_RECOGNIZE
-    * consumes every row, PREV(col, n) is exactly lag(col, n) over the
-    * partition in ORDER BY order — computed as a window column BEFORE
-    * matching (the Spark-first translation), then referenced here.
-    */
-  private case class Nav(fn: String, field: String, offset: Int) extends Ex
 
   private case class PatVar(name: String, minTimes: Int, maxTimes: Int,
       greedy: Boolean = true)
@@ -69,7 +64,7 @@ object MatchRecognize {
       measures: Seq[(Ex, String)],
       pattern: Seq[PatVar],
       withinMicros: Option[Long],
-      defines: Map[String, Ex],
+      defines: Seq[(String, Vector[String])], // variable -> predicate tokens
       skip: AfterMatchSkip = AfterMatchSkip.SkipPastLastRow,
       allRows: Boolean = false)
 
@@ -124,73 +119,10 @@ object MatchRecognize {
       out.result()
     }
 
-    // expr := or ; or := and (OR and)* ; and := unary (AND unary)*
-    // unary := NOT unary | cmp
-    // cmp := add ((=|<>|!=|<|<=|>|>=) add)?
-    // add := mul ((+|-) mul)* ; mul := atom ((*|/|%) atom)*
-    // atom := literal | fn(var.field|var.*|*) | var.field | col | (expr)
-    def expr(): Ex = orExpr()
-
-    private def orExpr(): Ex = {
-      var l = andExpr()
-      while (accept("OR")) l = Bin("OR", l, andExpr())
-      l
-    }
-    private def andExpr(): Ex = {
-      var l = unary()
-      while (accept("AND")) l = Bin("AND", l, unary())
-      l
-    }
-    private def unary(): Ex =
-      if (accept("NOT")) Not(unary()) else cmp()
-
-    private def cmp(): Ex = {
-      val l = add()
-      peek match {
-        case "=" | "<>" | "!=" | "<" | "<=" | ">" | ">=" =>
-          Bin(next(), l, add())
-        case _ => l
-      }
-    }
-    private def add(): Ex = {
-      var l = mul()
-      while (peek == "+" || peek == "-") l = Bin(next(), l, mul())
-      l
-    }
-    private def mul(): Ex = {
-      var l = atom()
-      while (peek == "*" || peek == "/" || peek == "%") l = Bin(next(), l, atom())
-      l
-    }
-
     private val aggFns = Set("FIRST", "LAST", "COUNT", "SUM", "MIN", "MAX", "AVG")
 
-    private def atom(): Ex = peek match {
-      case "(" => next(); val e = expr(); expect(")"); e
-      case "-" => // unary minus: fold into the literal, else 0 - x
-        next()
-        atom() match {
-          case Lit(l: java.lang.Long) => Lit(java.lang.Long.valueOf(-l))
-          case Lit(d: java.lang.Double) => Lit(java.lang.Double.valueOf(-d))
-          case other => Bin("-", Lit(java.lang.Long.valueOf(0L)), other)
-        }
-      case t if t.startsWith("'") =>
-        next(); Lit(t.substring(1, t.length - 1).replace("''", "'"))
-      case t if t.nonEmpty && (t.head.isDigit) =>
-        next()
-        if (t.contains('.')) Lit(java.lang.Double.valueOf(t))
-        else Lit(java.lang.Long.valueOf(t))
-      case t if t.equalsIgnoreCase("TRUE") => next(); Lit(java.lang.Boolean.TRUE)
-      case t if t.equalsIgnoreCase("FALSE") => next(); Lit(java.lang.Boolean.FALSE)
-      case t if t.equalsIgnoreCase("NULL") => next(); Lit(null)
-      case t if t.equalsIgnoreCase("PREV") || t.equalsIgnoreCase("NEXT") =>
-        val fn = next().toUpperCase
-        expect("(")
-        val n1 = ident()
-        val f = if (accept(".")) ident() else n1 // PREV(V.col) == PREV(col)
-        val off = if (accept(",")) next().toInt else 1
-        expect(")")
-        Nav(fn, f, off)
+    /** measure := CLASSIFIER() | MATCH_NUMBER() | fn(V.col|V.*|*) | V.col */
+    def measure(): Ex = peek match {
       case t if t.equalsIgnoreCase("CLASSIFIER") =>
         next(); expect("("); expect(")"); Classifier
       case t if t.equalsIgnoreCase("MATCH_NUMBER") =>
@@ -207,8 +139,21 @@ object MatchRecognize {
           Agg(fn, v, f)
         }
       case _ =>
-        val name = ident()
-        if (accept(".")) VarField(name, ident()) else ColRef(name)
+        val v = ident()
+        expect(".")
+        VarField(v, ident())
+    }
+
+    /** The tokens up to the next comma at paren depth 0, or the end. */
+    def untilComma(): Vector[String] = {
+      val out = Vector.newBuilder[String]
+      var depth = 0
+      while (!atEnd && !(depth == 0 && peek == ",")) {
+        val t = next()
+        if (t == "(") depth += 1 else if (t == ")") depth -= 1
+        out += t
+      }
+      out.result()
     }
 
     def patternVars(): Seq[PatVar] = {
@@ -239,20 +184,39 @@ object MatchRecognize {
     }
   }
 
-  /** Collect Nav nodes and rewrite them to helper-column refs. */
-  private def navCols(e: Ex): Seq[Nav] = e match {
-    case n: Nav => Seq(n)
-    case Bin(_, l, r) => navCols(l) ++ navCols(r)
-    case Not(i) => navCols(i)
-    case _ => Nil
-  }
-  private def navName(n: Nav): String =
-    s"__nav_${n.fn.toLowerCase}_${n.field}_${n.offset}"
-  private def rewriteNav(e: Ex): Ex = e match {
-    case n: Nav => ColRef(navName(n))
-    case Bin(op, l, r) => Bin(op, rewriteNav(l), rewriteNav(r))
-    case Not(i) => Not(rewriteNav(i))
-    case other => other
+  private def isNav(t: String): Boolean =
+    t.equalsIgnoreCase("PREV") || t.equalsIgnoreCase("NEXT")
+
+  /** A DEFINE body as Spark SQL text: `V.col` of a pattern variable reads
+    * the current row (`col`), and `PREV(x[, n])` / `NEXT(x[, n])` become
+    * `lag`/`lead(x[, n]) OVER (<over>)` — SQL MATCH_RECOGNIZE consumes
+    * every row, so row navigation is partition-order navigation.
+    */
+  private def defineSql(toks: Vector[String], vars: Set[String], over: String): String = {
+    val out = Vector.newBuilder[String]
+    var navCloses = List.empty[Int] // paren depths at which a PREV/NEXT call ends
+    var depth = 0
+    var i = 0
+    while (i < toks.length) {
+      val t = toks(i)
+      if (vars.contains(t) && toks.lift(i + 1).contains(".")) i += 1 // drop `V.`
+      else if (isNav(t) && toks.lift(i + 1).contains("(")) {
+        out += (if (t.equalsIgnoreCase("PREV")) "lag" else "lead")
+        navCloses ::= depth
+      } else {
+        out += t
+        if (t == "(") depth += 1
+        else if (t == ")") {
+          depth -= 1
+          if (navCloses.headOption.contains(depth)) {
+            out += s"OVER ($over)"
+            navCloses = navCloses.tail
+          }
+        }
+      }
+      i += 1
+    }
+    out.result().mkString(" ")
   }
 
   private val intervalMicros = Map(
@@ -282,7 +246,7 @@ object MatchRecognize {
     val measures = Seq.newBuilder[(Ex, String)]
     var more = true
     while (more) {
-      val e = p.expr()
+      val e = p.measure()
       p.expect("AS")
       measures += ((e, p.ident()))
       more = p.accept(",")
@@ -325,26 +289,27 @@ object MatchRecognize {
       within = Some(n * scale)
     }
 
-    var defines = Map.empty[String, Ex]
+    val defines = Seq.newBuilder[(String, Vector[String])]
     if (p.accept("DEFINE")) {
       var m = true
       while (m) {
         val v = p.ident()
         p.expect("AS")
-        defines += (v -> p.expr())
+        val body = p.untilComma()
+        require(body.nonEmpty, s"MATCH_RECOGNIZE: empty DEFINE for $v")
+        defines += (v -> body)
         m = p.accept(",")
       }
     }
     require(p.atEnd, s"MATCH_RECOGNIZE: trailing tokens at '${p.peek}'")
-    Spec(partitionBy, orderBy, measures.result(), pat, within, defines, skip, allRows)
+    Spec(partitionBy, orderBy, measures.result(), pat, within, defines.result(), skip,
+      allRows)
   }
 
   // --------------------------------------------------------- evaluation
 
   private def num(v: Any): Double = v match {
     case n: java.lang.Number => n.doubleValue()
-    case d: java.math.BigDecimal => d.doubleValue()
-    case d: scala.math.BigDecimal => d.toDouble
     case other => throw new IllegalArgumentException(s"not numeric: $other")
   }
 
@@ -355,13 +320,8 @@ object MatchRecognize {
     case other => throw new IllegalArgumentException(s"not numeric: $other")
   }
 
-  private def isNum(v: Any): Boolean = v match {
-    case _: java.lang.Number | _: java.math.BigDecimal | _: scala.math.BigDecimal => true
-    case _ => false
-  }
-
   private def compare(a: Any, b: Any): Int = (a, b) match {
-    case (x, y) if isNum(x) && isNum(y) => java.lang.Double.compare(num(x), num(y))
+    case (x: java.lang.Number, y: java.lang.Number) => java.lang.Double.compare(num(x), num(y))
     case (x: String, y: String) => x.compareTo(y)
     case (x: java.sql.Timestamp, y: java.sql.Timestamp) => x.compareTo(y)
     case (x: java.time.Instant, y: java.time.Instant) => x.compareTo(y)
@@ -370,83 +330,27 @@ object MatchRecognize {
     case _ => throw new IllegalArgumentException(s"incomparable: $a vs $b")
   }
 
-  /** Compile a DEFINE predicate into Row => Boolean over the current row.
-    * `V.col` and bare `col` both read the current row (the NFA predicate
-    * is per-event, matching the reference's simple-condition codegen).
-    */
-  private def compilePred(e: Ex, schema: StructType): Row => Boolean = {
-    val value = compileRowExpr(e, schema)
-    row => value(row) match {
-      case b: java.lang.Boolean => b.booleanValue()
-      case null => false
-      case other => throw new IllegalArgumentException(s"predicate is not boolean: $other")
-    }
-  }
+  /** The reserved column that carries variable `v`'s DEFINE result. */
+  private def defineCol(v: String): String = s"__mr_define_$v"
 
-  private def compileRowExpr(e: Ex, schema: StructType): Row => Any = e match {
-    case Lit(v) => _ => v
-    case VarField(_, f) =>
-      val i = schema.fieldIndex(f)
-      row => if (row.isNullAt(i)) null else row.get(i)
-    case ColRef(f) =>
-      val i = schema.fieldIndex(f)
-      row => if (row.isNullAt(i)) null else row.get(i)
-    case Not(inner) =>
-      val v = compileRowExpr(inner, schema)
-      row => v(row) match {
-        case b: java.lang.Boolean => java.lang.Boolean.valueOf(!b.booleanValue())
-        case null => null
-        case other => throw new IllegalArgumentException(s"NOT over non-boolean: $other")
-      }
-    case Agg(fn, v, _) =>
-      throw new IllegalArgumentException(
-        s"MATCH_RECOGNIZE subset: $fn($v.…) is only legal in MEASURES, not DEFINE")
-    case Bin(op, l, r) =>
-      val lv = compileRowExpr(l, schema)
-      val rv = compileRowExpr(r, schema)
-      op match {
-        case "AND" => row => (lv(row), rv(row)) match {
-          case (a: java.lang.Boolean, b: java.lang.Boolean) =>
-            java.lang.Boolean.valueOf(a.booleanValue() && b.booleanValue())
-          case _ => null
-        }
-        case "OR" => row => (lv(row), rv(row)) match {
-          case (a: java.lang.Boolean, b: java.lang.Boolean) =>
-            java.lang.Boolean.valueOf(a.booleanValue() || b.booleanValue())
-          case _ => null
-        }
-        case "=" | "<>" | "!=" | "<" | "<=" | ">" | ">=" => row => {
-          val (a, b) = (lv(row), rv(row))
-          if (a == null || b == null) null
-          else {
-            val c = compare(a, b)
-            val res = op match {
-              case "=" => c == 0
-              case "<>" | "!=" => c != 0
-              case "<" => c < 0
-              case "<=" => c <= 0
-              case ">" => c > 0
-              case ">=" => c >= 0
-            }
-            java.lang.Boolean.valueOf(res)
-          }
-        }
-        case "+" | "-" | "*" | "/" | "%" => row => {
-          val (a, b) = (lv(row), rv(row))
-          if (a == null || b == null) null
-          else {
-            val (x, y) = (num(a), num(b))
-            val d = op match {
-              case "+" => x + y
-              case "-" => x - y
-              case "*" => x * y
-              case "/" => x / y
-              case "%" => x % y
-            }
-            java.lang.Double.valueOf(d)
-          }
-        }
-      }
+  /** `df` plus one boolean column per DEFINE, each the predicate's SQL
+    * text compiled by Catalyst over the current row (PREV/NEXT as window
+    * functions over the clause's partition and order).
+    */
+  private def withDefines(df: DataFrame, spec: Spec): DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr}
+    val vars = spec.pattern.map(_.name).toSet
+    val over = (if (spec.partitionBy.isEmpty) ""
+      else spec.partitionBy.mkString("PARTITION BY ", ", ", " ")) +
+      spec.orderBy.mkString("ORDER BY ", ", ", "")
+    val out = df.select(col("*") +: spec.defines.map { case (v, toks) =>
+      expr(defineSql(toks, vars, over)).as(defineCol(v)) }: _*)
+    spec.defines.foreach { case (v, toks) =>
+      val dt = out.schema(defineCol(v)).dataType
+      require(dt == BooleanType, s"MATCH_RECOGNIZE: DEFINE $v must be a boolean " +
+        s"predicate, got ${dt.simpleString}: ${toks.mkString(" ")}")
+    }
+    out
   }
 
   /** Evaluation context for one emitted row: the (possibly running)
@@ -547,27 +451,8 @@ object MatchRecognize {
 
   /** Run a MATCH_RECOGNIZE clause over a bounded DataFrame. */
   def apply(df0: DataFrame, clause: String): DataFrame = {
-    val spec0 = parse(clause)
-    // PREV/NEXT in DEFINE become lag/lead window columns over
-    // (PARTITION BY, ORDER BY) — every row is consumed in SQL
-    // MATCH_RECOGNIZE, so row navigation IS partition-order navigation
-    val navs = spec0.defines.values.flatMap(navCols).toSeq.distinct
-    val (df, spec) =
-      if (navs.isEmpty) (df0, spec0)
-      else {
-        import org.apache.spark.sql.expressions.Window
-        import org.apache.spark.sql.functions.{col, lag, lead}
-        val w = Window
-          .partitionBy(spec0.partitionBy.map(col): _*)
-          .orderBy(spec0.orderBy.map(col): _*)
-        val augmented = navs.foldLeft(df0) { (d, n) =>
-          val e = if (n.fn == "PREV") lag(col(n.field), n.offset)
-                  else lead(col(n.field), n.offset)
-          d.withColumn(navName(n), e.over(w))
-        }
-        (augmented, spec0.copy(
-          defines = spec0.defines.map { case (k, v) => k -> rewriteNav(v) }))
-      }
+    val spec = parse(clause)
+    val df = withDefines(df0, spec)
     val originalFieldCount = df0.schema.length
     val schema = df.schema
     val sortKey = orderingFor(schema, spec.orderBy)
@@ -585,7 +470,7 @@ object MatchRecognize {
       StructField(alias, measureType(e, schema), nullable = true) }
     // ONE ROW PER MATCH: partition cols + measures;
     // ALL ROWS PER MATCH: every ORIGINAL input column + measures (the
-    // __nav helper columns stay internal)
+    // DEFINE columns stay internal)
     val outSchema =
       if (spec.allRows)
         StructType(schema.fields.take(originalFieldCount) ++ measureFields.toArray)
@@ -637,15 +522,16 @@ object MatchRecognize {
     * (NO SKIP / TO NEXT / TO FIRST/LAST) keep the buffer to the
     * within-horizon and suppress re-found matches by identity.
     */
-  def streaming(df: DataFrame, clause: String,
+  def streaming(df0: DataFrame, clause: String,
       maxBufferPerKey: Option[Int] = None): DataFrame = {
     val spec = parse(clause)
     require(!spec.allRows,
       "streaming MATCH_RECOGNIZE supports ONE ROW PER MATCH only (as the reference)")
-    require(spec.defines.values.flatMap(navCols).isEmpty,
+    require(!spec.defines.exists(_._2.exists(isNav)),
       "streaming MATCH_RECOGNIZE does not support PREV/NEXT (window columns need a bounded input)")
     require(spec.withinMicros.isDefined || maxBufferPerKey.isDefined,
       "streaming MATCH_RECOGNIZE needs a state bound: WITHIN or maxBufferPerKey")
+    val df = withDefines(df0, spec)
     val schema = df.schema
     val tsFn = tsExtractor(schema, spec.orderBy.head)
     val pattern = buildPattern(spec, schema)
@@ -681,7 +567,11 @@ object MatchRecognize {
 
   private def buildPattern(spec: Spec, schema: StructType): Pattern[Row] = {
     def predFor(v: String): Row => Boolean =
-      spec.defines.get(v).map(compilePred(_, schema)).getOrElse(_ => true)
+      if (!spec.defines.exists(_._1 == v)) _ => true
+      else {
+        val i = schema.fieldIndex(defineCol(v))
+        row => !row.isNullAt(i) && row.getBoolean(i)
+      }
 
     // SQL concatenation = strict adjacency (every row is consumed), and
     // quantifier repetitions are likewise consecutive. Anchoring is

@@ -32,36 +32,29 @@ object CepFuzzGen {
 
   /** One step predicate — a data value, so cases compare/replay
     * deterministically; `sql(suffix)` renders the SHARED restatement
-    * text for the step's LEAD offset, `mrSql(v)` the MATCH_RECOGNIZE
-    * DEFINE text for pattern variable `v` (the front-door dual-run), and
-    * `fn` the NFA-side closure.
+    * text for the step's LEAD offset (`sql("")`, the current row, is
+    * also the MATCH_RECOGNIZE DEFINE text of the front-door dual-run),
+    * and `fn` the NFA-side closure.
     */
   sealed trait StepPred {
     def sql(suffix: String): String
-    def mrSql(v: String): String
     def fn: CE => Boolean
   }
   final case class TypeIs(t: String) extends StepPred {
     def sql(suffix: String): String = s"event_type$suffix = '$t'"
-    def mrSql(v: String): String = s"$v.event_type = '$t'"
     def fn: CE => Boolean = _.event_type == t
   }
   final case class TypeIn(ts: Seq[String]) extends StepPred {
     def sql(suffix: String): String =
       s"event_type$suffix IN (${ts.map(t => s"'$t'").mkString(", ")})"
-    // the MR expression subset has no IN — the OR chain is equivalent
-    def mrSql(v: String): String =
-      ts.map(t => s"$v.event_type = '$t'").mkString("(", " OR ", ")")
     def fn: CE => Boolean = e => ts.contains(e.event_type)
   }
   final case class CentsGe(c: Long) extends StepPred {
     def sql(suffix: String): String = s"cents$suffix >= $c"
-    def mrSql(v: String): String = s"$v.cents >= $c"
     def fn: CE => Boolean = _.cents >= c
   }
   final case class IdMod(m: Long, r: Long) extends StepPred {
     def sql(suffix: String): String = s"(event_id$suffix % $m) = $r"
-    def mrSql(v: String): String = s"($v.event_id % $m) = $r"
     def fn: CE => Boolean = e => e.event_id % m == r
   }
 
@@ -114,7 +107,7 @@ object CepFuzzGen {
     val within = c.withinMinutes
       .map(m => s"\nWITHIN INTERVAL '$m' MINUTE").getOrElse("")
     val defines = c.steps.zip(vars)
-      .map { case (p, v) => s"$v AS ${p.mrSql(v)}" }
+      .map { case (p, v) => s"$v AS ${p.sql("")}" }
     s"""PARTITION BY user_id
        |ORDER BY ts, event_id
        |MEASURES FIRST(${vars.head}.event_id) AS a_id,
@@ -250,7 +243,7 @@ object CepFuzzGen {
       }
       val within = withinMinutes
         .map(m => s"\nWITHIN INTERVAL '$m' MINUTE").getOrElse("")
-      val defines = defs.map { case (v, p) => s"$v AS ${p.mrSql(v)}" }
+      val defines = defs.map { case (v, p) => s"$v AS ${p.sql("")}" }
       val lastVar = if (arm == "optional") "C" else "B"
       s"""PARTITION BY user_id
          |ORDER BY ts, event_id
@@ -302,8 +295,8 @@ object CepFuzzGen {
          |AFTER MATCH SKIP TO NEXT ROW
          |PATTERN (A$q B)
          |WITHIN INTERVAL '$withinMinutes' MINUTE
-         |DEFINE A AS ${predA.mrSql("A")},
-         |       B AS ${predB.mrSql("B")}""".stripMargin
+         |DEFINE A AS ${predA.sql("")},
+         |       B AS ${predB.sql("")}""".stripMargin
     }
   }
 

@@ -240,31 +240,27 @@ object StreamingRank {
 
   /** The one retractable top-n operator, reference state shape (the
     * retracting top-n function's data state + sorted index, see
-    * [[TopNIndex]]): `rows` holds id → full row
-    * (point reads/writes only), `idx` holds id → sort-key projection and
-    * is mirrored into a [[TopNIndex]] sorted set once per micro-batch.
-    * Each change costs O(log m) index mutation + O(n) boundary walk and
-    * reads only the affected ids' payloads; the emitted changelog is the
-    * DIFF of the visible top-n, rank cascades included.
+    * [[TopNIndex]]): one MapState, `rows` (id → full row), is the only
+    * data state; the sorted index is built from it once per micro-batch
+    * (each row's sort-key projection) and lives for that batch only.
+    * Each change writes one state entry, costs O(log m) index mutation +
+    * O(n) boundary walk and reads only the affected ids' payloads; the
+    * emitted changelog is the DIFF of the visible top-n, rank cascades
+    * included.
     */
   class RowTopNProcessor(n: Int, schema: StructType, idIdx: Int,
       orderIdxs: Seq[(Int, Boolean)],
       ttl: TTLConfig = TTLConfig.NONE)
       extends StatefulProcessor[String, Row, Row] {
     @transient private var rowsState: MapState[Long, Row] = _
-    @transient private var idxState: MapState[Long, Row] = _
     @transient private var nextId: ValueState[Long] = _
     private val kindIdx = schema.fieldNames.indexOf(Changelog.RowKindCol)
     private val dataIdxs =
       schema.fieldNames.indices.filter(i => i != kindIdx)
-    private val sortSchema =
-      StructType(orderIdxs.map { case (i, _) => schema.fields(i) })
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
       rowsState = getHandle.getMapState[Long, Row]("rows",
         Encoders.scalaLong, Encoders.row(schema), ttl)
-      idxState = getHandle.getMapState[Long, Row]("idx",
-        Encoders.scalaLong, Encoders.row(sortSchema), ttl)
       nextId = getHandle.getValueState[Long]("nextId",
         Encoders.scalaLong, ttl)
     }
@@ -302,7 +298,7 @@ object StreamingRank {
         timerValues: TimerValues): Iterator[Row] = {
       val outRows = scala.collection.mutable.ArrayBuffer.empty[Row]
       val index = new TopNIndex[Row](n, sortOrd)
-      index.load(idxState.iterator().map { case (id, s) => (id, s) })
+      index.load(rowsState.iterator().map { case (id, r) => (id, sortKeyOf(r)) })
 
       rows.foreach { r =>
         val kind = if (kindIdx < 0) Changelog.Insert else r.getByte(kindIdx)
@@ -316,15 +312,9 @@ object StreamingRank {
         // the changed id's previous payload — needed for its retract
         // half; the only extra state read this record triggers
         val oldRow =
-          if (index.sortOf(id).isDefined && rowsState.containsKey(id))
-            Option(rowsState.getValue(id))
-          else None
+          if (index.sortOf(id).isDefined) Option(rowsState.getValue(id)) else None
         val wasVisible = index.isVisible(id)
-        if (del) { rowsState.removeKey(id); idxState.removeKey(id) }
-        else {
-          rowsState.updateValue(id, r)
-          idxState.updateValue(id, sortKeyOf(r))
-        }
+        if (del) rowsState.removeKey(id) else rowsState.updateValue(id, r)
         val diffs = index.apply(del, id, sortKeyOf(r))
         if (diffs.isEmpty) {
           // sort key unchanged: a payload-only change on a visible id

@@ -6,9 +6,9 @@ import scala.collection.mutable
   * rank operators (flink-table-runtime/.../operators/rank/: the
   * retracting top-n function's `treeMap` sorted index + data state;
   * UpdatableTopNFunction.java:71): a per-key ordered set over
-  * (sortKey, id), mirrored from a point-addressable MapState once per
-  * micro-batch, with per-record O(log m) mutation and O(n) boundary
-  * walks.
+  * (sortKey, id), built once per micro-batch from the operator's one
+  * point-addressable data MapState (each row's sort-key projection), with
+  * per-record O(log m) mutation and O(n) boundary walks.
   *
   * The visible-set diff of one change is at most one retract plus one
   * insert (or the -U/+U pair when the same id stays visible), so
@@ -36,7 +36,9 @@ final class TopNIndex[S](n: Int, ord: Ordering[S]) {
 
   import TopNIndex.Vis
 
-  /** Mirror the persisted index (id → sortKey) — once per micro-batch. */
+  /** Build the index from the persisted rows' (id, sortKey) — once per
+    * micro-batch.
+    */
   def load(entries: Iterator[(Long, S)]): Unit =
     entries.foreach { case (id, s) => byId(id) = s; tree += ((s, id)) }
 

@@ -88,15 +88,38 @@ class MatchRecognizeSpec extends SparkSuite {
     assert(out == Set(("u1", 3L, "click"), ("u2", 1L, "error")))
   }
 
-  test("arithmetic and boolean operators in DEFINE") {
-    val out = MatchRecognize(events,
-      """PARTITION BY user_id
+  /** The (user, seq) rows a one-variable pattern matches under `define`. */
+  private def matching(define: String,
+      df: org.apache.spark.sql.DataFrame = events): Set[(String, Long)] =
+    MatchRecognize(df,
+      s"""PARTITION BY user_id
         |ORDER BY seq
         |MEASURES A.seq AS s
         |PATTERN (A)
-        |DEFINE A AS amount * 2 >= 40 AND (event_type = 'click' OR event_type = 'buy')""".stripMargin)
+        |DEFINE A AS $define""".stripMargin)
       .as[(String, Long)].collect().toSet
-    assert(out == Set(("u1", 2L), ("u1", 3L), ("u2", 1L), ("u2", 3L)))
+
+  test("arithmetic and boolean operators in DEFINE") {
+    assert(matching("amount * 2 >= 40 AND (event_type = 'click' OR event_type = 'buy')") ==
+      Set(("u1", 2L), ("u1", 3L), ("u2", 1L), ("u2", 3L)))
+    // DEFINE is a Spark SQL predicate: IN, CASE, LIKE and built-ins
+    assert(matching("A.event_type IN ('click', 'buy')") ==
+      Set(("u1", 1L), ("u1", 2L), ("u1", 3L), ("u1", 4L), ("u2", 1L), ("u2", 3L)))
+    assert(matching(
+      "CASE WHEN event_type = 'buy' THEN amount > 55 ELSE amount >= 20 END") ==
+      Set(("u1", 2L), ("u1", 3L), ("u2", 3L)))
+    assert(matching("event_type LIKE 'er%'") == Set(("u1", 5L), ("u2", 2L)))
+    assert(matching("length(event_type) > 3") ==
+      Set(("u1", 1L), ("u1", 2L), ("u1", 4L), ("u1", 5L), ("u2", 2L)))
+  }
+
+  test("DEFINE follows SQL three-valued logic over NULL") {
+    val df = Seq(("k", 1L, 5L, Option.empty[Long]), ("k", 2L, -5L, Option.empty[Long]))
+      .toDF("user_id", "seq", "x", "y")
+    // seq 1: TRUE OR NULL = TRUE, NOT (FALSE AND NULL) = TRUE → match;
+    // seq 2: FALSE OR NULL and NOT (TRUE AND NULL) are NULL → no match
+    assert(matching("x > 0 OR y = 1", df) == Set(("k", 1L)))
+    assert(matching("NOT (x < 0 AND y = 1)", df) == Set(("k", 1L)))
   }
 
   test("PREV navigation in DEFINE: the canonical falling-price pattern") {
@@ -127,8 +150,9 @@ class MatchRecognizeSpec extends SparkSuite {
         |ALL ROWS PER MATCH
         |PATTERN (A)
         |DEFINE A AS v < NEXT(v)""".stripMargin)
-    // helper __nav columns must not leak into the output schema
+    // the internal DEFINE columns must not leak into the output schema
     assert(out.columns.toSeq == Seq("k", "seq", "v", "c"))
+    assert(!out.columns.exists(_.startsWith("__")))
     assert(out.select($"seq").as[Long].collect().toSet == Set(1L)) // 5<9 only
   }
 

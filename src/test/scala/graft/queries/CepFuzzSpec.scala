@@ -764,9 +764,9 @@ class CepFuzzSpec extends SparkSuite {
              |ONE ROW PER MATCH
              |AFTER MATCH $mrSkip
              |PATTERN (A B{$n} C)$within
-             |DEFINE A AS ${predA.mrSql("A")},
-             |       B AS ${predB.mrSql("B")},
-             |       C AS ${predC.mrSql("C")}""".stripMargin
+             |DEFINE A AS ${predA.sql("")},
+             |       B AS ${predB.sql("")},
+             |       C AS ${predC.sql("")}""".stripMargin
         val viaSql = MatchRecognize(ev, clause)
           .collect().map(r0 => (r0.getLong(0), r0.getLong(1), r0.getLong(2)))
           .sorted.toSeq
