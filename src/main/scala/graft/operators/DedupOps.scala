@@ -20,6 +20,10 @@ import org.apache.spark.sql.types._
   *     two distinct-shingle ARRAYS and scores with `array_intersect` —
   *     O(|A|+|B|) per pair in one codegen'd projection, no shingle
   *     explode, no per-pair groupBy.
+  *
+  * Each rule's DuckDB twin sits beside its operator (`…Sql`: shingles,
+  * the minhash family, the simhash bits); an oracle composes those twins
+  * and never re-types a rule.
   */
 object DedupOps {
   import TextOps.{tokens, wordHash}
@@ -51,6 +55,17 @@ object DedupOps {
         .otherwise(transform(
           sequence(lit(1), size(w) - (n - 1)),
           i => concat_ws(" ", (0 until n).map(j => element_at(w, i + j)): _*)))), 1)
+
+  /** SQL-oracle twin of [[shingles]] over a token-list expression `w`
+    * (DuckDB), with the same short-document guard: fewer than `n` words
+    * give an empty list.
+    */
+  def shinglesSql(w: String, n: Int = 3): String = {
+    val gram = (0 until n).map(j => if (j == 0) s"$w[i]" else s"$w[i+$j]")
+      .mkString(" || ' ' || ")
+    s"""CASE WHEN len($w) < $n THEN CAST([] AS VARCHAR[])
+       |  ELSE list_transform(generate_series(1, len($w) - ${n - 1}), i -> $gram) END""".stripMargin
+  }
 
   /** Universal-hash family over the Mersenne prime 2^31-1: one md5 per
     * shingle, then h_i = (a_i * h + b_i) mod p in pure integer arithmetic
@@ -353,6 +368,18 @@ object DedupOps {
       when(bitSum >= 0, lit(1L << b)).otherwise(lit(0L))
     }.reduce(_ + _)
     hashed.select(col(idCol), sig.as("simhash"))
+  }
+
+  /** SQL-oracle twin of [[simhash]] over a token-list expression `w`
+    * (DuckDB): the BIGINT signature.
+    */
+  def simhashSql(w: String, bits: Int = 16): String = {
+    val bitTerms = (0 until bits).map { b =>
+      s"""CASE WHEN list_sum(list_transform($w,
+         |  x -> ((${TextOps.wordHashSql("x")} >> $b) % 2) * 2 - 1)) >= 0
+         |  THEN ${1L << b} ELSE 0 END""".stripMargin
+    }.mkString(" + ")
+    s"CAST($bitTerms AS BIGINT)"
   }
 
   /** Connected-component resolution over a near-dup pair graph — the

@@ -18,6 +18,10 @@ import org.apache.spark.sql.types._
   *
   * Dot products run in double precision with a left-to-right fold —
   * deterministic and bit-identical to the SQL oracle's list_dot_product.
+  *
+  * Each rule's DuckDB twin sits beside its operator (`…Sql`: cosine, the
+  * top-k tail, the RP-LSH bucket, the one-flip probes, the IVF cell
+  * assignment); an oracle composes those twins and never re-types a rule.
   */
 object SimilarityOps {
 
@@ -32,21 +36,35 @@ object SimilarityOps {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Exact brute-force cosine top-k: for each query vector, the k nearest
-    * corpus vectors (self excluded), ties broken by corpus id.
+  /** SQL-oracle twin of [[cosine]] over two DOUBLE[] expressions (DuckDB). */
+  def cosineSql(a: String, b: String): String =
+    s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))"
+
+  /** [[cosine]] over norms hoisted per ROW (computed once, carried
+    * through the join) instead of per scored pair — the same sqrt of the
+    * same fold, so the cosine is bit-identical; per-pair work drops to
+    * one dot product.
     */
-  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    // norms hoisted per ROW (computed once, carried through the join)
-    // instead of per scored pair — same sqrt of the same fold, so the
-    // cosine is bit-identical; per-pair work drops to one dot product
-    val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-      norm(col("embedding")).as("q_n"))
-    val c = corpus.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-      norm(col("embedding")).as("c_n"))
-    val scored = q.crossJoin(c)
+  private def hoistedCosine(a: String, an: String, b: String, bn: String): Column =
+    dot(col(a), col(b)) / (col(an) * col(bn))
+
+  /** One side of a scoring join: (id, emb, norm(emb)) under the given
+    * names, plus any `extra` key columns.
+    */
+  private def side(df: DataFrame, idCol: String, embCol: String,
+      id: String, emb: String, n: String, extra: Column*): DataFrame =
+    df.select(Seq(col(idCol).as(id), col(embCol).as(emb),
+      norm(col(embCol)).as(n)) ++ extra: _*)
+
+  /** The top-k tail every search shares: over joined (q_id, q_emb, q_n,
+    * c_id, c_emb, c_n) rows, self pairs dropped, the cosine ranked per
+    * query (ties broken by corpus id), kept where rank <= k.
+    */
+  private def rankTopK(joined: DataFrame, k: Int): DataFrame = {
+    val scored = joined
       .filter(col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id"),
-        (dot(col("q_emb"), col("c_emb")) / (col("q_n") * col("c_n"))).as("cos"))
+        hoistedCosine("q_emb", "q_n", "c_emb", "c_n").as("cos"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
     scored
@@ -55,25 +73,33 @@ object SimilarityOps {
       .filter(col("rank") <= k)
   }
 
+  /** SQL-oracle twin of the top-k tail over a `scored` CTE of (q_id,
+    * c_id, cos): CTE `r` and the final select, the cosine rounded to 6 dp
+    * as the queries round it. Follows the caller's last CTE.
+    */
+  def topKSql(k: Int): String =
+    s"""r AS (SELECT q_id, c_id, cos,
+       |  CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS BIGINT) AS rank
+       |  FROM scored)
+       |SELECT q_id, c_id, round(cos, 6) AS cos, rank FROM r
+       |WHERE rank <= $k ORDER BY q_id, rank""".stripMargin
+
+  /** Exact brute-force cosine top-k: for each query vector, the k nearest
+    * corpus vectors (self excluded), ties broken by corpus id.
+    */
+  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    rankTopK(side(queries, "vec_id", "embedding", "q_id", "q_emb", "q_n")
+      .crossJoin(side(corpus, "vec_id", "embedding", "c_id", "c_emb", "c_n")), k)
+
   /** IVF-style bucketed top-k: candidates restricted to the query's coarse
     * cell (`label`), cutting scored pairs by ~|cells|× at some recall cost.
     */
-  def bucketedTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-      norm(col("embedding")).as("q_n"), col("label").as("cell"))
-    val c = corpus.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-      norm(col("embedding")).as("c_n"), col("label").as("cell"))
-    val scored = q.join(c, "cell")
-      .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        (dot(col("q_emb"), col("c_emb")) / (col("q_n") * col("c_n"))).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-    scored
-      .select(col("q_id"), col("c_id"), col("cos"),
-        row_number().over(w).cast(LongType).as("rank"))
-      .filter(col("rank") <= k)
-  }
+  def bucketedTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    rankTopK(
+      side(queries, "vec_id", "embedding", "q_id", "q_emb", "q_n",
+        col("label").as("cell"))
+        .join(side(corpus, "vec_id", "embedding", "c_id", "c_emb", "c_n",
+          col("label").as("cell")), "cell"), k)
 
   /** Deterministic coarse centroids for IVF: the `nCells` lowest-id
     * corpus vectors, as (seed_id, s_emb). Any coarse quantizer works for
@@ -108,6 +134,24 @@ object SimilarityOps {
           struct(s.getField("seed_id").as("cell"), c.as("best")))
           .otherwise(acc)
       }).getField("cell")
+
+  /** SQL-oracle twin of [[seedCentroids]] + [[nearestCell]] (DuckDB): two
+    * CTEs over a relation `src` of (vec_id, embedding) — `seeds` (seed_id,
+    * se), its `nCells` lowest ids, and `cass` (id, e, cell), every vector
+    * with its argmax-cosine seed, ties to the lower seed_id. Follows the
+    * caller's earlier CTEs.
+    */
+  def ivfCellsSql(src: String, nCells: Int): String =
+    s"""seeds AS (
+       |  SELECT vec_id AS seed_id, embedding::DOUBLE[] AS se
+       |  FROM $src ORDER BY vec_id LIMIT $nCells),
+       |cass AS (
+       |  SELECT id, e, seed_id AS cell FROM (
+       |    SELECT c.id, c.e, s.seed_id,
+       |      row_number() OVER (PARTITION BY c.id
+       |        ORDER BY ${cosineSql("c.e", "s.se")} DESC, s.seed_id) AS rn
+       |    FROM (SELECT vec_id AS id, embedding::DOUBLE[] AS e FROM $src) c, seeds s)
+       |  WHERE rn = 1)""".stripMargin
 
   /** One Lloyd iteration: assign every corpus vector to its nearest
     * centroid, then recompute each centroid as the per-dimension mean of
@@ -180,16 +224,7 @@ object SimilarityOps {
       .filter(col("rn") <= nProbe)
       .select(col("q_id"), col("q_emb"), norm(col("q_emb")).as("q_n"),
         col("seed_id").as("cell"))
-    val scored = probes.join(assigned, "cell")
-      .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        (dot(col("q_emb"), col("c_emb")) / (col("q_n") * col("c_n"))).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-    scored
-      .select(col("q_id"), col("c_id"), col("cos"),
-        row_number().over(w).cast(LongType).as("rank"))
-      .filter(col("rank") <= k)
+    rankTopK(probes.join(assigned, "cell"), k)
   }
 
   /** IVF top-k with deterministic seeded centroids (the oracle-checked
@@ -216,6 +251,34 @@ object SimilarityOps {
       when(proj >= 0, lit(1L << b)).otherwise(lit(0L))
     }.reduce(_ + _)
 
+  /** SQL-oracle twin of [[rpLshBucket]] over a numeric-list expression
+    * `e` (DuckDB): the [[planeSign]] parity rule in SQL, one sign-vector
+    * projection per bit.
+    */
+  def rpLshBucketSql(e: String, dim: Int, bits: Int): String = {
+    val bitTerms = (0 until bits).map { b =>
+      s"""CASE WHEN list_sum(list_transform(generate_series(1, $dim),
+         |  i -> $e[i]::DOUBLE * (CASE WHEN ('0x' || substr(md5($b || ':' || (i-1)), 1, 1))::INT % 2 = 0
+         |                       THEN 1.0 ELSE -1.0 END))) >= 0
+         |  THEN ${1L << b} ELSE 0 END""".stripMargin
+    }.mkString(" + ")
+    s"CAST($bitTerms AS BIGINT)"
+  }
+
+  /** The buckets bucket `b` probes: itself, plus every bucket one sign
+    * flip away at `probeRadius = 1` (multi-probe).
+    */
+  private def probeList(b: Column, bits: Int, probeRadius: Int): Column = {
+    require(probeRadius >= 0 && probeRadius <= 1, "probeRadius 0 or 1")
+    if (probeRadius == 0) array(b)
+    else array(b +: (0 until bits).map(i => b.bitwiseXOR(lit(1L << i))): _*)
+  }
+
+  /** SQL-oracle twin of the one-flip [[probeList]], unnested (DuckDB). */
+  def oneFlipProbesSql(b: String, bits: Int): String =
+    (b +: (0 until bits).map(i => s"xor($b, ${1L << i})"))
+      .mkString("unnest([", ", ", "])")
+
   /** RP-LSH bucket-join top-k with multi-probe: corpus vectors bucket by
     * their `bits` hyperplane signs (one projection per vector, no
     * shuffle); each query probes its own bucket plus, at
@@ -227,29 +290,13 @@ object SimilarityOps {
   def rpLshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       dim: Int = 64, bits: Int = 6, probeRadius: Int = 1,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    require(probeRadius >= 0 && probeRadius <= 1, "probeRadius 0 or 1")
-    val c = corpus.select(col(idCol).as("c_id"), col(embCol).as("c_emb"),
-      norm(col(embCol)).as("c_n"),
+    val c = side(corpus, idCol, embCol, "c_id", "c_emb", "c_n",
       rpLshBucket(col(embCol), dim, bits).as("bucket"))
-    val qb = queries.select(col(idCol).as("q_id"), col(embCol).as("q_emb"),
-      norm(col(embCol)).as("q_n"),
+    val qb = side(queries, idCol, embCol, "q_id", "q_emb", "q_n",
       rpLshBucket(col(embCol), dim, bits).as("qb"))
-    val probeList =
-      if (probeRadius == 0) array(col("qb"))
-      else array(col("qb") +: (0 until bits).map(i =>
-        col("qb").bitwiseXOR(lit(1L << i))): _*)
     val probes = qb.select(col("q_id"), col("q_emb"), col("q_n"),
-      explode(probeList).as("bucket"))
-    val scored = probes.join(c, "bucket")
-      .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        (dot(col("q_emb"), col("c_emb")) / (col("q_n") * col("c_n"))).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-    scored
-      .select(col("q_id"), col("c_id"), col("cos"),
-        row_number().over(w).cast(LongType).as("rank"))
-      .filter(col("rank") <= k)
+      explode(probeList(col("qb"), bits, probeRadius)).as("bucket"))
+    rankTopK(probes.join(c, "bucket"), k)
   }
 
   /** Embedding-cosine near-duplicate pairs — the embedding modality of
@@ -271,19 +318,12 @@ object SimilarityOps {
       dim: Int = 64, bits: Int = 6, probeRadius: Int = 1,
       idCol: String = "vec_id", embCol: String = "embedding",
       saltTarget: Int = 0): DataFrame = {
-    require(probeRadius >= 0 && probeRadius <= 1, "probeRadius 0 or 1")
-    val c = corpus.select(col(idCol).as("id_b"), col(embCol).as("emb_b"),
-      norm(col(embCol)).as("n_b"),
+    val c = side(corpus, idCol, embCol, "id_b", "emb_b", "n_b",
       rpLshBucket(col(embCol), dim, bits).as("bucket"))
-    val a = corpus.select(col(idCol).as("id_a"), col(embCol).as("emb_a"),
-      norm(col(embCol)).as("n_a"),
+    val a = side(corpus, idCol, embCol, "id_a", "emb_a", "n_a",
       rpLshBucket(col(embCol), dim, bits).as("ab"))
-    val probeList =
-      if (probeRadius == 0) array(col("ab"))
-      else array(col("ab") +: (0 until bits).map(i =>
-        col("ab").bitwiseXOR(lit(1L << i))): _*)
     val probes = a.select(col("id_a"), col("emb_a"), col("n_a"),
-      explode(probeList).as("bucket"))
+      explode(probeList(col("ab"), bits, probeRadius)).as("bucket"))
     val joined =
       if (saltTarget > 0) {
         val (ps, cs) = SkewOps.saltedSides(probes, c, Seq("bucket"), "id_b",
@@ -293,7 +333,7 @@ object SimilarityOps {
     joined
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        (dot(col("emb_a"), col("emb_b")) / (col("n_a") * col("n_b"))).as("cos"))
+        hoistedCosine("emb_a", "n_a", "emb_b", "n_b").as("cos"))
       .filter(col("cos") >= threshold)
   }
 
@@ -338,8 +378,7 @@ object SimilarityOps {
       } else probes.join(builds, "bucket")
     val dups = joined
       .filter(col("id_b") < col("id_a"))
-      .filter(dot(col("e_a"), col("e_b")) / (col("n_a") * col("n_b"))
-        >= threshold)
+      .filter(hoistedCosine("e_a", "n_a", "e_b", "n_b") >= threshold)
       .select(col("id_a").as("id")).distinct()
     assigned
       .join(dups.withColumn("__dup", lit(true)), Seq("id"), "left")

@@ -70,14 +70,14 @@ object CepQueries {
     }),
 
     // PREV navigation through the SQL front door: maximal runs of
-    // strictly-decreasing event_id per user (the canonical falling-price
+    // strictly-falling value per user (the canonical falling-price
     // MATCH_RECOGNIZE shape). The oracle reconstructs the same maximal
     // runs with a lag + gaps-and-islands computation.
     "q_cep_prev" -> ((s, dir) => {
       import s.implicits._
       t(s, dir, "events")
         .select($"user_id", unix_micros(col("ts").cast(TimestampType)).as("ts"),
-          $"event_type", $"event_id")
+          $"event_type", $"event_id", $"value")
         .createOrReplaceTempView("cep_ev_prev")
       graft.GraftSql.sql(s,
         """SELECT * FROM cep_ev_prev MATCH_RECOGNIZE (
@@ -88,7 +88,7 @@ object CepQueries {
           |  ONE ROW PER MATCH
           |  AFTER MATCH SKIP PAST LAST ROW
           |  PATTERN (D+)
-          |  DEFINE D AS event_id < PREV(event_id)
+          |  DEFINE D AS value < PREV(value)
           |) ORDER BY user_id, start_id""".stripMargin)
     }),
 
@@ -199,14 +199,14 @@ object CepQueries {
         |    (SELECT MAX(epoch_us(ts)) FROM ${Tables.duckEvents})
         |ORDER BY user_id, buy_ts""".stripMargin,
 
-    // maximal strictly-decreasing runs via lag + gaps-and-islands: a row
-    // is "down" iff its event_id < the previous row's; consecutive down
+    // maximal strictly-falling runs via lag + gaps-and-islands: a row
+    // is "down" iff its value < the previous row's; consecutive down
     // rows share (rn - cumulative down count)
     "q_cep_prev" ->
       s"""WITH x AS (
         |  SELECT user_id, event_id,
         |    row_number() OVER w AS rn,
-        |    CASE WHEN event_id < lag(event_id) OVER w THEN 1 ELSE 0 END AS is_down
+        |    CASE WHEN value < lag(value) OVER w THEN 1 ELSE 0 END AS is_down
         |  FROM ${Tables.duckEvents}
         |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
         |g AS (

@@ -1,15 +1,18 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.{CurationOps, DedupOps, MultimodalOps, SimilarityOps, TextOps}
+import graft.operators.{CacheOnce, CurationOps, DedupOps, MultimodalOps, SimilarityOps, TextOps}
 import Q._
 
 /** Training-data pipeline operators (beyond the reference's own surface):
   * text analysis, dedup (exact / MinHash+LSH / SimHash / n-gram Jaccard),
   * similarity search over embeddings, and multimodal chunk plumbing —
-  * each wired to a DuckDB oracle computing the identical result.
+  * each wired to a DuckDB oracle computing the identical result. An
+  * oracle composes its operator's `…Sql` twin (TextOps, DedupOps,
+  * SimilarityOps) and never re-types a rule.
   *
   * The synthetic corpus has no exact duplicates, so dedup queries inject
   * deterministic copies (docs with doc_id % 10 == 0, re-added at
@@ -18,6 +21,43 @@ import Q._
 object PipelineQueries {
 
   private val dupOffset = 1000000L
+
+  /** `df` with its deterministic exact copies injected: rows whose
+    * `idCol` % 10 == 0, re-added at id + `offset`.
+    */
+  private def withDups(df: DataFrame, idCol: String,
+      offset: Long = dupOffset): DataFrame =
+    df.unionAll(df.filter(col(idCol) % 10 === 0)
+      .withColumn(idCol, col(idCol) + offset))
+
+  /** SQL-oracle twin of [[withDups]] over `table`'s `idCol` and `cols`. */
+  private def withDupsSql(table: String, idCol: String, cols: String): String =
+    s"""SELECT $idCol, $cols FROM $table
+       |UNION ALL
+       |SELECT $idCol + $dupOffset, $cols FROM $table WHERE $idCol % 10 = 0""".stripMargin
+
+  /** The MinHash-LSH tail: `sig` cached for the consuming action, banded
+    * into candidate pairs, each verified by exact Jaccard over `docs`.
+    */
+  private def lshVerified(docs: DataFrame, sig: DataFrame): DataFrame = {
+    CacheOnce.untilConsumed(sig)
+    DedupOps.jaccardVerify(docs,
+      DedupOps.candidatePairs(DedupOps.lshBuckets(sig)))
+  }
+
+  /** The near-dup pair graph q_dedup_cluster resolves, over document ids
+    * `d`: decade 4-chains, century stars and doubling cross-links.
+    */
+  private def clusterEdges(d: DataFrame): DataFrame = {
+    val chain = d.filter(col("doc_id") % 10 < 3)
+      .select(col("doc_id").as("id_a"), (col("doc_id") + 1).as("id_b"))
+    val star = d.filter(col("doc_id") % 100 >= 95)
+      .select(col("doc_id").as("id_a"),
+        (col("doc_id") - col("doc_id") % 100).as("id_b"))
+    val cross = d.filter(col("doc_id") < 50 && col("doc_id") % 7 === 0)
+      .select(col("doc_id").as("id_a"), (col("doc_id") * 2).as("id_b"))
+    chain.union(star).union(cross)
+  }
 
   // [[CurationOps.piiPatterns]] regexes, shared by every PII oracle
   // (RE2-compatible, identical text both engines)
@@ -40,14 +80,8 @@ object PipelineQueries {
     // q_dedup_lsh. The per-query delta to q_dedup_lsh in bench_out.json
     // quantifies the md5 oracle tax a real deployment does not pay.
     "b_dedup_lsh_fast" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val withDups = docs.unionAll(
-        docs.filter(col("doc_id") % 10 === 0)
-          .withColumn("doc_id", col("doc_id") + dupOffset))
-      val sig = DedupOps.minhashFast(withDups, k = 8)
-      graft.operators.CacheOnce.untilConsumed(sig)
-      val pairs = DedupOps.candidatePairs(DedupOps.lshBuckets(sig))
-      DedupOps.jaccardVerify(withDups, pairs)
+      val docs = withDups(t(s, dir, "documents"), "doc_id")
+      lshVerified(docs, DedupOps.minhashFast(docs, k = 8))
         .filter(col("jaccard") >= 0.8)
         .orderBy(col("id_a"), col("id_b"))
     }),
@@ -104,15 +138,7 @@ object PipelineQueries {
     */
   private def clusterScale(s: org.apache.spark.sql.SparkSession,
       dir: String, factor: Int): org.apache.spark.sql.DataFrame = {
-    val d = t(s, dir, "documents").select(col("doc_id"))
-    val chain = d.filter(col("doc_id") % 10 < 3)
-      .select(col("doc_id").as("id_a"), (col("doc_id") + 1).as("id_b"))
-    val star = d.filter(col("doc_id") % 100 >= 95)
-      .select(col("doc_id").as("id_a"),
-        (col("doc_id") - col("doc_id") % 100).as("id_b"))
-    val cross = d.filter(col("doc_id") < 50 && col("doc_id") % 7 === 0)
-      .select(col("doc_id").as("id_a"), (col("doc_id") * 2).as("id_b"))
-    val base = chain.union(star).union(cross)
+    val base = clusterEdges(t(s, dir, "documents").select(col("doc_id")))
     val edges = base.crossJoin(
         s.range(factor * 200L).toDF("rep").hint("broadcast"))
       .select((col("id_a") + col("rep") * 100000000L).as("id_a"),
@@ -166,13 +192,8 @@ object PipelineQueries {
         .withColumn("text", regexp_replace(col("text"), lit("(\\S+)"),
           concat(lit("$1zq"), col("rep").cast("string"))))
         .drop("rep")
-    val withDups = docs.unionAll(
-      docs.filter(col("doc_id") % 10 === 0)
-        .withColumn("doc_id", col("doc_id") + dupOffset * factor))
-    val sig = DedupOps.minhashFast(withDups, k = 8)
-    graft.operators.CacheOnce.untilConsumed(sig)
-    val pairs = DedupOps.candidatePairs(DedupOps.lshBuckets(sig))
-    DedupOps.jaccardVerify(withDups, pairs)
+    val dups = withDups(docs, "doc_id", dupOffset * factor)
+    lshVerified(dups, DedupOps.minhashFast(dups, k = 8))
       .agg(count(lit(1)).as("candidate_pairs"),
         sum(when(col("jaccard") >= 0.8, 1L).otherwise(0L)).as("near_dups"))
   }
@@ -392,11 +413,7 @@ object PipelineQueries {
     // previous one's output schema) and that the whole chain stays
     // engine-reproducible, not just each stage alone.
     "q_pipeline_e2e" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val withDups = docs.unionAll(
-        docs.filter(col("doc_id") % 10 === 0)
-          .withColumn("doc_id", col("doc_id") + dupOffset))
-      val decorated = withDups.withColumn("text",
+      val decorated = withDups(t(s, dir, "documents"), "doc_id").withColumn("text",
         when(col("doc_id") % 7 === 0, concat(col("text"),
           lit(" mail x"), col("doc_id").cast(StringType), lit("@ex.com")))
           .otherwise(col("text")))
@@ -424,11 +441,7 @@ object PipelineQueries {
 
     // Exact dedup over a corpus with injected duplicates (DedupOps.exactDedup).
     "q_dedup_exact" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val withDups = docs.unionAll(
-        docs.filter(col("doc_id") % 10 === 0)
-          .withColumn("doc_id", col("doc_id") + dupOffset))
-      DedupOps.exactDedup(withDups)
+      DedupOps.exactDedup(withDups(t(s, dir, "documents"), "doc_id"))
         .orderBy(col("doc_id"))
     }),
 
@@ -446,14 +459,8 @@ object PipelineQueries {
     // consuming action (it feeds 4 band branches and a self-join — 8
     // consumers) and released by CacheOnce when that action completes.
     "q_dedup_lsh" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val withDups = docs.unionAll(
-        docs.filter(col("doc_id") % 10 === 0)
-          .withColumn("doc_id", col("doc_id") + dupOffset))
-      val sig = DedupOps.minhash(withDups, k = 8)
-      graft.operators.CacheOnce.untilConsumed(sig)
-      val pairs = DedupOps.candidatePairs(DedupOps.lshBuckets(sig))
-      DedupOps.jaccardVerify(withDups, pairs)
+      val docs = withDups(t(s, dir, "documents"), "doc_id")
+      lshVerified(docs, DedupOps.minhash(docs, k = 8))
         .filter(col("jaccard") >= 0.8)
         .orderBy(col("id_a"), col("id_b"))
     }),
@@ -542,11 +549,8 @@ object PipelineQueries {
     // cosine ~0.51), so exact copies are injected as in the text dedup
     // queries; threshold 0.4 also surfaces the strongest natural pairs.
     "q_dedup_embed" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val withDups = emb.unionAll(
-        emb.filter(col("vec_id") % 10 === 0)
-          .withColumn("vec_id", col("vec_id") + dupOffset))
-      SimilarityOps.embedNearDupPairs(withDups, threshold = 0.4)
+      SimilarityOps.embedNearDupPairs(
+          withDups(t(s, dir, "embeddings"), "vec_id"), threshold = 0.4)
         .withColumn("cos", round(col("cos"), 6))
         .orderBy(col("id_a"), col("id_b"))
     }),
@@ -557,11 +561,8 @@ object PipelineQueries {
     // semantic dups; the natural background tops out at cos ~0.5, so
     // threshold 0.95 splits them with a wide margin on both engines.
     "q_dedup_semantic" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val withDups = emb.unionAll(
-        emb.filter(col("vec_id") % 10 === 0)
-          .withColumn("vec_id", col("vec_id") + dupOffset))
-      SimilarityOps.semanticDedup(withDups, threshold = 0.95, nCells = 8)
+      SimilarityOps.semanticDedup(withDups(t(s, dir, "embeddings"), "vec_id"),
+          threshold = 0.95, nCells = 8)
         .orderBy(col("vec_id"))
     }),
 
@@ -573,15 +574,8 @@ object PipelineQueries {
     // cross-links — so multi-hop closure is actually exercised; the
     // oracle is a DuckDB recursive transitive-closure CTE.
     "q_dedup_cluster" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"))
-      val chain = d.filter(col("doc_id") % 10 < 3)
-        .select(col("doc_id").as("id_a"), (col("doc_id") + 1).as("id_b"))
-      val star = d.filter(col("doc_id") % 100 >= 95)
-        .select(col("doc_id").as("id_a"),
-          (col("doc_id") - col("doc_id") % 100).as("id_b"))
-      val cross = d.filter(col("doc_id") < 50 && col("doc_id") % 7 === 0)
-        .select(col("doc_id").as("id_a"), (col("doc_id") * 2).as("id_b"))
-      DedupOps.dupClusters(chain.union(star).union(cross))
+      DedupOps.dupClusters(
+          clusterEdges(t(s, dir, "documents").select(col("doc_id"))))
         .orderBy(col("doc_id"))
     }),
 
@@ -622,17 +616,14 @@ object PipelineQueries {
   private val baseHashSql =
     s"(${TextOps.wordHashSql("sh")}) % ${DedupOps.HashP}"
 
-  private val shinglesSql =
-    """list_transform(generate_series(1, greatest(len(w) - 2, 0)),
-      |  i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])""".stripMargin
-
   private val docsW =
     "SELECT doc_id, string_split(text, ' ') AS w FROM documents"
 
-  private val withDupsSql =
-    s"""SELECT doc_id, text FROM documents
-       |UNION ALL
-       |SELECT doc_id + $dupOffset, text FROM documents WHERE doc_id % 10 = 0""".stripMargin
+  private val docsWithDupsSql = withDupsSql("documents", "doc_id", "text")
+
+  /** A SQL `IN` list of string literals. */
+  private def inSql(words: Seq[String]): String =
+    words.map(w => s"'$w'").mkString("(", ",", ")")
 
   val oracles: Map[String, String] = Map(
     "q_text_stats" ->
@@ -645,34 +636,38 @@ object PipelineQueries {
         |ORDER BY doc_id""".stripMargin,
 
     "q_text_quality" ->
-      """SELECT doc_id,
+      s"""SELECT doc_id,
         |  CAST(len(w) AS BIGINT) AS n_tokens,
-        |  CAST(len(list_filter(w, x -> x IN ('the','a','of','and','to','in','is'))) AS DOUBLE)
+        |  CAST(len(list_filter(w, x -> x IN ${inSql(TextOps.stopwordsEn)})) AS DOUBLE)
         |       / CAST(len(w) AS DOUBLE) AS stopword_ratio,
         |  CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE)
         |       / CAST(len(w) AS DOUBLE) AS mean_token_len,
         |  (CAST(CASE WHEN len(w) < 20 THEN 0.2 ELSE 1.0 END AS DOUBLE)
-        |   * CAST(CASE WHEN len(list_filter(w, x -> x IN ('the','a','of','and','to','in','is'))) = 0
+        |   * CAST(CASE WHEN len(list_filter(w, x -> x IN ${inSql(TextOps.stopwordsEn)})) = 0
         |          THEN 0.5 ELSE 1.0 END AS DOUBLE)) AS quality
         |FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
         |ORDER BY doc_id""".stripMargin,
 
-    "q_text_langid" ->
-      s"""SELECT doc_id, score_en, score_de, score_es, score_fr,
-        |  CASE
-        |    WHEN score_en >= score_de AND score_en >= score_es AND score_en >= score_fr THEN 'en'
-        |    WHEN score_de >= score_es AND score_de >= score_fr THEN 'de'
-        |    WHEN score_es >= score_fr THEN 'es'
-        |    ELSE 'fr' END AS lang_pred,
-        |  GREATEST(score_en, score_de, score_es, score_fr) AS lang_score
+    "q_text_langid" -> {
+      val langs = TextOps.langMarkers.map(_._1)
+      val scores = langs.map(l => s"score_$l").mkString(", ")
+      // argmax, ties to the earlier language as TextOps.languageId folds
+      val argmax = langs.init.indices.map { i =>
+        langs.drop(i + 1).map(o => s"score_${langs(i)} >= score_$o")
+          .mkString("WHEN ", " AND ", s" THEN '${langs(i)}' ")
+      }.mkString
+      val scoreCols = TextOps.langMarkers.map { case (l, markers) =>
+        s"CAST(len(list_filter(w, x -> x IN ${inSql(markers)})) AS BIGINT) AS score_$l"
+      }
+      s"""SELECT doc_id, $scores,
+        |  CASE $argmax
+        |    ELSE '${langs.last}' END AS lang_pred,
+        |  GREATEST($scores) AS lang_score
         |FROM (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(w, x -> x IN ('the','a','of','and'))) AS BIGINT) AS score_en,
-        |    CAST(len(list_filter(w, x -> x IN ('der','die','das','und'))) AS BIGINT) AS score_de,
-        |    CAST(len(list_filter(w, x -> x IN ('el','la','los','y'))) AS BIGINT) AS score_es,
-        |    CAST(len(list_filter(w, x -> x IN ('le','les','et','une'))) AS BIGINT) AS score_fr
+        |  SELECT doc_id, ${scoreCols.mkString(", ")}
         |  FROM ($docsW))
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin
+    },
 
     "q_text_fingerprint" ->
       s"""SELECT doc_id,
@@ -727,12 +722,10 @@ object PipelineQueries {
         |FROM ($docsW) ORDER BY doc_id""".stripMargin,
 
     "q_cur_repetition" ->
-      """WITH base AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+      s"""WITH base AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         |g AS (SELECT doc_id, w,
-        |  CASE WHEN len(w) < 2 THEN CAST([] AS VARCHAR[])
-        |       ELSE list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1]) END AS g2,
-        |  CASE WHEN len(w) < 3 THEN CAST([] AS VARCHAR[])
-        |       ELSE list_transform(range(1, len(w)-1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) END AS g3
+        |  ${DedupOps.shinglesSql("w", 2)} AS g2,
+        |  ${DedupOps.shinglesSql("w", 3)} AS g3
         |  FROM base)
         |SELECT doc_id, CAST(len(w) AS BIGINT) AS n_words,
         |  CASE WHEN len(w)=0 THEN 0.0 ELSE 1.0 - CAST(len(list_distinct(w)) AS DOUBLE)/CAST(len(w) AS DOUBLE) END AS dup_word_frac,
@@ -745,15 +738,13 @@ object PipelineQueries {
         |WHERE doc_id % 7 <> 0 ORDER BY doc_id""".stripMargin,
 
     "q_cur_contamination" ->
-      """WITH bench AS (
+      s"""WITH bench AS (
         |  SELECT DISTINCT gram FROM (
-        |    SELECT unnest(CASE WHEN len(w) < 3 THEN CAST([] AS VARCHAR[])
-        |      ELSE list_transform(range(1, len(w)-1), i -> w[i]||' '||w[i+1]||' '||w[i+2]) END) AS gram
+        |    SELECT unnest(${DedupOps.shinglesSql("w")}) AS gram
         |    FROM (SELECT string_split(text,' ') AS w FROM documents WHERE doc_id % 97 = 0))),
         |docg AS (
         |  SELECT doc_id, unnest(grams) AS gram, len(grams) AS n_grams FROM (
-        |    SELECT doc_id, list_distinct(CASE WHEN len(w) < 3 THEN CAST([] AS VARCHAR[])
-        |      ELSE list_transform(range(1, len(w)-1), i -> w[i]||' '||w[i+1]||' '||w[i+2]) END) AS grams
+        |    SELECT doc_id, list_distinct(${DedupOps.shinglesSql("w")}) AS grams
         |    FROM (SELECT doc_id, string_split(text,' ') AS w FROM documents WHERE doc_id % 97 <> 0)))
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_contaminated,
         |  CAST(count(*) AS DOUBLE)/CAST(n_grams AS DOUBLE) AS contaminated_frac
@@ -860,10 +851,10 @@ object PipelineQueries {
 
     "q_dedup_exact" ->
       s"""SELECT MIN(doc_id) AS doc_id, COUNT(*) AS n_copies
-        |FROM ($withDupsSql) GROUP BY text ORDER BY doc_id""".stripMargin,
+        |FROM ($docsWithDupsSql) GROUP BY text ORDER BY doc_id""".stripMargin,
 
     "q_pipeline_e2e" ->
-      s"""WITH wd AS ($withDupsSql),
+      s"""WITH wd AS ($docsWithDupsSql),
         |dec AS (SELECT doc_id,
         |  CASE WHEN doc_id % 7 = 0
         |    THEN text || ' mail x' || CAST(doc_id AS VARCHAR) || '@ex.com'
@@ -885,13 +876,13 @@ object PipelineQueries {
         |  ${mh(0, "h")} AS mh0, ${mh(1, "h")} AS mh1,
         |  ${mh(2, "h")} AS mh2, ${mh(3, "h")} AS mh3
         |FROM (SELECT doc_id, $baseHashSql AS h
-        |      FROM (SELECT doc_id, unnest($shinglesSql) AS sh FROM ($docsW)))
+        |      FROM (SELECT doc_id, unnest(${DedupOps.shinglesSql("w")}) AS sh FROM ($docsW)))
         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
 
     "q_dedup_lsh" ->
-      s"""WITH docs2 AS ($withDupsSql),
+      s"""WITH docs2 AS ($docsWithDupsSql),
         |dw AS (SELECT doc_id, string_split(text, ' ') AS w FROM docs2),
-        |sh AS (SELECT doc_id, unnest($shinglesSql) AS sh FROM dw),
+        |sh AS (SELECT doc_id, unnest(${DedupOps.shinglesSql("w")}) AS sh FROM dw),
         |bh AS (SELECT doc_id, $baseHashSql AS h FROM sh),
         |sig AS (SELECT doc_id,
         |  ${mh(0, "h")} AS mh0, ${mh(1, "h")} AS mh1,
@@ -927,136 +918,73 @@ object PipelineQueries {
         |    / CAST(sa.n_sh + sb.n_sh - coalesce(i.n_inter, 0) AS DOUBLE) >= 0.8
         |ORDER BY p.id_a, p.id_b""".stripMargin,
 
-    "q_dedup_simhash" -> {
-      val bitTerms = (0 until 16).map { b =>
-        s"""CASE WHEN list_sum(list_transform(w,
-           |  x -> ((${TextOps.wordHashSql("x")} >> $b) % 2) * 2 - 1)) >= 0
-           |  THEN ${1L << b} ELSE 0 END""".stripMargin
-      }.mkString(" + ")
-      s"""SELECT doc_id, CAST($bitTerms AS BIGINT) AS simhash
-        |FROM ($docsW WHERE doc_id < 100) ORDER BY doc_id""".stripMargin
-    },
+    "q_dedup_simhash" ->
+      s"""SELECT doc_id, ${DedupOps.simhashSql("w")} AS simhash
+        |FROM ($docsW WHERE doc_id < 100) ORDER BY doc_id""".stripMargin,
 
-    "q_dedup_simhash_pairs" -> {
-      val bitTerms = (0 until 16).map { b =>
-        s"""CASE WHEN list_sum(list_transform(w,
-           |  x -> ((${TextOps.wordHashSql("x")} >> $b) % 2) * 2 - 1)) >= 0
-           |  THEN ${1L << b} ELSE 0 END""".stripMargin
-      }.mkString(" + ")
+    "q_dedup_simhash_pairs" ->
       s"""WITH sig AS (
-        |  SELECT doc_id, CAST($bitTerms AS BIGINT) AS simhash
+        |  SELECT doc_id, ${DedupOps.simhashSql("w")} AS simhash
         |  FROM ($docsW))
         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
         |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
         |FROM sig a, sig b
         |WHERE a.doc_id < b.doc_id
         |  AND bit_count(xor(a.simhash, b.simhash)) <= 3
-        |ORDER BY id_a, id_b""".stripMargin
-    },
+        |ORDER BY id_a, id_b""".stripMargin,
 
     "q_sim_bruteforce" ->
-      """WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS e FROM embeddings WHERE vec_id < 10),
+      s"""WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS e FROM embeddings WHERE vec_id < 10),
         |c AS (SELECT vec_id AS c_id, embedding::DOUBLE[] AS e FROM embeddings),
         |scored AS (
-        |  SELECT q.q_id, c.c_id,
-        |    list_dot_product(q.e, c.e)
-        |      / (sqrt(list_dot_product(q.e, q.e)) * sqrt(list_dot_product(c.e, c.e))) AS cos
+        |  SELECT q.q_id, c.c_id, ${SimilarityOps.cosineSql("q.e", "c.e")} AS cos
         |  FROM q, c WHERE q.q_id <> c.c_id),
-        |r AS (SELECT q_id, c_id, cos,
-        |  CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS BIGINT) AS rank
-        |  FROM scored)
-        |SELECT q_id, c_id, round(cos, 6) AS cos, rank FROM r
-        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
+        |${SimilarityOps.topKSql(5)}""".stripMargin,
 
     "q_sim_bucketed" ->
-      """WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS e, label FROM embeddings WHERE vec_id < 10),
+      s"""WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS e, label FROM embeddings WHERE vec_id < 10),
         |c AS (SELECT vec_id AS c_id, embedding::DOUBLE[] AS e, label FROM embeddings),
         |scored AS (
-        |  SELECT q.q_id, c.c_id,
-        |    list_dot_product(q.e, c.e)
-        |      / (sqrt(list_dot_product(q.e, q.e)) * sqrt(list_dot_product(c.e, c.e))) AS cos
+        |  SELECT q.q_id, c.c_id, ${SimilarityOps.cosineSql("q.e", "c.e")} AS cos
         |  FROM q JOIN c ON q.label = c.label WHERE q.q_id <> c.c_id),
-        |r AS (SELECT q_id, c_id, cos,
-        |  CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS BIGINT) AS rank
-        |  FROM scored)
-        |SELECT q_id, c_id, round(cos, 6) AS cos, rank FROM r
-        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
+        |${SimilarityOps.topKSql(5)}""".stripMargin,
 
-    "q_sim_ann" -> {
-      val cosSql = (a: String, b: String) =>
-        s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))"
-      s"""WITH seeds AS (
-        |  SELECT vec_id AS seed_id, embedding::DOUBLE[] AS se
-        |  FROM embeddings ORDER BY vec_id LIMIT 8),
-        |c AS (SELECT vec_id AS c_id, embedding::DOUBLE[] AS ce FROM embeddings),
-        |cass AS (
-        |  SELECT c_id, ce, seed_id AS cell FROM (
-        |    SELECT c.c_id, c.ce, s.seed_id,
-        |      row_number() OVER (PARTITION BY c.c_id
-        |        ORDER BY ${cosSql("c.ce", "s.se")} DESC, s.seed_id) AS rn
-        |    FROM c, seeds s)
-        |  WHERE rn = 1),
+    "q_sim_ann" ->
+      s"""WITH ${SimilarityOps.ivfCellsSql("embeddings", 8)},
         |q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS qe
         |      FROM embeddings WHERE vec_id < 10),
         |qprobe AS (
         |  SELECT q_id, qe, cell FROM (
         |    SELECT q.q_id, q.qe, s.seed_id AS cell,
         |      row_number() OVER (PARTITION BY q.q_id
-        |        ORDER BY ${cosSql("q.qe", "s.se")} DESC, s.seed_id) AS rn
+        |        ORDER BY ${SimilarityOps.cosineSql("q.qe", "s.se")} DESC, s.seed_id) AS rn
         |    FROM q, seeds s)
         |  WHERE rn <= 3),
         |scored AS (
-        |  SELECT p.q_id, a.c_id, ${cosSql("p.qe", "a.ce")} AS cos
+        |  SELECT p.q_id, a.id AS c_id, ${SimilarityOps.cosineSql("p.qe", "a.e")} AS cos
         |  FROM qprobe p JOIN cass a ON p.cell = a.cell
-        |  WHERE p.q_id <> a.c_id),
-        |r AS (SELECT q_id, c_id, cos,
-        |  CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS BIGINT) AS rank
-        |  FROM scored)
-        |SELECT q_id, c_id, round(cos, 6) AS cos, rank FROM r
-        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
-    },
+        |  WHERE p.q_id <> a.id),
+        |${SimilarityOps.topKSql(5)}""".stripMargin,
 
-    "q_sim_rplsh" -> {
-      // reproduce the hyperplane signs: md5("b:i") first hex digit parity
-      val bitTerms = (0 until 6).map { b =>
-        s"""CASE WHEN list_sum(list_transform(generate_series(1, 64),
-           |  i -> e[i]::DOUBLE * (CASE WHEN ('0x' || substr(md5($b || ':' || (i-1)), 1, 1))::INT % 2 = 0
-           |                       THEN 1.0 ELSE -1.0 END))) >= 0
-           |  THEN ${1L << b} ELSE 0 END""".stripMargin
-      }.mkString(" + ")
+    "q_sim_rplsh" ->
       s"""SELECT bucket, COUNT(*) AS n_vecs, MIN(vec_id) AS min_vec FROM (
-        |  SELECT vec_id, CAST($bitTerms AS BIGINT) AS bucket
+        |  SELECT vec_id, ${SimilarityOps.rpLshBucketSql("e", 64, 6)} AS bucket
         |  FROM (SELECT vec_id, embedding AS e FROM embeddings))
-        |GROUP BY bucket ORDER BY bucket""".stripMargin
-    },
+        |GROUP BY bucket ORDER BY bucket""".stripMargin,
 
-    "q_sim_rplsh_topk" -> {
-      val bitTerms = (0 until 6).map { b =>
-        s"""CASE WHEN list_sum(list_transform(generate_series(1, 64),
-           |  i -> e[i]::DOUBLE * (CASE WHEN ('0x' || substr(md5($b || ':' || (i-1)), 1, 1))::INT % 2 = 0
-           |                       THEN 1.0 ELSE -1.0 END))) >= 0
-           |  THEN ${1L << b} ELSE 0 END""".stripMargin
-      }.mkString(" + ")
-      val cosSql = (a: String, b: String) =>
-        s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))"
+    "q_sim_rplsh_topk" ->
       s"""WITH b AS (
-        |  SELECT vec_id, e, CAST($bitTerms AS BIGINT) AS bucket
+        |  SELECT vec_id, e, ${SimilarityOps.rpLshBucketSql("e", 64, 6)} AS bucket
         |  FROM (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)),
         |q AS (SELECT vec_id AS q_id, e AS qe, bucket AS qb FROM b WHERE vec_id < 10),
         |probe AS (
-        |  SELECT q_id, qe, unnest([qb, xor(qb, 1), xor(qb, 2), xor(qb, 4),
-        |                           xor(qb, 8), xor(qb, 16), xor(qb, 32)]) AS pb
+        |  SELECT q_id, qe, ${SimilarityOps.oneFlipProbesSql("qb", 6)} AS pb
         |  FROM q),
         |scored AS (
-        |  SELECT p.q_id, c.vec_id AS c_id, ${cosSql("p.qe", "c.e")} AS cos
+        |  SELECT p.q_id, c.vec_id AS c_id, ${SimilarityOps.cosineSql("p.qe", "c.e")} AS cos
         |  FROM probe p JOIN b c ON c.bucket = p.pb
         |  WHERE p.q_id <> c.vec_id),
-        |r AS (SELECT q_id, c_id, cos,
-        |  CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS BIGINT) AS rank
-        |  FROM scored)
-        |SELECT q_id, c_id, round(cos, 6) AS cos, rank FROM r
-        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
-    },
+        |${SimilarityOps.topKSql(5)}""".stripMargin,
 
     "q_dedup_cluster" ->
       """WITH RECURSIVE d AS (SELECT doc_id FROM documents),
@@ -1078,61 +1006,31 @@ object PipelineQueries {
         |SELECT n AS doc_id, CAST(MIN(r) AS BIGINT) AS cluster_id
         |FROM walk GROUP BY n ORDER BY doc_id""".stripMargin,
 
-    "q_dedup_semantic" -> {
-      val cosSql = (a: String, b: String) =>
-        s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))"
-      s"""WITH src AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 1000000, embedding FROM embeddings WHERE vec_id % 10 = 0),
-        |seeds AS (
-        |  SELECT vec_id AS seed_id, embedding::DOUBLE[] AS se
-        |  FROM src ORDER BY vec_id LIMIT 8),
-        |c AS (SELECT vec_id AS id, embedding::DOUBLE[] AS e FROM src),
-        |cass AS (
-        |  SELECT id, e, seed_id AS cell FROM (
-        |    SELECT c.id, c.e, s.seed_id,
-        |      row_number() OVER (PARTITION BY c.id
-        |        ORDER BY ${cosSql("c.e", "s.se")} DESC, s.seed_id) AS rn
-        |    FROM c, seeds s)
-        |  WHERE rn = 1),
+    "q_dedup_semantic" ->
+      s"""WITH src AS (${withDupsSql("embeddings", "vec_id", "embedding")}),
+        |${SimilarityOps.ivfCellsSql("src", 8)},
         |dups AS (
         |  SELECT DISTINCT a.id FROM cass a JOIN cass b
         |    ON a.cell = b.cell AND b.id < a.id
-        |  WHERE ${cosSql("a.e", "b.e")} >= 0.95)
+        |  WHERE ${SimilarityOps.cosineSql("a.e", "b.e")} >= 0.95)
         |SELECT a.id AS vec_id, CAST(a.cell AS BIGINT) AS cell,
         |  (d.id IS NOT NULL) AS is_dup
-        |FROM cass a LEFT JOIN dups d USING (id) ORDER BY vec_id""".stripMargin
-    },
+        |FROM cass a LEFT JOIN dups d USING (id) ORDER BY vec_id""".stripMargin,
 
-    "q_dedup_embed" -> {
-      // reproduce the hyperplane signs exactly as q_sim_rplsh
-      val bitTerms = (0 until 6).map { b =>
-        s"""CASE WHEN list_sum(list_transform(generate_series(1, 64),
-           |  i -> e[i]::DOUBLE * (CASE WHEN ('0x' || substr(md5($b || ':' || (i-1)), 1, 1))::INT % 2 = 0
-           |                       THEN 1.0 ELSE -1.0 END))) >= 0
-           |  THEN ${1L << b} ELSE 0 END""".stripMargin
-      }.mkString(" + ")
-      val cosSql =
-        "list_dot_product(p.e, c.e) / (sqrt(list_dot_product(p.e, p.e)) * sqrt(list_dot_product(c.e, c.e)))"
-      s"""WITH src AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 1000000, embedding FROM embeddings WHERE vec_id % 10 = 0),
+    "q_dedup_embed" ->
+      s"""WITH src AS (${withDupsSql("embeddings", "vec_id", "embedding")}),
         |b AS (
-        |  SELECT vec_id, e, CAST($bitTerms AS BIGINT) AS bucket
+        |  SELECT vec_id, e, ${SimilarityOps.rpLshBucketSql("e", 64, 6)} AS bucket
         |  FROM (SELECT vec_id, embedding::DOUBLE[] AS e FROM src)),
         |probe AS (
-        |  SELECT vec_id AS id_a, e, unnest([bucket, xor(bucket, 1), xor(bucket, 2),
-        |    xor(bucket, 4), xor(bucket, 8), xor(bucket, 16), xor(bucket, 32)]) AS pb
+        |  SELECT vec_id AS id_a, e, ${SimilarityOps.oneFlipProbesSql("bucket", 6)} AS pb
         |  FROM b),
         |scored AS (
-        |  SELECT p.id_a, c.vec_id AS id_b, $cosSql AS cos
+        |  SELECT p.id_a, c.vec_id AS id_b, ${SimilarityOps.cosineSql("p.e", "c.e")} AS cos
         |  FROM probe p JOIN b c ON c.bucket = p.pb
         |  WHERE p.id_a < c.vec_id)
         |SELECT id_a, id_b, round(cos, 6) AS cos FROM scored
-        |WHERE cos >= 0.4 ORDER BY id_a, id_b""".stripMargin
-    },
+        |WHERE cos >= 0.4 ORDER BY id_a, id_b""".stripMargin,
 
     "q_mm_chunks" ->
       """SELECT doc_id AS media_id, CAST(i - 1 AS BIGINT) AS chunk_id,

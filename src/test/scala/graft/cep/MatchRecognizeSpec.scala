@@ -350,4 +350,11 @@ class MatchRecognizeSpec extends SparkSuite {
       .as[(String, Long)].collect().toSet
     assert(out2 == Set(("k", 1L), ("k", 2L))) // 15.0 and 4.5 > 4.0
   }
+
+  test("q_cep_prev finds falling-value runs in the sf0.001 events") {
+    val rows = graft.SparkEntry.queries("q_cep_prev")(spark, "/root/testdata/sf0.001")
+      .select("n_down").as[Long].collect()
+    assert(rows.nonEmpty, "q_cep_prev matched no run")
+    assert(rows.forall(_ >= 1), s"a match without a down row: ${rows.min}")
+  }
 }
